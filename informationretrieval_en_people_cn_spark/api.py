@@ -258,7 +258,7 @@ def _unstemmed_index(spark, sf_dir: str) -> str:
 
 def q_phrase_positional(spark, sf_dir):
     """TRUE positional phrase match through the full engine path
-    (index build with positions -> decode -> per-doc adjacency check).
+    (index build with positions -> bucket-local decode + adjacency check).
     Unstemmed so DuckDB can replicate the token-sequence semantics."""
     from .plans.engine import SearchEngine
 
@@ -270,7 +270,7 @@ def q_phrase_prefix_positional(spark, sf_dir):
     """Positional phrase-prefix ('value ta*' as TOKEN sequence): docs
     whose analyzed token sequence has 'value' immediately followed by a
     token starting with 'ta' — matched on the stored position lists
-    with dictionary prefix expansion + bucket-pruned decode (the
+    with dictionary prefix expansion + bucket-local adjacency (the
     positional variant the reference lacks; its Q4 substring-verifies,
     SearchEngine.py:169-172,202).  Unstemmed for the oracle."""
     from .plans.engine import SearchEngine
@@ -808,14 +808,15 @@ def q_phrase_bucketed(spark, sf_dir):
 
 
 def q_phrase_positional_bucketed(spark, sf_dir):
-    """Fully bucket-local POSITIONAL phrase serving plan (round 5):
-    candidates intersect and position-verify inside each doc-range
-    bucket — zero content access, only compressed frames shuffle.
-    Same oracle as `phrase_positional`."""
+    """Fully bucket-local POSITIONAL phrase plan: candidates intersect
+    and position-verify inside each doc-range bucket — zero content
+    access, only compressed frames shuffle.  Since the positional plan
+    has one implementation this row runs the same method as
+    `phrase_positional`, against the same oracle."""
     from .plans.engine import SearchEngine
 
     eng = SearchEngine(spark, _unstemmed_index(spark, sf_dir), use_stemmer=False)
-    return eng.phrase_docids_positional_bucketed(PHRASE)
+    return eng.phrase_docids_positional(PHRASE)
 
 
 def q_ranked_mixed_serving(spark, sf_dir):
@@ -875,7 +876,7 @@ def q_batch_topk(spark, sf_dir):
     ONE shared-kernel job — the union of the queries' terms shuffles
     once, each bucket decodes each term once, every query reuses the
     decoded score vectors, per-query local top-k + window global top-k
-    (plans/engine.py search_batch / _score_batch_bucketed).  The oracle
+    (plans/engine.py search_batch / _score_bucketed).  The oracle
     is the UNION ALL of the three per-query BM25 top-10s, qid-tagged —
     so per-query bit-identity of the shared kernel is value-checked."""
     from .plans.engine import SearchEngine

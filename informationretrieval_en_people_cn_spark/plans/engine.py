@@ -2,27 +2,31 @@
 
 Rebuild of ``/root/reference/searchengine/SearchEngine.py``.  Scoring is
 BM25 (north_rule; replaces the reference's Dirichlet query-likelihood,
-SearchEngine.py:80-128) with the Lucene idf variant:
+SearchEngine.py:80-128) with the Lucene idf variant — the formula,
+bucket set algebra and positional adjacency live once, in numpy, in
+:mod:`.kernel`.
 
-    idf(t)  = ln(1 + (N - df + 0.5)/(df + 0.5))
-    tfp(t,d)= tf*(k1+1) / (tf + k1*(1 - b + b*doclen/avgdl))
-    score   = Σ_t idf(t) * tfp(t, d)
+A query runs in one of four placements; all return bit-identical
+``(doc_id, score)`` rows (scores summed from 0.0 in term-sorted
+float64 order):
 
-Two physical strategies:
-
-* **Distributed plan** (default): filter the term-sorted index to the
-  query terms (parquet min/max pruning = the Spark-native seek list,
-  reference DAWG SearchEngine.py:61-63) → numpy-decode postings in
-  `mapInPandas` → broadcast-join per-term idf → shuffle-join doclen →
-  canonical-order float64 sum per doc (bit-stable across parallelism:
-  `aggregate(array_sort(collect_list(...)))`) → `orderBy().limit(k)`
-  which Catalyst plans as TakeOrderedAndProject (the reference's
-  bounded heap, SearchEngine.py:282-292).
-* **WAND fast path** (:func:`wand_topk`): document-at-a-time traversal
-  with block-max skipping over decoded numpy postings — the reference's
-  lockstep DAAT merge (SearchEngine.py:94-126) upgraded with pruning.
-  Used for low-latency single queries when doclens fit in a broadcast;
-  tested equal to the exhaustive plan.
+* **Driver fast path** (``fast_path``; needs cached term stats and
+  driver doclens): one pruned scan collects the query terms' frames to
+  the driver, where the kernel runs them as one virtual bucket — the
+  reference's own execution model, behind a Σdf budget.
+* **Bucket-local serving plans** (``persist_doclens``): only the query
+  terms' compressed frames shuffle, grouped by doc-range bucket; the
+  kernel scores / evaluates each bucket against its cached doclen
+  arrays and emits a local top-k.  The positional phrase plans run the
+  same kernel on any index (they need no doclens).
+* **Decoded-join plan** (default): decode postings in ``mapInPandas``,
+  join idf and doclens, canonical-order float64 sum per doc
+  (``aggregate(array_sort(collect_list(...)))``), TakeOrderedAndProject.
+* **Block-max plan** (:meth:`SearchEngine.score_terms_blockmax`): the
+  decoded-join plan over only the buckets whose stored bound can reach
+  the k-th score; :func:`wand_topk` is its driver-side DAAT analogue
+  (the reference's lockstep merge, SearchEngine.py:94-126, with
+  block-max skipping).
 """
 
 from __future__ import annotations
@@ -37,7 +41,18 @@ from pyspark.sql import types as T
 
 from ..functions.analyze import analyze_text
 from ..functions.codec import decode_frames
+from ..session import local_rows_df as _local_df
 from . import querytree as qt
+from .kernel import (
+    _BucketFrames,
+    _EMPTY_IDS,
+    _eval_bucket_tree,
+    _intersect_terms,
+    _pos_terms,
+    bm25_idf,
+    bm25_tfp,
+    score_bucket,
+)
 
 _DECODED_SCHEMA = T.StructType(
     [
@@ -46,71 +61,6 @@ _DECODED_SCHEMA = T.StructType(
         T.StructField("tf", T.LongType(), False),
     ]
 )
-
-
-# Tiny driver-side relations go through one Arrow batch instead of a
-# defaultParallelism-slice parallelize job — see session.local_rows_df.
-from ..session import local_rows_df as _local_df  # noqa: E402
-
-
-# ---- executor-local posting-frame decode cache (serving mode) ---------
-#
-# Spark reuses python worker processes across tasks
-# (spark.python.worker.reuse, default true), so a module-level LRU
-# survives between queries on the same executor.  A serving workload's
-# term distribution is Zipf — the head terms' frames decode on almost
-# every query; caching the decoded (doc_id, tf[, positions]) arrays
-# turns that repeat work into a dict hit, exactly the posting-list /
-# filter cache every production IR stack keeps (Lucene query cache, OS
-# page cache over postings).  Keyed by (index_dir, snapshot version,
-# term, bucket, want_positions): snapshots are immutable, a refresh
-# bumps the version so stale entries are never served (they age out of
-# the LRU).  Byte-budgeted per worker (IR_FRAME_CACHE_MB, default 256);
-# arrays are returned read-only.  Opt-in per engine (frame_cache=True)
-# so measurements stay honest by default.
-_FRAME_CACHE: dict = {}
-_FRAME_CACHE_BYTES = [0]
-_FRAME_CACHE_STATS = {"hits": 0, "misses": 0}
-
-
-def _frame_cache_budget() -> int:
-    import os
-
-    return int(os.environ.get("IR_FRAME_CACHE_MB", "256")) << 20
-
-
-def _cached_decode(tag, term, bucket, blob: bytes, want_positions: bool = False):
-    """decode_frames through the worker-local LRU; ``tag=None``
-    bypasses.  The key is CONTENT-ADDRESSED — it includes the blob's
-    length and (per-process SipHash) hash — so even a hypothetical
-    second frame under the same (term, bucket), or a snapshot mixup,
-    can never serve wrong arrays: different bytes → different key."""
-    if tag is None:
-        return decode_frames(blob, want_positions=want_positions)
-    key = (tag, term, int(bucket), want_positions, len(blob), hash(blob))
-    hit = _FRAME_CACHE.pop(key, None)
-    if hit is not None:
-        _FRAME_CACHE[key] = hit  # move to MRU end (dicts keep order)
-        _FRAME_CACHE_STATS["hits"] += 1
-        return hit[0]
-    _FRAME_CACHE_STATS["misses"] += 1
-    out = decode_frames(blob, want_positions=want_positions)
-    nbytes = sum(a.nbytes for a in out if isinstance(a, np.ndarray))
-    for a in out:
-        if isinstance(a, np.ndarray):
-            a.setflags(write=False)  # shared across queries: immutable
-    budget = _frame_cache_budget()
-    if nbytes > budget:
-        # an entry that can never fit must not flush the hot LRU on its
-        # way to being rejected (ADVICE r5)
-        return out
-    while _FRAME_CACHE and _FRAME_CACHE_BYTES[0] + nbytes > budget:
-        oldest = next(iter(_FRAME_CACHE))  # insertion order = LRU end
-        _, old_bytes = _FRAME_CACHE.pop(oldest)
-        _FRAME_CACHE_BYTES[0] -= old_bytes
-    _FRAME_CACHE[key] = (out, nbytes)
-    _FRAME_CACHE_BYTES[0] += nbytes
-    return out
 
 
 def decode_postings_df(index_rows: DataFrame) -> DataFrame:
@@ -138,10 +88,6 @@ def decode_postings_df(index_rows: DataFrame) -> DataFrame:
     return index_rows.select("term", "postings").mapInPandas(gen, _DECODED_SCHEMA)
 
 
-def bm25_idf(n_docs: int, df: int) -> float:
-    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-
-
 class _FastFallback(Exception):
     """Raised when a query exceeds the fast path's Σdf budget — the
     caller falls back to the distributed plan."""
@@ -152,191 +98,6 @@ class _ServingFallback(Exception):
     served bucket-locally (reply_to, missing caches, or a substring
     phrase whose verified set exceeds the collect budget) — the
     dispatcher falls back to the distributed plan."""
-
-
-_EMPTY_IDS = np.empty(0, dtype=np.int64)
-
-
-class _BucketFrames:
-    """One bucket's decoded term frames (built inside the serving
-    kernels' mapInPandas).  Gives docID sets per term and, for indexes
-    built with ``store_positions=True``, per-(term, doc) position
-    lists — everything the bucket-local boolean/phrase/DAAT evaluation
-    needs, decoded once from the shuffled compressed frames.
-
-    ``pos_terms`` selects which terms' position payloads are decoded:
-    on a positional index every frame CARRIES positions (≈ Σtf values),
-    but only phrase-leaf terms need them materialized — for everything
-    else the codec skips the payload (want_positions=False), so
-    keyword / boolean / DAAT plans on a positional index pay the byte
-    scan, not the position decode."""
-
-    def __init__(
-        self,
-        frames,
-        pos_terms: frozenset | None = None,
-        cache_tag=None,
-        bucket: int = -1,
-    ):
-        self.by_term: dict[str, list] = {}
-        for fr in frames:
-            term = fr["term"]
-            want = pos_terms is None or term in pos_terms
-            d, t, p = _cached_decode(
-                cache_tag, term, bucket, bytes(fr["postings"]),
-                want_positions=want,
-            )
-            d = d.astype(np.int64)
-            tl = t.astype(np.int64)
-            ends = np.cumsum(tl)
-            self.by_term.setdefault(term, []).append(
-                (d, tl, p.astype(np.int64), ends - tl, ends)
-            )
-
-    def ids(self, term: str) -> np.ndarray:
-        fl = self.by_term.get(term)
-        if not fl:
-            return _EMPTY_IDS
-        if len(fl) == 1:
-            return fl[0][0]
-        return np.unique(np.concatenate([f[0] for f in fl]))
-
-    def union_ids(self, terms: list[str]) -> np.ndarray:
-        arrs = [a for a in (self.ids(t) for t in set(terms)) if a.size]
-        if not arrs:
-            return _EMPTY_IDS
-        if len(arrs) == 1:
-            return arrs[0]
-        return np.unique(np.concatenate(arrs))
-
-    def doc_pos_keys(self, term: str, cand: np.ndarray) -> np.ndarray:
-        """(doc, position) pairs of ``term`` restricted to the sorted
-        candidate docs ``cand``, packed as ``idx(cand)·2³² + position``
-        int64 keys (positions are bounded by doclen ≪ 2³²).  Sorted
-        ascending — the vectorized adjacency chain operates on these.
-        Raises if the index was built without positions."""
-        out = []
-        for d, tl, p, starts, ends in self.by_term.get(term, ()):
-            loc = np.searchsorted(cand, d)
-            sel = (loc < cand.size) & (cand[np.minimum(loc, cand.size - 1)] == d)
-            cnt = tl[sel]
-            total = int(cnt.sum())
-            if total == 0:
-                continue
-            if p.size == 0:
-                raise ValueError(
-                    "positional phrase query needs an index built "
-                    "with store_positions=True"
-                )
-            st = starts[sel]
-            offs = np.cumsum(cnt) - cnt
-            flat = np.repeat(st - offs, cnt) + np.arange(total)
-            keys = np.repeat(loc[sel], cnt) * _POS_SHIFT + p[flat]
-            out.append(keys)
-        if not out:
-            return _EMPTY_IDS
-        if len(out) == 1:
-            return out[0]  # docs ascend, positions ascend per doc
-        return np.unique(np.concatenate(out))
-
-
-_POS_SHIFT = np.int64(1) << np.int64(32)
-
-
-def _sorted_member(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Boolean mask of which elements of sorted ``a`` occur in sorted
-    ``b`` — one binary search per element (the doc_pos_keys idiom)
-    instead of np.isin's concatenate+argsort of both arrays.  Every
-    kernel id/key array here is sorted by construction (delta decode is
-    strictly increasing; multi-frame unions go through np.unique; set
-    ops preserve order)."""
-    if a.size == 0 or b.size == 0:
-        return np.zeros(a.size, dtype=bool)
-    loc = np.searchsorted(b, a)
-    np.minimum(loc, b.size - 1, out=loc)
-    return b[loc] == a
-
-
-def _pos_phrase_bucket_ids(
-    bf: _BucketFrames, seq: list[str], sfx_terms: list[str] | None
-) -> np.ndarray:
-    """Bucket-local positional phrase(+prefix) match — the same per-doc
-    adjacency semantics as phrase_docids_positional's verify, fully
-    vectorized: candidate docs = intersection of the phrase terms'
-    posting sets; adjacency runs over packed (doc, position) int64 keys
-    (+1 on the key = next position in the SAME doc, so one vectorized
-    membership probe per phrase slot replaces the per-doc python
-    loop)."""
-    cand = None
-    for t in set(seq):
-        ids = bf.ids(t)
-        cand = ids if cand is None else cand[_sorted_member(cand, ids)]
-        if cand.size == 0:
-            return _EMPTY_IDS
-    keys: dict[str, np.ndarray] = {}
-    for t in set(seq) | set(sfx_terms or ()):
-        keys[t] = bf.doc_pos_keys(t, cand)
-    cur = keys[seq[0]]
-    for i, t in enumerate(seq[1:], start=1):
-        cur = cur[_sorted_member(cur + i, keys[t])]
-        if cur.size == 0:
-            return _EMPTY_IDS
-    if sfx_terms is not None:
-        sk = [keys[t] for t in set(sfx_terms) if keys[t].size]
-        if not sk:
-            return _EMPTY_IDS
-        sks = sk[0] if len(sk) == 1 else np.unique(np.concatenate(sk))
-        cur = cur[_sorted_member(cur + len(seq), sks)]
-        if cur.size == 0:
-            return _EMPTY_IDS
-    return cand[np.unique(cur >> np.int64(32))]
-
-
-def _leaf_bucket_ids(bf: _BucketFrames, spec: tuple, bucket: int) -> np.ndarray:
-    kind = spec[0]
-    if kind == "terms":
-        return bf.union_ids(spec[1])
-    if kind == "ids":  # pre-verified substring-phrase docs, per bucket
-        return spec[1].get(bucket, _EMPTY_IDS)
-    if kind == "pos_phrase":
-        return _pos_phrase_bucket_ids(bf, spec[1], spec[2])
-    raise ValueError(kind)
-
-
-def _eval_bucket_tree(bf: _BucketFrames, tree: list, bucket: int) -> np.ndarray:
-    """OR-of-ANDs over bucket-local leaf id sets (doc membership is
-    bucket-local, so per-bucket set algebra composes exactly)."""
-    res = None
-    for leaves in tree:
-        acc = None
-        for spec, negated in leaves:
-            li = _leaf_bucket_ids(bf, spec, bucket)
-            if acc is None:
-                acc = li
-            elif negated:
-                acc = acc[~_sorted_member(acc, li)]
-            else:
-                acc = acc[_sorted_member(acc, li)]
-        res = acc if res is None else np.union1d(res, acc)
-    return res if res is not None else _EMPTY_IDS
-
-
-def _local_topk(
-    ids: np.ndarray, scores: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Exact bucket-local top-k under the GLOBAL result order
-    (score desc, doc_id asc).  ``np.partition`` finds the k-th score in
-    O(n); score ties at the boundary are kept and resolved by a lexsort
-    over only the (small) surviving set, so the k rows returned are
-    precisely the ones the global TakeOrdered would keep from this
-    bucket."""
-    if ids.size <= k:
-        return ids, scores
-    kth = np.partition(scores, ids.size - k)[ids.size - k]
-    keep = scores >= kth  # >= keeps boundary ties for the doc_id tiebreak
-    cid, cs = ids[keep], scores[keep]
-    order = np.lexsort((cid, -cs))[:k]
-    return cid[order], cs[order]
 
 
 class SearchEngine:
@@ -560,7 +321,8 @@ class SearchEngine:
             ids = np.array([r.doc_id for r in rows], dtype=np.int64)
             vals = np.array([r.doclen for r in rows], dtype=np.int64)
             order = np.argsort(ids)
-            self._doclen_ids, self._doclen_vals = ids[order], vals[order]
+            self._doclen_ids = ids[order]
+            self._doclen_vals = vals[order].astype(np.float64)
         # optional driver-side document store (lowercased content) for
         # zero-job phrase verification.  Guarded by a byte budget checked
         # BEFORE the collect (one tiny agg job at init); over budget the
@@ -653,9 +415,9 @@ class SearchEngine:
                 return self.docs.limit(0).select("doc_id")
             return self.prefix_docids(suffix)
         if self.term_stats is not None:  # driver-side planning, zero jobs
-            if any(t not in self.term_stats for t in set(terms)):
+            rare = self._rare_terms(terms)
+            if not rare:
                 return self.docs.limit(0).select("doc_id")
-            rare = sorted(set(terms), key=lambda t: self.term_stats[t][0])[:2]
         else:
             stats = (
                 self._index_rows(terms)
@@ -762,126 +524,38 @@ class SearchEngine:
         back to substring at SearchEngine.py:201-207).
 
         Semantics: the doc's analyzed term sequence contains the
-        phrase's analyzed term sequence contiguously.  Plan: decode the
-        k phrase terms' postings WITH positions → shuffle by doc_id →
-        per-doc numpy adjacency check (positions of term i+1 must
-        contain p+1 for some surviving p of term i).
-        """
-        import pandas as pd
-
-        terms = self._q(phrase)
-        if not terms:
-            return self.docs.limit(0).select("doc_id")
-        rows = self.index.filter(F.col("term").isin(list(set(terms))))
-        decoded = self._decode_positional(rows)
-
-        seq = terms  # phrase term order (duplicates allowed)
-        out_schema = T.StructType([T.StructField("doc_id", T.LongType(), False)])
-
-        def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-            by_term: dict[str, np.ndarray] = {}
-            for term, plist in zip(pdf["term"], pdf["positions"]):
-                arr = np.asarray(plist, dtype=np.int64)
-                by_term[term] = (
-                    np.union1d(by_term[term], arr) if term in by_term else arr
-                )
-            if any(t not in by_term for t in seq):
-                return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-            cur = by_term[seq[0]]
-            for i, t in enumerate(seq[1:], start=1):
-                nxt = by_term[t]
-                cur = cur[np.isin(cur + i, nxt)]
-                if cur.size == 0:
-                    break
-            if cur.size:
-                return pd.DataFrame({"doc_id": [int(pdf["doc_id"].iloc[0])]})
-            return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-
-        return decoded.groupBy("doc_id").applyInPandas(verify, out_schema)
+        phrase's analyzed term sequence contiguously.  Plan: only the
+        phrase terms' compressed frames shuffle, grouped by doc-range
+        bucket; candidates intersect and position-verify inside each
+        bucket (:func:`.kernel._pos_phrase_bucket_ids`) — zero content
+        access.  Needs an index built with ``store_positions=True``."""
+        seq = self._q(phrase)
+        if not seq:
+            return _local_df(self.spark, [], "doc_id long")
+        return self._bucketed_eval(
+            [[(("pos_phrase", seq, None), False)]], set(seq)
+        )
 
     def phrase_prefix_docids_positional(self, phrase: str, suffix: str) -> DataFrame:
         """Positional phrase-prefix (Q4's positional variant): the doc's
         analyzed term sequence contains the phrase terms contiguously,
         immediately followed by a term starting with ``suffix``.  The
         reference never has this — its Q4 substring-verifies the literal
-        text (SearchEngine.py:169-172,202); this matches on the stored
-        position lists like :meth:`phrase_docids_positional`.
-
-        Plan: expand the suffix over the term dictionary (zero jobs with
-        cached stats — the reference's DAWG ``keys(prefix)``,
-        SearchEngine.py:210); prune the expansion's ENCODED index rows
-        to the doc-range buckets where the rarest phrase term occurs
-        (broadcast semi-join on the bucket column — bucket is a pure
-        function of doc_id, so a doc can only match where its phrase
-        postings live; losing buckets are never decoded, the same grid
-        the block-max plan prunes on); decode survivors with positions;
-        per-doc adjacency check with the final slot satisfied by ANY
-        expansion term.
-        """
-        import pandas as pd
-
-        terms = self._q(phrase)
-        if not terms:
+        text (SearchEngine.py:169-172,202).  The suffix expands over the
+        term dictionary (the reference DAWG's ``keys(prefix)``,
+        SearchEngine.py:210); the bucket-local plan of
+        :meth:`phrase_docids_positional` then lets ANY expansion term
+        fill the final slot."""
+        seq = self._q(phrase)
+        if not seq:
             return self.prefix_docids(suffix)
-        suffix_terms = self.expand_prefix(suffix)
-        if not suffix_terms:
-            return self.docs.limit(0).select("doc_id")
-        tset = sorted(set(terms))
-        if self.term_stats is not None:  # driver-side planning, zero jobs
-            if any(t not in self.term_stats for t in tset):
-                return self.docs.limit(0).select("doc_id")
-            rare = min(tset, key=lambda t: self.term_stats[t][0])
-        else:
-            stats = (
-                self.index.filter(F.col("term").isin(tset))
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))
-                .orderBy("df")
-                .limit(1)
-                .collect()
-            )
-            if not stats:
-                return self.docs.limit(0).select("doc_id")
-            rare = stats[0].term
-        phrase_rows = self.index.filter(F.col("term").isin(tset))
-        rare_buckets = (
-            self.index.filter(F.col("term") == rare).select("bucket").distinct()
+        sfx_terms = self.expand_prefix(suffix)
+        if not sfx_terms:
+            return _local_df(self.spark, [], "doc_id long")
+        return self._bucketed_eval(
+            [[(("pos_phrase", seq, sfx_terms), False)]],
+            set(seq) | set(sfx_terms),
         )
-        extra = [t for t in suffix_terms if t not in set(tset)]
-        sfx_rows = self.index.filter(F.col("term").isin(extra)).join(
-            F.broadcast(rare_buckets), "bucket", "left_semi"
-        )
-        decoded = self._decode_positional(phrase_rows.unionByName(sfx_rows))
-
-        seq = terms
-        k = len(seq)
-        sfx_set = frozenset(suffix_terms)
-        out_schema = T.StructType([T.StructField("doc_id", T.LongType(), False)])
-
-        def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-            by_term: dict[str, np.ndarray] = {}
-            for term, plist in zip(pdf["term"], pdf["positions"]):
-                arr = np.asarray(plist, dtype=np.int64)
-                by_term[term] = (
-                    np.union1d(by_term[term], arr) if term in by_term else arr
-                )
-            if any(t not in by_term for t in seq):
-                return empty
-            cur = by_term[seq[0]]
-            for i, t in enumerate(seq[1:], start=1):
-                cur = cur[np.isin(cur + i, by_term[t])]
-                if cur.size == 0:
-                    return empty
-            sfx_pos = [by_term[t] for t in sfx_set if t in by_term]
-            if not sfx_pos:
-                return empty
-            cur = cur[np.isin(cur + k, np.concatenate(sfx_pos))]
-            if cur.size:
-                return pd.DataFrame({"doc_id": [int(pdf["doc_id"].iloc[0])]})
-            return empty
-
-        return decoded.groupBy("doc_id").applyInPandas(verify, out_schema)
 
     def reply_to_docids(self, target: str) -> DataFrame:
         """Q5 generalized id-lookup (the reference's ReplyTo crashes as
@@ -1026,44 +700,98 @@ class SearchEngine:
             cond = cond | (g_pos & g_neg)
         return hits.filter(cond).select("doc_id")
 
-    def _serving_leaf(self, leaf: qt.Leaf) -> tuple[tuple, set, bool]:
-        """Compile one query leaf for the bucket-local serving kernels.
+    def _serving_leaf(self, leaf: qt.Leaf) -> tuple[tuple, set]:
+        """Compile one query leaf for the bucket-local kernels.
 
-        Returns ``(spec, frame_terms, needs_positions)`` where spec is
-        one of ``("terms", [t...])`` (keyword / prefix / degenerate
-        phrase), ``("pos_phrase", seq, sfx_terms|None)`` (positional
-        phrase matching, phrase_via_positions=True), or
-        ``("ids", {bucket: doc_ids})`` (substring-verified phrase,
-        pre-computed via :meth:`phrase_docids_bucketed` and joined
-        bucket-locally).  Raises :class:`_ServingFallback` when the
-        leaf cannot be served bucket-locally (reply_to; phrase without
-        cached stats / content; verified set over the collect budget)."""
+        Returns ``(spec, frame_terms)`` where spec is one of
+        ``("terms", [t...])`` (keyword / prefix / degenerate phrase),
+        ``("pos_phrase", seq, sfx_terms|None)`` (positional phrase
+        matching, phrase_via_positions=True), or ``("ids", {bucket:
+        doc_ids})`` (substring-verified phrase, pre-computed via
+        :meth:`phrase_docids_bucketed` and joined bucket-locally).
+        Raises :class:`_ServingFallback` when the leaf cannot be served
+        bucket-locally (reply_to; phrase without cached stats /
+        content; verified set over the collect budget)."""
         if leaf.kind == "keyword":
             t = self._q(leaf.value)
-            return ("terms", t), set(t), False
+            return ("terms", t), set(t)
         if leaf.kind == "prefix":
             t = self.expand_prefix(leaf.value)
-            return ("terms", t), set(t), False
+            return ("terms", t), set(t)
         if leaf.kind in ("phrase", "phrase_prefix"):
             sfx = leaf.suffix if leaf.kind == "phrase_prefix" else ""
             seq = self._q(leaf.value)
             if not seq:  # phrase analyzed away: prefix semantics
                 t = self.expand_prefix(sfx) if sfx else []
-                return ("terms", t), set(t), False
+                return ("terms", t), set(t)
             if self.phrase_via_positions:
                 sfx_terms = self.expand_prefix(sfx) if sfx else None
                 if sfx and not sfx_terms:  # suffix matches no term
-                    return ("terms", []), set(), False
+                    return ("terms", []), set()
                 ft = set(seq) | set(sfx_terms or ())
-                return ("pos_phrase", seq, sfx_terms), ft, True
+                return ("pos_phrase", seq, sfx_terms), ft
             ids_by_bucket, rare = self._phrase_ids_by_bucket(leaf.value, sfx)
             # the rarest term's frames anchor the leaf's buckets: every
             # verified doc holds that term, so its posting frames exist
             # in exactly the buckets the kernel must visit — without
             # them a bucket with only ids-leaf docs would never be
             # evaluated and those docs silently dropped
-            return ("ids", ids_by_bucket), set(rare), False
+            return ("ids", ids_by_bucket), set(rare)
         raise _ServingFallback(leaf.kind)
+
+    def _driver_leaf(self, leaf: qt.Leaf) -> tuple[tuple, set]:
+        """Compile one query leaf for the driver's virtual bucket
+        (bucket 0): reply_to resolves to an id set and a substring
+        phrase to a ``("substring", phrase, suffix, rare terms)`` spec
+        verified on the driver; every other leaf compiles as for
+        serving."""
+        if leaf.kind == "reply_to":
+            rows = self.reply_to_docids(leaf.value).collect()
+            ids = np.array(sorted(r.doc_id for r in rows), dtype=np.int64)
+            return ("ids", {0: ids}), set()
+        if leaf.kind in ("phrase", "phrase_prefix") and self._q(leaf.value):
+            # resolved to ("ids", ...) by _search_fast once the rare
+            # terms' frames are collected with the rest of the query's
+            sfx = leaf.suffix if leaf.kind == "phrase_prefix" else ""
+            rare = self._rare_terms(self._q(leaf.value))
+            return ("substring", leaf.value, sfx, rare), set(rare)
+        return self._serving_leaf(leaf)
+
+    def _compile_tree(self, node, compile_leaf) -> tuple[list, set[str]]:
+        """Lower a parse tree to the kernel's OR-of-ANDs leaf specs +
+        the index terms whose frames the kernel needs.  A ranked
+        query's leaves become one single-leaf group each (its
+        candidates are the union of the leaves)."""
+        if isinstance(node, qt.OrNode):
+            groups = [and_node.children for and_node in node.children]
+        else:
+            groups = [[c] for c in node.children]
+        tree: list[list[tuple[tuple, bool]]] = []
+        frame_terms: set[str] = set()
+        for children in groups:
+            leaves = []
+            for c in children:
+                spec, ft = compile_leaf(c)
+                leaves.append((spec, c.negated))
+                frame_terms.update(ft)
+            # positives first (the parser guarantees at least one)
+            leaves.sort(key=lambda x: x[1])
+            tree.append(leaves)
+        return tree, frame_terms
+
+    def _cache_tag(self):
+        return (self.index_dir, self.version) if self.frame_cache else None
+
+    def _frames_by_bucket(self, terms, min_bucket: int | None = None) -> DataFrame:
+        """(bucket, frames): the terms' compressed frames grouped by
+        doc-range bucket — the only rows a bucket-local plan shuffles."""
+        rows = self._index_rows(sorted(terms))
+        if min_bucket:
+            rows = rows.filter(F.col("bucket") >= min_bucket)
+        return (
+            rows.groupBy("bucket")
+            .agg(F.collect_list(F.struct("term", "postings")).alias("frames"))
+        )
 
     def _bucketed_eval(
         self,
@@ -1072,12 +800,14 @@ class SearchEngine:
         after: int | None = None,
         cap: int | None = None,
         min_bucket: int | None = None,
+        keep_bucket: bool = False,
     ) -> DataFrame:
         """Run the compiled OR-of-ANDs tree bucket-locally: shuffle only
         the leaves' compressed frames, evaluate per-bucket numpy set
-        algebra (see _eval_bucket_tree), return the doc_id relation.
-        Buckets are disjoint doc ranges, so no global distinct is
-        needed.
+        algebra (see _eval_bucket_tree), return the doc_id relation
+        (``keep_bucket``: (bucket, doc_id)).  Buckets are disjoint doc
+        ranges, so no global distinct is needed.  Needs no serving
+        cache: only the index's ``bucket`` column.
 
         Keyset pagination hooks: ``after`` drops ids <= after inside the
         kernel, ``cap`` emits at most cap ids per bucket (exact for a
@@ -1088,50 +818,36 @@ class SearchEngine:
         keyset frontier BEFORE their frames shuffle."""
         import pandas as pd
 
+        schema = "bucket int, doc_id long"
         if not frame_terms:
-            return _local_df(self.spark, [], "doc_id long")
-        rows = self._index_rows(sorted(frame_terms))
-        if min_bucket is not None and min_bucket > 0:
-            rows = rows.filter(F.col("bucket") >= min_bucket)
-        joined = (
-            rows.groupBy("bucket")
-            .agg(F.collect_list(F.struct("term", "postings")).alias("frames"))
-            .select("bucket", "frames")
-        )
-
-        pos_terms = frozenset(
-            t
-            for leaves in tree
-            for spec, _ in leaves
-            if spec[0] == "pos_phrase"
-            for t in list(spec[1]) + list(spec[2] or ())
-        )
-        cache_tag = (
-            (self.index_dir, self.version) if self.frame_cache else None
-        )
+            out = _local_df(self.spark, [], schema)
+            return out if keep_bucket else out.select("doc_id")
+        joined = self._frames_by_bucket(frame_terms, min_bucket)
+        pos_terms = _pos_terms(tree)
+        cache_tag = self._cache_tag()
 
         def gen(batches):
             for pdf in batches:
-                outs = []
+                b_out, d_out = [], []
                 for bucket, frames in zip(pdf["bucket"], pdf["frames"]):
-                    res = _eval_bucket_tree(
-                        _BucketFrames(
-                            frames, pos_terms,
-                            cache_tag=cache_tag, bucket=int(bucket),
-                        ),
-                        tree,
-                        int(bucket),
+                    bf = _BucketFrames(
+                        frames, pos_terms, cache_tag=cache_tag, bucket=int(bucket)
                     )
+                    res = _eval_bucket_tree(bf, tree, int(bucket))
                     if after is not None and res.size:
                         res = res[np.searchsorted(res, after, side="right"):]
                     if cap is not None:
                         res = res[:cap]
                     if res.size:
-                        outs.append(res)
-                if outs:
-                    yield pd.DataFrame({"doc_id": np.concatenate(outs)})
+                        d_out.append(res)
+                        b_out.append(np.full(res.size, int(bucket), dtype=np.int32))
+                if d_out:
+                    yield pd.DataFrame(
+                        {"bucket": np.concatenate(b_out), "doc_id": np.concatenate(d_out)}
+                    )
 
-        return joined.mapInPandas(gen, "doc_id long")
+        out = joined.mapInPandas(gen, schema)
+        return out if keep_bucket else out.select("doc_id")
 
     def boolean_docids_bucketed(self, node: qt.OrNode) -> DataFrame:
         """Bucket-local boolean algebra — the serving-mode twin of
@@ -1159,26 +875,8 @@ class SearchEngine:
             if c.kind in ("phrase", "phrase_prefix") and self._q(c.value):
                 sfx = c.suffix if c.kind == "phrase_prefix" else ""
                 return self.phrase_docids_bucketed(c.value, sfx).select("doc_id")
-        tree, frame_terms = self._compile_serving_tree(node)
+        tree, frame_terms = self._compile_tree(node, self._serving_leaf)
         return self._bucketed_eval(tree, frame_terms)
-
-    def _compile_serving_tree(
-        self, node: qt.OrNode
-    ) -> tuple[list, set[str]]:
-        """Lower an OR-of-ANDs parse tree to the serving kernel's leaf
-        specs + the index terms whose frames must shuffle."""
-        tree: list[list[tuple[tuple, bool]]] = []
-        frame_terms: set[str] = set()
-        for and_node in node.children:
-            leaves = []
-            for c in and_node.children:
-                spec, ft, _ = self._serving_leaf(c)
-                leaves.append((spec, c.negated))
-                frame_terms.update(ft)
-            # positives first (the parser guarantees at least one)
-            leaves.sort(key=lambda x: x[1])
-            tree.append(leaves)
-        return tree, frame_terms
 
     def _bucket_of(self, doc_id: int) -> int | None:
         """Scalar mirror of the build's ``_range_bucket`` double math:
@@ -1189,58 +887,6 @@ class SearchEngine:
         glo, gspan, gn = self._grid
         frac = float(doc_id - glo) / float(gspan)
         return max(0, min(gn - 1, math.floor(float(gn) * frac)))
-
-    def _phrase_bucketed_cand(self, rare: list[str]) -> DataFrame:
-        """Bucket-local phrase candidates: intersect the (≤2) rarest
-        phrase terms' posting sets per bucket.  Only the rare terms'
-        compressed frames shuffle — the decoded-id shuffle + semi-join
-        of the distributed plan disappears.  Returns (bucket, doc_id)."""
-        import pandas as pd
-
-        nrare = len(set(rare))
-        joined = (
-            self._index_rows(rare)
-            .groupBy("bucket")
-            .agg(F.collect_list(F.struct("term", "postings")).alias("frames"))
-            .select("bucket", "frames")
-        )
-
-        cache_tag = (
-            (self.index_dir, self.version) if self.frame_cache else None
-        )
-
-        def gen(batches):
-            for pdf in batches:
-                b_out, d_out = [], []
-                for bucket, frames in zip(pdf["bucket"], pdf["frames"]):
-                    bf = _BucketFrames(
-                        frames, frozenset(),
-                        cache_tag=cache_tag, bucket=int(bucket),
-                    )
-                    if len(bf.by_term) < nrare:
-                        continue
-                    inter = None
-                    for t in bf.by_term:
-                        ids = bf.ids(t)
-                        inter = (
-                            ids
-                            if inter is None
-                            else inter[_sorted_member(inter, ids)]
-                        )
-                    if inter is not None and inter.size:
-                        d_out.append(inter)
-                        b_out.append(
-                            np.full(inter.size, int(bucket), dtype=np.int32)
-                        )
-                if d_out:
-                    yield pd.DataFrame(
-                        {
-                            "bucket": np.concatenate(b_out),
-                            "doc_id": np.concatenate(d_out),
-                        }
-                    )
-
-        return joined.mapInPandas(gen, "bucket int, doc_id long")
 
     def phrase_docids_bucketed(self, phrase: str, suffix: str = "") -> DataFrame:
         """Serving twin of :meth:`phrase_docids` (same substring
@@ -1257,10 +903,14 @@ class SearchEngine:
         if not terms:
             raise _ServingFallback("degenerate phrase (prefix semantics)")
         empty = _local_df(self.spark, [], "bucket int, doc_id long")
-        if any(t not in self.term_stats for t in set(terms)):
+        rare = self._rare_terms(terms)
+        if not rare:
             return empty
-        rare = sorted(set(terms), key=lambda t: self.term_stats[t][0])[:2]
-        cand = self._phrase_bucketed_cand(rare)
+        # candidates: the (≤2) rarest terms' posting sets intersected
+        # bucket-locally — only their compressed frames shuffle
+        cand = self._bucketed_eval(
+            [[(("terms", [t]), False) for t in rare]], set(rare), keep_bucket=True
+        )
         if self.content_df is None:
             raise ValueError(
                 "phrase verification needs a document store: docs table "
@@ -1293,6 +943,14 @@ class SearchEngine:
             .select("bucket", "doc_id")
         )
 
+    def _rare_terms(self, terms: list[str]) -> list[str]:
+        """The (≤2) lowest-df distinct ``terms`` by cached stats — a
+        phrase's candidate terms (the reference's selectivity planning,
+        SearchEngine.py:189-194); [] when a term is not in the index."""
+        if any(t not in self.term_stats for t in set(terms)):
+            return []
+        return sorted(set(terms), key=lambda t: self.term_stats[t][0])[:2]
+
     def _phrase_ids_by_bucket(
         self, phrase: str, suffix: str = ""
     ) -> tuple[dict[int, np.ndarray], list[str]]:
@@ -1302,11 +960,9 @@ class SearchEngine:
         leaf's buckets.  Raises _ServingFallback over budget."""
         if self.term_stats is None or self.content_df is None:
             raise _ServingFallback("phrase serving needs stats + content")
-        terms = self._q(phrase)
-        tset = set(terms)
-        if any(t not in self.term_stats for t in tset):
+        rare = self._rare_terms(self._q(phrase))
+        if not rare:
             return {}, []
-        rare = sorted(tset, key=lambda t: self.term_stats[t][0])[:2]
         if min(self.term_stats[t][0] for t in rare) > self.serving_phrase_collect_max:
             raise _ServingFallback("phrase verified set over collect budget")
         acc: dict[int, list[int]] = {}
@@ -1315,36 +971,6 @@ class SearchEngine:
         return (
             {b: np.array(sorted(v), dtype=np.int64) for b, v in acc.items()},
             rare,
-        )
-
-    def phrase_docids_positional_bucketed(self, phrase: str) -> DataFrame:
-        """Bucket-local positional phrase matching: the fully serving-
-        native phrase plan — only the phrase terms' compressed frames
-        shuffle, candidates intersect and position-verify inside each
-        bucket, zero content access.  Results identical to
-        :meth:`phrase_docids_positional` (tested)."""
-        seq = self._q(phrase)
-        if not seq:
-            return _local_df(self.spark, [], "doc_id long")
-        return self._bucketed_eval(
-            [[(("pos_phrase", seq, None), False)]], set(seq)
-        )
-
-    def phrase_prefix_docids_positional_bucketed(
-        self, phrase: str, suffix: str
-    ) -> DataFrame:
-        """Bucket-local positional phrase-prefix (serving twin of
-        :meth:`phrase_prefix_docids_positional`, results identical —
-        tested)."""
-        seq = self._q(phrase)
-        if not seq:
-            return self.prefix_docids(suffix)
-        sfx_terms = self.expand_prefix(suffix)
-        if not sfx_terms:
-            return _local_df(self.spark, [], "doc_id long")
-        return self._bucketed_eval(
-            [[(("pos_phrase", seq, sfx_terms), False)]],
-            set(seq) | set(sfx_terms),
         )
 
     # ---- ranked retrieval (Q7) ------------------------------------------
@@ -1702,8 +1328,7 @@ class SearchEngine:
         # scales with shard count instead of file count.
         if (
             self.term_stats is not None
-            and sum(self.term_stats.get(t, (0, 0))[0] for t in terms)
-            >= self.decode_repartition_min_sumdf
+            and self._sum_df(terms) >= self.decode_repartition_min_sumdf
         ):
             n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
             rows = rows.repartition(n_parts, "term", "bucket")
@@ -1720,66 +1345,57 @@ class SearchEngine:
         out = agg.orderBy(F.desc("score"), F.asc("doc_id"))
         return out.limit(k) if k else out
 
-    def score_terms_bucketed(
-        self, terms: list[str], k: int | None = None, where=None, boost=None
+    def _scoring_idf(self, terms) -> dict[str, float]:
+        """idf of each distinct query term the index holds (cached
+        term stats) — the scoring terms of the kernel placements."""
+        return {
+            t: bm25_idf(self.n_docs, self.term_stats[t][0])
+            for t in set(terms)
+            if self.term_stats.get(t, (0, 0))[0] > 0
+        }
+
+    def _score_bucketed(
+        self,
+        queries: list[tuple[int, list[str], list | None]],
+        idf: dict[str, float],
+        k: int | None,
+        *,
+        where=None,
+        boost=None,
+        frame_terms: set[str] = frozenset(),
     ) -> DataFrame:
-        """Bucket-local DAAT — the sharded-search serving plan.
+        """Bucket-local DAAT — the sharded-search serving plan, for one
+        query or a batch → (qid, doc_id, score).
 
         The classic distributed IR architecture (one shard per doc
         range, local scoring, global top-k merge) falls out of the
         index's own salted-merge grid: ALL of a doc's postings live in
         exactly one doc-range bucket, and serving mode keeps each
         bucket's (doc_id, doclen) arrays cluster-cached and
-        pre-partitioned on ``bucket``.  A ranked query then moves ONLY
-        the query terms' compressed frames through the shuffle (KBs-MBs)
-        — never decoded postings, never doclens — and each bucket task
-        decodes + scores + fully aggregates its docs in numpy.  Global
-        top-k is per-partition heaps + driver merge
-        (TakeOrderedAndProject).  Per-query shuffle volume drops from
-        O(Σdf) rows (decoded-join plan) to O(query index bytes).
-
-        Bit-identical to :meth:`score_terms`: per-doc accumulation runs
-        in term-sorted order from 0.0, the same float64 sequence as the
-        canonical array_sort aggregate.  Requires serving mode
-        (``persist_doclens=True``) and cached term stats.
-
-        With ``k`` set, each bucket emits only its LOCAL top-k (by the
-        global (score desc, doc_id asc) order) — exact, because every
-        global top-k member is within its own bucket's top-k under the
-        same total order.  A Zipf-head query touches nearly every doc,
-        so without this the Arrow transfer back to the JVM is O(corpus)
-        rows per query; with it, O(k × buckets).
+        pre-partitioned on ``bucket``.  ONE shuffle moves only the
+        compressed frames of the union of the queries' terms (plus
+        ``frame_terms``, the leaves' terms) — never decoded postings,
+        never doclens — and each bucket task decodes each term once and
+        runs :func:`.kernel.score_bucket` for every query
+        ``(qid, sorted scoring terms, tree | None)``, emitting each
+        query's exact local top-k (O(k × buckets) rows cross Arrow, not
+        O(touched docs)).  Requires ``persist_doclens=True`` and cached
+        term stats.
 
         ``where`` scopes results to a metadata predicate: allowed
         doc_ids arrive as per-bucket sorted arrays (pushdown-filtered
-        docs scan, grid-bucketed, one tf-shaped shuffle) and the kernel
-        masks non-members before emit — scores of surviving docs are
-        bit-identical to the unscoped plan's.
-        """
+        docs scan, grid-bucketed; INNER join, so buckets with no
+        allowed docs never ship their frames).  ``boost`` arrives the
+        same way as per-bucket (sorted ids, factors), LEFT-joined."""
         import pandas as pd
 
-        terms = sorted(set(terms))
-        present = [t for t in terms if self.term_stats.get(t, (0, 0))[0] > 0]
-        empty = _local_df(self.spark, [], "doc_id long, score double")
-        if not present:
-            return empty
-        idf = {
-            t: bm25_idf(self.n_docs, self.term_stats[t][0]) for t in present
-        }
-        k1, b, avgdl = self.k1, self.b, self.avgdl
-
-        joined = (
-            self._index_rows(present)
-            .groupBy("bucket")
-            .agg(F.collect_list(F.struct("term", "postings")).alias("frames"))
-            .join(self._bucket_doclens, "bucket")
-        )
+        schema = "qid int, doc_id long, score double"
+        all_terms = set(idf) | set(frame_terms)
+        if not all_terms:
+            return _local_df(self.spark, [], schema)
+        joined = self._frames_by_bucket(all_terms).join(self._bucket_doclens, "bucket")
         cols = ["bucket", "frames", "dl_ids", "dl_lens"]
         if where is not None:
-            # metadata scope: per-bucket sorted arrays of allowed
-            # doc_ids, built from a pushdown-filtered docs scan bucketed
-            # by the same grid arithmetic the cache used.  INNER join:
-            # buckets with no allowed docs never ship their frames.
             allowed = (
                 self.docs.filter(self._where_cond(where))
                 .select("doc_id")
@@ -1791,8 +1407,6 @@ class SearchEngine:
             joined = joined.join(allowed, "bucket")
             cols.append("allow_ids")
         if boost:
-            # per-bucket (sorted boosted ids, factors) — LEFT join:
-            # buckets with no boosted docs still serve, kernel skips
             bfac = (
                 self._boost_factors(boost)
                 .withColumn("bucket", self._bexpr)
@@ -1812,102 +1426,62 @@ class SearchEngine:
             joined = joined.join(bfac, "bucket", "left")
             cols += ["boost_ids", "boost_f"]
         joined = joined.select(*cols)
-
-        cache_tag = (
-            (self.index_dir, self.version) if self.frame_cache else None
-        )
+        qids = [qid for qid, _, _ in queries]
+        kq = [(terms, tree) for _, terms, tree in queries]
+        pos_terms = frozenset().union(*(_pos_terms(tree) for _, tree in kq if tree))
+        cache_tag = self._cache_tag()
+        k1, b, avgdl = self.k1, self.b, self.avgdl
 
         def gen(batches):
             for pdf in batches:
-                out_d, out_s = [], []
-                allow_col = (
-                    pdf["allow_ids"]
-                    if "allow_ids" in pdf.columns
-                    else [None] * len(pdf)
-                )
-                bid_col = (
-                    pdf["boost_ids"]
-                    if "boost_ids" in pdf.columns
-                    else [None] * len(pdf)
-                )
-                bf_col = (
-                    pdf["boost_f"]
-                    if "boost_f" in pdf.columns
-                    else [None] * len(pdf)
-                )
-                for bkt, frames, dl_ids, dl_lens, allow, bids, bfs in zip(
-                    pdf["bucket"], pdf["frames"], pdf["dl_ids"],
-                    pdf["dl_lens"], allow_col, bid_col, bf_col,
+                out_q, out_d, out_s = [], [], []
+                none = [None] * len(pdf)
+                for bucket, frames, dl_ids, dl_lens, allow, bids, bfs in zip(
+                    pdf["bucket"], pdf["frames"], pdf["dl_ids"], pdf["dl_lens"],
+                    pdf.get("allow_ids", none), pdf.get("boost_ids", none),
+                    pdf.get("boost_f", none),
                 ):
-                    ids = np.asarray(dl_ids, dtype=np.int64)
-                    lens = np.asarray(dl_lens, dtype=np.float64)
-                    acc = np.zeros(len(ids))
-                    touched = np.zeros(len(ids), dtype=bool)
-                    # term-sorted frame order == the canonical float64
-                    # summation order of _score_rows (each doc gets at
-                    # most one posting per term)
-                    for fr in sorted(frames, key=lambda f: f["term"]):
-                        d, t, _ = _cached_decode(
-                            cache_tag, fr["term"], bkt,
-                            bytes(fr["postings"]), want_positions=False,
-                        )
-                        pos = np.searchsorted(ids, d)
-                        # validate the cache invariant instead of
-                        # assuming it: any posting doc_id absent from
-                        # the bucket's doclen array (docs/postings
-                        # drift, bucket-assignment bug) would otherwise
-                        # silently credit a NEIGHBORING doc's score (or
-                        # IndexError past the end) — corrupt ranked
-                        # results are worse than a loud failure
-                        pos_c = (
-                            np.minimum(pos, len(ids) - 1)
-                            if len(ids)
-                            else pos
-                        )
-                        if len(ids) == 0 or not np.array_equal(ids[pos_c], d):
-                            raise ValueError(
-                                "serving doclen cache is missing posting "
-                                f"doc_ids for term {fr['term']!r}: the "
-                                "docs table and the index disagree — "
-                                "rebuild or reload() the engine"
-                            )
-                        pos = pos_c
-                        tf = t.astype(np.float64)
-                        s = (
-                            idf[fr["term"]]
-                            * (tf * (k1 + 1))
-                            / (tf + k1 * (1 - b + b * lens[pos] / avgdl))
-                        )
-                        acc[pos] += s
-                        touched[pos] = True
-                    if allow is not None:  # metadata scope: emit only
-                        touched &= _sorted_member(  # allowed docs
-                            ids, np.asarray(allow, dtype=np.int64)
-                        )
-                    bd, bs = ids[touched], acc[touched]
+                    bf = _BucketFrames(
+                        frames, pos_terms, cache_tag=cache_tag, bucket=int(bucket)
+                    )
+                    bst = None
                     if bids is not None and len(bids):
-                        # boost: one multiply per boosted doc AFTER the
-                        # canonical sum — same float64 sequence as the
-                        # distributed plan's post-agg join-multiply
-                        ba = np.asarray(bids, dtype=np.int64)
-                        m = _sorted_member(bd, ba)
-                        if m.any():
-                            loc = np.searchsorted(ba, bd[m])
-                            bs[m] *= np.asarray(bfs, dtype=np.float64)[loc]
-                    if k:  # exact local top-k: O(k), not O(touched),
-                        bd, bs = _local_topk(bd, bs, k)  # rows cross Arrow
-                    out_d.append(bd)
-                    out_s.append(bs)
-                if out_d:
+                        bst = (
+                            np.asarray(bids, dtype=np.int64),
+                            np.asarray(bfs, dtype=np.float64),
+                        )
+                    res = score_bucket(
+                        bf, dl_ids, dl_lens, kq, idf, k1, b, avgdl,
+                        k=k, allow=allow, boost=bst, bucket=int(bucket),
+                    )
+                    for qid, (bd, bs) in zip(qids, res):
+                        if bd.size:
+                            out_q.append(np.full(bd.size, qid, dtype=np.int32))
+                            out_d.append(bd)
+                            out_s.append(bs)
+                if out_q:
                     yield pd.DataFrame(
                         {
+                            "qid": np.concatenate(out_q),
                             "doc_id": np.concatenate(out_d),
                             "score": np.concatenate(out_s),
                         }
                     )
 
-        scored = joined.mapInPandas(gen, "doc_id long, score double")
-        out = scored.orderBy(F.desc("score"), F.asc("doc_id"))
+        return joined.mapInPandas(gen, schema)
+
+    def score_terms_bucketed(
+        self, terms: list[str], k: int | None = None, where=None, boost=None
+    ) -> DataFrame:
+        """BM25 over the disjunction of ``terms`` on the bucket-local
+        serving plan (:meth:`_score_bucketed` with one query).
+        Bit-identical to :meth:`score_terms`; ``where`` / ``boost`` as
+        there."""
+        idf = self._scoring_idf(terms)
+        scored = self._score_bucketed(
+            [(0, sorted(idf), None)], idf, k, where=where, boost=boost
+        )
+        out = scored.select("doc_id", "score").orderBy(F.desc("score"), F.asc("doc_id"))
         return out.limit(k) if k else out
 
     def ranked_bucketed(
@@ -1918,116 +1492,19 @@ class SearchEngine:
         scored by BM25 over the query terms with 0.0 for candidates
         none of whose terms survived — the exact semantics of the
         distributed mixed path (candidates left-joined onto scores),
-        computed bucket-locally in ONE frames-shuffle job: per bucket,
-        accumulate term-sorted scores over the cached doclen arrays,
-        take the union of leaf id sets, emit (candidate, accumulated
-        score — zeros fall out of the untouched accumulator).  Global
-        top-k = TakeOrderedAndProject.  Bit-identical to the
-        distributed plan (same canonical float64 summation order —
-        tested).  Raises _ServingFallback for unserveable leaves."""
-        import pandas as pd
-
-        specs: list[tuple] = []
-        frame_terms: set[str] = set()
-        for leaf in node.children:
-            spec, ft, _ = self._serving_leaf(leaf)
-            specs.append(spec)
-            frame_terms.update(ft)
-        scoring = sorted(
-            {t for t in terms if self.term_stats.get(t, (0, 0))[0] > 0}
+        computed bucket-locally in ONE frames-shuffle job.
+        Bit-identical to the distributed plan (tested).  Raises
+        _ServingFallback for unserveable leaves."""
+        tree, frame_terms = self._compile_tree(node, self._serving_leaf)
+        idf = self._scoring_idf(terms)
+        scored = self._score_bucketed(
+            [(0, sorted(idf), tree)], idf, k, frame_terms=frame_terms
         )
-        idf = {t: bm25_idf(self.n_docs, self.term_stats[t][0]) for t in scoring}
-        all_terms = sorted(frame_terms | set(scoring))
-        empty = _local_df(self.spark, [], "doc_id long, score double")
-        if not all_terms:
-            return empty
-        k1, b, avgdl = self.k1, self.b, self.avgdl
-        scoring_set = frozenset(scoring)
-        pos_terms = frozenset(
-            t
-            for spec in specs
-            if spec[0] == "pos_phrase"
-            for t in list(spec[1]) + list(spec[2] or ())
+        return (
+            scored.select("doc_id", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k)
         )
-
-        joined = (
-            self._index_rows(all_terms)
-            .groupBy("bucket")
-            .agg(F.collect_list(F.struct("term", "postings")).alias("frames"))
-            .join(self._bucket_doclens, "bucket")
-            .select("bucket", "frames", "dl_ids", "dl_lens")
-        )
-
-        cache_tag = (
-            (self.index_dir, self.version) if self.frame_cache else None
-        )
-
-        def gen(batches):
-            for pdf in batches:
-                out_d, out_s = [], []
-                for bucket, frames, dl_ids, dl_lens in zip(
-                    pdf["bucket"], pdf["frames"], pdf["dl_ids"], pdf["dl_lens"]
-                ):
-                    bf = _BucketFrames(
-                        frames, pos_terms,
-                        cache_tag=cache_tag, bucket=int(bucket),
-                    )
-                    ids = np.asarray(dl_ids, dtype=np.int64)
-                    lens = np.asarray(dl_lens, dtype=np.float64)
-                    if len(ids) == 0:
-                        continue
-                    acc = np.zeros(len(ids))
-                    # term-sorted accumulation == the canonical float64
-                    # summation order of _score_rows / _ranked_fast
-                    for t in sorted(scoring_set.intersection(bf.by_term)):
-                        for d, tl, _, _, _ in bf.by_term[t]:
-                            pos = np.minimum(
-                                np.searchsorted(ids, d), len(ids) - 1
-                            )
-                            if not np.array_equal(ids[pos], d):
-                                raise ValueError(
-                                    "serving doclen cache is missing "
-                                    f"posting doc_ids for term {t!r}: "
-                                    "the docs table and the index "
-                                    "disagree — rebuild or reload() "
-                                    "the engine"
-                                )
-                            tf = tl.astype(np.float64)
-                            acc[pos] += (
-                                idf[t]
-                                * (tf * (k1 + 1))
-                                / (tf + k1 * (1 - b + b * lens[pos] / avgdl))
-                            )
-                    cand = None
-                    for spec in specs:
-                        li = _leaf_bucket_ids(bf, spec, int(bucket))
-                        cand = (
-                            li if cand is None else np.union1d(cand, li)
-                        )
-                    if cand is None or cand.size == 0:
-                        continue
-                    cpos = np.minimum(np.searchsorted(ids, cand), len(ids) - 1)
-                    if not np.array_equal(ids[cpos], cand):
-                        raise ValueError(
-                            "serving doclen cache is missing candidate "
-                            "doc_ids: the docs table and the index "
-                            "disagree — rebuild or reload() the engine"
-                        )
-                    bd, bs = cand, acc[cpos]
-                    if k:  # exact local top-k before the Arrow transfer
-                        bd, bs = _local_topk(bd, bs, k)
-                    out_d.append(bd)
-                    out_s.append(bs)
-                if out_d:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.concatenate(out_d),
-                            "score": np.concatenate(out_s),
-                        }
-                    )
-
-        scored = joined.mapInPandas(gen, "doc_id long, score double")
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def score_terms_blockmax(self, terms: list[str], k: int) -> DataFrame:
         """Distributed top-k with bucket-grid block-max pruning.
@@ -2126,8 +1603,18 @@ class SearchEngine:
             return self.use_blockmax
         if self.term_stats is None:
             return False  # no free Σdf estimate: stay exhaustive
-        sumdf = sum(self.term_stats.get(t, (0, 0))[0] for t in set(terms))
-        return sumdf >= self.blockmax_min_sumdf
+        return self._sum_df(terms) >= self.blockmax_min_sumdf
+
+    def _sum_df(self, terms) -> int:
+        """Σdf of the distinct ``terms``: a dict sum with cached term
+        stats, else one pruned metadata-scale job."""
+        uniq = sorted(set(terms))
+        if self.term_stats is not None:
+            return sum(self.term_stats.get(t, (0, 0))[0] for t in uniq)
+        if not uniq:
+            return 0
+        row = self._index_rows(uniq).agg(F.sum("df").alias("s")).collect()[0]
+        return int(row.s or 0)
 
     def ranked(
         self,
@@ -2201,32 +1688,17 @@ class SearchEngine:
         terms = self._query_terms(query)
         if not terms:
             return []
-        if self.term_stats is not None:
-            total_df = sum(self.term_stats.get(t, (0, 0))[0] for t in set(terms))
-        else:
-            row = (
-                self._index_rows(terms).agg(F.sum("df").alias("s")).collect()[0]
-            )
-            total_df = int(row.s or 0)
-        if total_df > max_postings:  # hot term: stay distributed
+        try:
+            bf = self._postings_arrays(terms, max_postings)
+        except _FastFallback:  # hot term: stay distributed
             return [
                 (int(r.doc_id), float(r.score))
                 for r in self.score_terms(terms, k).collect()
             ]
-        rows = self._index_rows(terms).select("term", "postings").collect()
-        if not rows:  # no query term exists in the dictionary
+        postings = {t: bf.postings(t) for t in bf.by_term}
+        if not postings:  # no query term exists in the dictionary
             return []
-        postings: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for r in rows:  # concat the term's doc-range-disjoint shards
-            d, t, _ = decode_frames(bytes(r.postings), want_positions=False)
-            if r.term in postings:
-                d0, t0 = postings[r.term]
-                d, t = np.concatenate([d0, d]), np.concatenate([t0, t])
-            postings[r.term] = (d, t)
-        for term, (d, t) in postings.items():
-            order = np.argsort(d, kind="stable")
-            postings[term] = (d[order].astype(np.int64), t[order].astype(np.int64))
-        dfs = {term: len(d) for term, (d, t) in postings.items()}
+        dfs = {t: len(d) for t, (d, _) in postings.items()}
         # doclens only for candidate docs (semi-join, not a full scan)
         all_docs = np.unique(np.concatenate([d for d, _ in postings.values()]))
         cand = _local_df(self.spark, 
@@ -2244,85 +1716,32 @@ class SearchEngine:
     # ---- driver-side fast path (low-latency small queries) ---------------
     # The distributed plan costs 3-5 Spark stages (~0.6-1 s of scheduling
     # at any size); for queries whose pruned postings fit a Σdf budget,
-    # the reference's own execution model — decode on the driver, numpy
-    # set algebra / exhaustive BM25 — answers in ONE pruned-scan job
+    # the reference's own execution model — decode on the driver, run
+    # the bucket kernel over one virtual bucket — answers in ONE pruned-scan job
     # (plus one verify job for phrase leaves).  Results are identical to
     # the distributed plan (tested per shape); the budget guard falls
     # back to the distributed plan, which remains the scale path.
 
-    def _postings_arrays(self, terms: list[str]) -> dict[str, tuple[np.ndarray, np.ndarray]]:
+    def _postings_arrays(self, terms, budget: int) -> _BucketFrames:
+        """The terms' frames, collected to the driver in ONE pruned scan
+        and decoded as one virtual bucket.  Raises :class:`_FastFallback`
+        when the terms' Σdf exceeds ``budget``."""
         uniq = sorted(set(terms))
-        if not uniq:
-            return {}
-        if (
-            sum(self.term_stats.get(t, (0, 0))[0] for t in uniq)
-            > self.fast_max_postings
-        ):
+        if self._sum_df(uniq) > budget:
             raise _FastFallback
-        rows = self._index_rows(uniq).select("term", "postings").collect()
-        postings: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for r in rows:  # concat the term's doc-range-disjoint shards
-            d, t, _ = decode_frames(bytes(r.postings), want_positions=False)
-            if r.term in postings:
-                d0, t0 = postings[r.term]
-                d, t = np.concatenate([d0, d]), np.concatenate([t0, t])
-            postings[r.term] = (d, t)
-        for term, (d, t) in postings.items():
-            order = np.argsort(d, kind="stable")
-            postings[term] = (d[order].astype(np.int64), t[order].astype(np.int64))
-        return postings
+        if not uniq:
+            return _BucketFrames([])
+        return _BucketFrames(self._index_rows(uniq).select("term", "postings").collect())
 
-    def _doclen_of(self, docs: np.ndarray) -> np.ndarray:
-        if self._doclen_ids is None:
-            # unreachable when constructed through __init__ (fast_path
-            # requires the cache); guards against silent all-zero doclens
-            raise RuntimeError("doclen cache not loaded (cache_doclens=False)")
-        if len(self._doclen_ids) == 0:
-            return np.zeros(len(docs), dtype=np.int64)
-        pos = np.searchsorted(self._doclen_ids, docs)
-        pos = np.clip(pos, 0, len(self._doclen_ids) - 1)
-        vals = self._doclen_vals[pos]
-        return np.where(self._doclen_ids[pos] == docs, vals, 0)
-
-    def _leaf_ids_fast(self, leaf: qt.Leaf) -> np.ndarray:
-        empty = np.empty(0, dtype=np.int64)
-        if leaf.kind == "keyword":
-            p = self._postings_arrays(self._q(leaf.value))
-            if not p:
-                return empty
-            return np.unique(np.concatenate([d for d, _ in p.values()]))
-        if leaf.kind == "prefix":
-            p = self._postings_arrays(self.expand_prefix(leaf.value))
-            if not p:
-                return empty
-            return np.unique(np.concatenate([d for d, _ in p.values()]))
-        if leaf.kind == "phrase":
-            return self._phrase_ids_fast(leaf.value)
-        if leaf.kind == "phrase_prefix":
-            return self._phrase_ids_fast(leaf.value, leaf.suffix)
-        if leaf.kind == "reply_to":
-            rows = self.reply_to_docids(leaf.value).collect()
-            return np.array(sorted(r.doc_id for r in rows), dtype=np.int64)
-        raise ValueError(leaf.kind)
-
-    def _phrase_ids_fast(self, phrase: str, suffix: str = "") -> np.ndarray:
-        empty = np.empty(0, dtype=np.int64)
-        terms = self._q(phrase)
+    def _phrase_ids_fast(self, bf: _BucketFrames, spec: tuple) -> np.ndarray:
+        """Driver-verified ids (sorted) of a ``("substring", phrase,
+        suffix, rare)`` leaf: the rare terms' collected postings
+        intersect, then the literal substring check."""
+        _, phrase, suffix, rare = spec
         needle = f"{phrase} {suffix}".strip().lower()
-        if not terms:
-            if not suffix:
-                return empty
-            return self._leaf_ids_fast(qt.Leaf("prefix", suffix))
-        if any(t not in self.term_stats for t in set(terms)):
-            return empty
-        rare = sorted(set(terms), key=lambda t: self.term_stats[t][0])[:2]
-        p = self._postings_arrays(rare)
-        cand: np.ndarray | None = None
-        for t in rare:
-            d = p[t][0] if t in p else empty
-            cand = d if cand is None else np.intersect1d(cand, d)
-        if cand is None or cand.size == 0:
-            return empty
+        cand = _intersect_terms(bf, rare)
+        if cand.size == 0:
+            return _EMPTY_IDS
         if self._content_cache is not None:
             # zero-job verify: the driver-side document store (loaded
             # under a byte budget) answers the substring check directly —
@@ -2356,94 +1775,44 @@ class SearchEngine:
         )
         return np.array(sorted(r.doc_id for r in rows), dtype=np.int64)
 
-    def _boolean_fast(self, node: qt.OrNode) -> np.ndarray:
-        # ONE postings collect for every keyword/prefix leaf in the whole
-        # tree (a per-leaf collect would cost one Spark job each)
-        leaf_terms: dict[int, list[str]] = {}
-        all_terms: list[str] = []
-        for and_node in node.children:
-            for c in and_node.children:
-                if c.kind == "keyword":
-                    leaf_terms[id(c)] = self._q(c.value)
-                elif c.kind == "prefix":
-                    leaf_terms[id(c)] = self.expand_prefix(c.value)
-                all_terms.extend(leaf_terms.get(id(c), []))
-        shared = self._postings_arrays(all_terms)
-
-        def ids_of(c: qt.Leaf) -> np.ndarray:
-            if id(c) in leaf_terms:
-                ds = [shared[t][0] for t in leaf_terms[id(c)] if t in shared]
-                if not ds:
-                    return np.empty(0, dtype=np.int64)
-                return np.unique(np.concatenate(ds))
-            return self._leaf_ids_fast(c)
-
-        res: np.ndarray | None = None
-        for and_node in node.children:
-            pos = [c for c in and_node.children if not c.negated]
-            neg = [c for c in and_node.children if c.negated]
-            acc = ids_of(pos[0])
-            for c in pos[1:]:
-                acc = np.intersect1d(acc, ids_of(c))
-            for c in neg:
-                acc = np.setdiff1d(acc, ids_of(c))
-            res = acc if res is None else np.union1d(res, acc)
-        return res
-
-    def _ranked_fast(self, node: qt.RankedNode, raw_query: str, k: int):
-        terms = self._query_terms(raw_query)
-        postings = self._postings_arrays(terms)
-        # exhaustive scoring, accumulated in sorted-term order — the same
-        # canonical summation order as the distributed plan's
-        # aggregate(array_sort(collect_list(...)))
-        all_docs = (
-            np.unique(np.concatenate([d for d, _ in postings.values()]))
-            if postings
-            else np.empty(0, dtype=np.int64)
-        )
-        scores = np.zeros(len(all_docs))
-        k1, b = self.k1, self.b
-        for t in sorted(postings):
-            d, tfs = postings[t]
-            idf = bm25_idf(self.n_docs, self.term_stats.get(t, (len(d), 0))[0])
-            dl = self._doclen_of(d).astype(np.float64)
-            tf = tfs.astype(np.float64)
-            s = idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / self.avgdl))
-            np.add.at(scores, np.searchsorted(all_docs, d), s)
-        if any(leaf.kind != "keyword" for leaf in node.children):
-            cand: np.ndarray | None = None
-            for leaf in node.children:
-                d = self._leaf_ids_fast(leaf)
-                cand = d if cand is None else np.union1d(cand, d)
-            pos = np.searchsorted(all_docs, cand) if len(all_docs) else None
-            out = []
-            for i, doc in enumerate(cand):
-                if (
-                    pos is not None
-                    and pos[i] < len(all_docs)
-                    and all_docs[pos[i]] == doc
-                ):
-                    out.append((int(doc), float(scores[pos[i]])))
-                else:
-                    out.append((int(doc), 0.0))
-        else:
-            out = [(int(d), float(s)) for d, s in zip(all_docs, scores)]
-        out.sort(key=lambda x: (-x[1], x[0]))
-        return out[:k]
-
     def _search_fast(self, node, query: str, k: int) -> DataFrame | None:
+        """The kernel over one virtual bucket (bucket 0): its frames are
+        the postings :meth:`_postings_arrays` collected for every term
+        the query reads, its doclen arrays the driver doclen cache.
+        None over the Σdf budget."""
+        ranked = isinstance(node, qt.RankedNode)
+        terms = self._query_terms(query) if ranked else []
+        tree, frame_terms = None, set()
+        if not ranked or any(leaf.kind != "keyword" for leaf in node.children):
+            tree, frame_terms = self._compile_tree(node, self._driver_leaf)
         try:
-            if isinstance(node, qt.OrNode):
-                ids = self._boolean_fast(node)
-                return _local_df(self.spark, 
-                    [(int(x),) for x in ids], "doc_id long"
-                )
-            rows = self._ranked_fast(node, query, k)
-            return _local_df(self.spark, 
-                rows, "doc_id long, score double"
-            )
+            bf = self._postings_arrays(set(terms) | frame_terms, self.fast_max_postings)
         except _FastFallback:
             return None
+        if tree is not None:
+            tree = [
+                [
+                    (("ids", {0: self._phrase_ids_fast(bf, spec)}), neg)
+                    if spec[0] == "substring"
+                    else (spec, neg)
+                    for spec, neg in leaves
+                ]
+                for leaves in tree
+            ]
+        if not ranked:
+            ids = _eval_bucket_tree(bf, tree, 0)
+            return _local_df(self.spark, [(x,) for x in ids.tolist()], "doc_id long")
+        idf = self._scoring_idf(terms)
+        [(d, s)] = score_bucket(
+            bf, self._doclen_ids, self._doclen_vals, [(sorted(idf), tree)],
+            idf, self.k1, self.b, self.avgdl, k=k,
+        )
+        order = np.lexsort((d, -s))[:k]
+        return _local_df(
+            self.spark,
+            list(zip(d[order].tolist(), s[order].tolist())),
+            "doc_id long, score double",
+        )
 
     # ---- entry point -----------------------------------------------------
     def search(self, query: str, k: int = 10, where=None, boost=None) -> DataFrame:
@@ -2544,7 +1913,7 @@ class SearchEngine:
             return rel.orderBy("doc_id").limit(page_size)
         if self._bucket_doclens is not None:
             try:
-                tree, frame_terms = self._compile_serving_tree(node)
+                tree, frame_terms = self._compile_tree(node, self._serving_leaf)
                 page = self._bucketed_eval(
                     tree,
                     frame_terms,
@@ -2684,24 +2053,28 @@ class SearchEngine:
         fallback: list[tuple[int, "qt.RankedNode", str]] = []
         for i, node, raw in parsed:
             if serving and all(c.kind == "keyword" for c in node.children):
-                terms = self._query_terms(raw)
-                batched.append(
-                    (
-                        i,
-                        sorted(
-                            {
-                                t
-                                for t in terms
-                                if self.term_stats.get(t, (0, 0))[0] > 0
-                            }
-                        ),
-                    )
-                )
+                batched.append((i, self._query_terms(raw)))
             else:
                 fallback.append((i, node, raw))
         outs = []
         if batched:
-            outs.append(self._score_batch_bucketed(batched, k, where=where))
+            idf = self._scoring_idf(t for _, ts in batched for t in ts)
+            scored = self._score_bucketed(
+                [(i, sorted(idf.keys() & set(ts)), None) for i, ts in batched],
+                idf, k, where=where,
+            )
+            if k:  # global per-query top-k over O(k × buckets × Q) rows
+                from pyspark.sql import Window
+
+                w = Window.partitionBy("qid").orderBy(
+                    F.desc("score"), F.asc("doc_id")
+                )
+                scored = (
+                    scored.withColumn("rn", F.row_number().over(w))
+                    .filter(F.col("rn") <= k)
+                    .drop("rn")
+                )
+            outs.append(scored)
         for i, node, raw in fallback:
             outs.append(
                 self.ranked(node, raw, k, where=where).select(
@@ -2716,141 +2089,6 @@ class SearchEngine:
         for o in outs[1:]:
             res = res.unionByName(o)
         return res.orderBy("qid", F.desc("score"), F.asc("doc_id"))
-
-    def _score_batch_bucketed(
-        self, batched: list[tuple[int, list[str]]], k: int | None, where=None
-    ) -> DataFrame:
-        """Shared bucket-local DAAT kernel for a batch of keyword
-        queries: one frames shuffle for the union of terms; per bucket,
-        each term decodes + scores ONCE into (positions, scores)
-        vectors, then each query accumulates its own terms' vectors in
-        term-sorted order (the single-query float64 sequence) and emits
-        its local top-k.  Global per-query top-k is a window over
-        O(k × buckets × Q) rows."""
-        import pandas as pd
-
-        qspec = [(qid, terms) for qid, terms in batched if terms]
-        empty = _local_df(self.spark, 
-            [], "qid int, doc_id long, score double"
-        )
-        if not qspec:
-            return empty
-        all_terms = sorted({t for _, ts in qspec for t in ts})
-        idf = {t: bm25_idf(self.n_docs, self.term_stats[t][0]) for t in all_terms}
-        k1, b, avgdl = self.k1, self.b, self.avgdl
-
-        joined = (
-            self._index_rows(all_terms)
-            .groupBy("bucket")
-            .agg(F.collect_list(F.struct("term", "postings")).alias("frames"))
-            .join(self._bucket_doclens, "bucket")
-        )
-        if where is not None:
-            # same per-bucket allowed-id arrays as score_terms_bucketed
-            allowed = (
-                self.docs.filter(self._where_cond(where))
-                .select("doc_id")
-                .withColumn("bucket", self._bexpr)
-                .where(F.col("bucket").isNotNull())
-                .groupBy("bucket")
-                .agg(F.sort_array(F.collect_list("doc_id")).alias("allow_ids"))
-            )
-            joined = joined.join(allowed, "bucket").select(
-                "bucket", "frames", "dl_ids", "dl_lens", "allow_ids"
-            )
-        else:
-            joined = joined.select("bucket", "frames", "dl_ids", "dl_lens")
-        cache_tag = (
-            (self.index_dir, self.version) if self.frame_cache else None
-        )
-
-        def gen(batches):
-            for pdf in batches:
-                out_q, out_d, out_s = [], [], []
-                allow_col = (
-                    pdf["allow_ids"]
-                    if "allow_ids" in pdf.columns
-                    else [None] * len(pdf)
-                )
-                for bkt, frames, dl_ids, dl_lens, allow in zip(
-                    pdf["bucket"], pdf["frames"], pdf["dl_ids"],
-                    pdf["dl_lens"], allow_col,
-                ):
-                    ids = np.asarray(dl_ids, dtype=np.int64)
-                    lens = np.asarray(dl_lens, dtype=np.float64)
-                    svec: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-                    for fr in frames:
-                        d, t, _ = _cached_decode(
-                            cache_tag, fr["term"], bkt,
-                            bytes(fr["postings"]), want_positions=False,
-                        )
-                        pos = np.searchsorted(ids, d)
-                        pos_c = (
-                            np.minimum(pos, len(ids) - 1) if len(ids) else pos
-                        )
-                        # same cache-invariant check as the single-query
-                        # kernel: a posting doc absent from the bucket's
-                        # doclen array must fail loudly, not mis-credit
-                        if len(ids) == 0 or not np.array_equal(ids[pos_c], d):
-                            raise ValueError(
-                                "serving doclen cache is missing posting "
-                                f"doc_ids for term {fr['term']!r}: the "
-                                "docs table and the index disagree — "
-                                "rebuild or reload() the engine"
-                            )
-                        tf = t.astype(np.float64)
-                        s = (
-                            idf[fr["term"]]
-                            * (tf * (k1 + 1))
-                            / (tf + k1 * (1 - b + b * lens[pos_c] / avgdl))
-                        )
-                        svec[fr["term"]] = (pos_c, s)
-                    allow_mask = (
-                        _sorted_member(ids, np.asarray(allow, dtype=np.int64))
-                        if allow is not None
-                        else None
-                    )
-                    for qid, terms in qspec:
-                        acc = np.zeros(len(ids))
-                        touched = np.zeros(len(ids), dtype=bool)
-                        for t in terms:  # sorted ⇒ single-query order
-                            hit = svec.get(t)
-                            if hit is None:
-                                continue  # term absent from this bucket
-                            pos, s = hit
-                            acc[pos] += s
-                            touched[pos] = True
-                        if allow_mask is not None:
-                            touched &= allow_mask
-                        bd, bs = ids[touched], acc[touched]
-                        if k:
-                            bd, bs = _local_topk(bd, bs, k)
-                        if len(bd):
-                            out_q.append(np.full(len(bd), qid, dtype=np.int32))
-                            out_d.append(bd)
-                            out_s.append(bs)
-                if out_q:
-                    yield pd.DataFrame(
-                        {
-                            "qid": np.concatenate(out_q),
-                            "doc_id": np.concatenate(out_d),
-                            "score": np.concatenate(out_s),
-                        }
-                    )
-
-        scored = joined.mapInPandas(gen, "qid int, doc_id long, score double")
-        if k:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("qid").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-            scored = (
-                scored.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= k)
-                .drop("rn")
-            )
-        return scored
 
 
 def _has_phrase(node) -> bool:
@@ -2881,8 +2119,8 @@ def wand_topk(
     """Block-max WAND top-k over decoded postings (Ding & Suel BMW).
 
     ``postings[term] = (doc_ids ascending, tfs)``; ``doclens`` is indexed
-    by doc_id.  Upper bound per block: idf * maxtf*(k1+1)/(maxtf+k1*(1-b))
-    (doclen→0 bound — valid since tfp decreases in doclen).
+    by doc_id.  Upper bound per block: ``bm25_tfp`` of the block's max tf
+    at doclen 0 (valid since tfp decreases in doclen).
 
     Soundness split (this is what makes pruning correct):
 
@@ -2908,18 +2146,12 @@ def wand_topk(
     block_last: dict[str, np.ndarray] = {}
     term_gub: dict[str, float] = {}
     for t in terms:
-        tfs = postings[t][1].astype(np.float64)
-        docs = postings[t][0]
-        nb = (len(docs) + block_size - 1) // block_size
-        ubs = np.empty(nb)
-        last = np.empty(nb, dtype=np.int64)
-        for i in range(nb):
-            mt = tfs[i * block_size : (i + 1) * block_size].max()
-            ubs[i] = idf[t] * (mt * (k1 + 1)) / (mt + k1 * (1 - b))
-            last[i] = docs[min((i + 1) * block_size, len(docs)) - 1]
-        block_ub[t] = ubs
-        block_last[t] = last
-        term_gub[t] = float(ubs.max())
+        docs, tfs = postings[t]
+        starts = np.arange(0, len(docs), block_size)
+        max_tf = np.maximum.reduceat(tfs.astype(np.float64), starts)
+        block_ub[t] = bm25_tfp(idf[t], max_tf, 0.0, k1, b, avgdl)
+        block_last[t] = docs[np.minimum(starts + block_size, len(docs)) - 1]
+        term_gub[t] = float(block_ub[t].max())
 
     cursors = {t: 0 for t in terms}
     heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
@@ -2978,11 +2210,7 @@ def wand_topk(
             score = 0.0
             for t in sorted(eq_terms):
                 tf = float(postings[t][1][cursors[t]])
-                score += (
-                    idf[t]
-                    * (tf * (k1 + 1))
-                    / (tf + k1 * (1 - b + b * dl / avgdl))
-                )
+                score += bm25_tfp(idf[t], tf, dl, k1, b, avgdl)
                 cursors[t] += 1
             item = (score, -pivot_doc)
             if len(heap) < k:

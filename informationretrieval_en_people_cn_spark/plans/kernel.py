@@ -1,0 +1,394 @@
+"""Numpy query kernels, written once and run by every query placement.
+
+A *bucket* is one of the index's doc-range buckets: every posting of a
+doc lives in exactly one, so set algebra, phrase adjacency and BM25
+accumulation are bucket-local and compose exactly across buckets.  The
+serving plans run these kernels inside ``mapInPandas`` once per bucket;
+the driver fast path runs them once over the postings it collected, as
+one *virtual* bucket whose doclen arrays are the engine's driver-side
+doclen cache.  No Spark code lives here.
+
+BM25 (Lucene idf variant):
+
+    idf(t)  = ln(1 + (N - df + 0.5)/(df + 0.5))
+    tfp(t,d)= tf*(k1+1) / (tf + k1*(1 - b + b*doclen/avgdl))
+    score   = Σ_t idf(t) * tfp(t, d), summed from 0.0 in term order
+"""
+
+from __future__ import annotations
+
+import math
+import os
+
+import numpy as np
+
+from ..functions.codec import decode_frames
+
+_EMPTY_IDS = np.empty(0, dtype=np.int64)
+_POS_SHIFT = np.int64(1) << np.int64(32)
+
+
+def bm25_idf(n_docs: int, df: int) -> float:
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def bm25_tfp(idf, tf, dl, k1: float, b: float, avgdl: float):
+    """idf · tfp for scalars or numpy arrays.  At ``dl = 0`` this is the
+    block upper bound (tfp falls as doclen grows), bit for bit the same
+    as ``idf * (tf*(k1+1)) / (tf + k1*(1-b))``: ``b*0.0/avgdl`` is 0.0
+    and ``(1 - b) + 0.0`` is exactly ``1 - b``."""
+    return idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
+
+
+# ---- worker-local posting-frame decode cache ----------------------------
+#
+# Spark reuses python worker processes across tasks
+# (spark.python.worker.reuse, default true), so a module-level LRU
+# survives between queries on the same executor.  A serving workload's
+# term distribution is Zipf — the head terms' frames decode on almost
+# every query; caching the decoded (doc_id, tf[, positions]) arrays
+# turns that repeat work into a dict hit.  Keyed by (index_dir, snapshot
+# version, term, bucket, want_positions, blob length, blob hash):
+# snapshots are immutable and a refresh bumps the version, so stale
+# entries are never served (they age out of the LRU).  Byte-budgeted per
+# worker (IR_FRAME_CACHE_MB, default 256); arrays are returned
+# read-only.  Opt-in per engine (frame_cache=True) so measurements stay
+# honest by default.
+_FRAME_CACHE: dict = {}
+_FRAME_CACHE_BYTES = [0]
+_FRAME_CACHE_STATS = {"hits": 0, "misses": 0}
+
+
+def _frame_cache_budget() -> int:
+    return int(os.environ.get("IR_FRAME_CACHE_MB", "256")) << 20
+
+
+def _cached_decode(tag, term, bucket, blob: bytes, want_positions: bool = False):
+    """decode_frames through the worker-local LRU; ``tag=None``
+    bypasses.  The key is CONTENT-ADDRESSED — it includes the blob's
+    length and (per-process SipHash) hash — so even a hypothetical
+    second frame under the same (term, bucket), or a snapshot mixup,
+    can never serve wrong arrays: different bytes → different key."""
+    if tag is None:
+        return decode_frames(blob, want_positions=want_positions)
+    key = (tag, term, int(bucket), want_positions, len(blob), hash(blob))
+    hit = _FRAME_CACHE.pop(key, None)
+    if hit is not None:
+        _FRAME_CACHE[key] = hit  # move to MRU end (dicts keep order)
+        _FRAME_CACHE_STATS["hits"] += 1
+        return hit[0]
+    _FRAME_CACHE_STATS["misses"] += 1
+    out = decode_frames(blob, want_positions=want_positions)
+    nbytes = sum(a.nbytes for a in out if isinstance(a, np.ndarray))
+    for a in out:
+        if isinstance(a, np.ndarray):
+            a.setflags(write=False)  # shared across queries: immutable
+    budget = _frame_cache_budget()
+    if nbytes > budget:
+        # an entry that can never fit must not flush the hot LRU on its
+        # way to being rejected
+        return out
+    while _FRAME_CACHE and _FRAME_CACHE_BYTES[0] + nbytes > budget:
+        oldest = next(iter(_FRAME_CACHE))  # insertion order = LRU end
+        _, old_bytes = _FRAME_CACHE.pop(oldest)
+        _FRAME_CACHE_BYTES[0] -= old_bytes
+    _FRAME_CACHE[key] = (out, nbytes)
+    _FRAME_CACHE_BYTES[0] += nbytes
+    return out
+
+
+class _BucketFrames:
+    """One bucket's decoded term frames: docID sets per term and, for
+    indexes built with ``store_positions=True``, per-(term, doc)
+    position lists.  ``frames`` are ``{"term", "postings"}`` records —
+    one bucket's shuffled frames, or every frame the driver collected
+    (the virtual bucket: a term then has one frame per doc-range
+    bucket, each ascending, disjoint from the others).
+
+    ``pos_terms`` selects which terms' position payloads are decoded:
+    on a positional index every frame CARRIES positions (≈ Σtf values),
+    but only phrase-leaf terms need them materialized — for everything
+    else the codec skips the payload (want_positions=False)."""
+
+    def __init__(
+        self,
+        frames,
+        pos_terms: frozenset | None = frozenset(),
+        cache_tag=None,
+        bucket: int = -1,
+    ):
+        self.by_term: dict[str, list] = {}
+        for fr in frames:
+            term = fr["term"]
+            want = pos_terms is None or term in pos_terms
+            d, t, p = _cached_decode(
+                cache_tag, term, bucket, bytes(fr["postings"]),
+                want_positions=want,
+            )
+            self.by_term.setdefault(term, []).append(
+                (d.astype(np.int64), t.astype(np.int64), p)
+            )
+
+    def ids(self, term: str) -> np.ndarray:
+        fl = self.by_term.get(term)
+        if not fl:
+            return _EMPTY_IDS
+        if len(fl) == 1:
+            return fl[0][0]
+        return np.unique(np.concatenate([f[0] for f in fl]))
+
+    def union_ids(self, terms) -> np.ndarray:
+        arrs = [a for a in (self.ids(t) for t in set(terms)) if a.size]
+        if not arrs:
+            return _EMPTY_IDS
+        if len(arrs) == 1:
+            return arrs[0]
+        return np.unique(np.concatenate(arrs))
+
+    def postings(self, term: str) -> tuple[np.ndarray, np.ndarray]:
+        """(doc_ids ascending, tfs) of ``term`` over all its frames."""
+        fl = self.by_term[term]
+        if len(fl) == 1:
+            return fl[0][0], fl[0][1]
+        d = np.concatenate([f[0] for f in fl])
+        t = np.concatenate([f[1] for f in fl])
+        order = np.argsort(d, kind="stable")
+        return d[order], t[order]
+
+    def doc_pos_keys(self, term: str, cand: np.ndarray) -> np.ndarray:
+        """(doc, position) pairs of ``term`` restricted to the sorted
+        candidate docs ``cand``, packed as ``idx(cand)·2³² + position``
+        int64 keys (positions are bounded by doclen ≪ 2³²).  Sorted
+        ascending — the vectorized adjacency chain operates on these.
+        Raises if the index was built without positions."""
+        out = []
+        for d, tl, p in self.by_term.get(term, ()):
+            loc = np.searchsorted(cand, d)
+            sel = (loc < cand.size) & (cand[np.minimum(loc, cand.size - 1)] == d)
+            cnt = tl[sel]
+            total = int(cnt.sum())
+            if total == 0:
+                continue
+            if p.size == 0:
+                raise ValueError(
+                    "positional phrase query needs an index built "
+                    "with store_positions=True"
+                )
+            ends = np.cumsum(tl)
+            st = (ends - tl)[sel]
+            offs = np.cumsum(cnt) - cnt
+            flat = np.repeat(st - offs, cnt) + np.arange(total)
+            keys = np.repeat(loc[sel], cnt) * _POS_SHIFT + p[flat].astype(np.int64)
+            out.append(keys)
+        if not out:
+            return _EMPTY_IDS
+        if len(out) == 1:
+            return out[0]  # docs ascend, positions ascend per doc
+        return np.unique(np.concatenate(out))
+
+
+def _sorted_member(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Boolean mask of which elements of sorted ``a`` occur in sorted
+    ``b`` — one binary search per element instead of np.isin's
+    concatenate+argsort of both arrays.  Every kernel id/key array here
+    is sorted by construction (delta decode is strictly increasing;
+    multi-frame unions go through np.unique; set ops preserve order)."""
+    if a.size == 0 or b.size == 0:
+        return np.zeros(a.size, dtype=bool)
+    loc = np.searchsorted(b, a)
+    np.minimum(loc, b.size - 1, out=loc)
+    return b[loc] == a
+
+
+def _intersect_terms(bf: _BucketFrames, terms) -> np.ndarray:
+    """Docs holding every one of ``terms`` (sorted)."""
+    cand = None
+    for t in set(terms):
+        ids = bf.ids(t)
+        cand = ids if cand is None else cand[_sorted_member(cand, ids)]
+        if cand.size == 0:
+            return _EMPTY_IDS
+    return _EMPTY_IDS if cand is None else cand
+
+
+def _pos_phrase_bucket_ids(
+    bf: _BucketFrames, seq: list[str], sfx_terms: list[str] | None
+) -> np.ndarray:
+    """Positional phrase(+prefix) match: docs whose analyzed term
+    sequence holds ``seq`` contiguously (followed by any of
+    ``sfx_terms`` when given).  Candidate docs = intersection of the
+    phrase terms' posting sets; adjacency runs over packed (doc,
+    position) int64 keys (+1 on the key = next position in the SAME
+    doc, so one vectorized membership probe per phrase slot replaces a
+    per-doc loop)."""
+    cand = _intersect_terms(bf, seq)
+    if cand.size == 0:
+        return _EMPTY_IDS
+    keys: dict[str, np.ndarray] = {}
+    for t in set(seq) | set(sfx_terms or ()):
+        keys[t] = bf.doc_pos_keys(t, cand)
+    cur = keys[seq[0]]
+    for i, t in enumerate(seq[1:], start=1):
+        cur = cur[_sorted_member(cur + i, keys[t])]
+        if cur.size == 0:
+            return _EMPTY_IDS
+    if sfx_terms is not None:
+        sk = [keys[t] for t in set(sfx_terms) if keys[t].size]
+        if not sk:
+            return _EMPTY_IDS
+        sks = sk[0] if len(sk) == 1 else np.unique(np.concatenate(sk))
+        cur = cur[_sorted_member(cur + len(seq), sks)]
+        if cur.size == 0:
+            return _EMPTY_IDS
+    return cand[np.unique(cur >> np.int64(32))]
+
+
+def _pos_terms(tree: list) -> frozenset:
+    """Terms whose position payloads the tree's phrase leaves read."""
+    return frozenset(
+        t
+        for leaves in tree
+        for spec, _ in leaves
+        if spec[0] == "pos_phrase"
+        for t in list(spec[1]) + list(spec[2] or ())
+    )
+
+
+def _leaf_bucket_ids(bf: _BucketFrames, spec: tuple, bucket: int) -> np.ndarray:
+    kind = spec[0]
+    if kind == "terms":
+        return bf.union_ids(spec[1])
+    if kind == "ids":  # ids resolved before the kernel runs, per bucket
+        return spec[1].get(bucket, _EMPTY_IDS)
+    if kind == "pos_phrase":
+        return _pos_phrase_bucket_ids(bf, spec[1], spec[2])
+    raise ValueError(kind)
+
+
+def _eval_bucket_tree(bf: _BucketFrames, tree: list, bucket: int) -> np.ndarray:
+    """OR-of-ANDs over bucket-local leaf id sets.  ``tree`` is a list of
+    AND groups, each a list of ``(spec, negated)`` with the positive
+    leaves first; a spec is ``("terms", [t...])``, ``("ids", {bucket:
+    sorted ids})`` or ``("pos_phrase", seq, sfx_terms | None)``."""
+    res = None
+    for leaves in tree:
+        acc = None
+        for spec, negated in leaves:
+            li = _leaf_bucket_ids(bf, spec, bucket)
+            if acc is None:
+                acc = li
+            elif negated:
+                acc = acc[~_sorted_member(acc, li)]
+            else:
+                acc = acc[_sorted_member(acc, li)]
+        res = acc if res is None else np.union1d(res, acc)
+    return res if res is not None else _EMPTY_IDS
+
+
+def _local_topk(
+    ids: np.ndarray, scores: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Exact bucket-local top-k under the GLOBAL result order
+    (score desc, doc_id asc).  ``np.partition`` finds the k-th score in
+    O(n); score ties at the boundary are kept and resolved by a lexsort
+    over only the (small) surviving set, so the k rows returned are
+    precisely the ones the global TakeOrdered would keep from this
+    bucket."""
+    if ids.size <= k:
+        return ids, scores
+    kth = np.partition(scores, ids.size - k)[ids.size - k]
+    keep = scores >= kth  # >= keeps boundary ties for the doc_id tiebreak
+    cid, cs = ids[keep], scores[keep]
+    order = np.lexsort((cid, -cs))[:k]
+    return cid[order], cs[order]
+
+
+def _slots(ids: np.ndarray, docs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Positions of ``docs`` in sorted ``ids`` and which of them are
+    really there."""
+    pos = np.searchsorted(ids, docs)
+    if ids.size == 0:
+        return pos, np.zeros(docs.size, dtype=bool)
+    np.minimum(pos, ids.size - 1, out=pos)
+    return pos, ids[pos] == docs
+
+
+def score_bucket(
+    bf: _BucketFrames,
+    dl_ids,
+    dl_lens,
+    queries: list[tuple[list[str], list | None]],
+    idf: dict[str, float],
+    k1: float,
+    b: float,
+    avgdl: float,
+    *,
+    k: int | None = None,
+    allow=None,
+    boost: tuple[np.ndarray, np.ndarray] | None = None,
+    bucket: int = 0,
+) -> list[tuple[np.ndarray, np.ndarray]]:
+    """BM25 over one bucket for every query ``(terms, tree)`` →
+    ``[(doc_ids, scores)]``, one pair per query.
+
+    ``dl_ids`` (sorted) / ``dl_lens`` are the bucket's docs and doclens.
+    ``terms`` are a query's scoring terms, sorted: each doc sums its
+    term scores from 0.0 in that order — the float64 sequence of the
+    Catalyst plan's ``aggregate(array_sort(collect_list(...)))`` — so
+    every placement returns bit-identical scores.  A term is scored
+    once per bucket, however many queries name it.
+
+    With ``tree`` None the results are the docs holding a scoring term;
+    otherwise the docs :func:`_eval_bucket_tree` returns, scored 0.0
+    where no scoring term occurs (also when a doc is absent from
+    ``dl_ids`` — a reply_to id on the driver).  ``allow`` (sorted ids)
+    keeps only those docs; ``boost = (sorted ids, factors)`` multiplies
+    a boosted doc's score once, after the sum.  With ``k`` set each
+    query keeps its exact local top-k (:func:`_local_topk`).
+
+    Raises ValueError when a posting doc is absent from ``dl_ids``: the
+    docs table and the index disagree, and scoring on would credit a
+    neighbouring doc's accumulator."""
+    ids = np.asarray(dl_ids, dtype=np.int64)
+    lens = np.asarray(dl_lens, dtype=np.float64)
+    vecs: dict[str, list] = {}
+    for t, frames in bf.by_term.items():
+        for d, tl, _ in frames:
+            pos, hit = _slots(ids, d)
+            if not hit.all():
+                raise ValueError(
+                    "doclen cache is missing posting doc_ids for term "
+                    f"{t!r}: the docs table and the index disagree — "
+                    "rebuild or reload() the engine"
+                )
+            if t in idf:
+                s = bm25_tfp(idf[t], tl.astype(np.float64), lens[pos], k1, b, avgdl)
+                vecs.setdefault(t, []).append((pos, s))
+    allow = None if allow is None else np.asarray(allow, dtype=np.int64)
+    out = []
+    for terms, tree in queries:
+        acc = np.zeros(ids.size)
+        touched = np.zeros(ids.size, dtype=bool)
+        for t in sorted(terms):
+            for pos, s in vecs.get(t, ()):
+                acc[pos] += s
+                touched[pos] = True
+        if tree is None:
+            if allow is not None:
+                touched &= _sorted_member(ids, allow)
+            bd, bs = ids[touched], acc[touched]
+        else:
+            bd = _eval_bucket_tree(bf, tree, bucket)
+            if allow is not None:
+                bd = bd[_sorted_member(bd, allow)]
+            pos, hit = _slots(ids, bd)
+            bs = np.zeros(bd.size)
+            bs[hit] = acc[pos[hit]]
+        if boost is not None:
+            m = _sorted_member(bd, boost[0])
+            if m.any():
+                bs[m] *= boost[1][np.searchsorted(boost[0], bd[m])]
+        if k:
+            bd, bs = _local_topk(bd, bs, k)
+        out.append((bd, bs))
+    return out

@@ -31,12 +31,19 @@ def local_rows_df(spark: SparkSession, rows, schema: str):
     guide §1.1: scheduler overhead, not compute).  Routing the rows
     through one Arrow batch (pandas) keeps the relation
     single-partition; int64/float64/str/bool round-trip bit-identically
-    through Arrow."""
+    through Arrow.  Raises ValueError for a row whose length differs
+    from the schema's."""
     import pandas as pd
     from pyspark.sql import types as T
 
     struct = T._parse_datatype_string(schema)
     names = [f.name for f in struct.fields]
+    for row in rows:
+        if len(row) != len(names):
+            raise ValueError(
+                f"row {row!r} has {len(row)} fields, schema {schema!r} "
+                f"has {len(names)}"
+            )
     pdf = pd.DataFrame(
         dict(zip(names, zip(*rows))) if rows else {n: [] for n in names}
     )

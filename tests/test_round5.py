@@ -137,11 +137,11 @@ def test_serving_positional_phrase_identical(spark, index_dir, corpus_pdf):
             (r.doc_id, getattr(r, "score", None)) for r in serv.search(q, 10).collect()
         ]
         assert got == want, q
-    # bucketed positional twins == the groupBy(doc_id) positional plans
+    # the positional plans agree with and without the serving caches
     for ph in (p, _phrase_from(corpus_pdf, doc=1, start=0, n=3)):
         want_ids = sorted(r.doc_id for r in base.phrase_docids_positional(ph).collect())
         got_ids = sorted(
-            r.doc_id for r in serv.phrase_docids_positional_bucketed(ph).collect()
+            r.doc_id for r in serv.phrase_docids_positional(ph).collect()
         )
         assert got_ids == want_ids, ph
     w = corpus_pdf.iloc[0].content.split()[2]
@@ -150,7 +150,7 @@ def test_serving_positional_phrase_identical(spark, index_dir, corpus_pdf):
     )
     got_ids = sorted(
         r.doc_id
-        for r in serv.phrase_prefix_docids_positional_bucketed(w, "pa").collect()
+        for r in serv.phrase_prefix_docids_positional(w, "pa").collect()
     )
     assert got_ids == want_ids
     serv._doclens_cluster.unpersist()
@@ -319,7 +319,7 @@ def test_local_topk_exact_with_ties():
     score ties straddle the k boundary."""
     import numpy as np
 
-    from informationretrieval_en_people_cn_spark.plans.engine import _local_topk
+    from informationretrieval_en_people_cn_spark.plans.kernel import _local_topk
 
     rng = np.random.default_rng(7)
     for trial in range(50):
@@ -797,7 +797,7 @@ def test_frame_cache_parity_and_lru(spark, corpus, tmp_path, monkeypatch):
     bumps the snapshot version in the key so stale postings are never
     served, and the in-process LRU respects its byte budget with
     oldest-first eviction."""
-    from informationretrieval_en_people_cn_spark.plans import engine as eng_mod
+    from informationretrieval_en_people_cn_spark.plans import kernel as kernel_mod
     from informationretrieval_en_people_cn_spark.streaming.incremental import (
         CORPUS_SCHEMA,
         incremental_index,
@@ -872,29 +872,29 @@ def test_frame_cache_parity_and_lru(spark, corpus, tmp_path, monkeypatch):
 
     # in-process LRU semantics: budget respected, oldest evicted first
     monkeypatch.setenv("IR_FRAME_CACHE_MB", "0")  # 0 MB -> never stores
-    eng_mod._FRAME_CACHE.clear()
-    eng_mod._FRAME_CACHE_BYTES[0] = 0
+    kernel_mod._FRAME_CACHE.clear()
+    kernel_mod._FRAME_CACHE_BYTES[0] = 0
     import numpy as np
     from informationretrieval_en_people_cn_spark.functions.codec import (
         encode_frame,
     )
     blob = encode_frame(np.array([1, 5]), np.array([2, 1]))
-    d, t, _ = eng_mod._cached_decode(("idx", 1), "merge", 3, blob)
+    d, t, _ = kernel_mod._cached_decode(("idx", 1), "merge", 3, blob)
     assert list(d) == [1, 5] and list(t) == [2, 1]
-    assert len(eng_mod._FRAME_CACHE) == 0          # over budget: not stored
+    assert len(kernel_mod._FRAME_CACHE) == 0          # over budget: not stored
     monkeypatch.setenv("IR_FRAME_CACHE_MB", "256")
-    d2, _, _ = eng_mod._cached_decode(("idx", 1), "merge", 3, blob)
-    assert list(d2) == [1, 5] and len(eng_mod._FRAME_CACHE) == 1
+    d2, _, _ = kernel_mod._cached_decode(("idx", 1), "merge", 3, blob)
+    assert list(d2) == [1, 5] and len(kernel_mod._FRAME_CACHE) == 1
     assert not d2.flags.writeable                   # shared -> read-only
-    d3, _, _ = eng_mod._cached_decode(("idx", 1), "merge", 3, blob)
+    d3, _, _ = kernel_mod._cached_decode(("idx", 1), "merge", 3, blob)
     assert d3 is d2                                 # hit returns same arrays
-    assert eng_mod._FRAME_CACHE_STATS["hits"] >= 1
+    assert kernel_mod._FRAME_CACHE_STATS["hits"] >= 1
     # content-addressed: same (term, bucket), different bytes -> new key
     blob2 = encode_frame(np.array([2, 9]), np.array([1, 1]))
-    d4, _, _ = eng_mod._cached_decode(("idx", 1), "merge", 3, blob2)
-    assert list(d4) == [2, 9] and len(eng_mod._FRAME_CACHE) == 2
-    eng_mod._FRAME_CACHE.clear()
-    eng_mod._FRAME_CACHE_BYTES[0] = 0
+    d4, _, _ = kernel_mod._cached_decode(("idx", 1), "merge", 3, blob2)
+    assert list(d4) == [2, 9] and len(kernel_mod._FRAME_CACHE) == 2
+    kernel_mod._FRAME_CACHE.clear()
+    kernel_mod._FRAME_CACHE_BYTES[0] = 0
 
     for e in (plain, cached):
         e._doclens_cluster.unpersist()
