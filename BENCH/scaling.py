@@ -276,9 +276,6 @@ def query_one(cpus: int, phrase: bool = False, batch: bool = False) -> dict:
     eng = SearchEngine(
         spark, idx, cache_term_stats=True, fast_path=False,
         persist_doclens=os.environ.get("SCALING_PERSIST_DOCLENS", "1") == "1",
-        decode_repartition_min_sumdf=int(
-            os.environ.get("SCALING_DECODE_REPART_MIN", "2000000")
-        ),
         phrase_via_positions=phrase,
         # ablation knob: worker-local decoded-frame LRU (off by default
         # so protocol verdicts stay comparable across rounds)

@@ -6,7 +6,7 @@ Reference analogue: ``SearchEngine.py:298-313`` (``Index:comments.csv``
 verb + queries-from-file loop).
 
     python -m informationretrieval_en_people_cn_spark build  --corpus DIR --out DIR [--resume]
-    python -m informationretrieval_en_people_cn_spark search --index DIR "merge window" [-k 10] [--wand]
+    python -m informationretrieval_en_people_cn_spark search --index DIR "merge window" [-k 10] [--fast | --blockmax]
         [--where "lang = 'py'"] [--boost "lang = 'py'=2.0"] [--at-version N] [--serving]
     python -m informationretrieval_en_people_cn_spark queries --index DIR --file queries.txt [--batch]
 """
@@ -35,7 +35,6 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--index", required=True)
     s.add_argument("query")
     s.add_argument("-k", type=int, default=10)
-    s.add_argument("--wand", action="store_true", help="driver-side block-max WAND path")
 
     sn = sub.add_parser("snapshots", help="list index snapshot history")
     sn.add_argument("--index", required=True)
@@ -59,13 +58,13 @@ def main(argv: list[str] | None = None) -> int:
             "--fast",
             action="store_true",
             help="low-latency driver-side path (caches term stats + "
-            "doclens; falls back to the distributed plan over budget)",
+            "doclens; falls back to the bucket plan over budget)",
         )
         sp.add_argument(
             "--blockmax",
             action="store_true",
-            help="distributed block-max pruning for ranked top-k "
-            "(bucket-grid upper bounds; identical results)",
+            help="block-max pruning for ranked top-k (bucket-grid "
+            "upper bounds; identical results)",
         )
         sp.add_argument(
             "--serving",
@@ -163,9 +162,8 @@ def main(argv: list[str] | None = None) -> int:
             )
             if getattr(args, "batch", False):
                 if boost:
-                    # mirror the --wand guard: search_batch has no boost
-                    # parameter, so --batch --boost would silently
-                    # return unboosted scores (ADVICE r5)
+                    # search_batch has no boost parameter, so --batch
+                    # --boost would silently return unboosted scores
                     raise SystemExit(
                         "--batch does not support --boost; run boosted "
                         "queries without --batch"
@@ -184,23 +182,12 @@ def main(argv: list[str] | None = None) -> int:
             for query in queries:
                 print(f"# {query}")
                 try:
-                    if args.cmd == "search" and args.wand:
-                        if args.where or boost:
-                            raise SystemExit(
-                                "--wand is the ad-hoc driver path; "
-                                "--where/--boost need the engine plans"
-                            )
-                        for doc_id, score in eng.wand_search(query, k=args.k):
-                            print(f"{doc_id}\t{score:.6f}")
-                    else:
-                        res = eng.search(
-                            query, k=args.k, where=args.where, boost=boost
-                        )
-                        for r in res.collect():
-                            if hasattr(r, "score"):
-                                print(f"{r.doc_id}\t{r.score:.6f}")
-                            else:
-                                print(r.doc_id)
+                    res = eng.search(query, k=args.k, where=args.where, boost=boost)
+                    for r in res.collect():
+                        if hasattr(r, "score"):
+                            print(f"{r.doc_id}\t{r.score:.6f}")
+                        else:
+                            print(r.doc_id)
                 except Exception as e:  # one bad query must not kill the file
                     print(f"error: {type(e).__name__}: {e}")
         return 0

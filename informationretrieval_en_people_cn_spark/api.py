@@ -821,7 +821,7 @@ def q_phrase_positional_bucketed(spark, sf_dir):
 
 def q_ranked_mixed_serving(spark, sf_dir):
     """Mixed-leaf ranked query through the bucket-local serving plan
-    (round 5, plans/engine.py ranked_bucketed): candidates = union of
+    (round 5, plans/engine.py score_terms with node=): candidates = union of
     keyword and substring-verified phrase leaves, BM25-scored with 0.0
     for candidates none of whose terms survive, global top-10.  The
     oracle recomputes candidates ∪ scores in SQL."""

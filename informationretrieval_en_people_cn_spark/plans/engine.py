@@ -6,32 +6,33 @@ SearchEngine.py:80-128) with the Lucene idf variant — the formula,
 bucket set algebra and positional adjacency live once, in numpy, in
 :mod:`.kernel`.
 
-A query runs in one of four placements; all return bit-identical
-``(doc_id, score)`` rows (scores summed from 0.0 in term-sorted
-float64 order):
+Every ranked query is scored by :func:`.kernel.score_bucket`, summed
+from 0.0 in term-sorted float64 order, so every placement returns
+bit-identical ``(doc_id, score)`` rows.  :attr:`SearchEngine.last_trace`
+records which placement served a query and why:
 
-* **Driver fast path** (``fast_path``; needs cached term stats and
-  driver doclens): one pruned scan collects the query terms' frames to
-  the driver, where the kernel runs them as one virtual bucket — the
+* **fast** (``fast_path``; needs cached term stats and driver
+  doclens): one pruned scan collects the query terms' frames to the
+  driver, where the kernel runs them as one virtual bucket — the
   reference's own execution model, behind a Σdf budget.
-* **Bucket-local serving plans** (``persist_doclens``): only the query
-  terms' compressed frames shuffle, grouped by doc-range bucket; the
-  kernel scores / evaluates each bucket against its cached doclen
-  arrays and emits a local top-k.  The positional phrase plans run the
-  same kernel on any index (they need no doclens).
-* **Decoded-join plan** (default): decode postings in ``mapInPandas``,
-  join idf and doclens, canonical-order float64 sum per doc
-  (``aggregate(array_sort(collect_list(...)))``), TakeOrderedAndProject.
-* **Block-max plan** (:meth:`SearchEngine.score_terms_blockmax`): the
-  decoded-join plan over only the buckets whose stored bound can reach
-  the k-th score; :func:`wand_topk` is its driver-side DAAT analogue
-  (the reference's lockstep merge, SearchEngine.py:94-126, with
-  block-max skipping).
+* **bucket** (every other ranked query): only the query terms'
+  compressed frames move, grouped by doc-range bucket and broadcast
+  into the per-bucket doclen arrays; the kernel scores each bucket and
+  emits its exact local top-k, TakeOrderedAndProject merges them.
+  ``persist_doclens`` keeps the doclen arrays cluster-cached; boolean
+  shapes on such an engine run the same bucket kernel's set algebra.
+* **bucket+blockmax** (:meth:`SearchEngine.score_terms_blockmax`): the
+  bucket plan over only the buckets whose metadata bound
+  (:func:`.kernel.bucket_upper_bounds`) can reach the k-th score of the
+  most promising bucket — the one block-max WAND.
+* **join**: boolean shapes without ``persist_doclens`` decode postings
+  in ``mapInPandas`` and combine leaves with semi/anti joins; a mixed
+  ranked query whose leaf the bucket plan cannot evaluate takes its
+  candidates from there (its scores still come from the kernel).
 """
 
 from __future__ import annotations
 
-import heapq
 import math
 
 import numpy as np
@@ -50,8 +51,9 @@ from .kernel import (
     _intersect_terms,
     _pos_terms,
     bm25_idf,
-    bm25_tfp,
+    bucket_upper_bounds,
     score_bucket,
+    surviving_buckets,
 )
 
 _DECODED_SCHEMA = T.StructType(
@@ -90,14 +92,15 @@ def decode_postings_df(index_rows: DataFrame) -> DataFrame:
 
 class _FastFallback(Exception):
     """Raised when a query exceeds the fast path's Σdf budget — the
-    caller falls back to the distributed plan."""
+    caller falls back to the bucket plan; the message is the reason
+    :attr:`SearchEngine.last_trace` records."""
 
 
 class _ServingFallback(Exception):
-    """Raised during serving-plan compilation when a leaf cannot be
-    served bucket-locally (reply_to, missing caches, or a substring
+    """Raised during bucket-plan compilation when a leaf cannot be
+    evaluated bucket-locally (reply_to, missing caches, or a substring
     phrase whose verified set exceeds the collect budget) — the
-    dispatcher falls back to the distributed plan."""
+    dispatcher falls back to the join plan."""
 
 
 class SearchEngine:
@@ -124,7 +127,6 @@ class SearchEngine:
         use_blockmax: bool | None = None,
         blockmax_min_sumdf: int = 5_000_000,
         persist_doclens: bool = False,
-        decode_repartition_min_sumdf: int = 2_000_000,
         phrase_via_positions: bool = False,
         serving_phrase_collect_max: int = 200_000,
         at_version: int | None = None,
@@ -136,7 +138,6 @@ class SearchEngine:
         self.k1, self.b = k1, b
         self.edges = edges  # (src_doc_id, dst_doc_id) id-lookup relation
         self.stop_cf_fraction = stop_cf_fraction
-        self.decode_repartition_min_sumdf = decode_repartition_min_sumdf
         self.fast_max_postings = fast_max_postings
         # distributed block-max pruning for pure-keyword ranked top-k.
         # None = auto: with cached term stats, queries whose Σdf crosses
@@ -146,6 +147,9 @@ class SearchEngine:
         self.use_blockmax = use_blockmax
         self.blockmax_min_sumdf = blockmax_min_sumdf
         self.last_blockmax: dict | None = None
+        # {"placement": "fast" | "bucket" | "bucket+blockmax" | "join",
+        #  "reason": why} of the last search() call
+        self.last_trace: dict | None = None
         # phrase semantics switch: False (default) = the reference's
         # literal-substring verification against the document store;
         # True = TRUE positional matching on the stored position lists
@@ -156,7 +160,7 @@ class SearchEngine:
         # substring-mode serving: a phrase leaf's verified ids are
         # collected and joined bucket-locally; bounded by the rarest
         # phrase term's df — over this budget the query falls back to
-        # the distributed plan
+        # the join plan
         self.serving_phrase_collect_max = serving_phrase_collect_max
         # cache/strategy knobs, kept so reload() can rebuild the same
         # caches against a new snapshot
@@ -176,8 +180,7 @@ class SearchEngine:
         # pointer — reload() is a no-op — and opening a GC'd version
         # fails loudly at construction (IndexPaths raises).
         self.at_version = at_version
-        self._doclens_cluster = None
-        self._bucket_doclens = None
+        self._bucket_dl: DataFrame | None = None
         self._load()
 
     def _load(self) -> None:
@@ -206,94 +209,22 @@ class SearchEngine:
         self.n_docs = st.n_docs
         self.avgdl = float(st.avg_doclen or 0.0) or 1.0
         self.collection_term_count = st.collection_term_count or 0
-        # bucket grid (lo, span, count): present since the stats table
-        # started carrying the build's salting params.  With it, doc →
-        # bucket is O(1) arithmetic (the same _range_bucket float math
-        # the build salted on); without it (older index) serving init
-        # falls back to interval lookup over index metadata.
+        # bucket grid (lo, span, count) the build salted on: doc → bucket
+        # is O(1) arithmetic (the same _range_bucket float math), so a
+        # cluster-scale grid costs one expression, not a CASE chain
         srow = st.asDict()
-        self._grid: tuple[int, int, int] | None = None
-        if srow.get("bucket_count"):
-            self._grid = (
-                int(srow["bucket_lo"]),
-                int(srow["bucket_span"]),
-                int(srow["bucket_count"]),
+        if not srow.get("bucket_count"):
+            raise ValueError(
+                f"index {self.index_dir!r} predates the bucket grid (its "
+                "stats table has no bucket_count): rebuild it with "
+                "build_index"
             )
-        # serving mode: keep (doc_id, doclen) cluster-cached and
-        # PRE-HASH-PARTITIONED on the score join's key.  Every ranked
-        # query joins decoded postings against doclens; without this the
-        # doclen side re-scans the docs table and re-shuffles |corpus|
-        # rows per query.  With it, Spark sees the cached child's
-        # HashPartitioning(doc_id) already satisfies the join's
-        # distribution — only the decoded postings move.  Memory is
-        # 16 B/doc across the cluster; at 10^12 docs that is ~16 TB
-        # spread over executors (or spilled), still far below
-        # re-shuffling it per query.
-        self._doclens_cluster = None
-        self._bucket_doclens = None
-        self._bexpr = None  # doc_id -> bucket expr (serving mode only)
-        if self._persist_doclens:
-            n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            self._doclens_cluster = (
-                self.docs.select("doc_id", "doclen")
-                .repartition(n_parts, "doc_id")
-                .persist()
-            )
-            # per-bucket doclen arrays for the bucket-local DAAT plan
-            # (score_terms_bucketed): bucket → (sorted doc_ids, doclens).
-            # Preferred route: the stats table carries the build's grid
-            # (lo, span, count), so assignment is the same O(1)
-            # _range_bucket arithmetic partition_runs salted on — a
-            # cluster-scale grid (thousands of buckets) costs the same
-            # one expression, not an O(buckets) CASE chain that blows
-            # Catalyst codegen depth.  Legacy route (pre-grid stats):
-            # interval lookup over index metadata.  Memory: |docs|
-            # struct entries spread over buckets; at 10^12 docs the
-            # bucket count scales with the cluster (slices × salt),
-            # keeping each array bounded.
-            if self._grid is not None:
-                from ..operators.build import _range_bucket
-
-                glo, gspan, gn = self._grid
-                bexpr = _range_bucket("doc_id", glo, gspan, gn)
-            else:
-                rng = (
-                    self.index.groupBy("bucket")
-                    .agg(
-                        F.min("first_doc").alias("lo"),
-                        F.max(
-                            F.expr("blocks[size(blocks) - 1].last_doc")
-                        ).alias("hi"),
-                    )
-                    .collect()
-                )
-                bexpr = F.lit(None).cast("int")
-                for r in rng:  # doc ranges are disjoint by construction
-                    bexpr = F.when(
-                        (F.col("doc_id") >= r.lo) & (F.col("doc_id") <= r.hi),
-                        F.lit(int(r.bucket)),
-                    ).otherwise(bexpr)
-            self._bexpr = bexpr  # reused by metadata-scoped serving
-            z = (
-                self.docs.select("doc_id", "doclen")
-                .withColumn("bucket", bexpr)
-                .where(F.col("bucket").isNotNull())
-                .groupBy("bucket")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(F.struct("doc_id", "doclen"))
-                    ).alias("z")
-                )
-            )
-            self._bucket_doclens = (
-                z.select(
-                    "bucket",
-                    F.col("z.doc_id").alias("dl_ids"),
-                    F.col("z.doclen").alias("dl_lens"),
-                )
-                .repartition(n_parts, "bucket")
-                .persist()
-            )
+        self._grid = (
+            int(srow["bucket_lo"]),
+            int(srow["bucket_span"]),
+            int(srow["bucket_count"]),
+        )
+        self._bucket_dl = None  # built on first use (_bucket_doclens)
         # optional driver-side term dictionary (term -> (df, cf)): removes
         # the per-query planning jobs (stop-term lookup, rarest-term sort).
         # Feasible while |vocab| fits driver memory — at web scale leave
@@ -339,8 +270,8 @@ class SearchEngine:
                 }
         # fast path: evaluate small queries driver-side over the decoded
         # (pruned) postings — the reference's own execution model, kept
-        # behind a Σdf budget; the distributed plan is always the
-        # fallback and the default when the caches are absent.
+        # behind a Σdf budget; the bucket plan is always the fallback
+        # and the default when the caches are absent.
         fast_path = self._fast_path_req
         if fast_path is None:
             fast_path = self.term_stats is not None and self._doclen_ids is not None
@@ -375,11 +306,55 @@ class SearchEngine:
             return False  # the pointer past the pinned snapshot
         if IndexPaths(self.index_dir).version == self.version:
             return False
-        for cached in (self._doclens_cluster, self._bucket_doclens):
-            if cached is not None:
-                cached.unpersist()
+        if self._bucket_dl is not None:
+            self._bucket_dl.unpersist()
         self._load()
         return True
+
+    def _bexpr(self):
+        """doc_id → grid bucket, the build's ``_range_bucket`` math."""
+        from ..operators.build import _range_bucket
+
+        return _range_bucket("doc_id", *self._grid)
+
+    @property
+    def _bucket_doclens(self) -> DataFrame:
+        """(bucket, dl_ids, dl_lens): each grid bucket's sorted doc_ids
+        and their doclens — the kernel's doclen side.  Built on first
+        use, so opening an engine costs no Spark or py4j work for it;
+        ``persist_doclens`` keeps it cluster-cached and partitioned by
+        bucket (|docs| entries spread over slices × salt buckets)."""
+        if self._bucket_dl is None:
+            z = (
+                self.docs.select("doc_id", "doclen")
+                .withColumn("bucket", self._bexpr())
+                .groupBy("bucket")
+                .agg(
+                    F.array_sort(
+                        F.collect_list(F.struct("doc_id", "doclen"))
+                    ).alias("z")
+                )
+            )
+            rel = z.select(
+                "bucket",
+                F.col("z.doc_id").alias("dl_ids"),
+                F.col("z.doclen").alias("dl_lens"),
+            )
+            if self._persist_doclens:
+                n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+                rel = rel.repartition(n_parts, "bucket").persist()
+            self._bucket_dl = rel
+        return self._bucket_dl
+
+    @_bucket_doclens.setter
+    def _bucket_doclens(self, rel: DataFrame) -> None:
+        self._bucket_dl = rel
+
+    @property
+    def _doclens_cluster(self) -> DataFrame:
+        """Alias of :attr:`_bucket_doclens`, the one doclen relation
+        (callers written for the old per-doc cache unpersist it)."""
+        return self._bucket_doclens
 
     # ---- analysis (MUST mirror the build path) -------------------------
     def _q(self, text: str) -> list[str]:
@@ -782,12 +757,16 @@ class SearchEngine:
     def _cache_tag(self):
         return (self.index_dir, self.version) if self.frame_cache else None
 
-    def _frames_by_bucket(self, terms, min_bucket: int | None = None) -> DataFrame:
+    def _frames_by_bucket(
+        self, terms, min_bucket: int | None = None, buckets: list[int] | None = None
+    ) -> DataFrame:
         """(bucket, frames): the terms' compressed frames grouped by
         doc-range bucket — the only rows a bucket-local plan shuffles."""
         rows = self._index_rows(sorted(terms))
         if min_bucket:
             rows = rows.filter(F.col("bucket") >= min_bucket)
+        if buckets is not None:
+            rows = rows.filter(F.col("bucket").isin(buckets))
         return (
             rows.groupBy("bucket")
             .agg(F.collect_list(F.struct("term", "postings")).alias("frames"))
@@ -851,7 +830,7 @@ class SearchEngine:
 
     def boolean_docids_bucketed(self, node: qt.OrNode) -> DataFrame:
         """Bucket-local boolean algebra — the serving-mode twin of
-        :meth:`score_terms_bucketed`.  Doc membership is bucket-local
+        :meth:`score_terms`.  Doc membership is bucket-local
         (all of a doc's postings live in its one doc-range bucket), so
         per-bucket numpy set ops compose to the exact global result:
         AND = intersect, NOT = setdiff, OR = union, keyword = union of
@@ -861,7 +840,7 @@ class SearchEngine:
         bucket.  Only the leaves' compressed frames shuffle; the
         decoded-id shuffles + semi-joins of :meth:`boolean_docids`
         disappear.  Raises _ServingFallback for shapes it cannot serve
-        (the dispatcher falls back to the distributed plan)."""
+        (the dispatcher falls back to the join plan)."""
         # single positive substring-phrase leaf: the standalone bucketed
         # phrase plan answers in one candidate job + one verify scan —
         # no pre-collect, no budget
@@ -878,12 +857,9 @@ class SearchEngine:
         tree, frame_terms = self._compile_tree(node, self._serving_leaf)
         return self._bucketed_eval(tree, frame_terms)
 
-    def _bucket_of(self, doc_id: int) -> int | None:
+    def _bucket_of(self, doc_id: int) -> int:
         """Scalar mirror of the build's ``_range_bucket`` double math:
-        the grid bucket whose contiguous doc range holds ``doc_id``
-        (None when the stats table predates the grid)."""
-        if self._grid is None:
-            return None
+        the grid bucket whose contiguous doc range holds ``doc_id``."""
         glo, gspan, gn = self._grid
         frac = float(doc_id - glo) / float(gspan)
         return max(0, min(gn - 1, math.floor(float(gn) * frac)))
@@ -1194,23 +1170,43 @@ class SearchEngine:
                 terms = kept
         return terms
 
-    def _term_df_stats(self, terms: list[str], rows: DataFrame) -> DataFrame:
-        """(term, df) — global df per term (hot terms span rows)."""
-        if self.term_stats is not None:
-            present = [t for t in terms if t in self.term_stats]
-            if present:
-                return _local_df(self.spark, 
-                    [(t, self.term_stats[t][0]) for t in present],
-                    "term string, df long",
-                )
-        return rows.groupBy("term").agg(F.sum("df").alias("df"))
-
-    def _idf_expr(self):
-        return F.log(
-            F.lit(1.0)
-            + (F.lit(float(self.n_docs)) - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
+    def _term_meta(self, terms) -> list:
+        """(term, bucket, df, max_tf) of every index row of ``terms``:
+        one pruned metadata collect — block maxima, no posting decode."""
+        if not terms:
+            return []
+        max_tf = F.array_max(F.transform("blocks", lambda bl: bl["max_tf"]))
+        return (
+            self._index_rows(sorted(set(terms)))
+            .select("term", "bucket", "df", max_tf.alias("max_tf"))
+            .collect()
         )
+
+    def _term_dfs(self, terms, meta: list | None = None) -> dict[str, int]:
+        """Global df of each distinct query term the index holds: cached
+        term stats, else summed over :meth:`_term_meta` rows (a hot term
+        spans one row per bucket)."""
+        if self.term_stats is not None:
+            return {
+                t: self.term_stats[t][0] for t in set(terms) if t in self.term_stats
+            }
+        dfs: dict[str, int] = {}
+        for r in meta if meta is not None else self._term_meta(terms):
+            dfs[r.term] = dfs.get(r.term, 0) + int(r.df)
+        return dfs
+
+    def _scoring_idf(self, terms, meta: list | None = None) -> dict[str, float]:
+        """idf of each distinct query term the index holds — the
+        scoring terms of every placement."""
+        return {
+            t: bm25_idf(self.n_docs, df)
+            for t, df in self._term_dfs(terms, meta).items()
+            if df > 0
+        }
+
+    def _sum_df(self, terms) -> int:
+        """Σdf of the distinct ``terms``."""
+        return sum(self._term_dfs(terms).values())
 
     def _where_cond(self, where):
         return F.expr(where) if isinstance(where, str) else where
@@ -1228,7 +1224,7 @@ class SearchEngine:
         predicate; ``boost`` = list of (predicate, factor) pairs.  A
         doc matching several predicates multiplies their factors (the
         Lucene/Elasticsearch boost composition).  Docs matching none
-        are ABSENT — callers left-join and coalesce to 1.0, so the
+        are ABSENT (the kernel leaves their summed score as is), so the
         boost side stays O(boosted docs), not O(corpus)."""
         fac = F.lit(1.0)
         cond = F.lit(False)
@@ -1240,120 +1236,6 @@ class SearchEngine:
             "doc_id", fac.alias("factor")
         )
 
-    def _score_rows(
-        self,
-        rows: DataFrame,
-        stats: DataFrame,
-        doc_range: tuple[int, int] | None = None,
-        where=None,
-    ) -> DataFrame:
-        """Decode + BM25-score index rows -> (doc_id, score).
-
-        ``doc_range=(lo, hi)`` prunes the doclen side of the join to
-        that doc_id window — the docs table is doc_id-range-partitioned
-        and sorted, so the filter becomes parquet min/max file pruning
-        (the block-max plan scores 1-of-N buckets; scanning ALL doclens
-        for it would dwarf the decode it saved).
-
-        ``where`` scopes scoring to docs passing a metadata predicate:
-        the filter rides the doclen side of the existing inner join —
-        non-matching docs never score, no extra join or shuffle appears
-        in the plan, and BM25 stats (idf, avgdl, N) stay GLOBAL (the
-        standard filtered-search semantics: restrict the result set,
-        not the collection model)."""
-        k1, b = self.k1, self.b
-        decoded = decode_postings_df(rows)
-        if where is not None:
-            # the cluster cache holds (doc_id, doclen) only — metadata
-            # predicates re-scan the docs table (pushdown applies)
-            doclens = self.docs.filter(self._where_cond(where)).select(
-                "doc_id", "doclen"
-            )
-        else:
-            doclens = (
-                self._doclens_cluster
-                if self._doclens_cluster is not None
-                else self.docs.select("doc_id", "doclen")
-            )
-        if doc_range is not None:
-            doclens = doclens.filter(
-                (F.col("doc_id") >= doc_range[0])
-                & (F.col("doc_id") <= doc_range[1])
-            )
-        scored = (
-            decoded.join(F.broadcast(stats), "term")
-            .join(doclens, "doc_id")
-            .withColumn(
-                "s",
-                self._idf_expr()
-                * (F.col("tf") * (k1 + 1))
-                / (
-                    F.col("tf")
-                    + k1 * (1 - b + b * F.col("doclen") / F.lit(self.avgdl))
-                ),
-            )
-        )
-        # canonical-order float64 summation → bit-stable across
-        # parallelism levels (SURVEY §4.3.5)
-        return scored.groupBy("doc_id").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("term", "s"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["s"],
-            ).alias("score")
-        )
-
-    def score_terms(
-        self, terms: list[str], k: int | None = None, where=None, boost=None
-    ) -> DataFrame:
-        """BM25 over the disjunction of ``terms`` → (doc_id, score[, ...]).
-
-        ``where`` restricts results to docs passing a metadata
-        predicate (see :meth:`_score_rows`); scores of surviving docs
-        are unchanged (global BM25 stats).
-
-        ``boost`` (list of (predicate, factor)) multiplies each doc's
-        FINAL summed score by the product of its matching predicates'
-        factors — applied after the canonical term-sorted sum, so the
-        float64 sequence stays identical to the serving kernel's
-        (sum first, one multiply after)."""
-        terms = sorted(set(terms))
-        rows = self._index_rows(terms)
-        # the index is range-partitioned by TERM, so a Zipf-head term's
-        # doc-range shards (up to slices×salt rows) sit in one file and
-        # would decode as ONE straggler task.  When cached stats say the
-        # query is fat, spread the (term, bucket) shards across the
-        # cluster first — the shuffle moves only the query terms'
-        # compressed frames (KBs-MBs), and decode parallelism then
-        # scales with shard count instead of file count.
-        if (
-            self.term_stats is not None
-            and self._sum_df(terms) >= self.decode_repartition_min_sumdf
-        ):
-            n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            rows = rows.repartition(n_parts, "term", "bucket")
-        stats = self._term_df_stats(terms, rows)
-        agg = self._score_rows(rows, stats, where=where)
-        if boost:
-            agg = (
-                agg.join(self._boost_factors(boost), "doc_id", "left")
-                .withColumn(
-                    "score", F.col("score") * F.coalesce("factor", F.lit(1.0))
-                )
-                .drop("factor")
-            )
-        out = agg.orderBy(F.desc("score"), F.asc("doc_id"))
-        return out.limit(k) if k else out
-
-    def _scoring_idf(self, terms) -> dict[str, float]:
-        """idf of each distinct query term the index holds (cached
-        term stats) — the scoring terms of the kernel placements."""
-        return {
-            t: bm25_idf(self.n_docs, self.term_stats[t][0])
-            for t in set(terms)
-            if self.term_stats.get(t, (0, 0))[0] > 0
-        }
-
     def _score_bucketed(
         self,
         queries: list[tuple[int, list[str], list | None]],
@@ -1363,24 +1245,24 @@ class SearchEngine:
         where=None,
         boost=None,
         frame_terms: set[str] = frozenset(),
+        buckets: list[int] | None = None,
     ) -> DataFrame:
-        """Bucket-local DAAT — the sharded-search serving plan, for one
-        query or a batch → (qid, doc_id, score).
+        """Bucket-local DAAT — the one BM25 plan, for one query or a
+        batch → (qid, doc_id, score).
 
         The classic distributed IR architecture (one shard per doc
         range, local scoring, global top-k merge) falls out of the
         index's own salted-merge grid: ALL of a doc's postings live in
-        exactly one doc-range bucket, and serving mode keeps each
-        bucket's (doc_id, doclen) arrays cluster-cached and
-        pre-partitioned on ``bucket``.  ONE shuffle moves only the
-        compressed frames of the union of the queries' terms (plus
-        ``frame_terms``, the leaves' terms) — never decoded postings,
-        never doclens — and each bucket task decodes each term once and
-        runs :func:`.kernel.score_bucket` for every query
-        ``(qid, sorted scoring terms, tree | None)``, emitting each
-        query's exact local top-k (O(k × buckets) rows cross Arrow, not
-        O(touched docs)).  Requires ``persist_doclens=True`` and cached
-        term stats.
+        exactly one doc-range bucket.  Only the compressed frames of the
+        union of the queries' terms (plus ``frame_terms``, the leaves'
+        terms) move — grouped by bucket and broadcast into the
+        per-bucket doclen arrays (:attr:`_bucket_doclens`), never
+        decoded postings — and each bucket task decodes each term once
+        and runs :func:`.kernel.score_bucket` for every query ``(qid,
+        sorted scoring terms, tree | None)``, emitting each query's
+        exact local top-k (O(k × buckets) rows cross Arrow, not
+        O(touched docs)).  ``buckets`` restricts the plan to those grid
+        buckets (block-max probe and survivors).
 
         ``where`` scopes results to a metadata predicate: allowed
         doc_ids arrive as per-bucket sorted arrays (pushdown-filtered
@@ -1393,14 +1275,20 @@ class SearchEngine:
         all_terms = set(idf) | set(frame_terms)
         if not all_terms:
             return _local_df(self.spark, [], schema)
-        joined = self._frames_by_bucket(all_terms).join(self._bucket_doclens, "bucket")
+        doclens = self._bucket_doclens
+        if buckets is not None:
+            doclens = doclens.filter(F.col("bucket").isin(buckets))
+        # frames are query-sized by construction: broadcasting them
+        # keeps the doclen side where it is (no SortMergeJoin shuffle)
+        joined = F.broadcast(self._frames_by_bucket(all_terms, buckets=buckets)).join(
+            doclens, "bucket"
+        )
         cols = ["bucket", "frames", "dl_ids", "dl_lens"]
         if where is not None:
             allowed = (
                 self.docs.filter(self._where_cond(where))
                 .select("doc_id")
-                .withColumn("bucket", self._bexpr)
-                .where(F.col("bucket").isNotNull())
+                .withColumn("bucket", self._bexpr())
                 .groupBy("bucket")
                 .agg(F.sort_array(F.collect_list("doc_id")).alias("allow_ids"))
             )
@@ -1409,8 +1297,7 @@ class SearchEngine:
         if boost:
             bfac = (
                 self._boost_factors(boost)
-                .withColumn("bucket", self._bexpr)
-                .where(F.col("bucket").isNotNull())
+                .withColumn("bucket", self._bexpr())
                 .groupBy("bucket")
                 .agg(
                     F.array_sort(
@@ -1470,129 +1357,85 @@ class SearchEngine:
 
         return joined.mapInPandas(gen, schema)
 
-    def score_terms_bucketed(
-        self, terms: list[str], k: int | None = None, where=None, boost=None
+    def score_terms(
+        self,
+        terms: list[str],
+        k: int | None = None,
+        where=None,
+        boost=None,
+        *,
+        node: qt.RankedNode | None = None,
+        idf: dict[str, float] | None = None,
+        buckets: list[int] | None = None,
     ) -> DataFrame:
-        """BM25 over the disjunction of ``terms`` on the bucket-local
-        serving plan (:meth:`_score_bucketed` with one query).
-        Bit-identical to :meth:`score_terms`; ``where`` / ``boost`` as
-        there."""
-        idf = self._scoring_idf(terms)
-        scored = self._score_bucketed(
-            [(0, sorted(idf), None)], idf, k, where=where, boost=boost
-        )
-        out = scored.select("doc_id", "score").orderBy(F.desc("score"), F.asc("doc_id"))
-        return out.limit(k) if k else out
+        """BM25 over the disjunction of ``terms`` → (doc_id, score),
+        ordered (score desc, doc_id asc): :meth:`_score_bucketed` with
+        one query.
 
-    def ranked_bucketed(
-        self, node: qt.RankedNode, terms: list[str], k: int
-    ) -> DataFrame:
-        """Serving plan for MIXED-leaf ranked queries (phrase / prefix
-        leaves alongside keywords): candidates = union of leaf results,
-        scored by BM25 over the query terms with 0.0 for candidates
-        none of whose terms survived — the exact semantics of the
-        distributed mixed path (candidates left-joined onto scores),
-        computed bucket-locally in ONE frames-shuffle job.
-        Bit-identical to the distributed plan (tested).  Raises
-        _ServingFallback for unserveable leaves."""
-        tree, frame_terms = self._compile_tree(node, self._serving_leaf)
-        idf = self._scoring_idf(terms)
+        ``where`` restricts results to docs passing a metadata
+        predicate; BM25 stats (idf, avgdl, N) stay GLOBAL — the
+        standard filtered-search semantics.  ``boost`` (list of
+        (predicate, factor)) multiplies each doc's FINAL summed score by
+        the product of its matching predicates' factors (sum first, one
+        multiply after).  ``node``, a mixed-leaf ranked query (phrase /
+        prefix leaves beside keywords), makes the candidates the union
+        of its leaves — evaluated in the same bucket task, scored 0.0
+        where none of ``terms`` occurs; it raises _ServingFallback for a
+        leaf the bucket kernel cannot evaluate.  ``idf`` / ``buckets``
+        let the block-max plan reuse its metadata and restrict the
+        buckets scored."""
+        tree, frame_terms = None, set()
+        if node is not None:
+            tree, frame_terms = self._compile_tree(node, self._serving_leaf)
+        if idf is None:
+            idf = self._scoring_idf(terms)
         scored = self._score_bucketed(
-            [(0, sorted(idf), tree)], idf, k, frame_terms=frame_terms
+            [(0, sorted(idf), tree)], idf, k, where=where, boost=boost,
+            frame_terms=frame_terms, buckets=buckets,
         )
-        return (
-            scored.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return _top(scored, k)
 
     def score_terms_blockmax(self, terms: list[str], k: int) -> DataFrame:
-        """Distributed top-k with bucket-grid block-max pruning.
+        """Top-k with bucket-grid block-max pruning (REPOSE's
+        bound-pruned distributed top-k over the build's doc-range grid).
 
-        The index stores every row's doc-range *bucket* — the build's
-        salted-merge grid, which is SHARED across terms (a doc's
-        postings for ALL terms live in exactly one bucket).  So
-        per-bucket upper-bound sums are sound doc-score bounds:
-
-            score(d ∈ bucket B) ≤ Σ_t rowUB_t(B),
-            rowUB = idf(t) · ub(max block tf)  (doclen→0 bound)
-
-        Phase 1 (metadata only — block maxima, no posting decode):
-        per-bucket UB sums.  Phase 2: θ = the k-th best TRUE score
-        inside the most promising bucket.  Phase 3: decode + score only
-        buckets with UB ≥ θ.  Identical results to :meth:`score_terms`
-        (tested); buckets whose bound cannot reach the top-k are never
-        decoded — the distributed analogue of the driver-side WAND.
-        Falls back to score_terms for pre-bucket-column indexes.
-        Pruning stats land in :attr:`last_blockmax` for observability.
-        """
-        terms = sorted(set(terms))
-        if "bucket" not in self.index.columns:
-            return self.score_terms(terms, k)
-        rows = self._index_rows(terms)
-        stats = self._term_df_stats(terms, rows)
-        k1, b = self.k1, self.b
-        maxtf = F.array_max(
-            F.transform("blocks", lambda bl: bl["max_tf"])
-        ).cast("double")
-        rowub = (
-            self._idf_expr() * (maxtf * (k1 + 1)) / (maxtf + k1 * (1 - b))
+        A doc's postings for ALL terms live in one bucket, so a bucket's
+        sum of per-term bounds bounds every doc score in it
+        (:func:`.kernel.bucket_upper_bounds`).  Phase 1: one pruned
+        metadata collect of (term, bucket, df, max block tf) — no
+        posting decode.  Phase 2: θ = the k-th true score inside the
+        most promising bucket (the bucket plan restricted to it).
+        Phase 3: the bucket plan over only the buckets whose bound
+        reaches θ (:func:`.kernel.surviving_buckets`; ties are scored).
+        Identical results to :meth:`score_terms` (tested); pruning stats
+        land in :attr:`last_blockmax`.  Frames decode whole, so blocks
+        inside a surviving bucket are not skipped."""
+        meta = self._term_meta(terms)
+        idf = self._scoring_idf(terms, meta)
+        ub = bucket_upper_bounds(
+            [(r.term, r.bucket, r.max_tf) for r in meta], idf,
+            self.k1, self.b, self.avgdl,
         )
-        last_doc = F.element_at(F.col("blocks"), -1)["last_doc"]
-        bucket_ubs = (
-            rows.select("term", "bucket", "blocks", "first_doc")  # index df
-            .join(F.broadcast(stats), "term")       # col would shadow stats.df
-            .select(
-                "bucket",
-                rowub.alias("ub"),
-                F.col("first_doc").alias("lo"),
-                last_doc.alias("hi"),
-            )
-            .groupBy("bucket")
-            .agg(
-                F.sum("ub").alias("ub"),
-                F.min("lo").alias("lo"),   # bucket = contiguous doc range:
-                F.max("hi").alias("hi"),   # lo/hi bound every posting in it
-            )
-            .collect()
-        )
-        if not bucket_ubs:
+        if not ub:
             return _local_df(self.spark, [], "doc_id long, score double")
-        best_row = max(bucket_ubs, key=lambda r: r.ub)
-        best = best_row.bucket
-        probe = (
-            self._score_rows(
-                rows.filter(F.col("bucket") == best),
-                stats,
-                doc_range=(int(best_row.lo), int(best_row.hi)),
-            )
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .collect()
-        )
+        best = max(ub, key=ub.get)
+        probe = self.score_terms(terms, k, idf=idf, buckets=[best]).collect()
         theta = probe[-1].score if len(probe) == k else -math.inf
-        surv = [r for r in bucket_ubs if r.ub >= theta]
+        surv = surviving_buckets(ub, theta)
         self.last_blockmax = {
-            "buckets_total": len(bucket_ubs),
+            "buckets_total": len(ub),
             "buckets_scored": len(surv),
             "theta": theta,
         }
-        if len(probe) == k and all(r.bucket == best for r in surv):
+        if len(probe) == k and surv == [best]:
             # the probe bucket is the only survivor: its top-k IS the
             # answer — skip the redundant final scoring job
-            return _local_df(self.spark, 
+            return _local_df(
+                self.spark,
                 [(int(r.doc_id), float(r.score)) for r in probe],
                 "doc_id long, score double",
             )
-        final = self._score_rows(
-            rows.filter(F.col("bucket").isin([int(r.bucket) for r in surv])),
-            stats,
-            doc_range=(
-                min(int(r.lo) for r in surv),
-                max(int(r.hi) for r in surv),
-            ),
-        )
-        return final.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self.score_terms(terms, k, idf=idf, buckets=surv)
 
     def _want_blockmax(self, terms: list[str]) -> bool:
         """Auto-select the bucket-pruning plan: explicit True wins;
@@ -1605,16 +1448,8 @@ class SearchEngine:
             return False  # no free Σdf estimate: stay exhaustive
         return self._sum_df(terms) >= self.blockmax_min_sumdf
 
-    def _sum_df(self, terms) -> int:
-        """Σdf of the distinct ``terms``: a dict sum with cached term
-        stats, else one pruned metadata-scale job."""
-        uniq = sorted(set(terms))
-        if self.term_stats is not None:
-            return sum(self.term_stats.get(t, (0, 0))[0] for t in uniq)
-        if not uniq:
-            return 0
-        row = self._index_rows(uniq).agg(F.sum("df").alias("s")).collect()[0]
-        return int(row.s or 0)
+    def _trace(self, placement: str, reason: str) -> None:
+        self.last_trace = {"placement": placement, "reason": reason}
 
     def ranked(
         self,
@@ -1625,110 +1460,54 @@ class SearchEngine:
         boost=None,
     ) -> DataFrame:
         terms = self._query_terms(raw_query)
-        serving = self._bucket_doclens is not None and self.term_stats is not None
         if all(leaf.kind == "keyword" for leaf in node.children):
-            # serving mode: bucket-local DAAT moves only compressed
-            # frames (see score_terms_bucketed) — strictly less shuffle
-            # than both the decoded-join and block-max plans
-            if serving:
-                return self.score_terms_bucketed(
-                    terms, k, where=where, boost=boost
-                )
+            # a metadata scope thins every bucket below its bound
+            # (pruning stays sound but stops paying); a boost can RAISE
+            # a doc past its bucket's bound, which would make pruning
+            # unsound — both keep the exhaustive bucket plan
             if where is None and boost is None and self._want_blockmax(terms):
-                # a metadata scope thins every block below its stored
-                # score bound — pruning stays SOUND but stops paying
-                # (bounds grow slack as selectivity rises), so scoped
-                # queries keep the exhaustive filtered-doclen plan; a
-                # boost can RAISE a doc past a block's stored UB, which
-                # would make pruning UNSOUND — boosted queries always
-                # take the exhaustive plan
+                self._trace(
+                    "bucket+blockmax",
+                    "use_blockmax=True" if self.use_blockmax
+                    else f"Σdf ≥ blockmax_min_sumdf {self.blockmax_min_sumdf}",
+                )
                 return self.score_terms_blockmax(terms, k)
-        elif serving and where is None and boost is None:
-            # mixed-leaf serving: one frames-shuffle job scores AND
-            # resolves phrase/prefix candidates bucket-locally
-            try:
-                return self.ranked_bucketed(node, terms, k)
-            except _ServingFallback:
-                pass  # reply_to leaf / over-budget phrase: distributed
+            return self.score_terms(terms, k, where=where, boost=boost)
+        try:
+            return self.score_terms(terms, k, where, boost, node=node)
+        except _ServingFallback as e:
+            self._trace("join", f"bucket plan cannot evaluate a leaf: {e}")
         scored = self.score_terms(terms, where=where, boost=boost)
         # candidates = union of leaf results (reference SearchEngine.py:274-276);
         # differs from plain disjunctive BM25 when leaves are phrases.
         # Left join keeps candidates none of whose terms survived (score
         # 0.0) — the reference's smoothed zero-tf branch analogue.
-        if any(leaf.kind != "keyword" for leaf in node.children):
-            cand = None
-            for leaf in node.children:
-                d = self._leaf_docids(leaf)
-                cand = d if cand is None else cand.unionByName(d)
-            cand = cand.distinct()
-            if where is not None:
-                # score-0 candidates must respect the scope too (the
-                # scored side is already doclen-filtered)
-                cand = cand.join(self._allowed_docs(where), "doc_id", "left_semi")
-            scored = (
-                cand
-                .join(scored, "doc_id", "left")
-                .fillna(0.0, subset=["score"])
-            )
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    def wand_search(
-        self, query: str, k: int = 10, *, max_postings: int = 5_000_000
-    ) -> list[tuple[int, float]]:
-        """Low-latency single-query path: block-max WAND over postings
-        pulled to the driver (reference's DAAT loop, SearchEngine.py:94-126,
-        upgraded with pruning).  Returns the same ranking as the
-        distributed plan (tested).
-
-        Guard: if the query's total df exceeds ``max_postings`` the
-        driver-side collect would OOM on a Zipf-head term, so the
-        distributed plan (:meth:`score_terms`) takes over — the check is
-        free with cached term stats, else one pruned metadata-scale job.
-        """
-        terms = self._query_terms(query)
-        if not terms:
-            return []
-        try:
-            bf = self._postings_arrays(terms, max_postings)
-        except _FastFallback:  # hot term: stay distributed
-            return [
-                (int(r.doc_id), float(r.score))
-                for r in self.score_terms(terms, k).collect()
-            ]
-        postings = {t: bf.postings(t) for t in bf.by_term}
-        if not postings:  # no query term exists in the dictionary
-            return []
-        dfs = {t: len(d) for t, (d, _) in postings.items()}
-        # doclens only for candidate docs (semi-join, not a full scan)
-        all_docs = np.unique(np.concatenate([d for d, _ in postings.values()]))
-        cand = _local_df(self.spark, 
-            [(int(x),) for x in all_docs], "doc_id long"
-        )
-        dl_rows = self.docs.join(F.broadcast(cand), "doc_id").select(
-            "doc_id", "doclen"
-        ).collect()
-        doclens = {r.doc_id: r.doclen for r in dl_rows}
-        return wand_topk(
-            postings, dfs, doclens, self.n_docs, self.avgdl, k,
-            k1=self.k1, b=self.b,
-        )
+        cand = None
+        for leaf in node.children:
+            d = self._leaf_docids(leaf)
+            cand = d if cand is None else cand.unionByName(d)
+        cand = cand.distinct()
+        if where is not None:
+            # score-0 candidates must respect the scope too
+            cand = cand.join(self._allowed_docs(where), "doc_id", "left_semi")
+        return _top(cand.join(scored, "doc_id", "left").fillna(0.0, subset=["score"]), k)
 
     # ---- driver-side fast path (low-latency small queries) ---------------
-    # The distributed plan costs 3-5 Spark stages (~0.6-1 s of scheduling
-    # at any size); for queries whose pruned postings fit a Σdf budget,
-    # the reference's own execution model — decode on the driver, run
-    # the bucket kernel over one virtual bucket — answers in ONE pruned-scan job
-    # (plus one verify job for phrase leaves).  Results are identical to
-    # the distributed plan (tested per shape); the budget guard falls
-    # back to the distributed plan, which remains the scale path.
+    # The bucket plan costs a few Spark stages at any size; for queries
+    # whose pruned postings fit a Σdf budget, the reference's own
+    # execution model — decode on the driver, run the bucket kernel over
+    # one virtual bucket — answers in ONE pruned-scan job (plus one
+    # verify job for phrase leaves).  Results are identical (tested per
+    # shape); over the budget the bucket plan, the scale path, answers.
 
     def _postings_arrays(self, terms, budget: int) -> _BucketFrames:
         """The terms' frames, collected to the driver in ONE pruned scan
         and decoded as one virtual bucket.  Raises :class:`_FastFallback`
         when the terms' Σdf exceeds ``budget``."""
         uniq = sorted(set(terms))
-        if self._sum_df(uniq) > budget:
-            raise _FastFallback
+        sum_df = self._sum_df(uniq)
+        if sum_df > budget:
+            raise _FastFallback(f"Σdf {sum_df} over fast_max_postings {budget}")
         if not uniq:
             return _BucketFrames([])
         return _BucketFrames(self._index_rows(uniq).select("term", "postings").collect())
@@ -1779,7 +1558,7 @@ class SearchEngine:
         """The kernel over one virtual bucket (bucket 0): its frames are
         the postings :meth:`_postings_arrays` collected for every term
         the query reads, its doclen arrays the driver doclen cache.
-        None over the Σdf budget."""
+        None over the Σdf budget (recorded in :attr:`last_trace`)."""
         ranked = isinstance(node, qt.RankedNode)
         terms = self._query_terms(query) if ranked else []
         tree, frame_terms = None, set()
@@ -1787,8 +1566,10 @@ class SearchEngine:
             tree, frame_terms = self._compile_tree(node, self._driver_leaf)
         try:
             bf = self._postings_arrays(set(terms) | frame_terms, self.fast_max_postings)
-        except _FastFallback:
+        except _FastFallback as e:
+            self._trace("bucket", str(e))
             return None
+        self._trace("fast", f"Σdf within fast_max_postings {self.fast_max_postings}")
         if tree is not None:
             tree = [
                 [
@@ -1826,8 +1607,8 @@ class SearchEngine:
         ``"repo = 'org/x' AND path LIKE 'src/%'"``) — the code-search
         facility the input table's (repo, path, lang) columns exist
         for.  BM25 stats stay global; scoped queries skip the driver
-        fast path (its caches carry no metadata) and route to the
-        filtered distributed/serving plans.
+        fast path (its caches carry no metadata) and take the bucket
+        plan.
 
         ``boost`` (list of (predicate, factor) pairs) multiplies a
         matching doc's summed BM25 score by the product of its
@@ -1840,11 +1621,14 @@ class SearchEngine:
                 "boost applies to ranked queries; boolean shapes have "
                 "no score to boost"
             )
-        if where is None and boost is None and self.fast_path and not (
-            self.phrase_via_positions and _has_phrase(node)
-        ):
-            # the driver fast path verifies phrases by substring; under
-            # phrase_via_positions the positional plans must answer
+        if not self.fast_path:
+            self._trace("bucket", "fast path off (cache_term_stats + cache_doclens)")
+        elif where is not None or boost is not None:
+            self._trace("bucket", "where/boost: the driver caches carry no metadata")
+        elif self.phrase_via_positions and _has_phrase(node):
+            # the driver fast path verifies phrases by substring
+            self._trace("bucket", "phrase_via_positions: positional phrase plans")
+        else:
             res = self._search_fast(node, query, k)
             if res is not None:
                 return res
@@ -1856,13 +1640,14 @@ class SearchEngine:
         # is persisted-intermediate reuse, not planning reuse.  Every
         # search() therefore builds a fresh DataFrame.
         if isinstance(node, qt.OrNode):
-            if self._bucket_doclens is not None:
+            res = None
+            if not self._persist_doclens:
+                self._trace("join", "boolean shape without persist_doclens")
+            else:
                 try:
                     res = self.boolean_docids_bucketed(node)
-                except _ServingFallback:
-                    res = None  # reply_to / over-budget phrase
-            else:
-                res = None
+                except _ServingFallback as e:  # reply_to / over-budget phrase
+                    self._trace("join", f"bucket plan cannot evaluate a leaf: {e}")
             if res is None:
                 res = self.boolean_docids(node)
             if where is not None:
@@ -1911,7 +1696,7 @@ class SearchEngine:
             if after_doc_id is not None:
                 rel = rel.filter(F.col("doc_id") > after_doc_id)
             return rel.orderBy("doc_id").limit(page_size)
-        if self._bucket_doclens is not None:
+        if self._persist_doclens:
             try:
                 tree, frame_terms = self._compile_tree(node, self._serving_leaf)
                 page = self._bucketed_eval(
@@ -1920,14 +1705,12 @@ class SearchEngine:
                     after=after_doc_id,
                     cap=page_size,
                     min_bucket=(
-                        self._bucket_of(after_doc_id)
-                        if after_doc_id is not None
-                        else None
+                        None if after_doc_id is None else self._bucket_of(after_doc_id)
                     ),
                 )
                 return page.orderBy("doc_id").limit(page_size)
             except _ServingFallback:
-                pass  # reply_to / over-budget phrase: distributed
+                pass  # reply_to / over-budget phrase: join plan
         rel = self.boolean_docids(node)
         if after_doc_id is not None:
             rel = rel.filter(F.col("doc_id") > after_doc_id)
@@ -2026,19 +1809,18 @@ class SearchEngine:
         term once, and every query reuses the decoded (positions,
         scores) vectors — per-query cost approaches the pure numpy
         accumulation.  Per-query results are bit-identical to
-        :meth:`score_terms_bucketed` (same term-sorted float64
-        accumulation per query; tested).
+        :meth:`score_terms` (same term-sorted float64 accumulation per
+        query; tested).
 
         ``where`` applies one metadata scope to every query in the
         batch (per-bucket allowed-id arrays masked in the shared
-        kernel, exactly as in :meth:`score_terms_bucketed`).
+        kernel, exactly as in :meth:`score_terms`).
 
         Shapes: pure-keyword ranked queries ride the shared kernel;
         ranked queries with phrase/prefix/reply leaves fall back to
         their per-query plans and union in (qid tagged); boolean
         queries are rejected (no score — batch their matched PAGES via
-        :meth:`search_page` instead).  Without serving mode every query
-        takes the per-query path."""
+        :meth:`search_page` instead)."""
         parsed = []
         for i, q in enumerate(queries):
             node = qt.parse(q)
@@ -2048,17 +1830,16 @@ class SearchEngine:
                     f"is boolean: {q!r}"
                 )
             parsed.append((i, node, q))
-        serving = self._bucket_doclens is not None and self.term_stats is not None
         batched: list[tuple[int, list[str]]] = []
         fallback: list[tuple[int, "qt.RankedNode", str]] = []
         for i, node, raw in parsed:
-            if serving and all(c.kind == "keyword" for c in node.children):
+            if all(c.kind == "keyword" for c in node.children):
                 batched.append((i, self._query_terms(raw)))
             else:
                 fallback.append((i, node, raw))
         outs = []
         if batched:
-            idf = self._scoring_idf(t for _, ts in batched for t in ts)
+            idf = self._scoring_idf([t for _, ts in batched for t in ts])
             scored = self._score_bucketed(
                 [(i, sorted(idf.keys() & set(ts)), None) for i, ts in batched],
                 idf, k, where=where,
@@ -2091,6 +1872,12 @@ class SearchEngine:
         return res.orderBy("qid", F.desc("score"), F.asc("doc_id"))
 
 
+def _top(scored: DataFrame, k: int | None) -> DataFrame:
+    """(doc_id, score) ordered (score desc, doc_id asc), top-``k``."""
+    out = scored.select("doc_id", "score").orderBy(F.desc("score"), F.asc("doc_id"))
+    return out.limit(k) if k else out
+
+
 def _has_phrase(node) -> bool:
     """True if the parsed tree contains a phrase / phrase_prefix leaf."""
     if isinstance(node, qt.RankedNode):
@@ -2100,129 +1887,3 @@ def _has_phrase(node) -> bool:
         for a in node.children
         for c in a.children
     )
-
-
-
-
-# ---- WAND fast path (numpy, block-max) ----------------------------------
-def wand_topk(
-    postings: dict[str, tuple[np.ndarray, np.ndarray]],
-    dfs: dict[str, int],
-    doclens: np.ndarray,
-    n_docs: int,
-    avgdl: float,
-    k: int,
-    k1: float = 1.2,
-    b: float = 0.75,
-    block_size: int = 128,
-) -> list[tuple[int, float]]:
-    """Block-max WAND top-k over decoded postings (Ding & Suel BMW).
-
-    ``postings[term] = (doc_ids ascending, tfs)``; ``doclens`` is indexed
-    by doc_id.  Upper bound per block: ``bm25_tfp`` of the block's max tf
-    at doclen 0 (valid since tfp decreases in doclen).
-
-    Soundness split (this is what makes pruning correct):
-
-    * pivot selection AND termination use each term's **global** upper
-      bound (max over all its blocks) — a block-local UB does not bound
-      later blocks, so using it there silently drops high-tf docs in
-      later blocks;
-    * the per-**block** maxima are only the secondary check: when the
-      lists aligned at the pivot can't beat the threshold even by their
-      current-block bounds, skip to the nearest block boundary instead
-      of scoring.
-
-    Returns [(doc_id, score)] sorted by (-score, doc_id): identical
-    results to the exhaustive plan, fewer scored docs.
-    """
-    terms = [t for t in postings if len(postings[t][0])]
-    if not terms:
-        return []
-    idf = {t: bm25_idf(n_docs, dfs[t]) for t in terms}
-
-    # per-term block maxima + global term bound
-    block_ub: dict[str, np.ndarray] = {}
-    block_last: dict[str, np.ndarray] = {}
-    term_gub: dict[str, float] = {}
-    for t in terms:
-        docs, tfs = postings[t]
-        starts = np.arange(0, len(docs), block_size)
-        max_tf = np.maximum.reduceat(tfs.astype(np.float64), starts)
-        block_ub[t] = bm25_tfp(idf[t], max_tf, 0.0, k1, b, avgdl)
-        block_last[t] = docs[np.minimum(starts + block_size, len(docs)) - 1]
-        term_gub[t] = float(block_ub[t].max())
-
-    cursors = {t: 0 for t in terms}
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
-    threshold = -math.inf
-
-    def cur_doc(t: str) -> int:
-        return int(postings[t][0][cursors[t]])
-
-    def cur_block(t: str, doc: int) -> int:
-        return int(np.searchsorted(block_last[t], doc))
-
-    while True:
-        live = [t for t in terms if cursors[t] < len(postings[t][0])]
-        if not live:
-            break
-        live.sort(key=lambda t: (cur_doc(t), t))
-        # pivot: smallest prefix whose GLOBAL UB sum can beat OR TIE the
-        # threshold — ties must not be pruned: a doc scoring exactly the
-        # k-th heap score could win the (-score, doc_id) tie-break, so
-        # pruning uses strict <, candidacy uses >= (conservative)
-        acc = 0.0
-        pivot_i = None
-        for i, t in enumerate(live):
-            acc += term_gub[t]
-            if len(heap) < k or acc >= threshold:
-                pivot_i = i
-                break
-        if pivot_i is None:
-            break  # sound: global UBs bound every remaining posting
-        pivot_doc = cur_doc(live[pivot_i])
-        first_doc = cur_doc(live[0])
-        if first_doc == pivot_doc:
-            # all lists positioned AT pivot_doc (sorted ⇒ the aligned
-            # set is every live term whose current doc equals the pivot)
-            eq_terms = [t for t in live if cur_doc(t) == pivot_doc]
-            gt_docs = [cur_doc(t) for t in live if cur_doc(t) > pivot_doc]
-            eq_blocks = {t: cur_block(t, pivot_doc) for t in eq_terms}
-            block_bound = sum(float(block_ub[t][eq_blocks[t]]) for t in eq_terms)
-            if len(heap) == k and block_bound < threshold:
-                # block-max skip: no doc in [pivot_doc, d') can beat the
-                # threshold — only eq_terms occur there (others' cursors
-                # are >= d') and each is bounded by its CURRENT block max
-                d_prime = min(
-                    int(block_last[t][eq_blocks[t]]) for t in eq_terms
-                ) + 1
-                if gt_docs:
-                    d_prime = min(d_prime, min(gt_docs))
-                d_prime = max(d_prime, pivot_doc + 1)  # guaranteed progress
-                for t in eq_terms:
-                    cursors[t] = int(np.searchsorted(postings[t][0], d_prime))
-                continue
-            if isinstance(doclens, dict):  # sparse (hashed doc_ids)
-                dl = float(doclens.get(pivot_doc, 0))
-            else:
-                dl = float(doclens[pivot_doc]) if pivot_doc < len(doclens) else 0.0
-            score = 0.0
-            for t in sorted(eq_terms):
-                tf = float(postings[t][1][cursors[t]])
-                score += bm25_tfp(idf[t], tf, dl, k1, b, avgdl)
-                cursors[t] += 1
-            item = (score, -pivot_doc)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-            if len(heap) == k:
-                threshold = heap[0][0]
-        else:
-            # advance all pre-pivot cursors to >= pivot_doc
-            for t in live[:pivot_i]:
-                docs = postings[t][0]
-                cursors[t] = int(np.searchsorted(docs, pivot_doc))
-    out = sorted(heap, key=lambda x: (-x[0], -x[1]))
-    return [(-d, s) for s, d in out]

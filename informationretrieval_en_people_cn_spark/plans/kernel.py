@@ -3,10 +3,11 @@
 A *bucket* is one of the index's doc-range buckets: every posting of a
 doc lives in exactly one, so set algebra, phrase adjacency and BM25
 accumulation are bucket-local and compose exactly across buckets.  The
-serving plans run these kernels inside ``mapInPandas`` once per bucket;
+bucket plans run these kernels inside ``mapInPandas`` once per bucket;
 the driver fast path runs them once over the postings it collected, as
 one *virtual* bucket whose doclen arrays are the engine's driver-side
-doclen cache.  No Spark code lives here.
+doclen cache.  Block-max pruning bounds whole buckets from index
+metadata (:func:`bucket_upper_bounds`).  No Spark code lives here.
 
 BM25 (Lucene idf variant):
 
@@ -333,9 +334,8 @@ def score_bucket(
 
     ``dl_ids`` (sorted) / ``dl_lens`` are the bucket's docs and doclens.
     ``terms`` are a query's scoring terms, sorted: each doc sums its
-    term scores from 0.0 in that order — the float64 sequence of the
-    Catalyst plan's ``aggregate(array_sort(collect_list(...)))`` — so
-    every placement returns bit-identical scores.  A term is scored
+    term scores from 0.0 in that order, so every placement returns
+    bit-identical scores.  A term is scored
     once per bucket, however many queries name it.
 
     With ``tree`` None the results are the docs holding a scoring term;
@@ -392,3 +392,33 @@ def score_bucket(
             bd, bs = _local_topk(bd, bs, k)
         out.append((bd, bs))
     return out
+
+
+def bucket_upper_bounds(
+    rows, idf: dict[str, float], k1: float, b: float, avgdl: float
+) -> dict[int, float]:
+    """Per-bucket BM25 upper bounds from index metadata → {bucket: UB}.
+
+    ``rows`` are ``(term, bucket, max block tf)`` triples; terms without
+    an ``idf`` entry are not scoring terms and are skipped.  A term's
+    bound in a bucket is ``bm25_tfp(idf, max_tf, 0.0, …)`` (tfp rises
+    with tf and falls with doclen), and a bucket's bound sums them from
+    0.0 in sorted term order — the float64 sequence of a doc's score in
+    :func:`score_bucket`.  Float addition is monotone, so no doc in the
+    bucket can score above its bound, bit for bit."""
+    max_tf: dict[tuple[str, int], float] = {}
+    for term, bucket, tf in rows:
+        if term in idf:
+            key = (term, int(bucket))
+            max_tf[key] = max(max_tf.get(key, 0.0), float(tf))
+    ub: dict[int, float] = {}
+    for (term, bucket), tf in sorted(max_tf.items()):
+        ub[bucket] = ub.get(bucket, 0.0) + bm25_tfp(idf[term], tf, 0.0, k1, b, avgdl)
+    return ub
+
+
+def surviving_buckets(ub: dict[int, float], theta: float) -> list[int]:
+    """Buckets (ascending) whose bound can reach the k-th score
+    ``theta``.  A bound equal to θ survives: a doc scoring exactly θ
+    can still win the doc_id tie-break."""
+    return sorted(bk for bk, bound in ub.items() if bound >= theta)

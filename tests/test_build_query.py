@@ -5,8 +5,17 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from informationretrieval_en_people_cn_spark.functions.codec import decode_frames
-from informationretrieval_en_people_cn_spark.plans.engine import wand_topk
+from informationretrieval_en_people_cn_spark.functions.codec import (
+    decode_frames,
+    encode_frame,
+)
+from informationretrieval_en_people_cn_spark.plans.kernel import (
+    _BucketFrames,
+    bm25_idf,
+    bucket_upper_bounds,
+    score_bucket,
+    surviving_buckets,
+)
 
 from .oracle import bm25_scores, build_oracle_index, topk
 
@@ -175,7 +184,7 @@ def test_wand_equals_exhaustive(engine, oracle):
     }
     doclen_dense = {dense[d]: l for d, l in doclen_gold.items()}
     for k in (1, 3, 10, 50):
-        got = wand_topk(
+        got = _blockmax_topk(
             postings,
             dfs,
             doclens,
@@ -183,13 +192,11 @@ def test_wand_equals_exhaustive(engine, oracle):
             stats_gold["avgdl"],
             k,
             block_size=4,
-        )
+        )["topk"]
         gold = topk(
             bm25_scores(gold_dense, doclen_dense, stats_gold, terms), k
         )
-        assert [d for d, _ in got] == [d for d, _ in gold], k
-        for (gd, gs), (od, os_) in zip(got, gold):
-            assert gs == pytest.approx(os_, rel=1e-12)
+        assert got == gold, k  # doc_ids and scores, bit for bit
 
 
 def test_phrase_prefix_query(engine, corpus_pdf):
@@ -204,11 +211,52 @@ def test_phrase_prefix_query(engine, corpus_pdf):
     assert got == gold
 
 
-def _bm25_exhaustive(postings, dfs, doclens, n_docs, avgdl, k, k1=1.2, b=0.75):
-    from informationretrieval_en_people_cn_spark.plans.engine import bm25_idf
+def _blockmax_topk(postings, dfs, doclens, n_docs, avgdl, k, block_size,
+                   k1=1.2, b=0.75):
+    """The engine's block-max rule (``score_terms_blockmax``) without
+    Spark: docs split into buckets of ``block_size`` consecutive
+    doc_ids, per-bucket bounds from (term, bucket, max tf) metadata,
+    θ = the k-th kernel score of the best-bounded bucket, then every
+    surviving bucket scored by the kernel and merged.  ``doclens`` maps
+    (or indexes) doc_id → doclen."""
+    dl = doclens if isinstance(doclens, dict) else dict(enumerate(doclens))
+    idf = {t: bm25_idf(n_docs, dfs[t]) for t in postings if len(postings[t][0])}
+    frames, meta = {}, []
+    for t in idf:
+        docs, tfs = postings[t]
+        bk = docs // block_size
+        for bucket in np.unique(bk):
+            m = bk == bucket
+            frames.setdefault(int(bucket), []).append(
+                {"term": t, "postings": encode_frame(docs[m], tfs[m])}
+            )
+            meta.append((t, int(bucket), int(tfs[m].max())))
+    bounds = bucket_upper_bounds(meta, idf, k1, b, avgdl)
 
+    def score(bucket):
+        ids = sorted(d for d in dl if d // block_size == bucket)
+        [(d, s)] = score_bucket(
+            _BucketFrames(frames[bucket]), ids, [dl[x] for x in ids],
+            [(sorted(idf), None)], idf, k1, b, avgdl, k=k, bucket=bucket,
+        )
+        return list(zip(d.tolist(), s.tolist()))
+
+    def merged(rows):
+        return sorted(rows, key=lambda x: (-x[1], x[0]))[:k]
+
+    if not bounds:
+        return {"topk": [], "bounds": {}, "theta": None, "survivors": []}
+    best = max(bounds, key=bounds.get)
+    probe = merged(score(best))
+    theta = probe[-1][1] if len(probe) == k else -np.inf
+    surv = surviving_buckets(bounds, theta)
+    rows = [r for bucket in surv for r in score(bucket)]
+    return {"topk": merged(rows), "bounds": bounds, "theta": theta, "survivors": surv}
+
+
+def _bm25_exhaustive(postings, dfs, doclens, n_docs, avgdl, k, k1=1.2, b=0.75):
     scores = {}
-    for t in sorted(postings):  # canonical term order (matches wand_topk)
+    for t in sorted(postings):  # canonical term order (matches the kernel)
         docs, tfs = postings[t]
         idf = bm25_idf(n_docs, dfs[t])
         for d, tf in zip(docs, tfs):
@@ -220,16 +268,18 @@ def _bm25_exhaustive(postings, dfs, doclens, n_docs, avgdl, k, k1=1.2, b=0.75):
 
 
 def test_wand_blockmax_late_high_block():
-    """Regression (round-1 advice): a low-tf middle block must not
-    terminate the traversal — the true top-k lives in a LATER block.
-    Unsound current-block pivot bounds returned docs 0-3 here."""
+    """A low-tf middle bucket must not stop the search — the true top-k
+    lives in a LATER bucket, which has the highest bound: the probe
+    scores it first, and the low-tf bucket falls below θ."""
     docs = np.arange(12, dtype=np.int64)
     tfs = np.array([50] * 4 + [1] * 4 + [60] * 4, dtype=np.int64)
     postings = {"t": (docs, tfs)}
     doclens = np.full(12, 10, dtype=np.int64)
-    got = wand_topk(postings, {"t": 12}, doclens, 12, 10.0, 4, block_size=4)
+    got = _blockmax_topk(postings, {"t": 12}, doclens, 12, 10.0, 4, block_size=4)
     want = _bm25_exhaustive(postings, {"t": 12}, doclens, 12, 10.0, 4)
-    assert [d for d, _ in got] == [d for d, _ in want] == [8, 9, 10, 11]
+    assert got["topk"] == want
+    assert [d for d, _ in want] == [8, 9, 10, 11]
+    assert got["survivors"] == [0, 2]  # the low-tf middle bucket is pruned
 
 
 def test_wand_random_equals_exhaustive_across_block_sizes():
@@ -245,11 +295,9 @@ def test_wand_random_equals_exhaustive_across_block_sizes():
         dfs[t] = len(m)
     for bs in (1, 2, 4, 16, 128):
         for k in (1, 5, 20, 200):
-            got = wand_topk(postings, dfs, doclens, n_docs, avgdl, k, block_size=bs)
+            got = _blockmax_topk(postings, dfs, doclens, n_docs, avgdl, k, block_size=bs)
             want = _bm25_exhaustive(postings, dfs, doclens, n_docs, avgdl, k)
-            assert [d for d, _ in got] == [d for d, _ in want], (bs, k)
-            for (gd, gs), (wd, ws) in zip(got, want):
-                assert gs == pytest.approx(ws, rel=1e-12)
+            assert got["topk"] == want, (bs, k)  # bit for bit
 
 
 def test_blockmax_distributed_equals_exhaustive(spark, index_dir, engine):
@@ -330,15 +378,14 @@ def test_phrase_verify_routes_identical(spark, index_dir, corpus_pdf):
 
 
 def test_serving_mode_scores_identical(spark, index_dir):
-    """persist_doclens (cluster-cached pre-partitioned doclens) and the
-    Σdf-gated (term, bucket) decode repartition must not change any
-    result: same ranked output, bit-identical scores."""
+    """persist_doclens (cluster-cached bucket doclens) must not change
+    any result: same ranked output, bit-identical scores."""
     from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
 
     base = SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False)
     serving = SearchEngine(
         spark, index_dir, cache_term_stats=True, fast_path=False,
-        persist_doclens=True, decode_repartition_min_sumdf=0,  # force both paths
+        persist_doclens=True,
     )
     for q in (
         "merge window",

@@ -17,6 +17,7 @@ from informationretrieval_en_people_cn_spark.plans.kernel import (
     _eval_bucket_tree,
     bm25_idf,
     bm25_tfp,
+    bucket_upper_bounds,
     score_bucket,
 )
 from .oracle import bm25_scores, topk
@@ -117,10 +118,37 @@ def test_tfp_at_doclen_zero_is_the_block_upper_bound(tfs, idf, k1, b, avgdl):
     mt = np.asarray(tfs, dtype=np.float64) + 1.0
     old = idf * (mt * (k1 + 1)) / (mt + k1 * (1 - b))
     assert np.array_equal(bm25_tfp(idf, mt, 0.0, k1, b, avgdl), old)
-    for x in mt:  # the scalar form wand_topk's loop uses
+    for x in mt:  # the scalar form bucket_upper_bounds uses
         assert bm25_tfp(idf, float(x), 0.0, k1, b, avgdl) == (
             idf * (float(x) * (k1 + 1)) / (float(x) + k1 * (1 - b))
         )
+
+
+@given(collections(), st.lists(st.sampled_from(TERMS), min_size=1))
+@settings(max_examples=150, deadline=None)
+def test_no_doc_scores_above_its_bucket_bound(coll, query):
+    """The block-max soundness property: every doc's kernel score is at
+    most its bucket's metadata bound, bit for bit."""
+    doclen, postings, cuts = coll
+    n_docs = len(doclen)
+    avgdl = sum(doclen.values()) / n_docs
+    idf = {t: bm25_idf(n_docs, len(postings[t])) for t in set(query) if t in postings}
+    buckets = [
+        (_BucketFrames(frames), dl_ids, dl_lens)
+        for frames, dl_ids, dl_lens in _buckets(doclen, postings, cuts)
+    ]
+    meta = [
+        (t, bucket, int(fl[0][1].max()))
+        for bucket, (bf, _, _) in enumerate(buckets)
+        for t, fl in bf.by_term.items()
+    ]
+    bounds = bucket_upper_bounds(meta, idf, K1, B, avgdl)
+    for bucket, (bf, dl_ids, dl_lens) in enumerate(buckets):
+        [(d, s)] = score_bucket(
+            bf, dl_ids, dl_lens, [(sorted(idf), None)], idf, K1, B, avgdl
+        )
+        if d.size:
+            assert s.max() <= bounds[bucket]
 
 
 @st.composite

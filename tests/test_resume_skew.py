@@ -1,4 +1,5 @@
-"""Resume semantics + hot-term sharding (skew defense) + WAND path."""
+"""Resume semantics + hot-term sharding (skew defense) + the ranked
+placements (driver fast path, bucket plan, block-max) vs the oracle."""
 
 import json
 import os
@@ -54,13 +55,26 @@ def test_resume_skips_tokenize(spark, corpus, tmp_path):
     assert spark.read.parquet(f"{out}/index").count() > 0
 
 
-def test_wand_search_equals_distributed(engine):
+def _oracle_topk(corpus_pdf, terms, k=10):
+    from .oracle import bm25_scores, build_oracle_index, topk
+
+    postings, doclen, stats = build_oracle_index(corpus_pdf)
+    return topk(bm25_scores(postings, doclen, stats, terms), k)
+
+
+def test_wand_search_equals_distributed(spark, index_dir, engine, corpus_pdf):
+    """The driver fast path and the block-max plan return the oracle's
+    top-k, bit for bit."""
+    from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
+
+    fast = SearchEngine(spark, index_dir, cache_term_stats=True, cache_doclens=True)
+    bm = SearchEngine(spark, index_dir, use_blockmax=True)
     for q in ["merge window", "return value index", "compression buffer"]:
-        got = engine.wand_search(q, k=10)
-        want = [(r.doc_id, r.score) for r in engine.search(q, 10).collect()]
-        assert [d for d, _ in got] == [d for d, _ in want], q
-        for (gd, gs), (wd, ws) in zip(got, want):
-            assert gs == pytest.approx(ws, rel=1e-12)
+        want = _oracle_topk(corpus_pdf, engine._query_terms(q))
+        for eng, placement in ((fast, "fast"), (bm, "bucket+blockmax")):
+            got = [(r.doc_id, r.score) for r in eng.search(q, 10).collect()]
+            assert got == want, (q, placement)
+            assert eng.last_trace["placement"] == placement, q
 
 
 def test_salt_config_invariance(spark, corpus, tmp_path):
@@ -97,13 +111,21 @@ def test_salt_config_invariance(spark, corpus, tmp_path):
         assert pa[term] == pb[term], term
 
 
-def test_wand_search_hot_term_guard(engine):
-    """A query whose Σdf exceeds the driver budget must take the
-    distributed plan (no posting collect) and rank identically."""
+def test_wand_search_hot_term_guard(spark, index_dir, engine, corpus_pdf):
+    """A query whose Σdf exceeds the driver budget must take the bucket
+    plan (no posting collect), say so in last_trace, and rank like the
+    oracle."""
+    from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
+
+    fast = SearchEngine(
+        spark, index_dir, cache_term_stats=True, cache_doclens=True,
+        fast_max_postings=1,
+    )
     q = "return value"
-    want = [(r.doc_id, r.score) for r in engine.search(q, 10).collect()]
-    got = engine.wand_search(q, k=10, max_postings=1)
-    assert [d for d, _ in got] == [d for d, _ in want]
+    got = [(r.doc_id, r.score) for r in fast.search(q, 10).collect()]
+    assert got == _oracle_topk(corpus_pdf, engine._query_terms(q))
+    assert fast.last_trace["placement"] == "bucket"
+    assert "over fast_max_postings 1" in fast.last_trace["reason"]
 
 
 def _postings_map(spark, path):

@@ -91,19 +91,19 @@ def test_blockmax_autoselects_on_sumdf(spark, index_dir):
 
 
 def test_wand_tie_break_conservative():
-    """ADVICE r2 (low): exact score==threshold ties must never be
-    pruned.  doclen-0 docs make the block bound TIGHT (score == UB), the
-    adversarial case for `<=` skipping; WAND must equal the exhaustive
+    """Exact score == θ ties must never be pruned.  doclen-0 docs make
+    the bucket bound TIGHT (score == bound), the adversarial case for a
+    strict ``>`` survivor rule: a bucket whose bound equals θ must still
+    be scored, and the block-max result must equal the exhaustive
     ranking including the doc_id tie-break."""
-    from informationretrieval_en_people_cn_spark.plans.engine import (
-        bm25_idf,
-        wand_topk,
-    )
+    from informationretrieval_en_people_cn_spark.plans.kernel import bm25_idf
+
+    from .test_build_query import _blockmax_topk
 
     n, avgdl = 40, 5.0
     # two terms; every doc has tf=3 for t1 (scores all EQUAL and equal
-    # to the block bound since doclen=0); sparse t2 adds differentiation
-    # for some docs so the heap threshold lands exactly on the t1 score
+    # to the bucket bound since doclen=0); sparse t2 adds differentiation
+    # for some docs so θ lands exactly on the t1 score
     docs1 = np.arange(1, n + 1, dtype=np.int64)
     tfs1 = np.full(n, 3, dtype=np.int64)
     docs2 = np.array([2, 9, 33], dtype=np.int64)
@@ -114,16 +114,25 @@ def test_wand_tie_break_conservative():
 
     k1, b = 1.2, 0.75
     scores = {}
-    for t, (ds, ts) in postings.items():
+    for t in sorted(postings):
+        ds, ts = postings[t]
         idf = bm25_idf(n, dfs[t])
         for d, tf in zip(ds, ts):
             s = idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * 0 / avgdl))
             scores[int(d)] = scores.get(int(d), 0.0) + s
-    for k in (3, 5, 10):
+    t1_score = scores[1]
+    tied = 0
+    for k in (3, 4, 5, 10):
         want = sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
-        got = wand_topk(postings, dfs, doclens, n, avgdl, k, block_size=4)
-        assert [d for d, _ in got] == [d for d, _ in want], k
-        assert [s for _, s in got] == pytest.approx([s for _, s in want])
+        got = _blockmax_topk(postings, dfs, doclens, n, avgdl, k, block_size=4)
+        assert got["topk"] == want, k
+        at_theta = [bk for bk, ub in got["bounds"].items() if ub == got["theta"]]
+        assert set(at_theta) <= set(got["survivors"]), k  # ties are scored
+        tied += len(at_theta)
+        if got["theta"] == t1_score:
+            # the t1-only buckets' bound IS θ: a `>` rule would drop them
+            assert at_theta, k
+    assert tied  # some k really put a bucket's bound exactly on θ
 
 
 # ---------------------------------------------------------------------------
