@@ -13,7 +13,8 @@ records which placement served a query and why:
 
 * **fast** (``fast_path``; needs cached term stats and driver
   doclens): one pruned scan collects the query terms' frames to the
-  driver, where the kernel runs them as one virtual bucket — the
+  driver (with a common-term phrase's substring hits in the same
+  action), where the kernel runs them as one virtual bucket — the
   reference's own execution model, behind a Σdf budget.
 * **bucket** (every other ranked query): only the query terms'
   compressed frames move, grouped by doc-range bucket and broadcast
@@ -34,9 +35,10 @@ records which placement served a query and why:
 from __future__ import annotations
 
 import math
+import re
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -63,6 +65,37 @@ _DECODED_SCHEMA = T.StructType(
         T.StructField("tf", T.LongType(), False),
     ]
 )
+
+# a substring-phrase verify collects the candidates and scans their
+# content through a pushed-down doc_id IN-list while the rarest phrase
+# term's df (which bounds the candidates) is at most this; above it the
+# content table is scanned whole (broadcast candidates, or on the fast
+# path the scan rides the frame collect)
+_VERIFY_IN_MAX = 1000
+
+_SQL_WORD = re.compile(r"[a-z0-9_]+")
+
+
+def _in_list(col: str, values) -> Column:
+    """``col IN (values)`` built in one py4j call (``Column.isin`` makes
+    one per literal: ~0.5 s for 1 000 ids): int values, or strings of
+    ``[a-z0-9_]+`` (analyzed terms) as quoted literals; any other
+    string takes ``isin``."""
+    vals = sorted(set(values))
+    if not vals:
+        return F.lit(False)
+    if all(isinstance(v, (int, np.integer)) for v in vals):
+        lits = ",".join(str(int(v)) for v in vals)
+    elif all(isinstance(v, str) and _SQL_WORD.fullmatch(v) for v in vals):
+        lits = ",".join(f"'{v}'" for v in vals)
+    else:
+        return F.col(col).isin(vals)
+    return F.expr(f"{col} IN ({lits})")
+
+
+def _contains(needle: str) -> Column:
+    """The substring-phrase check (the reference's literal verify)."""
+    return F.contains(F.lower("content"), F.lit(needle))
 
 
 def decode_postings_df(index_rows: DataFrame) -> DataFrame:
@@ -364,7 +397,7 @@ class SearchEngine:
     def _index_rows(self, terms: list[str]) -> DataFrame:
         if not terms:
             return self.index.limit(0)
-        return self.index.filter(F.col("term").isin(list(set(terms))))
+        return self.index.filter(_in_list("term", terms))
 
     def keyword_docids(self, keyword: str) -> DataFrame:
         """Q1 (reference SearchEngine.py:216-218)."""
@@ -389,22 +422,9 @@ class SearchEngine:
             if not suffix:
                 return self.docs.limit(0).select("doc_id")
             return self.prefix_docids(suffix)
-        if self.term_stats is not None:  # driver-side planning, zero jobs
-            rare = self._rare_terms(terms)
-            if not rare:
-                return self.docs.limit(0).select("doc_id")
-        else:
-            stats = (
-                self._index_rows(terms)
-                .groupBy("term")  # hot terms span multiple doc-range rows
-                .agg(F.sum("df").alias("df"))
-                .orderBy("df")
-                .limit(2)
-                .collect()
-            )
-            if len(stats) < len(set(terms)):
-                return self.docs.limit(0).select("doc_id")  # a term is missing
-            rare = [r.term for r in stats]
+        rare = self._rare_terms(terms)
+        if not rare:
+            return self.docs.limit(0).select("doc_id")
         # intersect the (≤2) rarest terms' postings in ONE scan+decode:
         # (term, doc) rows are unique (bucket doc-ranges are disjoint),
         # so docs holding every rare term are exactly those whose
@@ -422,39 +442,40 @@ class SearchEngine:
                 .filter(F.col("nt") == len(rare))
                 .select("doc_id")
             )
+        return self._verify(cand, min(rare.values()), needle)
+
+    def _content_store(self) -> DataFrame:
         if self.content_df is None:
             raise ValueError(
                 "phrase verification needs a document store: docs table "
                 "has no content column and no corpus was provided"
             )
-        # route the verify scan by the rarest term's df (cached stats —
-        # zero extra jobs).  df bounds |cand|, so each route is guarded:
-        min_df = (
-            min(self.term_stats[t][0] for t in rare)
-            if self.term_stats is not None
-            else None
-        )
-        if min_df is not None and min_df <= 1000:
-            # driver-scale: collect the pruned intersection and verify
-            # via an IN-list scan — the predicate pushes into the
-            # doc_id-sorted parquet (file/row-group pruning), the same
-            # route the driver fast path uses; no content shuffle, no
-            # join
+        return self.content_df
+
+    def _verify(self, cand: DataFrame, min_df: int, needle: str) -> DataFrame:
+        """doc_ids of the candidate relation ``cand`` whose lowercased
+        content holds ``needle`` — the one substring verify of the
+        Spark plans, its scan routed by the rarest phrase term's df
+        (which bounds |cand|):
+
+        * ≤ ``_VERIFY_IN_MAX``: collect the candidates and scan through
+          a doc_id IN-list that pushes into the doc_id-sorted parquet
+          (file/row-group pruning) — no content shuffle, no join;
+        * ≤ 2 000 000: broadcast the candidates, so the content table
+          is scanned once and never shuffled;
+        * above (Zipf-head phrase terms): a plain join, AQE picks the
+          strategy."""
+        store = self._content_store()
+        if min_df <= _VERIFY_IN_MAX:
             ids = [int(r.doc_id) for r in cand.collect()]
             if not ids:
                 return self.docs.limit(0).select("doc_id")
-            verified = self.content_df.filter(F.col("doc_id").isin(ids))
-        elif min_df is not None and min_df <= 2_000_000:
-            # mid-scale: keep cand distributed but broadcast it, so the
-            # content table is scanned once and never shuffled (a plain
-            # join would sort-merge-shuffle the whole document store)
-            verified = self.content_df.join(F.broadcast(cand), "doc_id")
+            store = store.filter(_in_list("doc_id", ids))
+        elif min_df <= 2_000_000:
+            store = store.join(F.broadcast(cand), "doc_id")
         else:
-            # unbounded (no cached stats, or Zipf-head phrase terms):
-            # fully distributed join — AQE picks the strategy
-            verified = cand.join(self.content_df, "doc_id")
-        verified = verified.filter(F.contains(F.lower("content"), F.lit(needle)))
-        return verified.select("doc_id")
+            store = cand.join(store, "doc_id")
+        return store.filter(_contains(needle)).select("doc_id")
 
     def _decode_positional(self, rows: DataFrame) -> DataFrame:
         """Decode encoded index rows to (term, doc_id, positions) rows
@@ -685,8 +706,8 @@ class SearchEngine:
         doc_ids})`` (substring-verified phrase, pre-computed via
         :meth:`phrase_docids_bucketed` and joined bucket-locally).
         Raises :class:`_ServingFallback` when the leaf cannot be served
-        bucket-locally (reply_to; phrase without cached stats /
-        content; verified set over the collect budget)."""
+        bucket-locally (reply_to; phrase without content; verified set
+        over the collect budget)."""
         if leaf.kind == "keyword":
             t = self._q(leaf.value)
             return ("terms", t), set(t)
@@ -717,9 +738,12 @@ class SearchEngine:
     def _driver_leaf(self, leaf: qt.Leaf) -> tuple[tuple, set]:
         """Compile one query leaf for the driver's virtual bucket
         (bucket 0): reply_to resolves to an id set and a substring
-        phrase to a ``("substring", phrase, suffix, rare terms)`` spec
-        verified on the driver; every other leaf compiles as for
-        serving."""
+        phrase to a ``("substring", needle, rare terms, verify route)``
+        spec verified on the driver; every other leaf compiles as for
+        serving.  The route is ``"content-cache"`` with the driver
+        content cache, ``"folded"`` when the rarest term's df is over
+        ``_VERIFY_IN_MAX`` (the needle's content scan rides the frame
+        collect), else ``"in-list"``."""
         if leaf.kind == "reply_to":
             rows = self.reply_to_docids(leaf.value).collect()
             ids = np.array(sorted(r.doc_id for r in rows), dtype=np.int64)
@@ -729,7 +753,17 @@ class SearchEngine:
             # terms' frames are collected with the rest of the query's
             sfx = leaf.suffix if leaf.kind == "phrase_prefix" else ""
             rare = self._rare_terms(self._q(leaf.value))
-            return ("substring", leaf.value, sfx, rare), set(rare)
+            if self._content_cache is not None:
+                route = "content-cache"
+            elif (
+                rare and self.content_df is not None
+                and min(rare.values()) > _VERIFY_IN_MAX
+            ):
+                route = "folded"
+            else:
+                route = "in-list"
+            needle = f"{leaf.value} {sfx}".strip().lower()
+            return ("substring", needle, rare, route), set(rare)
         return self._serving_leaf(leaf)
 
     def _compile_tree(self, node, compile_leaf) -> tuple[list, set[str]]:
@@ -766,7 +800,7 @@ class SearchEngine:
         if min_bucket:
             rows = rows.filter(F.col("bucket") >= min_bucket)
         if buckets is not None:
-            rows = rows.filter(F.col("bucket").isin(buckets))
+            rows = rows.filter(_in_list("bucket", buckets))
         return (
             rows.groupBy("bucket")
             .agg(F.collect_list(F.struct("term", "postings")).alias("frames"))
@@ -779,13 +813,12 @@ class SearchEngine:
         after: int | None = None,
         cap: int | None = None,
         min_bucket: int | None = None,
-        keep_bucket: bool = False,
     ) -> DataFrame:
         """Run the compiled OR-of-ANDs tree bucket-locally: shuffle only
         the leaves' compressed frames, evaluate per-bucket numpy set
-        algebra (see _eval_bucket_tree), return the doc_id relation
-        (``keep_bucket``: (bucket, doc_id)).  Buckets are disjoint doc
-        ranges, so no global distinct is needed.  Needs no serving
+        algebra (see _eval_bucket_tree), return the doc_id relation.
+        Buckets are disjoint doc ranges, so no global distinct is
+        needed.  Needs no serving
         cache: only the index's ``bucket`` column.
 
         Keyset pagination hooks: ``after`` drops ids <= after inside the
@@ -797,17 +830,16 @@ class SearchEngine:
         keyset frontier BEFORE their frames shuffle."""
         import pandas as pd
 
-        schema = "bucket int, doc_id long"
+        schema = "doc_id long"
         if not frame_terms:
-            out = _local_df(self.spark, [], schema)
-            return out if keep_bucket else out.select("doc_id")
+            return _local_df(self.spark, [], schema)
         joined = self._frames_by_bucket(frame_terms, min_bucket)
         pos_terms = _pos_terms(tree)
         cache_tag = self._cache_tag()
 
         def gen(batches):
             for pdf in batches:
-                b_out, d_out = [], []
+                d_out = []
                 for bucket, frames in zip(pdf["bucket"], pdf["frames"]):
                     bf = _BucketFrames(
                         frames, pos_terms, cache_tag=cache_tag, bucket=int(bucket)
@@ -819,14 +851,10 @@ class SearchEngine:
                         res = res[:cap]
                     if res.size:
                         d_out.append(res)
-                        b_out.append(np.full(res.size, int(bucket), dtype=np.int32))
                 if d_out:
-                    yield pd.DataFrame(
-                        {"bucket": np.concatenate(b_out), "doc_id": np.concatenate(d_out)}
-                    )
+                    yield pd.DataFrame({"doc_id": np.concatenate(d_out)})
 
-        out = joined.mapInPandas(gen, schema)
-        return out if keep_bucket else out.select("doc_id")
+        return joined.mapInPandas(gen, schema)
 
     def boolean_docids_bucketed(self, node: qt.OrNode) -> DataFrame:
         """Bucket-local boolean algebra — the serving-mode twin of
@@ -846,7 +874,6 @@ class SearchEngine:
         # no pre-collect, no budget
         if (
             not self.phrase_via_positions
-            and self.term_stats is not None
             and len(node.children) == 1
             and len(node.children[0].children) == 1
         ):
@@ -868,64 +895,36 @@ class SearchEngine:
         """Serving twin of :meth:`phrase_docids` (same substring
         semantics, bit-identical results — tested): candidate
         generation is bucket-local (compressed frames only), then the
-        identical df-routed substring verify.  Returns (bucket, doc_id)
-        so serving callers can compose bucket-locally.  Requires cached
-        term stats; degenerate no-term phrases raise _ServingFallback
-        (the dispatcher's prefix route handles them)."""
+        same df-routed :meth:`_verify`.  Returns (bucket, doc_id) so
+        serving callers can compose bucket-locally.  Degenerate no-term
+        phrases raise _ServingFallback (the dispatcher's prefix route
+        handles them)."""
         terms = self._q(phrase)
-        needle = f"{phrase} {suffix}".strip().lower()
-        if self.term_stats is None:
-            raise _ServingFallback("phrase serving needs cached term stats")
         if not terms:
             raise _ServingFallback("degenerate phrase (prefix semantics)")
-        empty = _local_df(self.spark, [], "bucket int, doc_id long")
         rare = self._rare_terms(terms)
         if not rare:
-            return empty
-        # candidates: the (≤2) rarest terms' posting sets intersected
-        # bucket-locally — only their compressed frames shuffle
-        cand = self._bucketed_eval(
-            [[(("terms", [t]), False) for t in rare]], set(rare), keep_bucket=True
-        )
-        if self.content_df is None:
-            raise ValueError(
-                "phrase verification needs a document store: docs table "
-                "has no content column and no corpus was provided"
-            )
-        # verify-scan routing identical to phrase_docids (df-guarded)
-        contains = F.contains(F.lower("content"), F.lit(needle))
-        min_df = min(self.term_stats[t][0] for t in rare)
-        if min_df <= 1000:
-            pairs = cand.collect()
-            if not pairs:
-                return empty
-            small = _local_df(self.spark, 
-                [(int(r.bucket), int(r.doc_id)) for r in pairs],
-                "bucket int, doc_id long",
-            )
-            ver = self.content_df.filter(
-                F.col("doc_id").isin([int(r.doc_id) for r in pairs])
-            ).filter(contains).select("doc_id")
-            return ver.join(F.broadcast(small), "doc_id").select("bucket", "doc_id")
-        if min_df <= 2_000_000:
-            return (
-                self.content_df.join(F.broadcast(cand), "doc_id")
-                .filter(contains)
-                .select("bucket", "doc_id")
-            )
-        return (
-            cand.join(self.content_df, "doc_id")
-            .filter(contains)
-            .select("bucket", "doc_id")
-        )
+            return _local_df(self.spark, [], "bucket int, doc_id long")
+        return self._phrase_bucketed(rare, f"{phrase} {suffix}".strip().lower())
 
-    def _rare_terms(self, terms: list[str]) -> list[str]:
-        """The (≤2) lowest-df distinct ``terms`` by cached stats — a
-        phrase's candidate terms (the reference's selectivity planning,
-        SearchEngine.py:189-194); [] when a term is not in the index."""
-        if any(t not in self.term_stats for t in set(terms)):
-            return []
-        return sorted(set(terms), key=lambda t: self.term_stats[t][0])[:2]
+    def _phrase_bucketed(self, rare: dict[str, int], needle: str) -> DataFrame:
+        """(bucket, doc_id) of the docs holding every ``rare`` term and
+        ``needle``: the rare terms' posting sets intersect bucket-locally
+        (only their compressed frames shuffle), then :meth:`_verify`."""
+        cand = self._bucketed_eval([[(("terms", [t]), False) for t in rare]], set(rare))
+        ver = self._verify(cand, min(rare.values()), needle)
+        return ver.select(self._bexpr().alias("bucket"), "doc_id")
+
+    def _rare_terms(self, terms: list[str]) -> dict[str, int]:
+        """The (≤2) lowest-df distinct ``terms`` → their df, rarest
+        first — a phrase's candidate terms (the reference's selectivity
+        planning, SearchEngine.py:189-194); {} when a term is not in the
+        index.  df comes from :meth:`_term_dfs` (cached stats, else one
+        pruned metadata collect)."""
+        dfs = self._term_dfs(terms)
+        if len(dfs) < len(set(terms)):
+            return {}
+        return dict(sorted(dfs.items(), key=lambda x: (x[1], x[0]))[:2])
 
     def _phrase_ids_by_bucket(
         self, phrase: str, suffix: str = ""
@@ -934,15 +933,16 @@ class SearchEngine:
         ids grouped by bucket (collected under the budget — bounded by
         the rarest term's df) + the rare terms whose frames anchor the
         leaf's buckets.  Raises _ServingFallback over budget."""
-        if self.term_stats is None or self.content_df is None:
-            raise _ServingFallback("phrase serving needs stats + content")
+        if self.content_df is None:
+            raise _ServingFallback("phrase serving needs content")
         rare = self._rare_terms(self._q(phrase))
         if not rare:
             return {}, []
-        if min(self.term_stats[t][0] for t in rare) > self.serving_phrase_collect_max:
+        if min(rare.values()) > self.serving_phrase_collect_max:
             raise _ServingFallback("phrase verified set over collect budget")
         acc: dict[int, list[int]] = {}
-        for r in self.phrase_docids_bucketed(phrase, suffix).collect():
+        needle = f"{phrase} {suffix}".strip().lower()
+        for r in self._phrase_bucketed(rare, needle).collect():
             acc.setdefault(int(r.bucket), []).append(int(r.doc_id))
         return (
             {b: np.array(sorted(v), dtype=np.int64) for b, v in acc.items()},
@@ -1127,9 +1127,7 @@ class SearchEngine:
             "doc_id long, score double",
         )
         return (
-            self.content_df.filter(
-                F.col("doc_id").isin([int(r.doc_id) for r in rows])
-            )
+            self.content_df.filter(_in_list("doc_id", [r.doc_id for r in rows]))
             .select(
                 "doc_id",
                 F.col("content").substr(start, F.lit(width)).alias("snippet"),
@@ -1277,7 +1275,7 @@ class SearchEngine:
             return _local_df(self.spark, [], schema)
         doclens = self._bucket_doclens
         if buckets is not None:
-            doclens = doclens.filter(F.col("bucket").isin(buckets))
+            doclens = doclens.filter(_in_list("bucket", buckets))
         # frames are query-sized by construction: broadcasting them
         # keeps the doclen side where it is (no SortMergeJoin shuffle)
         joined = F.broadcast(self._frames_by_bucket(all_terms, buckets=buckets)).join(
@@ -1496,59 +1494,68 @@ class SearchEngine:
     # The bucket plan costs a few Spark stages at any size; for queries
     # whose pruned postings fit a Σdf budget, the reference's own
     # execution model — decode on the driver, run the bucket kernel over
-    # one virtual bucket — answers in ONE pruned-scan job (plus one
-    # verify job for phrase leaves).  Results are identical (tested per
-    # shape); over the budget the bucket plan, the scale path, answers.
+    # one virtual bucket — answers in ONE Spark action: the pruned index
+    # scan, plus one content scan per common-term phrase needle in the
+    # same UNION ALL (a rare phrase adds one IN-list verify job; the
+    # content cache, none).  Results are identical (tested per shape);
+    # over the budget the bucket plan, the scale path, answers.
 
-    def _postings_arrays(self, terms, budget: int) -> _BucketFrames:
+    def _postings_arrays(
+        self, terms, budget: int, needles=()
+    ) -> tuple[_BucketFrames, dict[str, np.ndarray]]:
         """The terms' frames, collected to the driver in ONE pruned scan
-        and decoded as one virtual bucket.  Raises :class:`_FastFallback`
-        when the terms' Σdf exceeds ``budget``."""
+        and decoded as one virtual bucket, + the sorted ids of the docs
+        whose lowercased content holds each of ``needles`` — each
+        needle's content scan is UNION ALL'd into the same action.
+        Raises :class:`_FastFallback` when the terms' Σdf exceeds
+        ``budget``."""
         uniq = sorted(set(terms))
         sum_df = self._sum_df(uniq)
         if sum_df > budget:
             raise _FastFallback(f"Σdf {sum_df} over fast_max_postings {budget}")
         if not uniq:
-            return _BucketFrames([])
-        return _BucketFrames(self._index_rows(uniq).select("term", "postings").collect())
+            return _BucketFrames([]), {}
+        rows = self._index_rows(uniq).select("term", "postings")
+        if needles:
+            rows = rows.withColumn("hit", F.lit(None).cast("long"))
+            for nd in needles:
+                rows = rows.union(
+                    self.content_df.filter(_contains(nd)).select(
+                        F.lit(nd), F.lit(None).cast("binary"),
+                        F.col("doc_id").cast("long"),
+                    )
+                )
+        frames, hits = [], {nd: [] for nd in needles}
+        for r in rows.collect():
+            if needles and r.hit is not None:
+                hits[r.term].append(r.hit)
+            else:
+                frames.append(r)
+        return _BucketFrames(frames), {
+            nd: np.unique(np.array(v, dtype=np.int64)) for nd, v in hits.items()
+        }
 
-    def _phrase_ids_fast(self, bf: _BucketFrames, spec: tuple) -> np.ndarray:
-        """Driver-verified ids (sorted) of a ``("substring", phrase,
-        suffix, rare)`` leaf: the rare terms' collected postings
-        intersect, then the literal substring check."""
-        _, phrase, suffix, rare = spec
-        needle = f"{phrase} {suffix}".strip().lower()
+    def _phrase_ids_fast(
+        self, bf: _BucketFrames, spec: tuple, hits: dict[str, np.ndarray]
+    ) -> np.ndarray:
+        """Driver-verified ids (sorted) of a ``("substring", needle,
+        rare, route)`` leaf (:meth:`_driver_leaf`): the rare terms'
+        collected postings intersect, then the literal substring check
+        — the folded content scan's ``hits``, the driver content cache,
+        or one IN-list scan over at most ``_VERIFY_IN_MAX`` candidates."""
+        _, needle, rare, route = spec
         cand = _intersect_terms(bf, rare)
         if cand.size == 0:
             return _EMPTY_IDS
-        if self._content_cache is not None:
-            # zero-job verify: the driver-side document store (loaded
-            # under a byte budget) answers the substring check directly —
+        if route == "folded":
+            return np.intersect1d(cand, hits[needle])
+        if route == "content-cache":
             # same semantics as contains(lower(content), needle)
-            hits = [
-                int(d)
-                for d in cand
-                if needle in self._content_cache.get(int(d), "")
-            ]
-            return np.array(sorted(hits), dtype=np.int64)
-        if self.content_df is None:
-            raise ValueError(
-                "phrase verification needs a document store: docs table "
-                "has no content column and no corpus was provided"
-            )
-        if cand.size <= 1000:
-            # IN-list predicate pushes down to the doc_id-sorted parquet
-            # (row-group pruning) — one scan job, no join
-            store = self.content_df.filter(
-                F.col("doc_id").isin([int(x) for x in cand])
-            )
-        else:
-            cdf = _local_df(self.spark, 
-                [(int(x),) for x in cand], "doc_id long"
-            )
-            store = self.content_df.join(F.broadcast(cdf), "doc_id")
+            return cand[[needle in self._content_cache.get(int(d), "") for d in cand]]
         rows = (
-            store.filter(F.contains(F.lower("content"), F.lit(needle)))
+            self._content_store()
+            .filter(_in_list("doc_id", cand.tolist()))
+            .filter(_contains(needle))
             .select("doc_id")
             .collect()
         )
@@ -1564,16 +1571,22 @@ class SearchEngine:
         tree, frame_terms = None, set()
         if not ranked or any(leaf.kind != "keyword" for leaf in node.children):
             tree, frame_terms = self._compile_tree(node, self._driver_leaf)
+        subs = [sp for leaves in tree or () for sp, _ in leaves if sp[0] == "substring"]
+        needles = sorted({sp[1] for sp in subs if sp[3] == "folded"})
         try:
-            bf = self._postings_arrays(set(terms) | frame_terms, self.fast_max_postings)
+            bf, hits = self._postings_arrays(
+                set(terms) | frame_terms, self.fast_max_postings, needles
+            )
         except _FastFallback as e:
             self._trace("bucket", str(e))
             return None
         self._trace("fast", f"Σdf within fast_max_postings {self.fast_max_postings}")
+        if subs:
+            self.last_trace["verify"] = "+".join(sorted({sp[3] for sp in subs}))
         if tree is not None:
             tree = [
                 [
-                    (("ids", {0: self._phrase_ids_fast(bf, spec)}), neg)
+                    (("ids", {0: self._phrase_ids_fast(bf, spec, hits)}), neg)
                     if spec[0] == "substring"
                     else (spec, neg)
                     for spec, neg in leaves

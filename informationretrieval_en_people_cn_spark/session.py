@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -22,6 +23,15 @@ def scaled(df, factor: int = 1):
     return df
 
 
+@functools.lru_cache(maxsize=64)
+def _parse_schema(schema: str):
+    """DDL schema string -> StructType, parsed once per string (each
+    parse is a JVM round trip of a few ms)."""
+    from pyspark.sql import types as T
+
+    return T._parse_datatype_string(schema)
+
+
 def local_rows_df(spark: SparkSession, rows, schema: str):
     """Tiny driver-side relation (plans, stats rows, fast-path results).
 
@@ -34,9 +44,8 @@ def local_rows_df(spark: SparkSession, rows, schema: str):
     through Arrow.  Raises ValueError for a row whose length differs
     from the schema's."""
     import pandas as pd
-    from pyspark.sql import types as T
 
-    struct = T._parse_datatype_string(schema)
+    struct = _parse_schema(schema)
     names = [f.name for f in struct.fields]
     for row in rows:
         if len(row) != len(names):
