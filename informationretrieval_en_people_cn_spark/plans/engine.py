@@ -13,7 +13,7 @@ records which placement served a query and why:
 
 * **fast** (``fast_path``; needs cached term stats and driver
   doclens): one pruned scan collects the query terms' frames to the
-  driver (with a common-term phrase's substring hits in the same
+  driver (with each substring phrase's content hits in the same
   action), where the kernel runs them as one virtual bucket — the
   reference's own execution model, behind a Σdf budget.
 * **bucket** (every other ranked query): only the query terms'
@@ -66,11 +66,11 @@ _DECODED_SCHEMA = T.StructType(
     ]
 )
 
-# a substring-phrase verify collects the candidates and scans their
-# content through a pushed-down doc_id IN-list while the rarest phrase
-# term's df (which bounds the candidates) is at most this; above it the
-# content table is scanned whole (broadcast candidates, or on the fast
-# path the scan rides the frame collect)
+# the Spark plans' substring-phrase verify (SearchEngine._verify)
+# collects the candidates and scans their content through a pushed-down
+# doc_id IN-list while the rarest phrase term's df (which bounds the
+# candidates) is at most this; above it the candidates meet the whole
+# content table (broadcast or joined)
 _VERIFY_IN_MAX = 1000
 
 _SQL_WORD = re.compile(r"[a-z0-9_]+")
@@ -124,7 +124,8 @@ def decode_postings_df(index_rows: DataFrame) -> DataFrame:
 
 
 class _FastFallback(Exception):
-    """Raised when a query exceeds the fast path's Σdf budget — the
+    """Raised when a query exceeds the fast path's Σdf budget (or a
+    phrase needle's content hits exceed it) — the
     caller falls back to the bucket plan; the message is the reason
     :attr:`SearchEngine.last_trace` records."""
 
@@ -738,12 +739,9 @@ class SearchEngine:
     def _driver_leaf(self, leaf: qt.Leaf) -> tuple[tuple, set]:
         """Compile one query leaf for the driver's virtual bucket
         (bucket 0): reply_to resolves to an id set and a substring
-        phrase to a ``("substring", needle, rare terms, verify route)``
-        spec verified on the driver; every other leaf compiles as for
-        serving.  The route is ``"content-cache"`` with the driver
-        content cache, ``"folded"`` when the rarest term's df is over
-        ``_VERIFY_IN_MAX`` (the needle's content scan rides the frame
-        collect), else ``"in-list"``."""
+        phrase to a ``("substring", needle, rare terms)`` spec verified
+        on the driver (:meth:`_phrase_ids_fast`); every other leaf
+        compiles as for serving."""
         if leaf.kind == "reply_to":
             rows = self.reply_to_docids(leaf.value).collect()
             ids = np.array(sorted(r.doc_id for r in rows), dtype=np.int64)
@@ -753,17 +751,8 @@ class SearchEngine:
             # terms' frames are collected with the rest of the query's
             sfx = leaf.suffix if leaf.kind == "phrase_prefix" else ""
             rare = self._rare_terms(self._q(leaf.value))
-            if self._content_cache is not None:
-                route = "content-cache"
-            elif (
-                rare and self.content_df is not None
-                and min(rare.values()) > _VERIFY_IN_MAX
-            ):
-                route = "folded"
-            else:
-                route = "in-list"
             needle = f"{leaf.value} {sfx}".strip().lower()
-            return ("substring", needle, rare, route), set(rare)
+            return ("substring", needle, rare), set(rare)
         return self._serving_leaf(leaf)
 
     def _compile_tree(self, node, compile_leaf) -> tuple[list, set[str]]:
@@ -1495,10 +1484,10 @@ class SearchEngine:
     # whose pruned postings fit a Σdf budget, the reference's own
     # execution model — decode on the driver, run the bucket kernel over
     # one virtual bucket — answers in ONE Spark action: the pruned index
-    # scan, plus one content scan per common-term phrase needle in the
-    # same UNION ALL (a rare phrase adds one IN-list verify job; the
-    # content cache, none).  Results are identical (tested per shape);
-    # over the budget the bucket plan, the scale path, answers.
+    # scan, plus one content scan per substring-phrase needle in the same
+    # UNION ALL (none with the driver content cache).  Results are
+    # identical (tested per shape); over the budget the bucket plan, the
+    # scale path, answers.
 
     def _postings_arrays(
         self, terms, budget: int, needles=()
@@ -1508,7 +1497,12 @@ class SearchEngine:
         whose lowercased content holds each of ``needles`` — each
         needle's content scan is UNION ALL'd into the same action.
         Raises :class:`_FastFallback` when the terms' Σdf exceeds
-        ``budget``."""
+        ``budget``, or a needle's hits may: each needle branch keeps at
+        most ``cap = budget // #content partitions + 1`` rows per
+        partition (the per-partition record number is the low 33 bits
+        of ``monotonically_increasing_id``), so it brings at most
+        ``budget`` + #partitions ids to the driver, and a needle with
+        ``cap`` ids may have been cut."""
         uniq = sorted(set(terms))
         sum_df = self._sum_df(uniq)
         if sum_df > budget:
@@ -1517,10 +1511,15 @@ class SearchEngine:
             return _BucketFrames([]), {}
         rows = self._index_rows(uniq).select("term", "postings")
         if needles:
+            store = self._content_store()
+            cap = budget // store.rdd.getNumPartitions() + 1
+            nth = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
             rows = rows.withColumn("hit", F.lit(None).cast("long"))
             for nd in needles:
+                # a separate Filter: Catalyst never merges or reorders a
+                # nondeterministic one, so nth counts only the hits
                 rows = rows.union(
-                    self.content_df.filter(_contains(nd)).select(
+                    store.filter(_contains(nd)).filter(nth < cap).select(
                         F.lit(nd), F.lit(None).cast("binary"),
                         F.col("doc_id").cast("long"),
                     )
@@ -1531,6 +1530,9 @@ class SearchEngine:
                 hits[r.term].append(r.hit)
             else:
                 frames.append(r)
+        for nd, v in hits.items():
+            if len(v) >= cap:
+                raise _FastFallback(f"phrase {nd!r} hits over fast_max_postings {budget}")
         return _BucketFrames(frames), {
             nd: np.unique(np.array(v, dtype=np.int64)) for nd, v in hits.items()
         }
@@ -1539,27 +1541,18 @@ class SearchEngine:
         self, bf: _BucketFrames, spec: tuple, hits: dict[str, np.ndarray]
     ) -> np.ndarray:
         """Driver-verified ids (sorted) of a ``("substring", needle,
-        rare, route)`` leaf (:meth:`_driver_leaf`): the rare terms'
-        collected postings intersect, then the literal substring check
-        — the folded content scan's ``hits``, the driver content cache,
-        or one IN-list scan over at most ``_VERIFY_IN_MAX`` candidates."""
-        _, needle, rare, route = spec
+        rare)`` leaf (:meth:`_driver_leaf`): the rare terms' collected
+        postings intersect, then the literal substring check — the
+        needle's content ``hits`` collected with the frames, or the
+        driver content cache (same semantics as
+        ``contains(lower(content), needle)``)."""
+        _, needle, rare = spec
         cand = _intersect_terms(bf, rare)
         if cand.size == 0:
             return _EMPTY_IDS
-        if route == "folded":
+        if needle in hits:
             return np.intersect1d(cand, hits[needle])
-        if route == "content-cache":
-            # same semantics as contains(lower(content), needle)
-            return cand[[needle in self._content_cache.get(int(d), "") for d in cand]]
-        rows = (
-            self._content_store()
-            .filter(_in_list("doc_id", cand.tolist()))
-            .filter(_contains(needle))
-            .select("doc_id")
-            .collect()
-        )
-        return np.array(sorted(r.doc_id for r in rows), dtype=np.int64)
+        return cand[[needle in self._content_cache.get(int(d), "") for d in cand]]
 
     def _search_fast(self, node, query: str, k: int) -> DataFrame | None:
         """The kernel over one virtual bucket (bucket 0): its frames are
@@ -1572,7 +1565,9 @@ class SearchEngine:
         if not ranked or any(leaf.kind != "keyword" for leaf in node.children):
             tree, frame_terms = self._compile_tree(node, self._driver_leaf)
         subs = [sp for leaves in tree or () for sp, _ in leaves if sp[0] == "substring"]
-        needles = sorted({sp[1] for sp in subs if sp[3] == "folded"})
+        cached = self._content_cache is not None
+        # a leaf with no rare terms matches nothing: no content scan
+        needles = [] if cached else sorted({sp[1] for sp in subs if sp[2]})
         try:
             bf, hits = self._postings_arrays(
                 set(terms) | frame_terms, self.fast_max_postings, needles
@@ -1582,7 +1577,7 @@ class SearchEngine:
             return None
         self._trace("fast", f"Σdf within fast_max_postings {self.fast_max_postings}")
         if subs:
-            self.last_trace["verify"] = "+".join(sorted({sp[3] for sp in subs}))
+            self.last_trace["verify"] = "content-cache" if cached else "folded"
         if tree is not None:
             tree = [
                 [

@@ -1,12 +1,12 @@
 """The fast path's substring-phrase verify: folded into the frame collect
-(one Spark action per query) or through the pruned IN-list scan, the
-answers equal the distributed engine and the pure-pandas oracle."""
+(one Spark action per query) or answered by the driver content cache,
+the answers equal the distributed engine and the pure-pandas oracle."""
 
 import numpy as np
 import pytest
 
 from informationretrieval_en_people_cn_spark.functions.analyze import analyze_text
-from informationretrieval_en_people_cn_spark.plans import engine as engine_mod
+from informationretrieval_en_people_cn_spark.operators.build import build_index
 from informationretrieval_en_people_cn_spark.plans import querytree as qt
 from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine, _in_list
 from informationretrieval_en_people_cn_spark.session import local_rows_df
@@ -30,6 +30,13 @@ QUERIES = [
 @pytest.fixture(scope="module")
 def fast(spark, index_dir):
     return SearchEngine(spark, index_dir, cache_term_stats=True, cache_doclens=True)
+
+
+@pytest.fixture(scope="module")
+def fast_cached(spark, index_dir):
+    return SearchEngine(
+        spark, index_dir, cache_term_stats=True, cache_doclens=True, cache_content=True
+    )
 
 
 @pytest.fixture(scope="module")
@@ -82,33 +89,29 @@ def _rows(eng, q):
     return [(r.doc_id, getattr(r, "score", None)) for r in eng.search(q, 10).collect()]
 
 
-@pytest.mark.parametrize("in_max", [None, 0], ids=["default", "folded"])
+@pytest.mark.parametrize("route", ["folded", "content-cache"])
 def test_fast_verify_routes_equal_distributed_and_oracle(
-    engine, fast, answer, in_max, monkeypatch
+    engine, fast, fast_cached, answer, route
 ):
-    """Every phrase shape through the fast path, once at the default
-    IN-list threshold (this corpus: every phrase takes the IN-list
-    verify) and once with it at 0 (every phrase folds into the frame
-    collect): bit-identical to the distributed engine and the oracle."""
-    if in_max is not None:
-        monkeypatch.setattr(engine_mod, "_VERIFY_IN_MAX", in_max)
-    route = "in-list" if in_max is None else "folded"
+    """Every phrase shape through the fast path, its needles folded into
+    the frame collect or checked against the driver content cache:
+    bit-identical to the distributed engine and the oracle."""
+    eng = fast if route == "folded" else fast_cached
     nonempty = 0
     for q in QUERIES:
         want = answer(q)
-        got = _rows(fast, q)
-        assert fast.last_trace["placement"] == "fast", q
-        assert fast.last_trace["verify"] == route, q
+        got = _rows(eng, q)
+        assert eng.last_trace["placement"] == "fast", q
+        assert eng.last_trace["verify"] == route, q
         assert got == want, q
         assert _rows(engine, q) == want, q
         nonempty += bool(want)
     assert nonempty == len(QUERIES)
 
 
-def test_folded_phrase_runs_one_job(spark, fast, monkeypatch):
+def test_folded_phrase_runs_one_job(spark, fast):
     """A folded phrase query is one Spark job (frames + substring hits
     in one UNION ALL collect), as a keyword query is."""
-    monkeypatch.setattr(engine_mod, "_VERIFY_IN_MAX", 0)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     for i, q in enumerate(["'return value'", "merge buffer 'return value'", "merge"]):
@@ -120,6 +123,57 @@ def test_folded_phrase_runs_one_job(spark, fast, monkeypatch):
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         assert len(tracker.getJobIdsForGroup(gid)) == 1, q
+
+
+def test_substring_heavy_needle_stays_in_budget(spark, tmp_path, monkeypatch):
+    """A one-term phrase whose needle sits inside other words ('int' in
+    'print', 'point', 'interval'): its content hits (every doc) far
+    outnumber its term's df (6).  Under a budget the hits exceed, the
+    fold brings at most budget + #partitions ids to the driver and the
+    query falls back to the bucket plan; with room it folds.  Every
+    answer equals the substring oracle and the distributed engine."""
+    rows = [
+        (i, "r", f"p{i}", "0" * 40, "py",
+         ("int print" if i % 10 == 0 else "print point interval start")
+         + f" part{i % 3}", "x")
+        for i in range(60)
+    ]
+    corpus = spark.createDataFrame(
+        rows,
+        "doc_id long, repo string, path string, commit string, "
+        "lang string, content string, sha256 string",
+    )
+    out = str(tmp_path / "subidx")
+    build_index(spark, corpus, out, slices=2, salt=2, block_size=8)
+    base = SearchEngine(spark, out)
+    caches = dict(cache_term_stats=True, cache_doclens=True)
+    tight = SearchEngine(spark, out, fast_max_postings=30, **caches)
+    roomy = SearchEngine(spark, out, **caches)
+    assert tight._sum_df(["int"]) == 6
+    parts = tight.content_df.rdd.getNumPartitions()
+
+    collected = []
+    df_cls = type(tight.index)  # the session's DataFrame implementation
+    collect = df_cls.collect
+
+    def spy(df):
+        got = collect(df)
+        collected.append(sum(getattr(r, "hit", None) is not None for r in got))
+        return got
+
+    monkeypatch.setattr(df_cls, "collect", spy)
+    for q in ("'int'", "part0 'int'"):
+        ref = _rows(base, q)
+        if q == "'int'":  # the docs holding the term, scored
+            assert sorted(d for d, _ in ref) == list(range(0, 60, 10))
+        collected.clear()
+        assert _rows(tight, q) == ref, q
+        assert tight.last_trace["placement"] == "bucket", q
+        assert "'int' hits over fast_max_postings 30" in tight.last_trace["reason"]
+        assert 0 < max(collected) <= 30 + parts, collected
+        assert _rows(roomy, q) == ref, q
+        assert roomy.last_trace["placement"] == "fast", q
+        assert roomy.last_trace["verify"] == "folded", q
 
 
 def test_in_list_matches_isin(spark):
