@@ -15,13 +15,28 @@ frames arise from doc-range slices/salts and concatenate WITHOUT
 re-encoding because every frame's first doc_id is absolute):
 
     varbyte(n)                       # number of docs in this frame
+    varbyte(pos_flag)                # 1 when positions follow
     varbyte(doc_0, gap_1 .. gap_{n-1})   # ascending doc_ids, delta'd
     varbyte(tf_0 .. tf_{n-1})
     varbyte(pos gaps, doc-major)     # per doc: pos_0, gap_1.. (tf_i values)
 
+Decoding is one numpy pass over MANY buffers at once
+(:func:`decode_many`): the input is an Arrow-style binary column — one
+uint8 data buffer plus ``offsets`` (``len(buffers) + 1`` ascending
+byte offsets, the first not necessarily 0, so a sliced Arrow array's
+buffers pass through without a copy).  Every buffer is zero or more
+concatenated frames.  The pass runs one continuation-bit scan, one
+varbyte value decode looped by byte length (never by frame), a header
+walk with one numpy round per frame depth (an index row holds one
+frame, so one round), and segmented cumsums that rebuild doc ids and,
+only when wanted, positions.  The cost per call is a fixed ~20 numpy
+operations however many frames it reads, so callers decode a whole
+collect, bucket or Arrow batch in one call.  :func:`decode_frames` is
+the one-buffer case.
+
 Positions are stored (the reference stores them, IndexCreator.py:95-99)
 even though phrase verification falls back to substring matching
-(SearchEngine.py:201-207) — they future-proof true positional queries.
+(SearchEngine.py:201-207) — they serve the positional phrase plans.
 """
 
 from __future__ import annotations
@@ -58,20 +73,31 @@ def vb_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
+def _vb_values(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Every varbyte value of the byte stream ``b`` (uint64) and the
+    index of each value's final byte.  Horner's rule from a value's
+    last (most significant) group down: round g takes the values whose
+    g-th byte from the end is still a continuation byte — one numpy
+    round per byte length, never per value or frame."""
+    cont = b >= 0x80
+    ends = (~cont).nonzero()[0]
+    vals = b[ends].astype(np.uint64)
+    # cont[-1] is False (a stream ends on a final byte), so a value
+    # starting at byte 0 stops there
+    sel = cont[ends - 1].nonzero()[0]
+    g = 1
+    while sel.size:
+        grp = (b[ends[sel] - g] & 0x7F).astype(np.uint64)
+        vals[sel] = (vals[sel] << np.uint64(7)) | grp
+        g += 1
+        sel = sel[cont[ends[sel] - g]]
+    return vals, ends
+
+
 def vb_decode(buf: bytes | np.ndarray) -> np.ndarray:
     """Decode a varbyte stream to a uint64 array (vectorized)."""
     b = np.frombuffer(buf, dtype=np.uint8) if isinstance(buf, (bytes, bytearray, memoryview)) else np.asarray(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    is_last = (b & 0x80) == 0
-    ends = np.nonzero(is_last)[0]
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    # Position of each byte within its value's group sequence.
-    pos = np.arange(b.size, dtype=np.int64) - np.repeat(starts, ends - starts + 1)
-    shifted = (b & np.uint8(0x7F)).astype(np.uint64) << (np.uint64(7) * pos.astype(np.uint64))
-    return np.add.reduceat(shifted, starts)
+    return _vb_values(b)[0]
 
 
 def encode_frame(
@@ -111,8 +137,100 @@ def encode_frame(
     return header + vb_encode(gaps) + vb_encode(tfs) + pos_bytes
 
 
+def _seg_arange(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """``concat(arange(s, s + n) for s, n in zip(starts, lens))``."""
+    excl = lens.cumsum() - lens
+    return np.arange(int(lens.sum()), dtype=np.int64) + (starts - excl).repeat(lens)
+
+
+def _seg_cumsum(vals: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Running sums of ``vals`` restarted at every segment of ``lens``.
+    uint64 sums wrap, but a segment's difference of two wrapped sums is
+    exact whenever its true sum fits in 64 bits."""
+    cs = vals.cumsum(dtype=np.uint64)
+    first = lens.cumsum() - lens
+    base = cs[first - 1]
+    base[first == 0] = 0
+    return cs - base.repeat(lens)
+
+
+def _frames(vals: np.ndarray, bounds: np.ndarray):
+    """Walk the frame headers of the buffers whose values are
+    ``vals[bounds[i]:bounds[i+1]]``: one numpy round per frame depth
+    (round r reads the r-th frame of every buffer still holding one).
+    Returns, per frame in stream order, its buffer, the index of its
+    first value (the doc count ``n``), ``n``, and its position count
+    (Σtf for a positional frame, else 0)."""
+    hi = bounds[1:]
+    buf = (bounds[:-1] < hi).nonzero()[0]
+    cur = bounds[buf]
+    # running sum of vals (wrapping): a frame's Σtf is one difference
+    csum = vals.cumsum(dtype=np.uint64)
+    rounds = []
+    while True:
+        n = vals[cur].astype(np.int64)
+        tf0 = cur + n + 2  # value index of the frame's first tf
+        end = tf0 + n
+        npos = (csum[end - 1] - csum[tf0 - 1]).astype(np.int64) * (vals[cur + 1] != 0)
+        rounds.append((buf, cur, n, npos))
+        nxt = end + npos
+        more = nxt < hi[buf]
+        if not more.any():
+            break
+        buf, cur = buf[more], nxt[more]
+    if len(rounds) == 1:
+        return rounds[0]
+    fb, fc, fn, fp = (np.concatenate(x) for x in zip(*rounds))
+    order = fc.argsort(kind="stable")
+    return fb[order], fc[order], fn[order], fp[order]
+
+
+def decode_many(data, offsets, want_positions: bool = False):
+    """Decode every buffer of an Arrow-style binary column in one pass.
+
+    ``data`` is any bytes-like object (an Arrow data buffer, ``bytes``,
+    a uint8 array); buffer i is ``data[offsets[i]:offsets[i+1]]``, a
+    concatenation of zero or more frames.  Returns ``(doc_ids, tfs,
+    positions, counts)``: doc_ids / tfs / positions are uint64 arrays
+    over all buffers in order (buffer by buffer, frame by frame),
+    ``counts`` the int64 number of postings of each buffer.  positions
+    is the doc-major concatenation of the positional frames' position
+    lists (tf values per posting), empty when ``want_positions`` is
+    False: the header gives each payload's length, so it is skipped,
+    never rebuilt."""
+    offs = np.asarray(offsets, dtype=np.int64)
+    empty = np.empty(0, dtype=np.uint64)
+    counts = np.zeros(max(offs.size - 1, 0), dtype=np.int64)
+    if offs.size < 2 or offs[-1] == offs[0]:
+        return empty, empty, empty, counts
+    vals, ends = _vb_values(np.frombuffer(data, dtype=np.uint8)[offs[0] : offs[-1]])
+    fb, fc, fn, fp = _frames(vals, ends.searchsorted(offs - offs[0]))
+    if fc.size == 1:
+        # one frame (decode_frames' usual input): its parts are
+        # contiguous slices, which halves the fixed cost of a call
+        n, d0 = int(fn[0]), int(fc[0]) + 2
+        docs = vals[d0 : d0 + n].cumsum(dtype=np.uint64)
+        tfs = vals[d0 + n : d0 + 2 * n].copy()
+        counts[fb[0]] = n
+        if not want_positions or not fp[0]:
+            return docs, tfs, empty, counts
+        pg, ptf = vals[d0 + 2 * n : d0 + 2 * n + int(fp[0])], tfs
+    else:
+        didx = _seg_arange(fc + 2, fn)
+        docs = _seg_cumsum(vals[didx], fn)
+        tfs = vals[didx + fn.repeat(fn)]
+        np.add.at(counts, fb, fn)
+        pos = fp > 0
+        if not want_positions or not pos.any():
+            return docs, tfs, empty, counts
+        pg = vals[_seg_arange(fc[pos] + 2 + 2 * fn[pos], fp[pos])]
+        ptf = tfs[pos.repeat(fn)]
+    return docs, tfs, _seg_cumsum(pg, ptf.astype(np.int64)), counts
+
+
 def decode_frames(buf: bytes, want_positions: bool = True):
-    """Decode a concatenation of frames.
+    """Decode one buffer of concatenated frames: :func:`decode_many`
+    over a single buffer.
 
     Returns ``(doc_ids, tfs, positions)`` as uint64 arrays; positions is
     empty when frames were encoded tf-only. doc_ids ascend globally when
@@ -120,65 +238,29 @@ def decode_frames(buf: bytes, want_positions: bool = True):
     invariant).
 
     ``want_positions=False`` SKIPS the position payload (the frame
-    header makes its byte length computable from Σtf without decoding):
-    on a positional index, non-positional plans — keyword, boolean,
-    BM25 — pay only the byte scan, not the (≈Σdoclen-sized)
-    position-list materialization.  Positions come back empty.
+    header makes its length computable from Σtf): on a positional
+    index, non-positional plans — keyword, boolean, BM25 — pay only the
+    value pass over it, not the (≈Σdoclen-sized) position-list
+    rebuild.  Positions come back empty.
     """
-    b = np.frombuffer(buf, dtype=np.uint8)
-    all_docs, all_tfs, all_pos = [], [], []
-    off = 0
-    is_last = (b & 0x80) == 0
-    val_ends = np.nonzero(is_last)[0]
-    while off < b.size:
-        # decode header: two varbyte values starting at off
-        e0 = val_ends[np.searchsorted(val_ends, off)]
-        n = int(vb_decode(b[off : e0 + 1])[0])
-        off2 = e0 + 1
-        e1 = val_ends[np.searchsorted(val_ends, off2)]
-        pos_flag = int(vb_decode(b[off2 : e1 + 1])[0])
-        off = e1 + 1
-        # doc gaps: n values
-        i = np.searchsorted(val_ends, off)
-        doc_end = val_ends[i + n - 1]
-        gaps = vb_decode(b[off : doc_end + 1])
-        off = doc_end + 1
-        # tfs: n values
-        i = np.searchsorted(val_ends, off)
-        tf_end = val_ends[i + n - 1]
-        tfs = vb_decode(b[off : tf_end + 1])
-        off = tf_end + 1
-        docs = np.cumsum(gaps, dtype=np.uint64)
-        all_docs.append(docs)
-        all_tfs.append(tfs)
-        if pos_flag:
-            npos = int(tfs.sum())
-            i = np.searchsorted(val_ends, off)
-            p_end = val_ends[i + npos - 1]
-            if not want_positions:  # skip the payload, keep the offset
-                off = p_end + 1
-                continue
-            pgaps = vb_decode(b[off : p_end + 1])
-            off = p_end + 1
-            # undo doc-major delta: cumsum within each doc run
-            pos = np.cumsum(pgaps, dtype=np.uint64)
-            run_starts = np.cumsum(tfs)[:-1].astype(np.int64)
-            if run_starts.size:
-                # subtract the carried-over cumsum at each run start
-                carry = np.zeros(npos, dtype=np.uint64)
-                carry_vals = pos[run_starts - 1]
-                carry[run_starts] = carry_vals
-                # propagate carry within runs via cumsum of a reset trick
-                reset = np.zeros(npos, dtype=np.uint64)
-                reset[run_starts] = carry_vals
-                # positions within run r must subtract pos[run_start-1]
-                seg_id = np.zeros(npos, dtype=np.int64)
-                seg_id[run_starts] = 1
-                seg_id = np.cumsum(seg_id)
-                sub = np.concatenate(([np.uint64(0)], carry_vals))[seg_id]
-                pos = pos - sub
-            all_pos.append(pos)
-    docs = np.concatenate(all_docs) if all_docs else np.empty(0, np.uint64)
-    tfs = np.concatenate(all_tfs) if all_tfs else np.empty(0, np.uint64)
-    pos = np.concatenate(all_pos) if all_pos else np.empty(0, np.uint64)
-    return docs, tfs, pos
+    return decode_many(buf, (0, len(buf)), want_positions)[:3]
+
+
+def pack_buffers(blobs) -> tuple[bytes, np.ndarray]:
+    """Concatenate bytes-like ``blobs`` into :func:`decode_many`'s
+    ``(data, offsets)`` input."""
+    lens = np.fromiter((len(x) for x in blobs), dtype=np.int64, count=len(blobs))
+    offsets = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    return b"".join(blobs), offsets
+
+
+def arrow_binary_buffers(arr) -> tuple[object, np.ndarray]:
+    """A pyarrow (large_)binary array's ``(data buffer, offsets)`` —
+    :func:`decode_many`'s input without a copy of the data, honouring
+    the array's slice offset.  Null slots hold no bytes."""
+    _, off_buf, data = arr.buffers()
+    wide = str(arr.type).startswith("large_")
+    offsets = np.frombuffer(off_buf, dtype=np.int64 if wide else np.int32)
+    offsets = offsets[arr.offset : arr.offset + len(arr) + 1]
+    return (data if data is not None else b""), offsets

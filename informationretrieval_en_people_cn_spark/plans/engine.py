@@ -13,8 +13,9 @@ records which placement served a query and why:
 
 * **fast** (``fast_path``; needs cached term stats and driver
   doclens): one pruned scan collects the query terms' frames to the
-  driver (with each substring phrase's content hits in the same
-  action), where the kernel runs them as one virtual bucket — the
+  driver as Arrow (with each substring phrase's content hits in the
+  same action), decoded in one numpy pass per record batch, and the
+  kernel runs them as one virtual bucket — the
   reference's own execution model, behind a Σdf budget.
 * **bucket** (every other ranked query): only the query terms'
   compressed frames move, grouped by doc-range bucket and broadcast
@@ -43,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.analyze import analyze_text
-from ..functions.codec import decode_frames
+from ..functions.codec import decode_many, pack_buffers
 from ..session import local_rows_df as _local_df
 from . import querytree as qt
 from .kernel import (
@@ -75,6 +76,8 @@ _VERIFY_IN_MAX = 1000
 
 _SQL_WORD = re.compile(r"[a-z0-9_]+")
 
+_PHRASES = ("phrase", "phrase_prefix")  # the leaf kinds a phrase parses to
+
 
 def _in_list(col: str, values) -> Column:
     """``col IN (values)`` built in one py4j call (``Column.isin`` makes
@@ -99,26 +102,21 @@ def _contains(needle: str) -> Column:
 
 
 def decode_postings_df(index_rows: DataFrame) -> DataFrame:
-    """(term, postings:binary) -> (term, doc_id, tf) rows, numpy decode."""
+    """(term, postings:binary) -> (term, doc_id, tf), one decode per batch."""
 
     def gen(batches):
         import pandas as pd
 
         for pdf in batches:
-            frames = []
-            for term, buf in zip(pdf["term"], pdf["postings"]):
-                d, t, _ = decode_frames(buf, want_positions=False)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "term": term,
-                            "doc_id": d.astype(np.int64),
-                            "tf": t.astype(np.int64),
-                        }
-                    )
+            d, t, _, n = decode_many(*pack_buffers(pdf["postings"]))
+            if d.size:
+                yield pd.DataFrame(
+                    {
+                        "term": np.repeat(pdf["term"].to_numpy(), n),
+                        "doc_id": d.astype(np.int64),
+                        "tf": t.astype(np.int64),
+                    }
                 )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
 
     return index_rows.select("term", "postings").mapInPandas(gen, _DECODED_SCHEMA)
 
@@ -494,23 +492,21 @@ class SearchEngine:
 
         def dec(batches):
             for pdf in batches:
-                out_t, out_d, out_p = [], [], []
-                for term, buf in zip(pdf["term"], pdf["postings"]):
-                    d, t, p = decode_frames(bytes(buf))
-                    if p.size == 0:
-                        raise ValueError(
-                            "positional phrase query needs an index built "
-                            "with store_positions=True"
-                        )
-                    ends = np.cumsum(t).astype(np.int64)
-                    starts = ends - t.astype(np.int64)
-                    for i in range(len(d)):
-                        out_t.append(term)
-                        out_d.append(int(d[i]))
-                        out_p.append(p[starts[i] : ends[i]].astype(np.int64).tolist())
-                yield pd.DataFrame(
-                    {"term": out_t, "doc_id": out_d, "positions": out_p}
-                )
+                d, t, p, n = decode_many(*pack_buffers(pdf["postings"]), True)
+                if p.size != t.sum():
+                    raise ValueError(
+                        "positional phrase query needs an index built "
+                        "with store_positions=True"
+                    )
+                if d.size:
+                    runs = np.split(p.astype(np.int64), np.cumsum(t)[:-1].astype(np.int64))
+                    yield pd.DataFrame(
+                        {
+                            "term": np.repeat(pdf["term"].to_numpy(), n),
+                            "doc_id": d.astype(np.int64),
+                            "positions": [r.tolist() for r in runs],
+                        }
+                    )
 
         return rows.select("term", "postings").mapInPandas(dec, dec_schema)
 
@@ -697,7 +693,7 @@ class SearchEngine:
             cond = cond | (g_pos & g_neg)
         return hits.filter(cond).select("doc_id")
 
-    def _serving_leaf(self, leaf: qt.Leaf) -> tuple[tuple, set]:
+    def _serving_leaf(self, leaf: qt.Leaf, meta: list | None = None) -> tuple[tuple, set]:
         """Compile one query leaf for the bucket-local kernels.
 
         Returns ``(spec, frame_terms)`` where spec is one of
@@ -708,14 +704,14 @@ class SearchEngine:
         :meth:`phrase_docids_bucketed` and joined bucket-locally).
         Raises :class:`_ServingFallback` when the leaf cannot be served
         bucket-locally (reply_to; phrase without content; verified set
-        over the collect budget)."""
+        over the collect budget); ``meta``: :meth:`_term_meta` rows held."""
         if leaf.kind == "keyword":
             t = self._q(leaf.value)
             return ("terms", t), set(t)
         if leaf.kind == "prefix":
             t = self.expand_prefix(leaf.value)
             return ("terms", t), set(t)
-        if leaf.kind in ("phrase", "phrase_prefix"):
+        if leaf.kind in _PHRASES:
             sfx = leaf.suffix if leaf.kind == "phrase_prefix" else ""
             seq = self._q(leaf.value)
             if not seq:  # phrase analyzed away: prefix semantics
@@ -727,7 +723,7 @@ class SearchEngine:
                     return ("terms", []), set()
                 ft = set(seq) | set(sfx_terms or ())
                 return ("pos_phrase", seq, sfx_terms), ft
-            ids_by_bucket, rare = self._phrase_ids_by_bucket(leaf.value, sfx)
+            ids_by_bucket, rare = self._phrase_ids_by_bucket(leaf.value, sfx, meta)
             # the rarest term's frames anchor the leaf's buckets: every
             # verified doc holds that term, so its posting frames exist
             # in exactly the buckets the kernel must visit — without
@@ -746,7 +742,7 @@ class SearchEngine:
             rows = self.reply_to_docids(leaf.value).collect()
             ids = np.array(sorted(r.doc_id for r in rows), dtype=np.int64)
             return ("ids", {0: ids}), set()
-        if leaf.kind in ("phrase", "phrase_prefix") and self._q(leaf.value):
+        if leaf.kind in _PHRASES and self._q(leaf.value):
             # resolved to ("ids", ...) by _search_fast once the rare
             # terms' frames are collected with the rest of the query's
             sfx = leaf.suffix if leaf.kind == "phrase_prefix" else ""
@@ -867,7 +863,7 @@ class SearchEngine:
             and len(node.children[0].children) == 1
         ):
             c = node.children[0].children[0]
-            if c.kind in ("phrase", "phrase_prefix") and self._q(c.value):
+            if c.kind in _PHRASES and self._q(c.value):
                 sfx = c.suffix if c.kind == "phrase_prefix" else ""
                 return self.phrase_docids_bucketed(c.value, sfx).select("doc_id")
         tree, frame_terms = self._compile_tree(node, self._serving_leaf)
@@ -904,19 +900,19 @@ class SearchEngine:
         ver = self._verify(cand, min(rare.values()), needle)
         return ver.select(self._bexpr().alias("bucket"), "doc_id")
 
-    def _rare_terms(self, terms: list[str]) -> dict[str, int]:
+    def _rare_terms(self, terms: list[str], meta: list | None = None) -> dict[str, int]:
         """The (≤2) lowest-df distinct ``terms`` → their df, rarest
         first — a phrase's candidate terms (the reference's selectivity
         planning, SearchEngine.py:189-194); {} when a term is not in the
         index.  df comes from :meth:`_term_dfs` (cached stats, else one
         pruned metadata collect)."""
-        dfs = self._term_dfs(terms)
+        dfs = self._term_dfs(terms, meta)
         if len(dfs) < len(set(terms)):
             return {}
         return dict(sorted(dfs.items(), key=lambda x: (x[1], x[0]))[:2])
 
     def _phrase_ids_by_bucket(
-        self, phrase: str, suffix: str = ""
+        self, phrase: str, suffix: str = "", meta: list | None = None
     ) -> tuple[dict[int, np.ndarray], list[str]]:
         """Substring-phrase leaf for the serving kernels: verified doc
         ids grouped by bucket (collected under the budget — bounded by
@@ -924,7 +920,7 @@ class SearchEngine:
         leaf's buckets.  Raises _ServingFallback over budget."""
         if self.content_df is None:
             raise _ServingFallback("phrase serving needs content")
-        rare = self._rare_terms(self._q(phrase))
+        rare = self._rare_terms(self._q(phrase), meta)
         if not rare:
             return {}, []
         if min(rare.values()) > self.serving_phrase_collect_max:
@@ -1172,14 +1168,14 @@ class SearchEngine:
     def _term_dfs(self, terms, meta: list | None = None) -> dict[str, int]:
         """Global df of each distinct query term the index holds: cached
         term stats, else summed over :meth:`_term_meta` rows (a hot term
-        spans one row per bucket)."""
+        spans one row per bucket; ``meta`` may cover more terms)."""
+        want = set(terms)
         if self.term_stats is not None:
-            return {
-                t: self.term_stats[t][0] for t in set(terms) if t in self.term_stats
-            }
+            return {t: self.term_stats[t][0] for t in want if t in self.term_stats}
         dfs: dict[str, int] = {}
-        for r in meta if meta is not None else self._term_meta(terms):
-            dfs[r.term] = dfs.get(r.term, 0) + int(r.df)
+        for r in meta if meta is not None else self._term_meta(want):
+            if r.term in want:
+                dfs[r.term] = dfs.get(r.term, 0) + int(r.df)
         return dfs
 
     def _scoring_idf(self, terms, meta: list | None = None) -> dict[str, float]:
@@ -1371,11 +1367,15 @@ class SearchEngine:
         leaf the bucket kernel cannot evaluate.  ``idf`` / ``buckets``
         let the block-max plan reuse its metadata and restrict the
         buckets scored."""
-        tree, frame_terms = None, set()
+        tree, frame_terms, meta = None, set(), None
         if node is not None:
-            tree, frame_terms = self._compile_tree(node, self._serving_leaf)
+            if idf is None and self.term_stats is None:
+                # one metadata collect serves the phrase leaves and the idf
+                meta = self._term_meta(set(terms).union(
+                    *(self._q(c.value) for c in node.children if c.kind in _PHRASES)))
+            tree, frame_terms = self._compile_tree(node, lambda c: self._serving_leaf(c, meta))
         if idf is None:
-            idf = self._scoring_idf(terms)
+            idf = self._scoring_idf(terms, meta)
         scored = self._score_bucketed(
             [(0, sorted(idf), tree)], idf, k, where=where, boost=boost,
             frame_terms=frame_terms, buckets=buckets,
@@ -1493,9 +1493,10 @@ class SearchEngine:
         self, terms, budget: int, needles=()
     ) -> tuple[_BucketFrames, dict[str, np.ndarray]]:
         """The terms' frames, collected to the driver in ONE pruned scan
-        and decoded as one virtual bucket, + the sorted ids of the docs
-        whose lowercased content holds each of ``needles`` — each
-        needle's content scan is UNION ALL'd into the same action.
+        as Arrow and decoded as one virtual bucket from its binary
+        buffers, + the sorted ids of the docs whose lowercased content
+        holds each of ``needles`` — each needle's content scan is UNION
+        ALL'd into the same action (the rows with a ``hit``).
         Raises :class:`_FastFallback` when the terms' Σdf exceeds
         ``budget``, or a needle's hits may: each needle branch keeps at
         most ``cap = budget // #content partitions + 1`` rows per
@@ -1524,18 +1525,17 @@ class SearchEngine:
                         F.col("doc_id").cast("long"),
                     )
                 )
-        frames, hits = [], {nd: [] for nd in needles}
-        for r in rows.collect():
-            if needles and r.hit is not None:
-                hits[r.term].append(r.hit)
-            else:
-                frames.append(r)
-        for nd, v in hits.items():
-            if len(v) >= cap:
-                raise _FastFallback(f"phrase {nd!r} hits over fast_max_postings {budget}")
-        return _BucketFrames(frames), {
-            nd: np.unique(np.array(v, dtype=np.int64)) for nd, v in hits.items()
-        }
+        table = rows.toArrow()
+        hits = {}
+        if needles:
+            found = table.filter(table.column("hit").is_valid())
+            by = found.column("term").to_numpy(zero_copy_only=False)
+            ids = found.column("hit").to_numpy()
+            for nd in needles:
+                hits[nd] = np.unique(ids[by == nd])
+                if hits[nd].size >= cap:
+                    raise _FastFallback(f"phrase {nd!r} hits over fast_max_postings {budget}")
+        return _BucketFrames.from_arrow(table), hits
 
     def _phrase_ids_fast(
         self, bf: _BucketFrames, spec: tuple, hits: dict[str, np.ndarray]
@@ -1576,6 +1576,7 @@ class SearchEngine:
             self._trace("bucket", str(e))
             return None
         self._trace("fast", f"Σdf within fast_max_postings {self.fast_max_postings}")
+        self.last_trace.update(frames=bf.n_frames, postings=bf.n_postings)
         if subs:
             self.last_trace["verify"] = "content-cache" if cached else "folded"
         if tree is not None:
@@ -1889,9 +1890,5 @@ def _top(scored: DataFrame, k: int | None) -> DataFrame:
 def _has_phrase(node) -> bool:
     """True if the parsed tree contains a phrase / phrase_prefix leaf."""
     if isinstance(node, qt.RankedNode):
-        return any(c.kind in ("phrase", "phrase_prefix") for c in node.children)
-    return any(
-        c.kind in ("phrase", "phrase_prefix")
-        for a in node.children
-        for c in a.children
-    )
+        return any(c.kind in _PHRASES for c in node.children)
+    return any(c.kind in _PHRASES for a in node.children for c in a.children)

@@ -23,7 +23,12 @@ import os
 
 import numpy as np
 
-from ..functions.codec import decode_frames
+from ..functions.codec import (
+    arrow_binary_buffers,
+    decode_frames,
+    decode_many,
+    pack_buffers,
+)
 
 _EMPTY_IDS = np.empty(0, dtype=np.int64)
 _POS_SHIFT = np.int64(1) << np.int64(32)
@@ -99,17 +104,23 @@ def _cached_decode(tag, term, bucket, blob: bytes, want_positions: bool = False)
 
 
 class _BucketFrames:
-    """One bucket's decoded term frames: docID sets per term and, for
-    indexes built with ``store_positions=True``, per-(term, doc)
-    position lists.  ``frames`` are ``{"term", "postings"}`` records —
-    one bucket's shuffled frames, or every frame the driver collected
-    (the virtual bucket: a term then has one frame per doc-range
-    bucket, each ascending, disjoint from the others).
+    """One bucket's decoded term frames: one ascending ``(doc_ids,
+    tfs)`` entry per term (:attr:`by_term`) and, for indexes built
+    with ``store_positions=True``, per-(term, doc) position lists.
+    ``frames`` are ``{"term", "postings"}`` records — one bucket's
+    shuffled frames, or every frame the driver collected (the virtual
+    bucket: a term then has one frame per doc-range bucket, each
+    ascending, disjoint from the others; :meth:`from_arrow` takes them
+    as an Arrow table).  Every frame decodes in one
+    :func:`.codec.decode_many` call, and one lexsort by (term, doc)
+    merges a term's frames into its entry.
 
     ``pos_terms`` selects which terms' position payloads are decoded:
     on a positional index every frame CARRIES positions (≈ Σtf values),
     but only phrase-leaf terms need them materialized — for everything
-    else the codec skips the payload (want_positions=False)."""
+    else the codec skips the payload (want_positions=False).
+    ``n_frames`` / ``n_postings`` count the non-empty frames and the
+    postings decoded."""
 
     def __init__(
         self,
@@ -118,25 +129,97 @@ class _BucketFrames:
         cache_tag=None,
         bucket: int = -1,
     ):
-        self.by_term: dict[str, list] = {}
-        for fr in frames:
-            term = fr["term"]
-            want = pos_terms is None or term in pos_terms
-            d, t, p = _cached_decode(
-                cache_tag, term, bucket, bytes(fr["postings"]),
-                want_positions=want,
-            )
-            self.by_term.setdefault(term, []).append(
-                (d.astype(np.int64), t.astype(np.int64), p)
-            )
+        frames = list(frames)
+        chunks = []  # (term of each buffer, decode_many's output)
+        for want in (False, True):
+            sel = [
+                fr for fr in frames
+                if (pos_terms is None or fr["term"] in pos_terms) is want
+            ]
+            if not sel:
+                continue
+            if cache_tag is None:
+                decoded = decode_many(
+                    *pack_buffers([fr["postings"] for fr in sel]), want
+                )
+                chunks.append(([fr["term"] for fr in sel], decoded))
+                continue
+            for fr in sel:  # the LRU is keyed by one (term, bucket) frame
+                d, t, p = _cached_decode(
+                    cache_tag, fr["term"], bucket, bytes(fr["postings"]), want
+                )
+                chunks.append(([fr["term"]], (d, t, p, np.array([d.size]))))
+        self._index(chunks)
+
+    @classmethod
+    def from_arrow(cls, table) -> "_BucketFrames":
+        """The frames of an Arrow table's ``term`` / ``postings``
+        columns (null postings hold no frame), decoded without
+        positions one record batch at a time, straight from each
+        batch's binary buffers."""
+        bf = cls.__new__(cls)
+        bf._index(
+            [
+                (
+                    rb.column("term").to_numpy(zero_copy_only=False),
+                    decode_many(*arrow_binary_buffers(rb.column("postings"))),
+                )
+                for rb in table.select(["term", "postings"]).to_batches()
+            ]
+        )
+        return bf
+
+    def _index(self, chunks) -> None:
+        """Merge the decoded chunks: ``terms`` (sorted), and per posting
+        ``code`` (index into terms), ``docs``, ``tfs`` — sorted by
+        (term, doc), so the postings are term-major in sorted term
+        order; :attr:`by_term` holds views of each term's run."""
+        self.by_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+        self._pstart: dict[str, np.ndarray] = {}
+        labels = [np.asarray(t, dtype=object) for t, _ in chunks]
+        counts = [dec[3] for _, dec in chunks]
+        self.n_frames = int(sum(np.count_nonzero(c) for c in counts))
+        self.n_postings = int(sum(c.sum() for c in counts))
+        self.terms = np.empty(0, dtype=object)
+        self.code = self.docs = self.tfs = _EMPTY_IDS
+        if not self.n_postings:
+            return
+        self.terms, inv = np.unique(np.concatenate(labels), return_inverse=True)
+        code = np.repeat(inv, np.concatenate(counts))
+        docs = np.concatenate([dec[0] for _, dec in chunks])
+        tfs = np.concatenate([dec[1] for _, dec in chunks])
+        # a term's frames hold disjoint docs: one sort makes its entry
+        order = np.lexsort((docs, code))
+        self.code = code[order]
+        self.docs = docs[order].astype(np.int64)
+        self.tfs = tfs[order].astype(np.int64)
+        bounds = np.searchsorted(self.code, np.arange(self.terms.size + 1))
+        spans = [
+            (t, lo, hi) for t, lo, hi in zip(self.terms, bounds[:-1], bounds[1:]) if hi > lo
+        ]
+        for t, lo, hi in spans:
+            self.by_term[t] = (self.docs[lo:hi], self.tfs[lo:hi])
+        if not any(dec[2].size for _, dec in chunks):
+            return
+        # positions: each posting's start in the concatenated payload,
+        # -1 for postings decoded without one
+        starts, base = [], 0
+        for _, (d, t, p, _) in chunks:
+            if p.size:
+                if p.size != int(t.sum()):
+                    raise ValueError("frames mix positional and tf-only encodings")
+                starts.append(np.cumsum(t.astype(np.int64)) - t.astype(np.int64) + base)
+                base += p.size
+            else:
+                starts.append(np.full(d.size, -1, dtype=np.int64))
+        self._pos = np.concatenate([dec[2] for _, dec in chunks])
+        pstart = np.concatenate(starts)[order]
+        for t, lo, hi in spans:
+            self._pstart[t] = pstart[lo:hi]
 
     def ids(self, term: str) -> np.ndarray:
-        fl = self.by_term.get(term)
-        if not fl:
-            return _EMPTY_IDS
-        if len(fl) == 1:
-            return fl[0][0]
-        return np.unique(np.concatenate([f[0] for f in fl]))
+        ent = self.by_term.get(term)
+        return _EMPTY_IDS if ent is None else ent[0]
 
     def union_ids(self, terms) -> np.ndarray:
         arrs = [a for a in (self.ids(t) for t in set(terms)) if a.size]
@@ -146,54 +229,42 @@ class _BucketFrames:
             return arrs[0]
         return np.unique(np.concatenate(arrs))
 
-    def postings(self, term: str) -> tuple[np.ndarray, np.ndarray]:
-        """(doc_ids ascending, tfs) of ``term`` over all its frames."""
-        fl = self.by_term[term]
-        if len(fl) == 1:
-            return fl[0][0], fl[0][1]
-        d = np.concatenate([f[0] for f in fl])
-        t = np.concatenate([f[1] for f in fl])
-        order = np.argsort(d, kind="stable")
-        return d[order], t[order]
-
     def doc_pos_keys(self, term: str, cand: np.ndarray) -> np.ndarray:
         """(doc, position) pairs of ``term`` restricted to the sorted
         candidate docs ``cand``, packed as ``idx(cand)·2³² + position``
         int64 keys (positions are bounded by doclen ≪ 2³²).  Sorted
         ascending — the vectorized adjacency chain operates on these.
         Raises if the index was built without positions."""
-        out = []
-        for d, tl, p in self.by_term.get(term, ()):
-            loc = np.searchsorted(cand, d)
-            sel = (loc < cand.size) & (cand[np.minimum(loc, cand.size - 1)] == d)
-            cnt = tl[sel]
-            total = int(cnt.sum())
-            if total == 0:
-                continue
-            if p.size == 0:
-                raise ValueError(
-                    "positional phrase query needs an index built "
-                    "with store_positions=True"
-                )
-            ends = np.cumsum(tl)
-            st = (ends - tl)[sel]
-            offs = np.cumsum(cnt) - cnt
-            flat = np.repeat(st - offs, cnt) + np.arange(total)
-            keys = np.repeat(loc[sel], cnt) * _POS_SHIFT + p[flat].astype(np.int64)
-            out.append(keys)
-        if not out:
+        ent = self.by_term.get(term)
+        if ent is None:
             return _EMPTY_IDS
-        if len(out) == 1:
-            return out[0]  # docs ascend, positions ascend per doc
-        return np.unique(np.concatenate(out))
+        d, tl = ent
+        loc = np.searchsorted(cand, d)
+        sel = (loc < cand.size) & (cand[np.minimum(loc, cand.size - 1)] == d)
+        cnt = tl[sel]
+        total = int(cnt.sum())
+        if total == 0:
+            return _EMPTY_IDS
+        st = self._pstart.get(term)
+        st = None if st is None else st[sel]
+        if st is None or (st < 0).any():
+            raise ValueError(
+                "positional phrase query needs an index built "
+                "with store_positions=True"
+            )
+        offs = np.cumsum(cnt) - cnt
+        flat = np.repeat(st - offs, cnt) + np.arange(total)
+        # docs ascend, positions ascend per doc: the keys are sorted
+        return np.repeat(loc[sel], cnt) * _POS_SHIFT + self._pos[flat].astype(np.int64)
 
 
 def _sorted_member(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Boolean mask of which elements of sorted ``a`` occur in sorted
     ``b`` — one binary search per element instead of np.isin's
     concatenate+argsort of both arrays.  Every kernel id/key array here
-    is sorted by construction (delta decode is strictly increasing;
-    multi-frame unions go through np.unique; set ops preserve order)."""
+    is sorted by construction (delta decode is strictly increasing; a
+    term's frames merge into one sorted entry; unions go through
+    np.unique; set ops preserve order)."""
     if a.size == 0 or b.size == 0:
         return np.zeros(a.size, dtype=bool)
     loc = np.searchsorted(b, a)
@@ -335,8 +406,8 @@ def score_bucket(
     ``dl_ids`` (sorted) / ``dl_lens`` are the bucket's docs and doclens.
     ``terms`` are a query's scoring terms, sorted: each doc sums its
     term scores from 0.0 in that order, so every placement returns
-    bit-identical scores.  A term is scored
-    once per bucket, however many queries name it.
+    bit-identical scores.  Every posting is scored once per bucket,
+    however many queries name its term.
 
     With ``tree`` None the results are the docs holding a scoring term;
     otherwise the docs :func:`_eval_bucket_tree` returns, scored 0.0
@@ -351,28 +422,25 @@ def score_bucket(
     neighbouring doc's accumulator."""
     ids = np.asarray(dl_ids, dtype=np.int64)
     lens = np.asarray(dl_lens, dtype=np.float64)
-    vecs: dict[str, list] = {}
-    for t, frames in bf.by_term.items():
-        for d, tl, _ in frames:
-            pos, hit = _slots(ids, d)
-            if not hit.all():
-                raise ValueError(
-                    "doclen cache is missing posting doc_ids for term "
-                    f"{t!r}: the docs table and the index disagree — "
-                    "rebuild or reload() the engine"
-                )
-            if t in idf:
-                s = bm25_tfp(idf[t], tl.astype(np.float64), lens[pos], k1, b, avgdl)
-                vecs.setdefault(t, []).append((pos, s))
+    pos, hit = _slots(ids, bf.docs)
+    if not hit.all():
+        raise ValueError(
+            "doclen cache is missing posting doc_ids for term "
+            f"{bf.terms[bf.code[hit.argmin()]]!r}: the docs table and the "
+            "index disagree — rebuild or reload() the engine"
+        )
+    # one score per posting (NaN for a term without idf, never summed)
+    term_idf = np.array([idf.get(t, np.nan) for t in bf.terms], dtype=np.float64)
+    s = bm25_tfp(term_idf[bf.code], bf.tfs.astype(np.float64), lens[pos], k1, b, avgdl)
     allow = None if allow is None else np.asarray(allow, dtype=np.int64)
     out = []
     for terms, tree in queries:
-        acc = np.zeros(ids.size)
-        touched = np.zeros(ids.size, dtype=bool)
-        for t in sorted(terms):
-            for pos, s in vecs.get(t, ()):
-                acc[pos] += s
-                touched[pos] = True
+        want = set(terms).intersection(idf)
+        sel = np.fromiter((t in want for t in bf.terms), bool, bf.terms.size)[bf.code]
+        # postings run term by term in sorted term order and bincount
+        # adds in array order: each doc sums from 0.0 in term order
+        acc = np.bincount(pos[sel], weights=s[sel], minlength=ids.size)
+        touched = np.bincount(pos[sel], minlength=ids.size) > 0
         if tree is None:
             if allow is not None:
                 touched &= _sorted_member(ids, allow)

@@ -11,6 +11,8 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 
+import numpy as np
+
 from informationretrieval_en_people_cn_spark.functions.analyze import analyze_text
 
 
@@ -53,3 +55,49 @@ def bm25_scores(postings, doclen, stats, terms, k1=1.2, b=0.75):
 
 def topk(scores: dict[int, float], k: int):
     return sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
+
+
+def _vb_decode_reduceat(b: np.ndarray) -> np.ndarray:
+    """Varbyte stream -> uint64 values: every byte's 7-bit group
+    shifted into place, summed per value with ``np.add.reduceat``."""
+    if b.size == 0:
+        return np.empty(0, dtype=np.uint64)
+    ends = np.nonzero((b & 0x80) == 0)[0]
+    starts = np.concatenate(([0], ends[:-1] + 1))
+    pos = np.arange(b.size, dtype=np.int64) - np.repeat(starts, ends - starts + 1)
+    shifted = (b & np.uint8(0x7F)).astype(np.uint64) << (np.uint64(7) * pos.astype(np.uint64))
+    return np.add.reduceat(shifted, starts)
+
+
+def decode_frames_per_frame(buf: bytes, want_positions: bool = True):
+    """The codec's frame-by-frame decoder, kept as the oracle of the
+    vectorized one: a Python loop over the frames of one buffer, each
+    field decoded by its own varbyte call.  -> (doc_ids, tfs,
+    positions) uint64; positions only of positional frames, and only
+    when wanted."""
+    b = np.frombuffer(buf, dtype=np.uint8)
+    val_ends = np.nonzero((b & 0x80) == 0)[0]
+    docs, tfs, poss = [], [], []
+
+    def field(off: int, count: int):
+        i = np.searchsorted(val_ends, off)
+        end = val_ends[i + count - 1] + 1
+        return _vb_decode_reduceat(b[off:end]), end
+
+    off = 0
+    while off < b.size:
+        (n, flag), off = field(off, 2)
+        n = int(n)
+        gaps, off = field(off, n)
+        tf, off = field(off, n)
+        docs.append(np.cumsum(gaps, dtype=np.uint64))
+        tfs.append(tf)
+        if flag:
+            npos = int(tf.sum())
+            pg, off = field(off, npos)
+            if want_positions:
+                run = np.repeat(np.arange(n), tf.astype(np.int64))
+                pos = [np.cumsum(pg[run == j], dtype=np.uint64) for j in range(n)]
+                poss.append(np.concatenate(pos) if pos else pg)
+    cat = lambda xs: np.concatenate(xs) if xs else np.empty(0, dtype=np.uint64)  # noqa: E731
+    return cat(docs), cat(tfs), cat(poss)

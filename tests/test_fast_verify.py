@@ -103,10 +103,16 @@ def test_fast_verify_routes_equal_distributed_and_oracle(
         got = _rows(eng, q)
         assert eng.last_trace["placement"] == "fast", q
         assert eng.last_trace["verify"] == route, q
+        assert eng.last_trace["postings"] >= eng.last_trace["frames"] > 0, q
         assert got == want, q
         assert _rows(engine, q) == want, q
         nonempty += bool(want)
     assert nonempty == len(QUERIES)
+    # a boolean phrase decodes exactly its rare terms' index rows
+    rare = eng._rare_terms(analyze_text("return value"))
+    eng.search("'return value'", 10)
+    assert eng.last_trace["frames"] == len(eng._index_rows(list(rare)).collect())
+    assert eng.last_trace["postings"] == sum(rare.values())
 
 
 def test_folded_phrase_runs_one_job(spark, fast):
@@ -154,14 +160,15 @@ def test_substring_heavy_needle_stays_in_budget(spark, tmp_path, monkeypatch):
 
     collected = []
     df_cls = type(tight.index)  # the session's DataFrame implementation
-    collect = df_cls.collect
+    to_arrow = df_cls.toArrow  # the fast path collects as Arrow
 
     def spy(df):
-        got = collect(df)
-        collected.append(sum(getattr(r, "hit", None) is not None for r in got))
+        got = to_arrow(df)
+        hit = got.column("hit") if "hit" in got.column_names else []
+        collected.append(len(hit) - getattr(hit, "null_count", 0))
         return got
 
-    monkeypatch.setattr(df_cls, "collect", spy)
+    monkeypatch.setattr(df_cls, "toArrow", spy)
     for q in ("'int'", "part0 'int'"):
         ref = _rows(base, q)
         if q == "'int'":  # the docs holding the term, scored

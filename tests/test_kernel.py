@@ -7,6 +7,7 @@ that the two layouts agree bit for bit with each other and with the
 pure-Python oracle."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -106,6 +107,47 @@ def test_one_virtual_bucket_equals_buckets_and_oracle(coll, query, k):
     assert _topk(virtual, k) == _topk(multi, k) == want
 
 
+@given(collections(), st.lists(st.sampled_from(TERMS), min_size=1), st.randoms(use_true_random=False))
+@settings(max_examples=100, deadline=None)
+def test_frames_in_any_order_give_the_same_entries_and_scores(coll, query, rnd):
+    """A term's frames merge into one ascending entry whatever order
+    they arrive in — as records or as an Arrow table (two record
+    batches, plus a null-postings row as a folded phrase's hit rows
+    carry) — and score_bucket's output does not move by a bit."""
+    doclen, postings, cuts = coll
+    frames = [fr for fb, _, _ in _buckets(doclen, postings, cuts) for fr in fb]
+    shuffled = frames[:]
+    rnd.shuffle(shuffled)
+    half = len(shuffled) // 2
+    schema = pa.schema([("term", pa.string()), ("postings", pa.binary())])
+    batches = [
+        pa.RecordBatch.from_pylist(part, schema=schema)
+        for part in (shuffled[:half], shuffled[half:] + [{"term": "a", "postings": None}])
+    ]
+    layouts = [
+        _BucketFrames(frames),
+        _BucketFrames(shuffled),
+        _BucketFrames.from_arrow(pa.Table.from_batches(batches)),
+    ]
+    n_docs = len(doclen)
+    avgdl = sum(doclen.values()) / n_docs
+    idf = {t: bm25_idf(n_docs, len(postings[t])) for t in set(query) if t in postings}
+    ids = sorted(doclen)
+    scored = []
+    for bf in layouts:
+        assert set(bf.by_term) == set(postings)
+        assert (bf.n_frames, bf.n_postings) == (len(frames), sum(map(len, postings.values())))
+        for t, plist in postings.items():
+            d, tf = bf.by_term[t]
+            assert d.tolist() == [x for x, _, _ in plist]
+            assert tf.tolist() == [x for _, x, _ in plist]
+        [(d, s)] = score_bucket(
+            bf, ids, [doclen[x] for x in ids], [(sorted(idf), None)], idf, K1, B, avgdl
+        )
+        scored.append((d.tolist(), s.tobytes()))
+    assert scored[0] == scored[1] == scored[2]
+
+
 @given(
     st.lists(st.floats(0.0, 30.0), min_size=1, max_size=20),
     st.floats(0.01, 20.0),
@@ -138,9 +180,9 @@ def test_no_doc_scores_above_its_bucket_bound(coll, query):
         for frames, dl_ids, dl_lens in _buckets(doclen, postings, cuts)
     ]
     meta = [
-        (t, bucket, int(fl[0][1].max()))
+        (t, bucket, int(tfs.max()))
         for bucket, (bf, _, _) in enumerate(buckets)
-        for t, fl in bf.by_term.items()
+        for t, (_, tfs) in bf.by_term.items()
     ]
     bounds = bucket_upper_bounds(meta, idf, K1, B, avgdl)
     for bucket, (bf, dl_ids, dl_lens) in enumerate(buckets):
