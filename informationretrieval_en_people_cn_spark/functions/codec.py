@@ -205,26 +205,15 @@ def decode_many(data, offsets, want_positions: bool = False):
         return empty, empty, empty, counts
     vals, ends = _vb_values(np.frombuffer(data, dtype=np.uint8)[offs[0] : offs[-1]])
     fb, fc, fn, fp = _frames(vals, ends.searchsorted(offs - offs[0]))
-    if fc.size == 1:
-        # one frame (decode_frames' usual input): its parts are
-        # contiguous slices, which halves the fixed cost of a call
-        n, d0 = int(fn[0]), int(fc[0]) + 2
-        docs = vals[d0 : d0 + n].cumsum(dtype=np.uint64)
-        tfs = vals[d0 + n : d0 + 2 * n].copy()
-        counts[fb[0]] = n
-        if not want_positions or not fp[0]:
-            return docs, tfs, empty, counts
-        pg, ptf = vals[d0 + 2 * n : d0 + 2 * n + int(fp[0])], tfs
-    else:
-        didx = _seg_arange(fc + 2, fn)
-        docs = _seg_cumsum(vals[didx], fn)
-        tfs = vals[didx + fn.repeat(fn)]
-        np.add.at(counts, fb, fn)
-        pos = fp > 0
-        if not want_positions or not pos.any():
-            return docs, tfs, empty, counts
-        pg = vals[_seg_arange(fc[pos] + 2 + 2 * fn[pos], fp[pos])]
-        ptf = tfs[pos.repeat(fn)]
+    didx = _seg_arange(fc + 2, fn)
+    docs = _seg_cumsum(vals[didx], fn)
+    tfs = vals[didx + fn.repeat(fn)]
+    np.add.at(counts, fb, fn)
+    pos = fp > 0
+    if not want_positions or not pos.any():
+        return docs, tfs, empty, counts
+    pg = vals[_seg_arange(fc[pos] + 2 + 2 * fn[pos], fp[pos])]
+    ptf = tfs[pos.repeat(fn)]
     return docs, tfs, _seg_cumsum(pg, ptf.astype(np.int64)), counts
 
 
@@ -258,7 +247,11 @@ def pack_buffers(blobs) -> tuple[bytes, np.ndarray]:
 def arrow_binary_buffers(arr) -> tuple[object, np.ndarray]:
     """A pyarrow (large_)binary array's ``(data buffer, offsets)`` —
     :func:`decode_many`'s input without a copy of the data, honouring
-    the array's slice offset.  Null slots hold no bytes."""
+    the array's slice offset.  Null slots hold no bytes: Arrow lets a
+    null slot span undefined bytes, so an array with nulls is first
+    rewritten with empty slots in their place (a copy)."""
+    if arr.null_count:
+        arr = arr.fill_null(b"")
     _, off_buf, data = arr.buffers()
     wide = str(arr.type).startswith("large_")
     offsets = np.frombuffer(off_buf, dtype=np.int64 if wide else np.int32)

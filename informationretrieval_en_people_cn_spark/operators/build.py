@@ -56,7 +56,7 @@ from pyspark.sql import types as T
 
 from .. import checkpoint as ckpt
 from ..functions.analyze import analyze_batch
-from ..functions.codec import decode_many, encode_frame, pack_buffers
+from ..functions.codec import decode_frames, decode_many, encode_frame, pack_buffers
 from ..session import local_rows_df
 
 POSTING_ROW_SCHEMA = T.StructType(
@@ -279,17 +279,16 @@ def _merge_bucket(block_size: int):
         # key); stored so queries can align rows ACROSS terms on the
         # shared bucket grid (distributed block-max pruning)
         bucket = int(pdf["salt"].iloc[0])
-        pdf = pdf.sort_values("term", kind="stable")
-        terms = pdf["term"].to_numpy()
-        # one decode for the bucket: a term's rows are contiguous after
-        # the sort, and so are its postings and positions
-        d_all, t_all, p_all, n = decode_many(*pack_buffers(pdf["frame"]), True)
-        post = np.concatenate(([0], np.cumsum(n)))
-        pos_at = np.concatenate(([0], np.cumsum(t_all.astype(np.int64))))
-        first = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
-        for lo, hi in zip(first, np.r_[first[1:], terms.size]):
-            term, a, b = terms[lo], post[lo], post[hi]
-            d0, t0, p = d_all[a:b], t_all[a:b], p_all[pos_at[a] : pos_at[b]]
+        for term, g in pdf.groupby("term", sort=True):
+            all_d, all_t, all_p = [], [], []
+            for frame in g["frame"]:
+                d, t, p = decode_frames(bytes(frame))
+                all_d.append(d)
+                all_t.append(t)
+                all_p.append(p)
+            d0 = np.concatenate(all_d)
+            t0 = np.concatenate(all_t)
+            p = np.concatenate(all_p)
             order = np.argsort(d0, kind="stable")
             d, t = d0[order], t0[order]
             pos = _reorder_positions(p, t0, order) if p.size else None

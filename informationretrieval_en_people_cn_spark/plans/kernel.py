@@ -70,13 +70,11 @@ def _frame_cache_budget() -> int:
 
 
 def _cached_decode(tag, term, bucket, blob: bytes, want_positions: bool = False):
-    """decode_frames through the worker-local LRU; ``tag=None``
-    bypasses.  The key is CONTENT-ADDRESSED — it includes the blob's
-    length and (per-process SipHash) hash — so even a hypothetical
-    second frame under the same (term, bucket), or a snapshot mixup,
-    can never serve wrong arrays: different bytes → different key."""
-    if tag is None:
-        return decode_frames(blob, want_positions=want_positions)
+    """decode_frames through the worker-local LRU.  The key is
+    CONTENT-ADDRESSED — it includes the blob's length and (per-process
+    SipHash) hash — so even a hypothetical second frame under the same
+    (term, bucket), or a snapshot mixup, can never serve wrong arrays:
+    different bytes → different key."""
     key = (tag, term, int(bucket), want_positions, len(blob), hash(blob))
     hit = _FRAME_CACHE.pop(key, None)
     if hit is not None:

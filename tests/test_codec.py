@@ -151,3 +151,20 @@ def test_decode_many_empty_inputs():
     for data, offsets in ((b"", [0]), (b"", [0, 0, 0]), (b"xyz", [1, 1])):
         d, t, p, c = decode_many(data, offsets, True)
         assert d.size == t.size == p.size == 0 and c.tolist() == [0] * (len(offsets) - 1)
+
+
+def test_arrow_null_slot_with_bytes_decodes_to_nothing():
+    """Arrow lets a null binary slot span bytes; they are undefined, so
+    the null slot decodes to no postings even when they form a frame."""
+    a = encode_frame(np.array([3, 9]), np.array([1, 2]))
+    junk = encode_frame(np.array([5]), np.array([4]))
+    b = encode_frame(np.array([2**40]), np.array([300]))
+    offs = np.cumsum([0, len(a), len(junk), len(b)]).astype(np.int32)
+    valid = np.packbits([1, 0, 1], bitorder="little").tobytes()
+    arr = pa.Array.from_buffers(
+        pa.binary(), 3,
+        [pa.py_buffer(valid), pa.py_buffer(offs.tobytes()), pa.py_buffer(a + junk + b)],
+        null_count=1,
+    )
+    for view, bufs in ((arr, [a, b"", b]), (arr.slice(1), [b"", b])):
+        _check(decode_many(*arrow_binary_buffers(view)), _want(bufs, False))
