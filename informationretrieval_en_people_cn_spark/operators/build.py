@@ -110,44 +110,6 @@ STATS_SCHEMA = (
 )
 
 
-def tokenize_to_postings(
-    corpus: DataFrame, *, use_stemmer: bool = True, store_positions: bool = True
-) -> DataFrame:
-    """corpus(doc_id, content) -> one row per (doc, term): tf + positions.
-
-    T1-T4 in one Arrow-batched pass; used by the logical/uncompressed
-    view and the oracle-checked queries.  The index build itself uses
-    :func:`partition_runs` (which never materializes posting rows into
-    a shuffle).
-    """
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            terms_lists = analyze_batch(pdf["content"], use_stemmer=use_stemmer)
-            out_term, out_doc, out_tf, out_pos = [], [], [], []
-            for doc_id, terms in zip(pdf["doc_id"], terms_lists):
-                groups: dict[str, list[int]] = {}
-                for p, t in enumerate(terms):
-                    groups.setdefault(t, []).append(p)
-                for t, plist in groups.items():
-                    out_term.append(t)
-                    out_doc.append(doc_id)
-                    out_tf.append(len(plist))
-                    out_pos.append(plist if store_positions else [])
-            yield pd.DataFrame(
-                {
-                    "term": out_term,
-                    "doc_id": out_doc,
-                    "tf": out_tf,
-                    "positions": out_pos,
-                }
-            )
-
-    return corpus.select("doc_id", "content").mapInPandas(gen, POSTING_ROW_SCHEMA)
-
-
 def partition_runs(
     corpus: DataFrame,
     *,

@@ -17,20 +17,19 @@ records which placement served a query and why:
   same action), decoded in one numpy pass per record batch, and the
   kernel runs them as one virtual bucket — the
   reference's own execution model, behind a Σdf budget.
-* **bucket** (every other ranked query): only the query terms'
-  compressed frames move, grouped by doc-range bucket and broadcast
-  into the per-bucket doclen arrays; the kernel scores each bucket and
-  emits its exact local top-k, TakeOrderedAndProject merges them.
-  ``persist_doclens`` keeps the doclen arrays cluster-cached; boolean
-  shapes on such an engine run the same bucket kernel's set algebra.
+* **bucket** (every other query, ranked, boolean or paged): only the
+  query terms' compressed frames move, grouped by doc-range bucket with
+  the (bucket, doc_id) rows of each id leaf (a substring phrase's
+  verified docs, a reply_to's sources); the kernel evaluates the
+  OR-of-ANDs set algebra per bucket; a ranked query's frames meet the
+  per-bucket doclen arrays (a broadcast join for keyword queries), so
+  the kernel scores each bucket and emits its exact local top-k, which
+  TakeOrderedAndProject merges.  ``persist_doclens`` keeps the doclen
+  arrays cluster-cached.
 * **bucket+blockmax** (:meth:`SearchEngine.score_terms_blockmax`): the
   bucket plan over only the buckets whose metadata bound
   (:func:`.kernel.bucket_upper_bounds`) can reach the k-th score of the
   most promising bucket — the one block-max WAND.
-* **join**: boolean shapes without ``persist_doclens`` decode postings
-  in ``mapInPandas`` and combine leaves with semi/anti joins; a mixed
-  ranked query whose leaf the bucket plan cannot evaluate takes its
-  candidates from there (its scores still come from the kernel).
 """
 
 from __future__ import annotations
@@ -50,6 +49,7 @@ from . import querytree as qt
 from .kernel import (
     _BucketFrames,
     _EMPTY_IDS,
+    _bind_ids,
     _eval_bucket_tree,
     _intersect_terms,
     _pos_terms,
@@ -57,14 +57,6 @@ from .kernel import (
     bucket_upper_bounds,
     score_bucket,
     surviving_buckets,
-)
-
-_DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("tf", T.LongType(), False),
-    ]
 )
 
 # the Spark plans' substring-phrase verify (SearchEngine._verify)
@@ -101,38 +93,11 @@ def _contains(needle: str) -> Column:
     return F.contains(F.lower("content"), F.lit(needle))
 
 
-def decode_postings_df(index_rows: DataFrame) -> DataFrame:
-    """(term, postings:binary) -> (term, doc_id, tf), one decode per batch."""
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            d, t, _, n = decode_many(*pack_buffers(pdf["postings"]))
-            if d.size:
-                yield pd.DataFrame(
-                    {
-                        "term": np.repeat(pdf["term"].to_numpy(), n),
-                        "doc_id": d.astype(np.int64),
-                        "tf": t.astype(np.int64),
-                    }
-                )
-
-    return index_rows.select("term", "postings").mapInPandas(gen, _DECODED_SCHEMA)
-
-
 class _FastFallback(Exception):
     """Raised when a query exceeds the fast path's Σdf budget (or a
     phrase needle's content hits exceed it) — the
     caller falls back to the bucket plan; the message is the reason
     :attr:`SearchEngine.last_trace` records."""
-
-
-class _ServingFallback(Exception):
-    """Raised during bucket-plan compilation when a leaf cannot be
-    evaluated bucket-locally (reply_to, missing caches, or a substring
-    phrase whose verified set exceeds the collect budget) — the
-    dispatcher falls back to the join plan."""
 
 
 class SearchEngine:
@@ -160,7 +125,6 @@ class SearchEngine:
         blockmax_min_sumdf: int = 5_000_000,
         persist_doclens: bool = False,
         phrase_via_positions: bool = False,
-        serving_phrase_collect_max: int = 200_000,
         at_version: int | None = None,
         frame_cache: bool = False,
     ):
@@ -179,21 +143,16 @@ class SearchEngine:
         self.use_blockmax = use_blockmax
         self.blockmax_min_sumdf = blockmax_min_sumdf
         self.last_blockmax: dict | None = None
-        # {"placement": "fast" | "bucket" | "bucket+blockmax" | "join",
-        #  "reason": why} of the last search() call
+        # {"placement": "fast" | "bucket" | "bucket+blockmax",
+        #  "reason": why} of the last search() or search_page() call
         self.last_trace: dict | None = None
         # phrase semantics switch: False (default) = the reference's
         # literal-substring verification against the document store;
         # True = TRUE positional matching on the stored position lists
         # (requires store_positions=True at build).  Positional phrase
         # matching is doc-local, hence bucket-local — with it the
-        # serving plans answer phrase shapes with zero content access.
+        # bucket plans answer phrase shapes with zero content access.
         self.phrase_via_positions = phrase_via_positions
-        # substring-mode serving: a phrase leaf's verified ids are
-        # collected and joined bucket-locally; bounded by the rarest
-        # phrase term's df — over this budget the query falls back to
-        # the join plan
-        self.serving_phrase_collect_max = serving_phrase_collect_max
         # cache/strategy knobs, kept so reload() can rebuild the same
         # caches against a new snapshot
         self._corpus = corpus
@@ -398,50 +357,22 @@ class SearchEngine:
             return self.index.limit(0)
         return self.index.filter(_in_list("term", terms))
 
-    def keyword_docids(self, keyword: str) -> DataFrame:
-        """Q1 (reference SearchEngine.py:216-218)."""
-        terms = self._q(keyword)
-        return decode_postings_df(self._index_rows(terms)).select("doc_id").distinct()
-
     def prefix_docids(self, prefix: str) -> DataFrame:
-        """Q2 (reference SearchEngine.py:209-214): startswith pushes down
-        on the term-sorted index (range pruning)."""
-        p = prefix.lower()
-        rows = self.index.filter(F.col("term").startswith(p))
-        return decode_postings_df(rows).select("doc_id").distinct()
+        """Q2 (reference SearchEngine.py:209-214): the docs holding a
+        dictionary expansion of ``prefix``, by the bucket plan."""
+        t = self.expand_prefix(prefix)
+        return self._bucketed_eval([[(("terms", t), False)]], set(t))
 
     def phrase_docids(self, phrase: str, suffix: str = "") -> DataFrame:
-        """Q3/Q4 (reference SearchEngine.py:169-207): candidates from the
-        two rarest phrase terms (df-ordered — the reference's
-        selectivity planning, :189-194), verified by literal substring
-        on content (positions stored but unused — reference behavior)."""
-        terms = self._q(phrase)
-        needle = f"{phrase} {suffix}".strip().lower()
-        if not terms:
-            if not suffix:
-                return self.docs.limit(0).select("doc_id")
+        """Q3/Q4 (reference SearchEngine.py:169-207): the docs whose
+        lowercased content holds ``'{phrase} {suffix}'``
+        (:meth:`phrase_docids_bucketed`).  A phrase that analyzes to no
+        term keeps prefix semantics on ``suffix``."""
+        if self._q(phrase):
+            return self.phrase_docids_bucketed(phrase, suffix).select("doc_id")
+        if suffix:
             return self.prefix_docids(suffix)
-        rare = self._rare_terms(terms)
-        if not rare:
-            return self.docs.limit(0).select("doc_id")
-        # intersect the (≤2) rarest terms' postings in ONE scan+decode:
-        # (term, doc) rows are unique (bucket doc-ranges are disjoint),
-        # so docs holding every rare term are exactly those whose
-        # decoded row count equals |rare| — no per-term scan, no
-        # semi-join exchange (guide §2.4, same shape as the boolean
-        # one-pass plan)
-        if len(rare) == 1:
-            cand = decode_postings_df(self._index_rows(rare)).select("doc_id")
-        else:
-            cand = (
-                decode_postings_df(self._index_rows(rare))
-                .select("term", "doc_id")
-                .groupBy("doc_id")
-                .agg(F.count("*").alias("nt"))
-                .filter(F.col("nt") == len(rare))
-                .select("doc_id")
-            )
-        return self._verify(cand, min(rare.values()), needle)
+        return _local_df(self.spark, [], "doc_id long")
 
     def _content_store(self) -> DataFrame:
         if self.content_df is None:
@@ -562,182 +493,52 @@ class SearchEngine:
             .distinct()
         )
 
-    def _leaf_docids(self, leaf: qt.Leaf) -> DataFrame:
-        if leaf.kind == "keyword":
-            return self.keyword_docids(leaf.value)
-        if leaf.kind == "prefix":
-            return self.prefix_docids(leaf.value)
-        if leaf.kind == "phrase":
-            if self.phrase_via_positions and self._q(leaf.value):
-                return self.phrase_docids_positional(leaf.value)
-            return self.phrase_docids(leaf.value)
-        if leaf.kind == "phrase_prefix":
-            if self.phrase_via_positions and self._q(leaf.value):
-                return self.phrase_prefix_docids_positional(
-                    leaf.value, leaf.suffix
-                )
-            return self.phrase_docids(leaf.value, leaf.suffix)
-        if leaf.kind == "reply_to":
-            return self.reply_to_docids(leaf.value)
-        raise ValueError(leaf.kind)
-
-    # ---- boolean algebra (B1-B3, reference SearchEngine.py:254-270) ----
-    def boolean_docids(self, node: qt.OrNode) -> DataFrame:
-        # Split the OR's AND-groups: groups whose every leaf is a plain
-        # term set (keyword, or prefix expandable through the cached
-        # vocabulary) evaluate in ONE scan+decode+aggregation
-        # (_boolean_simple_docids); the rest (phrase / reply_to /
-        # uncached prefix) keep the per-leaf semi/anti-join plan.
-        simple_groups, other_groups = [], []
-        for and_node in node.children:
-            compiled = self._compile_simple_group(and_node)
-            if compiled is not None:
-                simple_groups.append(compiled)
-            else:
-                other_groups.append(and_node)
-        parts = []
-        if simple_groups:
-            parts.append(self._boolean_simple_docids(simple_groups))
-        or_result = None
-        for and_node in other_groups:
-            pos = [c for c in and_node.children if not c.negated]
-            neg = [c for c in and_node.children if c.negated]
-            acc = self._leaf_docids(pos[0])
-            for c in pos[1:]:
-                acc = acc.join(self._leaf_docids(c), "doc_id", "left_semi")
-            for c in neg:
-                acc = acc.join(self._leaf_docids(c), "doc_id", "left_anti")
-            or_result = acc if or_result is None else or_result.unionByName(acc)
-        if or_result is None:
-            # all groups simple: the aggregation output is already one
-            # row per doc_id — no extra distinct exchange
-            return parts[0]
-        if parts:
-            or_result = or_result.unionByName(parts[0])
-        return or_result.distinct()
-
-    def _compile_simple_group(self, and_node) -> list[tuple[list[str], bool]] | None:
-        """AND-group → ``[(terms, negated), ...]`` when every leaf is a
-        plain term set; None when any leaf needs its own relation
-        (phrase verify, reply_to) or prefix expansion is unavailable
-        (no cached vocabulary)."""
-        out = []
-        for c in and_node.children:
-            if c.kind == "keyword":
-                out.append((self._q(c.value), c.negated))
-            elif c.kind == "prefix" and self._term_arr is not None:
-                out.append((self.expand_prefix(c.value), c.negated))
-            else:
-                return None
-        return out
-
-    def _boolean_simple_docids(self, groups) -> DataFrame:
-        """One-pass OR-of-ANDs over term-set leaves (distributed plan).
-
-        The per-leaf plan paid one index scan + decode + distinct per
-        leaf and one semi/anti-join exchange per AND edge (~2 Spark
-        jobs per leaf under AQE).  Here ALL leaves' terms go through a
-        single pruned index scan + decode, a broadcast of the tiny
-        (term → group, leaf, negated) map attaches leaf membership, and
-        one groupBy(doc_id) evaluates the whole tree per doc with array
-        expressions over the collected (group, leaf, negated) set —
-        exactly one shuffle, already-distinct output (optimization
-        guide §2.4: remove shuffles outright; §2.3: shuffle a few bytes
-        of leaf metadata, not per-leaf row sets).
-
-        Semantics are identical to the join plan: a doc matches a
-        positive leaf iff it holds ≥1 of the leaf's terms, matches a
-        group iff it matches every positive leaf and no negated leaf,
-        and matches the query iff it matches ≥1 group."""
-        map_rows = []
-        n_pos: list[int] = []
-        for gid, leaves in enumerate(groups):
-            npos = 0
-            for lid, (terms, negated) in enumerate(leaves):
-                if not negated:
-                    npos += 1
-                for t in set(terms):
-                    map_rows.append((t, gid, lid, negated))
-            n_pos.append(npos)
-        all_terms = sorted({r[0] for r in map_rows})
-        if not all_terms:
-            # no leaf analyzed to a known term ⇒ nothing can match (a
-            # positive leaf with an empty term set also blocks its own
-            # group below: its count can never reach n_pos)
-            return _local_df(self.spark, [], "doc_id long")
-        if len(groups) == 1 and len(groups[0]) == 1 and not groups[0][0][1]:
-            # degenerate tree — one group, one positive term-set leaf:
-            # membership IS the decoded doc set; skip the leaf-map
-            # machinery (one collect_set aggregate heavier than a
-            # distinct, measured on the OR-with-phrase mixed shape)
-            return (
-                decode_postings_df(self._index_rows(all_terms))
-                .select("doc_id")
-                .distinct()
-            )
-        leaf_map = _local_df(
-            self.spark, map_rows, "term string, gid int, lid int, neg boolean"
-        )
-        decoded = decode_postings_df(self._index_rows(all_terms)).select(
-            "term", "doc_id"
-        )
-        hits = decoded.join(F.broadcast(leaf_map), "term").groupBy("doc_id").agg(
-            F.collect_set(F.struct("gid", "lid", "neg")).alias("m")
-        )
-        cond = F.lit(False)
-        for gid, npos in enumerate(n_pos):
-            g_pos = F.size(
-                F.filter("m", lambda x: (x["gid"] == gid) & ~x["neg"])
-            ) == F.lit(npos)
-            g_neg = ~F.exists("m", lambda x: (x["gid"] == gid) & x["neg"])
-            cond = cond | (g_pos & g_neg)
-        return hits.filter(cond).select("doc_id")
-
     def _serving_leaf(self, leaf: qt.Leaf, meta: list | None = None) -> tuple[tuple, set]:
         """Compile one query leaf for the bucket-local kernels.
 
         Returns ``(spec, frame_terms)`` where spec is one of
         ``("terms", [t...])`` (keyword / prefix / degenerate phrase),
         ``("pos_phrase", seq, sfx_terms|None)`` (positional phrase
-        matching, phrase_via_positions=True), or ``("ids", {bucket:
-        doc_ids})`` (substring-verified phrase, pre-computed via
-        :meth:`phrase_docids_bucketed` and joined bucket-locally).
-        Raises :class:`_ServingFallback` when the leaf cannot be served
-        bucket-locally (reply_to; phrase without content; verified set
-        over the collect budget); ``meta``: :meth:`_term_meta` rows held."""
+        matching, phrase_via_positions=True), or ``("rel", relation)``:
+        the (bucket, doc_id) rows of a substring-verified phrase
+        (:meth:`_phrase_bucketed`) or of a reply_to's sources, which the
+        bucket plans group by bucket beside the frames
+        (:meth:`_frames_by_bucket`); ``meta``: :meth:`_term_meta` rows
+        held."""
         if leaf.kind == "keyword":
             t = self._q(leaf.value)
             return ("terms", t), set(t)
         if leaf.kind == "prefix":
             t = self.expand_prefix(leaf.value)
             return ("terms", t), set(t)
-        if leaf.kind in _PHRASES:
-            sfx = leaf.suffix if leaf.kind == "phrase_prefix" else ""
-            seq = self._q(leaf.value)
-            if not seq:  # phrase analyzed away: prefix semantics
-                t = self.expand_prefix(sfx) if sfx else []
-                return ("terms", t), set(t)
-            if self.phrase_via_positions:
-                sfx_terms = self.expand_prefix(sfx) if sfx else None
-                if sfx and not sfx_terms:  # suffix matches no term
-                    return ("terms", []), set()
-                ft = set(seq) | set(sfx_terms or ())
-                return ("pos_phrase", seq, sfx_terms), ft
-            ids_by_bucket, rare = self._phrase_ids_by_bucket(leaf.value, sfx, meta)
-            # the rarest term's frames anchor the leaf's buckets: every
-            # verified doc holds that term, so its posting frames exist
-            # in exactly the buckets the kernel must visit — without
-            # them a bucket with only ids-leaf docs would never be
-            # evaluated and those docs silently dropped
-            return ("ids", ids_by_bucket), set(rare)
-        raise _ServingFallback(leaf.kind)
+        if leaf.kind == "reply_to":
+            rel = self.reply_to_docids(leaf.value)
+            return ("rel", rel.select(self._bexpr().alias("bucket"), "doc_id")), set()
+        if leaf.kind not in _PHRASES:
+            raise ValueError(leaf.kind)
+        sfx = leaf.suffix if leaf.kind == "phrase_prefix" else ""
+        seq = self._q(leaf.value)
+        if not seq:  # phrase analyzed away: prefix semantics
+            t = self.expand_prefix(sfx) if sfx else []
+            return ("terms", t), set(t)
+        if self.phrase_via_positions:
+            sfx_terms = self.expand_prefix(sfx) if sfx else None
+            if sfx and not sfx_terms:  # suffix matches no term
+                return ("terms", []), set()
+            ft = set(seq) | set(sfx_terms or ())
+            return ("pos_phrase", seq, sfx_terms), ft
+        rare = self._rare_terms(seq, meta)
+        if not rare:  # a phrase term outside the index: no match
+            return ("terms", []), set()
+        needle = f"{leaf.value} {sfx}".strip().lower()
+        return ("rel", self._phrase_bucketed(rare, needle)), set()
 
     def _driver_leaf(self, leaf: qt.Leaf) -> tuple[tuple, set]:
         """Compile one query leaf for the driver's virtual bucket
         (bucket 0): reply_to resolves to an id set and a substring
         phrase to a ``("substring", needle, rare terms)`` spec verified
         on the driver (:meth:`_phrase_ids_fast`); every other leaf
-        compiles as for serving."""
+        compiles as for the bucket plans."""
         if leaf.kind == "reply_to":
             rows = self.reply_to_docids(leaf.value).collect()
             ids = np.array(sorted(r.doc_id for r in rows), dtype=np.int64)
@@ -751,60 +552,91 @@ class SearchEngine:
             return ("substring", needle, rare), set(rare)
         return self._serving_leaf(leaf)
 
-    def _compile_tree(self, node, compile_leaf) -> tuple[list, set[str]]:
+    def _compile_tree(self, node, compile_leaf) -> tuple[list, set[str], list]:
         """Lower a parse tree to the kernel's OR-of-ANDs leaf specs +
-        the index terms whose frames the kernel needs.  A ranked
-        query's leaves become one single-leaf group each (its
-        candidates are the union of the leaves)."""
+        the index terms whose frames the kernel needs + the id
+        relations: each ``("rel", relation)`` leaf becomes ``("slot",
+        j)`` over ``relations[j]``, bound per bucket by
+        :func:`_bind_ids`.  A ranked query's leaves become one
+        single-leaf group each (its candidates are the union of the
+        leaves)."""
         if isinstance(node, qt.OrNode):
             groups = [and_node.children for and_node in node.children]
         else:
             groups = [[c] for c in node.children]
         tree: list[list[tuple[tuple, bool]]] = []
         frame_terms: set[str] = set()
+        rels: list[DataFrame] = []
         for children in groups:
             leaves = []
             for c in children:
                 spec, ft = compile_leaf(c)
+                if spec[0] == "rel":
+                    rels.append(spec[1])
+                    spec = ("slot", len(rels) - 1)
                 leaves.append((spec, c.negated))
                 frame_terms.update(ft)
             # positives first (the parser guarantees at least one)
             leaves.sort(key=lambda x: x[1])
             tree.append(leaves)
-        return tree, frame_terms
+        return tree, frame_terms, rels
 
     def _cache_tag(self):
         return (self.index_dir, self.version) if self.frame_cache else None
 
     def _frames_by_bucket(
-        self, terms, min_bucket: int | None = None, buckets: list[int] | None = None
+        self,
+        terms,
+        min_bucket: int | None = None,
+        buckets: list[int] | None = None,
+        id_rels: list[DataFrame] = (),
     ) -> DataFrame:
-        """(bucket, frames): the terms' compressed frames grouped by
-        doc-range bucket — the only rows a bucket-local plan shuffles."""
-        rows = self._index_rows(sorted(terms))
+        """(bucket, frames[, id_slot, id_doc]): the terms' compressed
+        frames grouped by doc-range bucket — the only index rows a
+        bucket-local plan shuffles.  With ``id_rels`` the (bucket,
+        doc_id) rows of each id relation j join the same groups as
+        ``(j, doc_id)`` pairs, sorted and distinct, so a bucket holding
+        ids is visited even when no frame lands there."""
+        frame = F.struct("term", "postings")
+        rows = self._index_rows(sorted(terms)).select("bucket", "term", "postings")
+        aggs = []
+        if id_rels:
+            rows = rows.select("*", F.lit(None).cast("int").alias("slot"),
+                               F.lit(None).cast("long").alias("doc_id"))
+            for j, rel in enumerate(id_rels):
+                rows = rows.unionByName(rel.select(
+                    F.col("bucket").cast("int"), F.lit(None).cast("string").alias("term"),
+                    F.lit(None).cast("binary").alias("postings"),
+                    F.lit(j).alias("slot"), F.col("doc_id").cast("long"),
+                ))
+            frame = F.when(F.col("term").isNotNull(), frame)
+            ids = F.when(F.col("slot").isNotNull(), F.struct("slot", "doc_id"))
+            aggs.append(F.array_sort(F.collect_set(ids)).alias("z"))
         if min_bucket:
             rows = rows.filter(F.col("bucket") >= min_bucket)
         if buckets is not None:
             rows = rows.filter(_in_list("bucket", buckets))
-        return (
-            rows.groupBy("bucket")
-            .agg(F.collect_list(F.struct("term", "postings")).alias("frames"))
-        )
+        out = rows.groupBy("bucket").agg(F.collect_list(frame).alias("frames"), *aggs)
+        if id_rels:
+            out = out.select("bucket", "frames", F.col("z.slot").alias("id_slot"),
+                             F.col("z.doc_id").alias("id_doc"))
+        return out
 
     def _bucketed_eval(
         self,
         tree: list,
         frame_terms: set[str],
+        id_rels: list[DataFrame] = (),
         after: int | None = None,
         cap: int | None = None,
         min_bucket: int | None = None,
     ) -> DataFrame:
         """Run the compiled OR-of-ANDs tree bucket-locally: shuffle only
-        the leaves' compressed frames, evaluate per-bucket numpy set
-        algebra (see _eval_bucket_tree), return the doc_id relation.
-        Buckets are disjoint doc ranges, so no global distinct is
-        needed.  Needs no serving
-        cache: only the index's ``bucket`` column.
+        the leaves' compressed frames and id rows, evaluate per-bucket
+        numpy set algebra (see _eval_bucket_tree), return the doc_id
+        relation.  Buckets are disjoint doc ranges, so no global
+        distinct is needed.  Needs no serving cache: only the index's
+        ``bucket`` column.
 
         Keyset pagination hooks: ``after`` drops ids <= after inside the
         kernel, ``cap`` emits at most cap ids per bucket (exact for a
@@ -816,20 +648,23 @@ class SearchEngine:
         import pandas as pd
 
         schema = "doc_id long"
-        if not frame_terms:
+        if not frame_terms and not id_rels:
             return _local_df(self.spark, [], schema)
-        joined = self._frames_by_bucket(frame_terms, min_bucket)
+        joined = self._frames_by_bucket(frame_terms, min_bucket, id_rels=id_rels)
         pos_terms = _pos_terms(tree)
         cache_tag = self._cache_tag()
 
         def gen(batches):
             for pdf in batches:
                 d_out = []
-                for bucket, frames in zip(pdf["bucket"], pdf["frames"]):
-                    bf = _BucketFrames(
-                        frames, pos_terms, cache_tag=cache_tag, bucket=int(bucket)
-                    )
-                    res = _eval_bucket_tree(bf, tree, int(bucket))
+                none = [None] * len(pdf)
+                for bucket, frames, slot, doc in zip(
+                    pdf["bucket"], pdf["frames"], pdf.get("id_slot", none),
+                    pdf.get("id_doc", none),
+                ):
+                    bucket = int(bucket)
+                    bf = _BucketFrames(frames, pos_terms, cache_tag=cache_tag, bucket=bucket)
+                    res = _eval_bucket_tree(bf, _bind_ids(tree, bucket, slot, doc), bucket)
                     if after is not None and res.size:
                         res = res[np.searchsorted(res, after, side="right"):]
                     if cap is not None:
@@ -842,21 +677,18 @@ class SearchEngine:
         return joined.mapInPandas(gen, schema)
 
     def boolean_docids_bucketed(self, node: qt.OrNode) -> DataFrame:
-        """Bucket-local boolean algebra — the serving-mode twin of
+        """Bucket-local boolean algebra — the twin of
         :meth:`score_terms`.  Doc membership is bucket-local
         (all of a doc's postings live in its one doc-range bucket), so
         per-bucket numpy set ops compose to the exact global result:
         AND = intersect, NOT = setdiff, OR = union, keyword = union of
         its analyzed terms' postings, prefix = union of its dictionary
         expansion, phrase = positional in-bucket match
-        (phrase_via_positions) or pre-verified substring ids joined by
-        bucket.  Only the leaves' compressed frames shuffle; the
-        decoded-id shuffles + semi-joins of :meth:`boolean_docids`
-        disappear.  Raises _ServingFallback for shapes it cannot serve
-        (the dispatcher falls back to the join plan)."""
+        (phrase_via_positions) or substring-verified ids grouped by
+        bucket, reply_to = its sources grouped by bucket.  Only the
+        leaves' compressed frames and id rows shuffle."""
         # single positive substring-phrase leaf: the standalone bucketed
-        # phrase plan answers in one candidate job + one verify scan —
-        # no pre-collect, no budget
+        # phrase plan answers in one candidate job + one verify scan
         if (
             not self.phrase_via_positions
             and len(node.children) == 1
@@ -866,8 +698,7 @@ class SearchEngine:
             if c.kind in _PHRASES and self._q(c.value):
                 sfx = c.suffix if c.kind == "phrase_prefix" else ""
                 return self.phrase_docids_bucketed(c.value, sfx).select("doc_id")
-        tree, frame_terms = self._compile_tree(node, self._serving_leaf)
-        return self._bucketed_eval(tree, frame_terms)
+        return self._bucketed_eval(*self._compile_tree(node, self._serving_leaf))
 
     def _bucket_of(self, doc_id: int) -> int:
         """Scalar mirror of the build's ``_range_bucket`` double math:
@@ -877,17 +708,13 @@ class SearchEngine:
         return max(0, min(gn - 1, math.floor(float(gn) * frac)))
 
     def phrase_docids_bucketed(self, phrase: str, suffix: str = "") -> DataFrame:
-        """Serving twin of :meth:`phrase_docids` (same substring
-        semantics, bit-identical results — tested): candidate
-        generation is bucket-local (compressed frames only), then the
-        same df-routed :meth:`_verify`.  Returns (bucket, doc_id) so
-        serving callers can compose bucket-locally.  Degenerate no-term
-        phrases raise _ServingFallback (the dispatcher's prefix route
-        handles them)."""
-        terms = self._q(phrase)
-        if not terms:
-            raise _ServingFallback("degenerate phrase (prefix semantics)")
-        rare = self._rare_terms(terms)
+        """(bucket, doc_id) of the docs whose lowercased content holds
+        ``'{phrase} {suffix}'`` (the reference's substring semantics):
+        candidate generation is bucket-local (compressed frames only),
+        then the df-routed :meth:`_verify`.  A phrase that analyzes to
+        no term, or holds a term outside the index, matches nothing
+        here."""
+        rare = self._rare_terms(self._q(phrase))
         if not rare:
             return _local_df(self.spark, [], "bucket int, doc_id long")
         return self._phrase_bucketed(rare, f"{phrase} {suffix}".strip().lower())
@@ -910,29 +737,6 @@ class SearchEngine:
         if len(dfs) < len(set(terms)):
             return {}
         return dict(sorted(dfs.items(), key=lambda x: (x[1], x[0]))[:2])
-
-    def _phrase_ids_by_bucket(
-        self, phrase: str, suffix: str = "", meta: list | None = None
-    ) -> tuple[dict[int, np.ndarray], list[str]]:
-        """Substring-phrase leaf for the serving kernels: verified doc
-        ids grouped by bucket (collected under the budget — bounded by
-        the rarest term's df) + the rare terms whose frames anchor the
-        leaf's buckets.  Raises _ServingFallback over budget."""
-        if self.content_df is None:
-            raise _ServingFallback("phrase serving needs content")
-        rare = self._rare_terms(self._q(phrase), meta)
-        if not rare:
-            return {}, []
-        if min(rare.values()) > self.serving_phrase_collect_max:
-            raise _ServingFallback("phrase verified set over collect budget")
-        acc: dict[int, list[int]] = {}
-        needle = f"{phrase} {suffix}".strip().lower()
-        for r in self._phrase_bucketed(rare, needle).collect():
-            acc.setdefault(int(r.bucket), []).append(int(r.doc_id))
-        return (
-            {b: np.array(sorted(v), dtype=np.int64) for b, v in acc.items()},
-            rare,
-        )
 
     # ---- ranked retrieval (Q7) ------------------------------------------
     def expand_prefix(self, prefix: str) -> list[str]:
@@ -1228,6 +1032,7 @@ class SearchEngine:
         where=None,
         boost=None,
         frame_terms: set[str] = frozenset(),
+        id_rels: list[DataFrame] = (),
         buckets: list[int] | None = None,
     ) -> DataFrame:
         """Bucket-local DAAT — the one BM25 plan, for one query or a
@@ -1244,8 +1049,11 @@ class SearchEngine:
         and runs :func:`.kernel.score_bucket` for every query ``(qid,
         sorted scoring terms, tree | None)``, emitting each query's
         exact local top-k (O(k × buckets) rows cross Arrow, not
-        O(touched docs)).  ``buckets`` restricts the plan to those grid
-        buckets (block-max probe and survivors).
+        O(touched docs)).  ``id_rels`` are the trees' id relations
+        (:meth:`_frames_by_bucket`); with them the frames LEFT-join the
+        doclen arrays, so an id outside every doc bucket still scores
+        0.0.  ``buckets`` restricts the plan to those grid buckets
+        (block-max probe and survivors).
 
         ``where`` scopes results to a metadata predicate: allowed
         doc_ids arrive as per-bucket sorted arrays (pushdown-filtered
@@ -1256,17 +1064,20 @@ class SearchEngine:
 
         schema = "qid int, doc_id long, score double"
         all_terms = set(idf) | set(frame_terms)
-        if not all_terms:
+        if not all_terms and not id_rels:
             return _local_df(self.spark, [], schema)
         doclens = self._bucket_doclens
         if buckets is not None:
             doclens = doclens.filter(_in_list("bucket", buckets))
-        # frames are query-sized by construction: broadcasting them
-        # keeps the doclen side where it is (no SortMergeJoin shuffle)
-        joined = F.broadcast(self._frames_by_bucket(all_terms, buckets=buckets)).join(
-            doclens, "bucket"
-        )
+        frames = self._frames_by_bucket(all_terms, buckets=buckets, id_rels=id_rels)
         cols = ["bucket", "frames", "dl_ids", "dl_lens"]
+        if id_rels:
+            joined = frames.join(doclens, "bucket", "left")
+            cols += ["id_slot", "id_doc"]
+        else:
+            # frames are query-sized by construction: broadcasting them
+            # keeps the doclen side where it is (no SortMergeJoin shuffle)
+            joined = F.broadcast(frames).join(doclens, "bucket")
         if where is not None:
             allowed = (
                 self.docs.filter(self._where_cond(where))
@@ -1306,14 +1117,14 @@ class SearchEngine:
             for pdf in batches:
                 out_q, out_d, out_s = [], [], []
                 none = [None] * len(pdf)
-                for bucket, frames, dl_ids, dl_lens, allow, bids, bfs in zip(
+                for bucket, frames, dl_ids, dl_lens, allow, bids, bfs, slot, doc in zip(
                     pdf["bucket"], pdf["frames"], pdf["dl_ids"], pdf["dl_lens"],
                     pdf.get("allow_ids", none), pdf.get("boost_ids", none),
-                    pdf.get("boost_f", none),
+                    pdf.get("boost_f", none), pdf.get("id_slot", none),
+                    pdf.get("id_doc", none),
                 ):
-                    bf = _BucketFrames(
-                        frames, pos_terms, cache_tag=cache_tag, bucket=int(bucket)
-                    )
+                    bucket = int(bucket)
+                    bf = _BucketFrames(frames, pos_terms, cache_tag=cache_tag, bucket=bucket)
                     bst = None
                     if bids is not None and len(bids):
                         bst = (
@@ -1321,8 +1132,10 @@ class SearchEngine:
                             np.asarray(bfs, dtype=np.float64),
                         )
                     res = score_bucket(
-                        bf, dl_ids, dl_lens, kq, idf, k1, b, avgdl,
-                        k=k, allow=allow, boost=bst, bucket=int(bucket),
+                        bf, _EMPTY_IDS if dl_ids is None else dl_ids,
+                        _EMPTY_IDS if dl_lens is None else dl_lens,
+                        [(terms, _bind_ids(tree, bucket, slot, doc)) for terms, tree in kq],
+                        idf, k1, b, avgdl, k=k, allow=allow, boost=bst, bucket=bucket,
                     )
                     for qid, (bd, bs) in zip(qids, res):
                         if bd.size:
@@ -1361,24 +1174,25 @@ class SearchEngine:
         (predicate, factor)) multiplies each doc's FINAL summed score by
         the product of its matching predicates' factors (sum first, one
         multiply after).  ``node``, a mixed-leaf ranked query (phrase /
-        prefix leaves beside keywords), makes the candidates the union
-        of its leaves — evaluated in the same bucket task, scored 0.0
-        where none of ``terms`` occurs; it raises _ServingFallback for a
-        leaf the bucket kernel cannot evaluate.  ``idf`` / ``buckets``
+        prefix / reply_to leaves beside keywords), makes the candidates
+        the union of its leaves — evaluated in the same bucket task,
+        scored 0.0 where none of ``terms`` occurs.  ``idf`` / ``buckets``
         let the block-max plan reuse its metadata and restrict the
         buckets scored."""
-        tree, frame_terms, meta = None, set(), None
+        tree, frame_terms, rels, meta = None, set(), [], None
         if node is not None:
             if idf is None and self.term_stats is None:
                 # one metadata collect serves the phrase leaves and the idf
                 meta = self._term_meta(set(terms).union(
                     *(self._q(c.value) for c in node.children if c.kind in _PHRASES)))
-            tree, frame_terms = self._compile_tree(node, lambda c: self._serving_leaf(c, meta))
+            tree, frame_terms, rels = self._compile_tree(
+                node, lambda c: self._serving_leaf(c, meta)
+            )
         if idf is None:
             idf = self._scoring_idf(terms, meta)
         scored = self._score_bucketed(
             [(0, sorted(idf), tree)], idf, k, where=where, boost=boost,
-            frame_terms=frame_terms, buckets=buckets,
+            frame_terms=frame_terms, id_rels=rels, buckets=buckets,
         )
         return _top(scored, k)
 
@@ -1460,24 +1274,7 @@ class SearchEngine:
                 )
                 return self.score_terms_blockmax(terms, k)
             return self.score_terms(terms, k, where=where, boost=boost)
-        try:
-            return self.score_terms(terms, k, where, boost, node=node)
-        except _ServingFallback as e:
-            self._trace("join", f"bucket plan cannot evaluate a leaf: {e}")
-        scored = self.score_terms(terms, where=where, boost=boost)
-        # candidates = union of leaf results (reference SearchEngine.py:274-276);
-        # differs from plain disjunctive BM25 when leaves are phrases.
-        # Left join keeps candidates none of whose terms survived (score
-        # 0.0) — the reference's smoothed zero-tf branch analogue.
-        cand = None
-        for leaf in node.children:
-            d = self._leaf_docids(leaf)
-            cand = d if cand is None else cand.unionByName(d)
-        cand = cand.distinct()
-        if where is not None:
-            # score-0 candidates must respect the scope too
-            cand = cand.join(self._allowed_docs(where), "doc_id", "left_semi")
-        return _top(cand.join(scored, "doc_id", "left").fillna(0.0, subset=["score"]), k)
+        return self.score_terms(terms, k, where, boost, node=node)
 
     # ---- driver-side fast path (low-latency small queries) ---------------
     # The bucket plan costs a few Spark stages at any size; for queries
@@ -1563,7 +1360,7 @@ class SearchEngine:
         terms = self._query_terms(query) if ranked else []
         tree, frame_terms = None, set()
         if not ranked or any(leaf.kind != "keyword" for leaf in node.children):
-            tree, frame_terms = self._compile_tree(node, self._driver_leaf)
+            tree, frame_terms, _ = self._compile_tree(node, self._driver_leaf)
         subs = [sp for leaves in tree or () for sp, _ in leaves if sp[0] == "substring"]
         cached = self._content_cache is not None
         # a leaf with no rare terms matches nothing: no content scan
@@ -1649,16 +1446,7 @@ class SearchEngine:
         # is persisted-intermediate reuse, not planning reuse.  Every
         # search() therefore builds a fresh DataFrame.
         if isinstance(node, qt.OrNode):
-            res = None
-            if not self._persist_doclens:
-                self._trace("join", "boolean shape without persist_doclens")
-            else:
-                try:
-                    res = self.boolean_docids_bucketed(node)
-                except _ServingFallback as e:  # reply_to / over-budget phrase
-                    self._trace("join", f"bucket plan cannot evaluate a leaf: {e}")
-            if res is None:
-                res = self.boolean_docids(node)
+            res = self.boolean_docids_bucketed(node)
             if where is not None:
                 res = res.join(self._allowed_docs(where), "doc_id", "left_semi")
             return res.orderBy("doc_id")
@@ -1678,7 +1466,7 @@ class SearchEngine:
 
         Web-scale serving never ships O(matches) rows per request — a
         Zipf-head boolean query matches most of the corpus.  The page
-        key drives three bounds in serving mode: the kernel drops
+        key drives three bounds in the bucket plan: the kernel drops
         ids <= key before they leave numpy, each bucket emits at most
         page_size ids (exact, because per-bucket results are ascending
         over disjoint contiguous doc ranges), and every bucket strictly
@@ -1693,37 +1481,19 @@ class SearchEngine:
             if any(c.negated for c in node.children):
                 raise qt.QueryError("cannot paginate a negated ranked query")
             node = qt.OrNode([qt.AndNode([c]) for c in node.children])
+        self._trace("bucket", "search_page: the bucket kernel pages the match set")
+        page = self._bucketed_eval(
+            *self._compile_tree(node, self._serving_leaf),
+            after=after_doc_id,
+            # a metadata scope filters after the kernel, so its pages
+            # run uncapped: a capped-away id might be in-page once the
+            # scope drops others
+            cap=page_size if where is None else None,
+            min_bucket=None if after_doc_id is None else self._bucket_of(after_doc_id),
+        )
         if where is not None:
-            # metadata scope + pagination: the serving kernel's
-            # per-bucket page_size cap runs BEFORE any post-filter could
-            # — capped-away ids might have been in-page after filtering,
-            # so scoped pages take the distributed plan (semi-join on a
-            # pushdown-filtered docs scan), keeping exactness
-            rel = self.boolean_docids(node).join(
-                self._allowed_docs(where), "doc_id", "left_semi"
-            )
-            if after_doc_id is not None:
-                rel = rel.filter(F.col("doc_id") > after_doc_id)
-            return rel.orderBy("doc_id").limit(page_size)
-        if self._persist_doclens:
-            try:
-                tree, frame_terms = self._compile_tree(node, self._serving_leaf)
-                page = self._bucketed_eval(
-                    tree,
-                    frame_terms,
-                    after=after_doc_id,
-                    cap=page_size,
-                    min_bucket=(
-                        None if after_doc_id is None else self._bucket_of(after_doc_id)
-                    ),
-                )
-                return page.orderBy("doc_id").limit(page_size)
-            except _ServingFallback:
-                pass  # reply_to / over-budget phrase: join plan
-        rel = self.boolean_docids(node)
-        if after_doc_id is not None:
-            rel = rel.filter(F.col("doc_id") > after_doc_id)
-        return rel.orderBy("doc_id").limit(page_size)
+            page = page.join(self._allowed_docs(where), "doc_id", "left_semi")
+        return page.orderBy("doc_id").limit(page_size)
 
     def proximity_rerank(
         self, query: str, k: int = 10, pool: int = 100, weight: float = 0.5

@@ -110,8 +110,8 @@ class _BucketFrames:
     bucket: a term then has one frame per doc-range bucket, each
     ascending, disjoint from the others; :meth:`from_arrow` takes them
     as an Arrow table).  Every frame decodes in one
-    :func:`.codec.decode_many` call, and one lexsort by (term, doc)
-    merges a term's frames into its entry.
+    :func:`.codec.decode_many` call, and the frames' runs, gathered in
+    (term, first doc) order, make each term's entry.
 
     ``pos_terms`` selects which terms' position payloads are decoded:
     on a positional index every frame CARRIES positions (≈ Σtf values),
@@ -183,11 +183,19 @@ class _BucketFrames:
         if not self.n_postings:
             return
         self.terms, inv = np.unique(np.concatenate(labels), return_inverse=True)
-        code = np.repeat(inv, np.concatenate(counts))
+        n = np.concatenate(counts).astype(np.int64)
+        code = np.repeat(inv, n)
         docs = np.concatenate([dec[0] for _, dec in chunks])
         tfs = np.concatenate([dec[1] for _, dec in chunks])
-        # a term's frames hold disjoint docs: one sort makes its entry
-        order = np.lexsort((docs, code))
+        # a term's frames are ascending runs over disjoint doc ranges, so
+        # sorting the frames by (term, first doc) and gathering their
+        # runs sorts the postings by (term, doc)
+        start = np.cumsum(n) - n
+        live = n > 0
+        start, n = start[live], n[live]
+        by = np.lexsort((docs[start], inv[live]))
+        start, n = start[by], n[by]
+        order = np.repeat(start - (np.cumsum(n) - n), n) + np.arange(n.sum())
         self.code = code[order]
         self.docs = docs[order].astype(np.int64)
         self.tfs = tfs[order].astype(np.int64)
@@ -333,6 +341,24 @@ def _leaf_bucket_ids(bf: _BucketFrames, spec: tuple, bucket: int) -> np.ndarray:
     if kind == "pos_phrase":
         return _pos_phrase_bucket_ids(bf, spec[1], spec[2])
     raise ValueError(kind)
+
+
+def _bind_ids(tree: list | None, bucket: int, slot, doc) -> list | None:
+    """``tree`` with each ``("slot", j)`` leaf bound to this bucket's
+    ids of id relation j, as ``("ids", {bucket: ids})``: ``slot`` /
+    ``doc`` are the bucket's ``(j, doc_id)`` pairs, sorted (None: the
+    plan has no id relation)."""
+    if tree is None or slot is None:
+        return tree
+    slot = np.asarray(slot, dtype=np.int64)
+    doc = np.asarray(doc, dtype=np.int64)
+    return [
+        [
+            (("ids", {bucket: doc[slot == spec[1]]}) if spec[0] == "slot" else spec, neg)
+            for spec, neg in leaves
+        ]
+        for leaves in tree
+    ]
 
 
 def _eval_bucket_tree(bf: _BucketFrames, tree: list, bucket: int) -> np.ndarray:

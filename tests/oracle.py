@@ -57,6 +57,87 @@ def topk(scores: dict[int, float], k: int):
     return sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
 
 
+def boolean_match(query: str, postings, content: dict[int, str], edges=()) -> list[int]:
+    """Sorted doc_ids matching ``query`` — an OR of AND groups, or a
+    ranked query's match set (the OR of its leaves) — over the oracle
+    index, one leaf at a time:
+
+    * keyword: docs holding any of its analyzed terms;
+    * prefix ``tok*``: docs holding a vocabulary term starting with it;
+    * phrase ``'a b'`` / phrase-prefix ``'a b'*``: docs holding the
+      (<= 2) lowest-df phrase terms whose lowercased ``content`` holds
+      the literal ``'a b'`` (``'a b*'`` -> ``'a b'`` plus the suffix);
+      a phrase term outside the index matches nothing, and a phrase
+      that analyzes to no term keeps prefix semantics on its suffix;
+    * ``ReplyTo:n``: the sources of the ``(src, dst)`` ``edges`` with
+      ``dst == n``;
+    * ``NOT`` removes a leaf's docs from its group.
+
+    Only the parse tree comes from the engine's query parser."""
+    from informationretrieval_en_people_cn_spark.plans import querytree as qt
+
+    def holding(terms):
+        return {d for t in terms for d, _, _ in postings.get(t, [])}
+
+    def prefix(p):
+        return holding([t for t in postings if t.startswith(p.lower())])
+
+    def leaf_docs(leaf):
+        if leaf.kind == "keyword":
+            return holding(analyze_text(leaf.value))
+        if leaf.kind == "prefix":
+            return prefix(leaf.value)
+        if leaf.kind == "reply_to":
+            return {src for src, dst in edges if dst == int(leaf.value)}
+        seq = set(analyze_text(leaf.value))
+        if not seq:
+            return prefix(leaf.suffix) if leaf.suffix else set()
+        if any(t not in postings for t in seq):
+            return set()
+        rare = sorted(seq, key=lambda t: (len(postings[t]), t))[:2]
+        cand = set.intersection(*({d for d, _, _ in postings[t]} for t in rare))
+        needle = f"{leaf.value} {leaf.suffix}".strip().lower()
+        return {d for d in cand if needle in content[d]}
+
+    node = qt.parse(query)
+    if isinstance(node, qt.RankedNode):
+        node = qt.OrNode([qt.AndNode([c]) for c in node.children])
+    out: set[int] = set()
+    for group in node.children:
+        pos = [leaf_docs(c) for c in group.children if not c.negated]
+        got = set.intersection(*pos)
+        for c in group.children:
+            if c.negated:
+                got -= leaf_docs(c)
+        out |= got
+    return sorted(out)
+
+
+def search_rows(query: str, postings, doclen, stats, content, edges=(), k: int = 10):
+    """The engine's ``search(query, k)`` rows from the oracle: a boolean
+    query's ``(doc_id, None)`` match set in doc_id order; a ranked
+    query's BM25 top-k over its match set (:func:`boolean_match`), 0.0
+    for a candidate no query term occurs in.  The scoring terms are the
+    query's tokens with quotes dropped, analyzed, ``tok*`` expanded over
+    the vocabulary and ``ReplyTo:`` skipped."""
+    from informationretrieval_en_people_cn_spark.plans import querytree as qt
+
+    match = boolean_match(query, postings, content, edges)
+    if isinstance(qt.parse(query), qt.OrNode):
+        return [(d, None) for d in match]
+    terms = []
+    for tok in query.replace("'", " ").split():
+        if tok.lower().startswith("replyto:"):
+            continue
+        if tok.endswith("*"):
+            p = tok.rstrip("*").lower()
+            terms += [t for t in postings if t.startswith(p)]
+        else:
+            terms += analyze_text(tok)
+    scores = bm25_scores(postings, doclen, stats, terms)
+    return topk({d: scores.get(d, 0.0) for d in match}, k)
+
+
 def _vb_decode_reduceat(b: np.ndarray) -> np.ndarray:
     """Varbyte stream -> uint64 values: every byte's 7-bit group
     shifted into place, summed per value with ``np.add.reduceat``."""

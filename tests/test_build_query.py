@@ -17,7 +17,7 @@ from informationretrieval_en_people_cn_spark.plans.kernel import (
     surviving_buckets,
 )
 
-from .oracle import bm25_scores, build_oracle_index, topk
+from .oracle import bm25_scores, boolean_match, build_oracle_index, topk
 
 
 @pytest.fixture(scope="module")
@@ -147,7 +147,7 @@ def test_prefix_query(engine, corpus_pdf):
         for r in corpus_pdf.itertuples()
         if any(t.startswith("compr") for t in analyze_text(r.content))
     }
-    got = {r.doc_id for r in engine.prefix_docids("compr").collect()}
+    got = {r.doc_id for r in engine.search_page("compr*", page_size=10**6).collect()}
     assert got == gold
 
 
@@ -399,12 +399,14 @@ def test_serving_mode_scores_identical(spark, index_dir):
     serving._doclens_cluster.unpersist()
 
 
-def test_boolean_bucketed_identical(spark, index_dir):
-    """Serving-mode bucket-local boolean algebra must equal the
-    join-based plan on every shape: AND/OR/NOT, prefix expansion,
-    unknown terms, empty leaves."""
+def test_boolean_bucketed_identical(spark, index_dir, oracle, corpus_pdf):
+    """The bucket kernel's boolean algebra, with and without cluster-
+    cached doclens, must equal the pure-Python boolean oracle on every
+    shape: AND/OR/NOT, prefix expansion, unknown terms, empty leaves."""
     from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
 
+    postings = oracle[0]
+    content = {int(r.doc_id): r.content.lower() for r in corpus_pdf.itertuples()}
     base = SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False)
     serv = SearchEngine(
         spark, index_dir, cache_term_stats=True, fast_path=False,
@@ -419,8 +421,9 @@ def test_boolean_bucketed_identical(spark, index_dir):
         "merge AND zzznotaterm",
         "zzz*",
     ):
-        want = [r.doc_id for r in base.search(q, 10).collect()]
-        got = [r.doc_id for r in serv.search(q, 10).collect()]
-        assert got == want, q
+        want = boolean_match(q, postings, content)
+        for eng in (base, serv):
+            assert [r.doc_id for r in eng.search(q, 10).collect()] == want, q
+            assert eng.last_trace["placement"] == "bucket", q
     serv._doclens_cluster.unpersist()
     serv._bucket_doclens.unpersist()

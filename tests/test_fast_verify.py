@@ -7,11 +7,10 @@ import pytest
 
 from informationretrieval_en_people_cn_spark.functions.analyze import analyze_text
 from informationretrieval_en_people_cn_spark.operators.build import build_index
-from informationretrieval_en_people_cn_spark.plans import querytree as qt
 from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine, _in_list
 from informationretrieval_en_people_cn_spark.session import local_rows_df
 
-from .oracle import bm25_scores, build_oracle_index, topk
+from .oracle import build_oracle_index, search_rows
 
 QUERIES = [
     "'return value'",
@@ -45,44 +44,7 @@ def answer(corpus_pdf):
     queries, the sorted doc_id rows for boolean ones."""
     postings, doclen, stats = build_oracle_index(corpus_pdf)
     content = {int(r.doc_id): r.content.lower() for r in corpus_pdf.itertuples()}
-
-    def holding(terms, every):
-        sets = [{d for d, _, _ in postings.get(t, [])} for t in set(terms)]
-        if not sets:
-            return set()
-        return set.intersection(*sets) if every else set.union(*sets)
-
-    def leaf_docs(leaf):
-        if leaf.kind == "keyword":
-            return holding(analyze_text(leaf.value), every=False)
-        needle = f"{leaf.value} {leaf.suffix}".strip().lower()
-        cand = holding(analyze_text(leaf.value), every=True)
-        return {d for d in cand if needle in content[d]}
-
-    def run(query):
-        node = qt.parse(query)
-        if isinstance(node, qt.OrNode):
-            out = set()
-            for group in node.children:
-                pos = [leaf_docs(c) for c in group.children if not c.negated]
-                got = set.intersection(*pos)
-                for c in group.children:
-                    if c.negated:
-                        got -= leaf_docs(c)
-                out |= got
-            return [(d, None) for d in sorted(out)]
-        terms = []
-        for tok in query.replace("'", " ").split():
-            if tok.endswith("*"):
-                p = tok.rstrip("*").lower()
-                terms += [t for t in postings if t.startswith(p)]
-            else:
-                terms += analyze_text(tok)
-        scores = bm25_scores(postings, doclen, stats, terms)
-        cand = set().union(*(leaf_docs(c) for c in node.children))
-        return topk({d: scores.get(d, 0.0) for d in cand}, 10)
-
-    return run
+    return lambda q: search_rows(q, postings, doclen, stats, content)
 
 
 def _rows(eng, q):

@@ -325,18 +325,18 @@ def test_snapshot_pointer_keeps_concurrent_readers_alive(spark, corpus, tmp_path
     out = str(tmp_path / "idx")
     build_index(spark, corpus, out, slices=2, salt=2)
     reader_v0 = SearchEngine(spark, out)  # resolves the pre-refresh paths
-    want = {r.doc_id for r in reader_v0.keyword_docids("merge").collect()}
+    want = {r.doc_id for r in reader_v0.search_page("merge", page_size=10**6).collect()}
 
     refresh_index(spark, out, corpus=corpus)   # -> v1
     # old reader's resolved paths still serve (previous snapshot kept)
-    assert {r.doc_id for r in reader_v0.keyword_docids("merge").collect()} == want
+    assert {r.doc_id for r in reader_v0.search_page("merge", page_size=10**6).collect()} == want
     assert IndexPaths(out).version == 1
 
     refresh_index(spark, out, corpus=corpus)   # -> v2 (GCs v0)
     p = IndexPaths(out)
     assert p.version == 2
     reader_v2 = SearchEngine(spark, out)
-    assert {r.doc_id for r in reader_v2.keyword_docids("merge").collect()} == want
+    assert {r.doc_id for r in reader_v2.search_page("merge", page_size=10**6).collect()} == want
     # v0 tables were GC'd, v1 (previous) kept for concurrent readers
     import os
 

@@ -8,9 +8,24 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from informationretrieval_en_people_cn_spark.functions.analyze import analyze_text
 from informationretrieval_en_people_cn_spark.functions.codec import decode_frames
 from informationretrieval_en_people_cn_spark.operators.build import build_index
 from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
+
+from .oracle import boolean_match, build_oracle_index, search_rows
+
+
+@pytest.fixture(scope="module")
+def oracle_ix(corpus_pdf):
+    """(postings, doclen, stats, lowercased content by doc_id) of the
+    pure-Python oracle over the conftest corpus."""
+    content = {int(r.doc_id): r.content.lower() for r in corpus_pdf.itertuples()}
+    return (*build_oracle_index(corpus_pdf), content)
+
+
+def _rows(eng, q, k=10):
+    return [(r.doc_id, getattr(r, "score", None)) for r in eng.search(q, k).collect()]
 
 
 def test_stats_carry_bucket_grid(spark, index_dir):
@@ -21,12 +36,14 @@ def test_stats_carry_bucket_grid(spark, index_dir):
     assert eng._grid == (st["bucket_lo"], st["bucket_span"], st["bucket_count"])
 
 
-def test_arithmetic_bucket_assignment_hundreds_of_buckets(spark, corpus, tmp_path):
+def test_arithmetic_bucket_assignment_hundreds_of_buckets(
+    spark, corpus, tmp_path, oracle_ix
+):
     """VERDICT r4 #2 done-criterion: the serving init must survive a
     cluster-scale bucket grid (here 384 buckets over 120 docs — most
     buckets empty) with the arithmetic assignment agreeing with the
-    build's salting on EVERY posting, and serving results identical to
-    the exhaustive plan."""
+    build's salting on EVERY posting, and the answers of both engines
+    equal to the oracle's."""
     out = str(tmp_path / "idx384")
     build_index(spark, corpus, out, slices=24, salt=16, block_size=8)
     base = SearchEngine(spark, out, cache_term_stats=True, fast_path=False)
@@ -42,13 +59,8 @@ def test_arithmetic_bucket_assignment_hundreds_of_buckets(spark, corpus, tmp_pat
         for doc in d:
             assert min(gn - 1, int(gn * ((int(doc) - glo) / gspan))) == r.bucket
     for q in ("merge window", "merge AND buffer", "return NOT merg*"):
-        want = [
-            (r.doc_id, getattr(r, "score", None)) for r in base.search(q, 10).collect()
-        ]
-        got = [
-            (r.doc_id, getattr(r, "score", None)) for r in serv.search(q, 10).collect()
-        ]
-        assert got == want, q
+        want = search_rows(q, *oracle_ix)
+        assert _rows(base, q) == _rows(serv, q) == want, q
     serv._doclens_cluster.unpersist()
     serv._bucket_doclens.unpersist()
 
@@ -94,25 +106,20 @@ SERVING_PHRASE_SHAPES = [
 ]
 
 
-def test_serving_phrase_shapes_identical(serving_pair, corpus_pdf):
-    """VERDICT r4 #1: phrase / phrase-prefix / mixed-leaf shapes must be
-    served by the bucket-local plans, bit-identical to the distributed
-    plans (substring semantics — the reference's)."""
+def test_serving_phrase_shapes_identical(serving_pair, corpus_pdf, oracle_ix):
+    """VERDICT r4 #1: phrase / phrase-prefix / mixed-leaf shapes are
+    served by the bucket-local plans, with and without cluster-cached
+    doclens, bit-identical to the oracle (substring semantics — the
+    reference's)."""
     base, serv = serving_pair
     p = _phrase_from(corpus_pdf)
     for shape in SERVING_PHRASE_SHAPES:
         q = shape.format(p=p)
-        want = [
-            (r.doc_id, getattr(r, "score", None)) for r in base.search(q, 10).collect()
-        ]
-        got = [
-            (r.doc_id, getattr(r, "score", None)) for r in serv.search(q, 10).collect()
-        ]
-        assert got == want, q
-    # standalone bucketed phrase plan == distributed phrase plan
-    want_ids = {r.doc_id for r in base.phrase_docids(p).collect()}
-    got_ids = {r.doc_id for r in serv.phrase_docids_bucketed(p).collect()}
-    assert got_ids == want_ids
+        assert _rows(base, q) == _rows(serv, q) == search_rows(q, *oracle_ix), q
+    # the standalone bucketed phrase plan
+    want_ids = set(boolean_match(f"'{p}'", oracle_ix[0], oracle_ix[3]))
+    assert {r.doc_id for r in base.phrase_docids(p).collect()} == want_ids
+    assert {r.doc_id for r in serv.phrase_docids_bucketed(p).collect()} == want_ids
 
 
 def test_serving_positional_phrase_identical(spark, index_dir, corpus_pdf):
@@ -157,46 +164,106 @@ def test_serving_positional_phrase_identical(spark, index_dir, corpus_pdf):
     serv._bucket_doclens.unpersist()
 
 
-def test_serving_phrase_budget_fallback(spark, index_dir, corpus_pdf):
-    """Over the phrase collect budget the serving dispatcher must fall
-    back to the distributed plan — same results, no exception."""
-    base = SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False)
+def test_serving_phrase_large_verified_set(spark, index_dir, oracle_ix):
+    """A phrase whose verified set is a third of the corpus rides the
+    bucket plan as a (bucket, doc_id) relation beside the frames, on
+    every ``_verify`` route: with the real dfs (doc_id IN-list scan),
+    and with dfs inflated past the IN-list and broadcast bounds (the
+    broadcast and the plain content join).  Every answer equals the
+    oracle's."""
+    p = "return if"
+    verified = boolean_match(f"'{p}'", oracle_ix[0], oracle_ix[3])
+    assert len(verified) >= 40
+    queries = [f"'{p}' OR merge", f"merge AND '{p}'", f"merge NOT '{p}'"]
     serv = SearchEngine(
-        spark, index_dir, cache_term_stats=True, fast_path=False,
-        persist_doclens=True, serving_phrase_collect_max=0,  # force fallback
+        spark, index_dir, cache_term_stats=True, fast_path=False, persist_doclens=True
     )
-    p = _phrase_from(corpus_pdf)
-    for q in (f"'{p}' OR merge", f"merge AND '{p}'", f"merge window '{p}'"):
-        want = [
-            (r.doc_id, getattr(r, "score", None)) for r in base.search(q, 10).collect()
-        ]
-        got = [
-            (r.doc_id, getattr(r, "score", None)) for r in serv.search(q, 10).collect()
-        ]
-        assert got == want, q
-    serv._doclens_cluster.unpersist()
+    for q in [*queries, f"'{p}'", f"merge window '{p}'"]:
+        assert _rows(serv, q) == search_rows(q, *oracle_ix), q
+    # the dfs steer only the verify route (ranked queries would score
+    # with them, so the inflated runs are boolean shapes and pages)
+    for df in (1_500_000, 5_000_000):
+        serv.term_stats = {t: (df, cf) for t, (_, cf) in serv.term_stats.items()}
+        for q in queries:
+            assert _rows(serv, q) == search_rows(q, *oracle_ix), (q, df)
+        page = serv.search_page(f"'{p}'", page_size=10**6).collect()
+        assert [r.doc_id for r in page] == verified, df
     serv._bucket_doclens.unpersist()
 
 
-def test_serving_reply_to_falls_back(spark, index_dir):
-    """A reply_to leaf is not bucket-local: the serving dispatcher must
-    fall back to the distributed plan, not crash."""
-    edges = spark.createDataFrame(
-        [(5, 3), (7, 3), (9, 4)], "src_doc_id long, dst_doc_id long"
+def test_serving_reply_to_leaves(spark, index_dir, oracle_ix):
+    """reply_to leaves ride the bucket plan as (bucket, doc_id)
+    relations: in OR, AND and NOT groups, in a mixed ranked query, for
+    source ids that are no doc at all, and for a source doc in a bucket
+    where no frame of the query's terms lands — it is visited all the
+    same.  Every answer equals the oracle's."""
+    postings = oracle_ix[0]
+    serv = SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False)
+    # the rarest term that analyzes to itself, and a doc in a bucket
+    # where it has no frame
+    rare = min(
+        (t for t in postings if analyze_text(t) == [t]),
+        key=lambda t: (len(postings[t]), t),
     )
-    base = SearchEngine(
-        spark, index_dir, cache_term_stats=True, fast_path=False, edges=edges
-    )
-    serv = SearchEngine(
-        spark, index_dir, cache_term_stats=True, fast_path=False,
-        persist_doclens=True, edges=edges,
-    )
-    for q in ("ReplyTo:3 OR merge", "merge AND ReplyTo:3"):
-        want = sorted(r.doc_id for r in base.search(q, 10).collect())
-        got = sorted(r.doc_id for r in serv.search(q, 10).collect())
-        assert got == want, q
-    serv._doclens_cluster.unpersist()
-    serv._bucket_doclens.unpersist()
+    rare_buckets = {r.bucket for r in serv._index_rows([rare]).collect()}
+    far = min(d for d in oracle_ix[1] if serv._bucket_of(d) not in rare_buckets)
+    edge_rows = [(5, 3), (7, 3), (far, 3), (9, 4)]
+    edges = spark.createDataFrame(edge_rows, "src_doc_id long, dst_doc_id long")
+    for eng in (
+        SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False, edges=edges),
+        SearchEngine(
+            spark, index_dir, cache_term_stats=True, fast_path=False,
+            persist_doclens=True, edges=edges,
+        ),
+    ):
+        for q in (
+            "ReplyTo:3 OR merge", "merge AND ReplyTo:3", "ReplyTo:3 NOT merge",
+            f"ReplyTo:3 OR {rare}", f"ReplyTo:3 AND {rare}", f"{rare} ReplyTo:3",
+            "merge window ReplyTo:3",
+        ):
+            want = search_rows(q, *oracle_ix, edges=edge_rows)
+            assert _rows(eng, q) == want, q
+            assert eng.last_trace["placement"] == "bucket", q
+        assert far in {d for d, _ in _rows(eng, f"ReplyTo:3 OR {rare}")}
+        eng._bucket_doclens.unpersist()
+
+
+# Spark jobs each shape ran on the conftest index when boolean shapes,
+# pages and reply_to-mixed ranked queries without persist_doclens took a
+# decoded-postings join plan (semi/anti joins per leaf): the bound the
+# bucket kernel keeps on an engine with no caches
+JOIN_PLAN_JOBS = {
+    ("search", "merge AND buffer"): 5,
+    ("search", "merg* AND return"): 6,
+    ("search", "merge NOT compress"): 5,
+    ("search", "'characters if' OR merge"): 8,
+    ("search", "merge AND 'characters if'"): 8,
+    ("search", "ReplyTo:3 OR merge"): 5,
+    ("search", "ReplyTo:3 NOT merge"): 6,
+    ("search", "merge window ReplyTo:3"): 10,
+    ("page", "merge AND buffer"): 3,
+    ("page", "merge OR 'characters if'"): 6,
+}
+
+
+def test_bucket_placement_jobs_per_shape(spark, index_dir):
+    """On an engine with no caches every boolean shape, page and mixed
+    ranked query reports the bucket placement and runs no more Spark
+    jobs (statusTracker job group) than the join plan did."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    edges = spark.createDataFrame([(5, 3), (7, 3)], "src_doc_id long, dst_doc_id long")
+    eng = SearchEngine(spark, index_dir, edges=edges)
+    for i, ((kind, q), bound) in enumerate(JOIN_PLAN_JOBS.items()):
+        gid = f"bucket-jobs-{i}"
+        sc.setJobGroup(gid, gid)
+        try:
+            (eng.search_page if kind == "page" else eng.search)(q, 10).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert eng.last_trace["placement"] == "bucket", q
+        assert len(tracker.getJobIdsForGroup(gid)) <= bound, (kind, q)
 
 
 def test_serving_engine_reload_after_refresh(spark, corpus, tmp_path):
@@ -407,17 +474,20 @@ PAGE_SHAPES = [
 ]
 
 
-def test_search_page_walk_and_parity(serving_pair):
-    """Keyset pagination: serving == distributed on every page, the
-    page walk reconstructs the full ordered match set, per-bucket caps
-    and frontier bucket pruning never drop or reorder ids."""
+def test_search_page_walk_and_parity(serving_pair, oracle_ix):
+    """Keyset pagination: every page of both engines equals the oracle's
+    match set, the page walk reconstructs the full ordered match set,
+    per-bucket caps and frontier bucket pruning never drop or reorder
+    ids."""
     base, serv = serving_pair
     for q in PAGE_SHAPES:
-        full = [r.doc_id for r in base.search_page(q, page_size=10**6).collect()]
-        assert full == sorted(set(full)) and full
-        assert [
-            r.doc_id for r in serv.search_page(q, page_size=10**6).collect()
-        ] == full
+        full = boolean_match(q, oracle_ix[0], oracle_ix[3])
+        assert full
+        for eng in (base, serv):
+            assert [
+                r.doc_id for r in eng.search_page(q, page_size=10**6).collect()
+            ] == full, q
+            assert eng.last_trace["placement"] == "bucket", q
         walked, after = [], None
         while True:
             page = [
@@ -960,13 +1030,11 @@ def test_randomized_cross_plan_parity(spark, corpus, corpus_pdf, tmp_path):
     scorer, so ranked answers are checked against the independent
     oracle (tests/oracle.py), bit for bit: candidates are the union of
     the leaves, ``where`` keeps the docs a docs-table filter passes, and
-    the boost product multiplies the summed score.  Boolean answers
-    must agree across the engines."""
+    the boost product multiplies the summed score.  Boolean answers are
+    checked against the oracle's boolean match set within the scope."""
     import random
 
-    from informationretrieval_en_people_cn_spark.functions.analyze import analyze_text
-
-    from .oracle import bm25_scores, build_oracle_index, topk
+    from .oracle import bm25_scores, topk
 
     out = str(tmp_path / "idx")
     build_index(spark, corpus, out, slices=2, salt=2)
@@ -1045,7 +1113,13 @@ def test_randomized_cross_plan_parity(spark, corpus, corpus_pdf, tmp_path):
         q, ranked = rand_query()
         where = rng.choice(wheres)
         boost = rng.choice(boosts) if ranked else None
-        want = oracle(*ranked, where, boost) if ranked else None
+        if ranked:
+            want = oracle(*ranked, where, boost)
+        else:
+            want = [
+                (d, None) for d in boolean_match(q, postings, content)
+                if where is None or d in passing(where)
+            ]
         for eng in (dist, serv, fast, bm):
             try:
                 res = [
@@ -1054,8 +1128,6 @@ def test_randomized_cross_plan_parity(spark, corpus, corpus_pdf, tmp_path):
                 ]
             except Exception as e:
                 raise AssertionError(f"{q!r} where={where} boost={boost}: {e}")
-            if want is None:
-                want = res
             assert res == want, f"{q!r} where={where} boost={boost}"
         ranked_checked += ranked is not None
     assert ranked_checked >= 10

@@ -86,8 +86,8 @@ def test_streamed_equals_batch(spark, corpus, tmp_path):
     eng_stream = SearchEngine(spark, stream_dir, corpus=corpus)
     eng_batch = SearchEngine(spark, batch_dir)
     assert eng_stream.n_docs > 0
-    kw = {r.doc_id for r in eng_stream.keyword_docids("merge").collect()}
-    assert kw == {r.doc_id for r in eng_batch.keyword_docids("merge").collect()}
+    kw = {r.doc_id for r in eng_stream.search_page("merge", page_size=10**6).collect()}
+    assert kw == {r.doc_id for r in eng_batch.search_page("merge", page_size=10**6).collect()}
 
     # with the corpus supplied, docs/stats match the batch build exactly
     # and ranked retrieval is rank- and score-identical
