@@ -269,17 +269,14 @@ def query_one(cpus: int, phrase: bool = False, batch: bool = False) -> dict:
     )
     spark.sparkContext.setLogLevel("ERROR")
     idx = _ensure_index(spark, positions=phrase)
-    # the 100 TB serving shape: distributed plan (fast_path off), term
-    # stats cached for zero-job planning; phrase mode additionally
+    # the 100 TB serving shape: distributed plan (fast_path off), the
+    # term dictionary for zero-job planning; phrase mode additionally
     # flips the engine to positional phrase semantics (bucket-local,
     # no content access)
     eng = SearchEngine(
-        spark, idx, cache_term_stats=True, fast_path=False,
+        spark, idx, fast_path=False,
         persist_doclens=os.environ.get("SCALING_PERSIST_DOCLENS", "1") == "1",
         phrase_via_positions=phrase,
-        # ablation knob: worker-local decoded-frame LRU (off by default
-        # so protocol verdicts stay comparable across rounds)
-        frame_cache=os.environ.get("SCALING_FRAME_CACHE") == "1",
     )
     from concurrent.futures import ThreadPoolExecutor
 

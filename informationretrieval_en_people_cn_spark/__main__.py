@@ -57,8 +57,8 @@ def main(argv: list[str] | None = None) -> int:
         sp.add_argument(
             "--fast",
             action="store_true",
-            help="low-latency driver-side path (caches term stats + "
-            "doclens; falls back to the bucket plan over budget)",
+            help="low-latency driver-side path (caches doclens; falls "
+            "back to the bucket plan over the Σdf budget)",
         )
         sp.add_argument(
             "--blockmax",
@@ -69,8 +69,8 @@ def main(argv: list[str] | None = None) -> int:
         sp.add_argument(
             "--serving",
             action="store_true",
-            help="serving mode: cluster-cached per-bucket doclens + "
-            "cached term stats (bucket-local plans)",
+            help="serving mode: cluster-cached per-bucket doclens "
+            "(bucket-local plans)",
         )
         sp.add_argument(
             "--where",
@@ -144,7 +144,6 @@ def main(argv: list[str] | None = None) -> int:
                 spark,
                 args.index,
                 edges=edges,
-                cache_term_stats=args.fast or serving,
                 cache_doclens=args.fast,
                 fast_path=args.fast or None,
                 use_blockmax=args.blockmax,

@@ -802,7 +802,7 @@ def q_phrase_bucketed(spark, sf_dir):
 
     eng = SearchEngine(
         spark, _unstemmed_index(spark, sf_dir), use_stemmer=False,
-        cache_term_stats=True, fast_path=False,
+        fast_path=False,
     )
     return eng.phrase_docids_bucketed(PHRASE).select("doc_id")
 
@@ -829,7 +829,7 @@ def q_ranked_mixed_serving(spark, sf_dir):
 
     eng = SearchEngine(
         spark, _unstemmed_index(spark, sf_dir), use_stemmer=False,
-        cache_term_stats=True, fast_path=False, persist_doclens=True,
+        fast_path=False, persist_doclens=True,
     )
     res = eng.search("merge window 'value table'", k=10)
     return res.select("doc_id", F.round("score", 6).alias("score_r"))
@@ -862,7 +862,7 @@ def q_scoped_topk_serving(spark, sf_dir):
 
     eng = SearchEngine(
         spark, _unstemmed_index(spark, sf_dir), use_stemmer=False,
-        cache_term_stats=True, fast_path=False, persist_doclens=True,
+        fast_path=False, persist_doclens=True,
     )
     res = eng.search("merge window spark", k=10, where="lang = 'en'")
     return res.select("doc_id", F.round("score", 6).alias("score_r"))
@@ -883,7 +883,7 @@ def q_batch_topk(spark, sf_dir):
 
     eng = SearchEngine(
         spark, _unstemmed_index(spark, sf_dir), use_stemmer=False,
-        cache_term_stats=True, fast_path=False, persist_doclens=True,
+        fast_path=False, persist_doclens=True,
     )
     res = eng.search_batch(_BATCH_QUERIES, k=10)
     return res.select("qid", "doc_id", F.round("score", 6).alias("score_r"))
@@ -904,7 +904,7 @@ def q_boosted_topk(spark, sf_dir):
 
     eng = SearchEngine(
         spark, _unstemmed_index(spark, sf_dir), use_stemmer=False,
-        cache_term_stats=True, fast_path=False, persist_doclens=True,
+        fast_path=False, persist_doclens=True,
     )
     res = eng.search(
         "merge window spark", k=10,
@@ -959,11 +959,10 @@ def q_index_stats(spark, sf_dir):
 def q_completions(spark, sf_dir):
     """Autocomplete (round 5): top-10 dictionary completions of a
     prefix ranked by collection frequency — the cf-ranked read of the
-    reference DAWG's ``keys(prefix)`` (SearchEngine.py:210).  Runs the
-    DISTRIBUTED plan (term-sorted index prefix scan + partial-agg
-    sum(cf) + TakeOrdered); the zero-job cached-stats path is pinned
-    equal in pytest.  Oracle: explode analyzer tokens, count, prefix
-    filter, same (cf desc, term asc) top-10."""
+    reference DAWG's ``keys(prefix)`` (SearchEngine.py:210), answered
+    from the engine's term dictionary with no Spark job.  Oracle:
+    explode analyzer tokens, count, prefix filter, same (cf desc, term
+    asc) top-10."""
     from .plans.engine import SearchEngine
 
     eng = SearchEngine(spark, _unstemmed_index(spark, sf_dir), use_stemmer=False)
@@ -981,7 +980,7 @@ def q_snippets(spark, sf_dir):
 
     eng = SearchEngine(
         spark, _unstemmed_index(spark, sf_dir), use_stemmer=False,
-        cache_term_stats=True, fast_path=False,
+        fast_path=False,
     )
     res = eng.search_snippets("spark merge window", k=10)
     return res.select(
@@ -999,7 +998,7 @@ def q_facet_search(spark, sf_dir):
 
     eng = SearchEngine(
         spark, _unstemmed_index(spark, sf_dir), use_stemmer=False,
-        cache_term_stats=True, fast_path=False,
+        fast_path=False,
     )
     meta = _docs(spark, sf_dir).select("doc_id", "source")
     return eng.facet_counts("spark OR merge", meta, "source")
@@ -1016,7 +1015,7 @@ def q_fuzzy_correct(spark, sf_dir):
 
     eng = SearchEngine(
         spark, _unstemmed_index(spark, sf_dir), use_stemmer=False,
-        cache_term_stats=True, fast_path=False,
+        fast_path=False,
     )
     res = eng.correct_terms(["sparc", "mergee", "windoq"], max_dist=2)
     return res.select(
@@ -1035,7 +1034,7 @@ def q_page_search(spark, sf_dir):
 
     eng = SearchEngine(
         spark, _unstemmed_index(spark, sf_dir), use_stemmer=False,
-        cache_term_stats=True, fast_path=False, persist_doclens=True,
+        fast_path=False, persist_doclens=True,
     )
     return eng.search_page(
         "spark AND merge NOT window", page_size=20, after_doc_id=150

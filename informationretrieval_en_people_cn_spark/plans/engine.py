@@ -11,12 +11,12 @@ from 0.0 in term-sorted float64 order, so every placement returns
 bit-identical ``(doc_id, score)`` rows.  :attr:`SearchEngine.last_trace`
 records which placement served a query and why:
 
-* **fast** (``fast_path``; needs cached term stats and driver
-  doclens): one pruned scan collects the query terms' frames to the
-  driver as Arrow (with each substring phrase's content hits in the
-  same action), decoded in one numpy pass per record batch, and the
-  kernel runs them as one virtual bucket — the
-  reference's own execution model, behind a Σdf budget.
+* **fast** (``fast_path``; needs the driver doclen cache,
+  ``cache_doclens``): one pruned scan collects the query terms' frames
+  to the driver as Arrow (with each substring phrase's content hits in
+  the same action), decoded in one numpy pass per record batch, and the
+  kernel runs them as one virtual bucket — the reference's own
+  execution model, behind the Σdf budget :data:`FAST_MAX_POSTINGS`.
 * **bucket** (every other query, ranked, boolean or paged): only the
   query terms' compressed frames move, grouped by doc-range bucket with
   the (bucket, doc_id) rows of each id leaf (a substring phrase's
@@ -30,6 +30,11 @@ records which placement served a query and why:
   bucket plan over only the buckets whose metadata bound
   (:func:`.kernel.bucket_upper_bounds`) can reach the k-th score of the
   most promising bucket — the one block-max WAND.
+
+Every engine loads the term dictionary (term → df, cf) and its sorted
+vocabulary at open — the reference's in-memory seek list (the DAWG's
+``keys(prefix)``, SearchEngine.py:210) — so prefix expansion,
+completions, stop terms, phrase selectivity and idf run no Spark job.
 """
 
 from __future__ import annotations
@@ -40,10 +45,8 @@ import re
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.analyze import analyze_text
-from ..functions.codec import decode_many, pack_buffers
 from ..session import local_rows_df as _local_df
 from . import querytree as qt
 from .kernel import (
@@ -55,6 +58,7 @@ from .kernel import (
     _pos_terms,
     bm25_idf,
     bucket_upper_bounds,
+    min_cross_distance,
     score_bucket,
     surviving_buckets,
 )
@@ -65,6 +69,15 @@ from .kernel import (
 # candidates) is at most this; above it the candidates meet the whole
 # content table (broadcast or joined)
 _VERIFY_IN_MAX = 1000
+
+# the driver fast path's Σdf budget: a query whose terms hold more
+# postings (or a phrase needle with more content hits) takes the bucket
+# plan
+FAST_MAX_POSTINGS = 5_000_000
+
+# cache_content loads the lowercased content only while its total
+# length is at most this many chars (checked before the collect)
+CONTENT_CACHE_MAX_BYTES = 256 << 20
 
 _SQL_WORD = re.compile(r"[a-z0-9_]+")
 
@@ -115,12 +128,10 @@ class SearchEngine:
         edges: DataFrame | None = None,
         stop_cf_fraction: float | None = None,
         corpus: DataFrame | None = None,
-        cache_term_stats: bool = False,
+        cache_term_stats: bool = True,
         cache_doclens: bool = False,
         cache_content: bool = False,
-        content_cache_max_bytes: int = 256 << 20,
         fast_path: bool | None = None,
-        fast_max_postings: int = 5_000_000,
         use_blockmax: bool | None = None,
         blockmax_min_sumdf: int = 5_000_000,
         persist_doclens: bool = False,
@@ -128,15 +139,17 @@ class SearchEngine:
         at_version: int | None = None,
         frame_cache: bool = False,
     ):
+        """``cache_term_stats`` and ``frame_cache`` are accepted and
+        ignored: every engine loads the term dictionary, and every frame
+        decodes in one :func:`.codec.decode_many` pass."""
         self.spark = spark
         self.index_dir = index_dir
         self.use_stemmer = use_stemmer
         self.k1, self.b = k1, b
         self.edges = edges  # (src_doc_id, dst_doc_id) id-lookup relation
         self.stop_cf_fraction = stop_cf_fraction
-        self.fast_max_postings = fast_max_postings
         # distributed block-max pruning for pure-keyword ranked top-k.
-        # None = auto: with cached term stats, queries whose Σdf crosses
+        # None = auto: queries whose Σdf (from the term dictionary) crosses
         # blockmax_min_sumdf take the pruning plan (two extra metadata
         # round-trips only pay off on big skewed indexes); small queries
         # keep the 1-job exhaustive plan.  Results identical — tested.
@@ -156,16 +169,10 @@ class SearchEngine:
         # cache/strategy knobs, kept so reload() can rebuild the same
         # caches against a new snapshot
         self._corpus = corpus
-        self._cache_term_stats = cache_term_stats
         self._cache_doclens = cache_doclens
         self._cache_content = cache_content
-        self._content_cache_max_bytes = content_cache_max_bytes
         self._fast_path_req = fast_path
         self._persist_doclens = persist_doclens
-        # executor-local decoded-frame LRU (serving hot-term cache):
-        # keyed by snapshot version, so refresh+reload never serves
-        # stale postings; opt-in to keep default measurements honest
-        self.frame_cache = frame_cache
         # time travel: pin every query to a historical snapshot
         # (Iceberg VERSION AS OF).  A pinned engine never follows the
         # pointer — reload() is a no-op — and opening a GC'd version
@@ -216,26 +223,21 @@ class SearchEngine:
             int(srow["bucket_count"]),
         )
         self._bucket_dl = None  # built on first use (_bucket_doclens)
-        # optional driver-side term dictionary (term -> (df, cf)): removes
-        # the per-query planning jobs (stop-term lookup, rarest-term sort).
-        # Feasible while |vocab| fits driver memory — at web scale leave
-        # off and planning stays as (pruned, tiny) Spark jobs.
-        self.term_stats: dict[str, tuple[int, int]] | None = None
-        self._term_arr: list[str] | None = None
-        if self._cache_term_stats:
-            self.term_stats = {
-                r.term: (r.df, r.cf)
-                for r in self.index.groupBy("term")
-                .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-                .collect()
-            }
-            # sorted vocabulary for O(log V) prefix expansion (the
-            # reference DAWG's keys(prefix)); a linear dict scan was the
-            # serving hot path's only per-query full-vocab pass
-            self._term_arr = sorted(self.term_stats)
-        # optional driver-side doclen arrays (sorted ids + lengths):
-        # with term_stats this enables the zero-planning-job fast path.
-        # Same memory guard as term_stats — opt in while n_docs fits.
+        # the driver term dictionary (term -> (df, cf)) and its sorted
+        # vocabulary for O(log V) prefix expansion (the reference DAWG's
+        # keys(prefix)): one groupBy collect at open, after which no
+        # dictionary question (prefix, completion, stop term, phrase
+        # selectivity, idf) costs a Spark job.  |vocab| must fit the
+        # driver — the reference keeps the same seek list in memory.
+        self.term_stats: dict[str, tuple[int, int]] = {
+            r.term: (r.df, r.cf)
+            for r in self.index.groupBy("term")
+            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+            .collect()
+        }
+        self._term_arr: list[str] = sorted(self.term_stats)
+        # optional driver-side doclen arrays (sorted ids + lengths): they
+        # enable the driver fast path.  Opt in while n_docs fits.
         self._doclen_ids: np.ndarray | None = None
         self._doclen_vals: np.ndarray | None = None
         if self._cache_doclens:
@@ -254,7 +256,7 @@ class SearchEngine:
             total = self.content_df.agg(
                 F.sum(F.length("content")).alias("b")
             ).collect()[0].b
-            if total is not None and total <= self._content_cache_max_bytes:
+            if total is not None and total <= CONTENT_CACHE_MAX_BYTES:
                 self._content_cache = {
                     r.doc_id: (r.content or "").lower()
                     for r in self.content_df.collect()
@@ -262,25 +264,25 @@ class SearchEngine:
         # fast path: evaluate small queries driver-side over the decoded
         # (pruned) postings — the reference's own execution model, kept
         # behind a Σdf budget; the bucket plan is always the fallback
-        # and the default when the caches are absent.
+        # and the default without the driver doclens.
         fast_path = self._fast_path_req
         if fast_path is None:
-            fast_path = self.term_stats is not None and self._doclen_ids is not None
-        elif fast_path and (self.term_stats is None or self._doclen_ids is None):
-            # ADVICE r2: without BOTH caches the fast path would score
-            # every doc with doclen 0 (silently wrong BM25) or crash on
-            # term_stats.get — refuse loudly instead of degrading.
+            fast_path = self._doclen_ids is not None
+        elif fast_path and self._doclen_ids is None:
+            # ADVICE r2: without the doclen cache the fast path would
+            # score every doc with doclen 0 (silently wrong BM25) —
+            # refuse loudly instead of degrading.
             raise ValueError(
-                "fast_path=True requires cache_term_stats=True and "
-                "cache_doclens=True (fast scoring needs both caches)"
+                "fast_path=True requires cache_doclens=True (fast scoring "
+                "needs the driver doclens)"
             )
         self.fast_path = fast_path
 
     def reload(self) -> bool:
         """Re-resolve the snapshot pointer; when ``refresh_index`` has
         committed a newer version, swap the table handles and rebuild
-        every cache this engine was configured with (term stats,
-        driver doclens, content cache, serving bucket arrays),
+        the term dictionary and every cache this engine was configured
+        with (driver doclens, content cache, serving bucket arrays),
         unpersisting the superseded cluster caches.  Returns True if a
         new snapshot was loaded, False if already current.
 
@@ -407,40 +409,6 @@ class SearchEngine:
             store = cand.join(store, "doc_id")
         return store.filter(_contains(needle)).select("doc_id")
 
-    def _decode_positional(self, rows: DataFrame) -> DataFrame:
-        """Decode encoded index rows to (term, doc_id, positions) rows
-        (Arrow-batched mapInPandas; raises if the index was built
-        without ``store_positions=True``)."""
-        import pandas as pd
-
-        dec_schema = T.StructType(
-            [
-                T.StructField("term", T.StringType(), False),
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("positions", T.ArrayType(T.LongType()), False),
-            ]
-        )
-
-        def dec(batches):
-            for pdf in batches:
-                d, t, p, n = decode_many(*pack_buffers(pdf["postings"]), True)
-                if p.size != t.sum():
-                    raise ValueError(
-                        "positional phrase query needs an index built "
-                        "with store_positions=True"
-                    )
-                if d.size:
-                    runs = np.split(p.astype(np.int64), np.cumsum(t)[:-1].astype(np.int64))
-                    yield pd.DataFrame(
-                        {
-                            "term": np.repeat(pdf["term"].to_numpy(), n),
-                            "doc_id": d.astype(np.int64),
-                            "positions": [r.tolist() for r in runs],
-                        }
-                    )
-
-        return rows.select("term", "postings").mapInPandas(dec, dec_schema)
-
     def phrase_docids_positional(self, phrase: str) -> DataFrame:
         """TRUE positional phrase matching from the stored position
         lists — the capability the reference indexes for but never uses
@@ -493,7 +461,7 @@ class SearchEngine:
             .distinct()
         )
 
-    def _serving_leaf(self, leaf: qt.Leaf, meta: list | None = None) -> tuple[tuple, set]:
+    def _serving_leaf(self, leaf: qt.Leaf) -> tuple[tuple, set]:
         """Compile one query leaf for the bucket-local kernels.
 
         Returns ``(spec, frame_terms)`` where spec is one of
@@ -503,8 +471,7 @@ class SearchEngine:
         the (bucket, doc_id) rows of a substring-verified phrase
         (:meth:`_phrase_bucketed`) or of a reply_to's sources, which the
         bucket plans group by bucket beside the frames
-        (:meth:`_frames_by_bucket`); ``meta``: :meth:`_term_meta` rows
-        held."""
+        (:meth:`_frames_by_bucket`)."""
         if leaf.kind == "keyword":
             t = self._q(leaf.value)
             return ("terms", t), set(t)
@@ -527,7 +494,7 @@ class SearchEngine:
                 return ("terms", []), set()
             ft = set(seq) | set(sfx_terms or ())
             return ("pos_phrase", seq, sfx_terms), ft
-        rare = self._rare_terms(seq, meta)
+        rare = self._rare_terms(seq)
         if not rare:  # a phrase term outside the index: no match
             return ("terms", []), set()
         needle = f"{leaf.value} {sfx}".strip().lower()
@@ -580,9 +547,6 @@ class SearchEngine:
             leaves.sort(key=lambda x: x[1])
             tree.append(leaves)
         return tree, frame_terms, rels
-
-    def _cache_tag(self):
-        return (self.index_dir, self.version) if self.frame_cache else None
 
     def _frames_by_bucket(
         self,
@@ -652,7 +616,6 @@ class SearchEngine:
             return _local_df(self.spark, [], schema)
         joined = self._frames_by_bucket(frame_terms, min_bucket, id_rels=id_rels)
         pos_terms = _pos_terms(tree)
-        cache_tag = self._cache_tag()
 
         def gen(batches):
             for pdf in batches:
@@ -663,7 +626,7 @@ class SearchEngine:
                     pdf.get("id_doc", none),
                 ):
                     bucket = int(bucket)
-                    bf = _BucketFrames(frames, pos_terms, cache_tag=cache_tag, bucket=bucket)
+                    bf = _BucketFrames(frames, pos_terms)
                     res = _eval_bucket_tree(bf, _bind_ids(tree, bucket, slot, doc), bucket)
                     if after is not None and res.size:
                         res = res[np.searchsorted(res, after, side="right"):]
@@ -727,13 +690,12 @@ class SearchEngine:
         ver = self._verify(cand, min(rare.values()), needle)
         return ver.select(self._bexpr().alias("bucket"), "doc_id")
 
-    def _rare_terms(self, terms: list[str], meta: list | None = None) -> dict[str, int]:
+    def _rare_terms(self, terms: list[str]) -> dict[str, int]:
         """The (≤2) lowest-df distinct ``terms`` → their df, rarest
         first — a phrase's candidate terms (the reference's selectivity
         planning, SearchEngine.py:189-194); {} when a term is not in the
-        index.  df comes from :meth:`_term_dfs` (cached stats, else one
-        pruned metadata collect)."""
-        dfs = self._term_dfs(terms, meta)
+        index."""
+        dfs = self._term_dfs(terms)
         if len(dfs) < len(set(terms)):
             return {}
         return dict(sorted(dfs.items(), key=lambda x: (x[1], x[0]))[:2])
@@ -741,65 +703,39 @@ class SearchEngine:
     # ---- ranked retrieval (Q7) ------------------------------------------
     def expand_prefix(self, prefix: str) -> list[str]:
         """Dictionary prefix enumeration (reference DAWG ``keys(prefix)``,
-        SearchEngine.py:210).  With cached stats: two binary searches on
-        the sorted vocabulary — O(log V + matches), not a linear vocab
-        scan (at web-scale V the scan was the serving path's only
-        per-query full pass).  Without: a pruned scan on the term-sorted
-        index (parquet min/max pushdown)."""
+        SearchEngine.py:210): two binary searches on the sorted
+        vocabulary — O(log V + matches), no Spark job."""
         import bisect
 
         p = prefix.lower()
-        if self._term_arr is not None:  # the in-memory DAWG analogue
-            arr = self._term_arr
-            lo_i = bisect.bisect_left(arr, p)
-            # successor string of the prefix: bump the rightmost
-            # non-max char and truncate — everything in [p, succ) starts
-            # with p.  All-max-char prefixes (impossible for analyzed
-            # terms) fall back to end-of-vocab.
-            succ = None
-            for j in range(len(p) - 1, -1, -1):
-                if ord(p[j]) < 0x10FFFF:
-                    succ = p[:j] + chr(ord(p[j]) + 1)
-                    break
-            hi_i = len(arr) if succ is None else bisect.bisect_left(arr, succ, lo_i)
-            return arr[lo_i:hi_i]
-        if self.term_stats is not None:  # stats set without the array
-            return sorted(t for t in self.term_stats if t.startswith(p))
-        return [
-            r.term
-            for r in self.index.filter(F.col("term").startswith(p))
-            .select("term")
-            .distinct()
-            .collect()
-        ]
+        arr = self._term_arr
+        lo_i = bisect.bisect_left(arr, p)
+        # successor string of the prefix: bump the rightmost non-max
+        # char and truncate — everything in [p, succ) starts with p.
+        # All-max-char prefixes (impossible for analyzed terms) fall back
+        # to end-of-vocab.
+        succ = None
+        for j in range(len(p) - 1, -1, -1):
+            if ord(p[j]) < 0x10FFFF:
+                succ = p[:j] + chr(ord(p[j]) + 1)
+                break
+        hi_i = len(arr) if succ is None else bisect.bisect_left(arr, succ, lo_i)
+        return arr[lo_i:hi_i]
 
     def completions(self, prefix: str, k: int = 10) -> DataFrame:
         """Autocomplete: top-``k`` dictionary completions of ``prefix``
         ranked by collection frequency (cf desc, term asc) — the query
         the reference's DAWG seek list answers for prefix search
         (SearchEngine.py:210 ``keys(prefix)``), ranked the way a search
-        box wants it.  With cached term stats: an O(log V + matches)
-        sorted-vocabulary slice plus a driver-side heap — zero Spark
-        jobs.  Without: a pruned scan on the term-sorted index (parquet
-        min/max pushdown) + partial-agg sum(cf) + TakeOrdered, the
-        100 TB plan."""
+        box wants it: an O(log V + matches) sorted-vocabulary slice plus
+        a driver-side heap, no Spark job."""
         import heapq
 
-        p = prefix.lower()
-        if self.term_stats is not None:
-            best = heapq.nsmallest(
-                k,
-                ((-self.term_stats[t][1], t) for t in self.expand_prefix(p)),
-            )
-            return _local_df(self.spark, 
-                [(t, int(-ncf)) for ncf, t in best], "term string, cf long"
-            )
-        return (
-            self.index.filter(F.col("term").startswith(p))
-            .groupBy("term")
-            .agg(F.sum("cf").alias("cf"))
-            .orderBy(F.desc("cf"), F.asc("term"))
-            .limit(k)
+        best = heapq.nsmallest(
+            k, ((-self.term_stats[t][1], t) for t in self.expand_prefix(prefix))
+        )
+        return _local_df(
+            self.spark, [(t, int(-ncf)) for ncf, t in best], "term string, cf long"
         )
 
     def correct_terms(self, inputs: list[str], max_dist: int = 2) -> DataFrame:
@@ -846,10 +782,7 @@ class SearchEngine:
         dictionary are replaced by their best :meth:`correct_terms`
         correction (terms with no correction in budget pass through —
         they simply match nothing, the engine's normal unknown-term
-        behavior).  Requires cached term stats so known terms are a
-        dict probe, not a job."""
-        if self.term_stats is None:
-            raise ValueError("correct_query needs cache_term_stats=True")
+        behavior).  Known terms are a term-dictionary probe, not a job."""
         toks = self._q(query)
         unknown = sorted({t for t in toks if t not in self.term_stats})
         if not unknown:
@@ -942,17 +875,7 @@ class SearchEngine:
         # would empty the query.
         if self.stop_cf_fraction and self.collection_term_count:
             thr = self.collection_term_count * self.stop_cf_fraction
-            if self.term_stats is not None:
-                stats = {t: self.term_stats.get(t, (0, 0))[1] for t in terms}
-            else:
-                stats = {
-                    r.term: r.cf
-                    for r in self._index_rows(terms)
-                    .groupBy("term")
-                    .agg(F.sum("cf").alias("cf"))
-                    .collect()
-                }
-            kept = [t for t in terms if stats.get(t, 0) <= thr]
+            kept = [t for t in terms if self.term_stats.get(t, (0, 0))[1] <= thr]
             if kept:
                 terms = kept
         return terms
@@ -969,25 +892,16 @@ class SearchEngine:
             .collect()
         )
 
-    def _term_dfs(self, terms, meta: list | None = None) -> dict[str, int]:
-        """Global df of each distinct query term the index holds: cached
-        term stats, else summed over :meth:`_term_meta` rows (a hot term
-        spans one row per bucket; ``meta`` may cover more terms)."""
-        want = set(terms)
-        if self.term_stats is not None:
-            return {t: self.term_stats[t][0] for t in want if t in self.term_stats}
-        dfs: dict[str, int] = {}
-        for r in meta if meta is not None else self._term_meta(want):
-            if r.term in want:
-                dfs[r.term] = dfs.get(r.term, 0) + int(r.df)
-        return dfs
+    def _term_dfs(self, terms) -> dict[str, int]:
+        """Global df of each distinct query term the index holds."""
+        return {t: self.term_stats[t][0] for t in set(terms) if t in self.term_stats}
 
-    def _scoring_idf(self, terms, meta: list | None = None) -> dict[str, float]:
+    def _scoring_idf(self, terms) -> dict[str, float]:
         """idf of each distinct query term the index holds — the
         scoring terms of every placement."""
         return {
             t: bm25_idf(self.n_docs, df)
-            for t, df in self._term_dfs(terms, meta).items()
+            for t, df in self._term_dfs(terms).items()
             if df > 0
         }
 
@@ -1110,7 +1024,6 @@ class SearchEngine:
         qids = [qid for qid, _, _ in queries]
         kq = [(terms, tree) for _, terms, tree in queries]
         pos_terms = frozenset().union(*(_pos_terms(tree) for _, tree in kq if tree))
-        cache_tag = self._cache_tag()
         k1, b, avgdl = self.k1, self.b, self.avgdl
 
         def gen(batches):
@@ -1124,7 +1037,7 @@ class SearchEngine:
                     pdf.get("id_doc", none),
                 ):
                     bucket = int(bucket)
-                    bf = _BucketFrames(frames, pos_terms, cache_tag=cache_tag, bucket=bucket)
+                    bf = _BucketFrames(frames, pos_terms)
                     bst = None
                     if bids is not None and len(bids):
                         bst = (
@@ -1179,17 +1092,11 @@ class SearchEngine:
         scored 0.0 where none of ``terms`` occurs.  ``idf`` / ``buckets``
         let the block-max plan reuse its metadata and restrict the
         buckets scored."""
-        tree, frame_terms, rels, meta = None, set(), [], None
+        tree, frame_terms, rels = None, set(), []
         if node is not None:
-            if idf is None and self.term_stats is None:
-                # one metadata collect serves the phrase leaves and the idf
-                meta = self._term_meta(set(terms).union(
-                    *(self._q(c.value) for c in node.children if c.kind in _PHRASES)))
-            tree, frame_terms, rels = self._compile_tree(
-                node, lambda c: self._serving_leaf(c, meta)
-            )
+            tree, frame_terms, rels = self._compile_tree(node, self._serving_leaf)
         if idf is None:
-            idf = self._scoring_idf(terms, meta)
+            idf = self._scoring_idf(terms)
         scored = self._score_bucketed(
             [(0, sorted(idf), tree)], idf, k, where=where, boost=boost,
             frame_terms=frame_terms, id_rels=rels, buckets=buckets,
@@ -1212,7 +1119,7 @@ class SearchEngine:
         land in :attr:`last_blockmax`.  Frames decode whole, so blocks
         inside a surviving bucket are not skipped."""
         meta = self._term_meta(terms)
-        idf = self._scoring_idf(terms, meta)
+        idf = self._scoring_idf(terms)
         ub = bucket_upper_bounds(
             [(r.term, r.bucket, r.max_tf) for r in meta], idf,
             self.k1, self.b, self.avgdl,
@@ -1240,13 +1147,11 @@ class SearchEngine:
 
     def _want_blockmax(self, terms: list[str]) -> bool:
         """Auto-select the bucket-pruning plan: explicit True wins;
-        None = on when cached term stats say Σdf crosses the threshold
+        None = on when the term dictionary's Σdf crosses the threshold
         (the same budget notion that bounds the driver fast path — big
         skewed queries prune, small queries keep the 1-job plan)."""
         if self.use_blockmax is not None:
             return self.use_blockmax
-        if self.term_stats is None:
-            return False  # no free Σdf estimate: stay exhaustive
         return self._sum_df(terms) >= self.blockmax_min_sumdf
 
     def _trace(self, placement: str, reason: str) -> None:
@@ -1287,7 +1192,7 @@ class SearchEngine:
     # scale path, answers.
 
     def _postings_arrays(
-        self, terms, budget: int, needles=()
+        self, terms, needles=()
     ) -> tuple[_BucketFrames, dict[str, np.ndarray]]:
         """The terms' frames, collected to the driver in ONE pruned scan
         as Arrow and decoded as one virtual bucket from its binary
@@ -1295,16 +1200,17 @@ class SearchEngine:
         holds each of ``needles`` — each needle's content scan is UNION
         ALL'd into the same action (the rows with a ``hit``).
         Raises :class:`_FastFallback` when the terms' Σdf exceeds
-        ``budget``, or a needle's hits may: each needle branch keeps at
-        most ``cap = budget // #content partitions + 1`` rows per
-        partition (the per-partition record number is the low 33 bits
-        of ``monotonically_increasing_id``), so it brings at most
-        ``budget`` + #partitions ids to the driver, and a needle with
-        ``cap`` ids may have been cut."""
+        ``budget`` (:data:`FAST_MAX_POSTINGS`), or a needle's hits may:
+        each needle branch keeps at most ``cap = budget // #content
+        partitions + 1`` rows per partition (the per-partition record
+        number is the low 33 bits of ``monotonically_increasing_id``),
+        so it brings at most ``budget`` + #partitions ids to the
+        driver, and a needle with ``cap`` ids may have been cut."""
+        budget = FAST_MAX_POSTINGS
         uniq = sorted(set(terms))
         sum_df = self._sum_df(uniq)
         if sum_df > budget:
-            raise _FastFallback(f"Σdf {sum_df} over fast_max_postings {budget}")
+            raise _FastFallback(f"Σdf {sum_df} over FAST_MAX_POSTINGS {budget}")
         if not uniq:
             return _BucketFrames([]), {}
         rows = self._index_rows(uniq).select("term", "postings")
@@ -1331,7 +1237,7 @@ class SearchEngine:
             for nd in needles:
                 hits[nd] = np.unique(ids[by == nd])
                 if hits[nd].size >= cap:
-                    raise _FastFallback(f"phrase {nd!r} hits over fast_max_postings {budget}")
+                    raise _FastFallback(f"phrase {nd!r} hits over FAST_MAX_POSTINGS {budget}")
         return _BucketFrames.from_arrow(table), hits
 
     def _phrase_ids_fast(
@@ -1366,13 +1272,11 @@ class SearchEngine:
         # a leaf with no rare terms matches nothing: no content scan
         needles = [] if cached else sorted({sp[1] for sp in subs if sp[2]})
         try:
-            bf, hits = self._postings_arrays(
-                set(terms) | frame_terms, self.fast_max_postings, needles
-            )
+            bf, hits = self._postings_arrays(set(terms) | frame_terms, needles)
         except _FastFallback as e:
             self._trace("bucket", str(e))
             return None
-        self._trace("fast", f"Σdf within fast_max_postings {self.fast_max_postings}")
+        self._trace("fast", f"Σdf within FAST_MAX_POSTINGS {FAST_MAX_POSTINGS}")
         self.last_trace.update(frames=bf.n_frames, postings=bf.n_postings)
         if subs:
             self.last_trace["verify"] = "content-cache" if cached else "folded"
@@ -1428,7 +1332,7 @@ class SearchEngine:
                 "no score to boost"
             )
         if not self.fast_path:
-            self._trace("bucket", "fast path off (cache_term_stats + cache_doclens)")
+            self._trace("bucket", "fast path off (needs cache_doclens)")
         elif where is not None or boost is not None:
             self._trace("bucket", "where/boost: the driver caches carry no metadata")
         elif self.phrase_via_positions and _has_phrase(node):
@@ -1500,22 +1404,16 @@ class SearchEngine:
     ) -> DataFrame:
         """Two-stage retrieve-then-rerank — the standard serving
         architecture for position-aware relevance at scale: stage 1
-        retrieves the BM25 top-``pool`` candidates (any physical
-        strategy), stage 2 fetches ONLY those candidates' position
-        lists for the query terms (pruned index scan + semi-join) and
+        retrieves the BM25 top-``pool`` candidates (:meth:`score_terms`),
+        stage 2 reads only the query terms' frames of the buckets holding
+        a candidate, beside the candidates' (bucket, doc_id) rows, and
         adds a proximity bonus ``weight / (1 + d)`` where ``d`` is the
         minimum token distance between occurrences of two DISTINCT
-        query terms in the doc.  Docs containing fewer than two
-        distinct query terms keep their BM25 score unchanged.  The
-        expensive positional work is O(pool), never O(corpus) — at
-        10^12 docs the rerank cost is fixed by the pool knob.
-
-        The per-doc minimum cross-term distance is exact: in the
-        merged position-sorted sequence, the closest pair of
-        different-term occurrences is always adjacent (any element
-        strictly between a closest cross pair would itself form a
-        closer cross pair with one endpoint), so one sort + one
-        adjacent-label scan suffices.
+        query terms in the doc (:func:`.kernel.min_cross_distance`, one
+        numpy pass per bucket).  Docs containing fewer than two distinct
+        query terms keep their BM25 score unchanged.  The positional
+        work is O(pool buckets), never O(corpus) — at 10^12 docs the
+        rerank cost is fixed by the pool knob.
 
         Requires ``store_positions=True`` at build; ranked keyword
         queries only."""
@@ -1529,49 +1427,39 @@ class SearchEngine:
                 "proximity_rerank reranks ranked keyword queries"
             )
         terms = sorted(set(self._query_terms(query)))
-        base = self.score_terms(terms, k=pool)
-        posdf = self._decode_positional(self._index_rows(terms)).join(
-            base.select("doc_id"), "doc_id", "left_semi"
+        base = [(int(r.doc_id), float(r.score)) for r in self.score_terms(terms, k=pool).collect()]
+        schema = "doc_id long, score double"
+        if not base:
+            return _local_df(self.spark, [], schema)
+        cand = [(self._bucket_of(d), d) for d, _ in base]
+        frames = self._frames_by_bucket(
+            terms,
+            buckets=sorted({bk for bk, _ in cand}),
+            id_rels=[_local_df(self.spark, cand, "bucket int, doc_id long")],
         )
+        pos_terms = frozenset(terms)
 
-        def mind(pdf: pd.DataFrame) -> pd.DataFrame:
-            out_d, out_m = [], []
-            for doc, g in pdf.groupby("doc_id"):
-                if g["term"].nunique() < 2:
-                    continue
-                arrs = [np.asarray(p, dtype=np.int64) for p in g["positions"]]
-                codes = pd.factorize(g["term"])[0]  # label = TERM, not row
-                labels = np.concatenate(
-                    [
-                        np.full(len(a), codes[i], dtype=np.int64)
-                        for i, a in enumerate(arrs)
-                    ]
-                )
-                allp = np.concatenate(arrs)
-                order = np.argsort(allp, kind="stable")
-                sp, sl = allp[order], labels[order]
-                gaps = (sp[1:] - sp[:-1])[sl[1:] != sl[:-1]]
-                if gaps.size:
-                    out_d.append(int(doc))
-                    out_m.append(int(gaps.min()))
-            return pd.DataFrame({"doc_id": out_d, "mind": out_m})
+        def gen(batches):
+            for pdf in batches:
+                out_d, out_m = [], []
+                for fr, doc in zip(pdf["frames"], pdf["id_doc"]):
+                    d, m = min_cross_distance(
+                        _BucketFrames(fr, pos_terms), terms, np.asarray(doc, dtype=np.int64)
+                    )
+                    out_d.append(d)
+                    out_m.append(m)
+                if out_d:
+                    yield pd.DataFrame({"doc_id": np.concatenate(out_d), "mind": np.concatenate(out_m)})
 
-        md = posdf.groupBy("doc_id").applyInPandas(
-            mind, "doc_id long, mind long"
-        )
-        out = (
-            base.join(md, "doc_id", "left")
-            .withColumn(
-                "score",
-                F.col("score")
-                + F.when(
-                    F.col("mind").isNotNull(),
-                    F.lit(float(weight)) / (F.lit(1.0) + F.col("mind")),
-                ).otherwise(F.lit(0.0)),
-            )
-            .drop("mind")
-        )
-        return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        mind = {
+            int(r.doc_id): int(r.mind)
+            for r in frames.mapInPandas(gen, "doc_id long, mind long").collect()
+        }
+        rows = [
+            (d, s + weight / (1.0 + mind[d]) if d in mind else s) for d, s in base
+        ]
+        rows.sort(key=lambda x: (-x[1], x[0]))
+        return _local_df(self.spark, rows[:k], schema)
 
     def search_batch(
         self, queries: list[str], k: int = 10, where=None

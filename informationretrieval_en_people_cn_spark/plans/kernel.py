@@ -19,16 +19,10 @@ BM25 (Lucene idf variant):
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 
-from ..functions.codec import (
-    arrow_binary_buffers,
-    decode_frames,
-    decode_many,
-    pack_buffers,
-)
+from ..functions.codec import arrow_binary_buffers, decode_many, pack_buffers
 
 _EMPTY_IDS = np.empty(0, dtype=np.int64)
 _POS_SHIFT = np.int64(1) << np.int64(32)
@@ -44,61 +38,6 @@ def bm25_tfp(idf, tf, dl, k1: float, b: float, avgdl: float):
     as ``idf * (tf*(k1+1)) / (tf + k1*(1-b))``: ``b*0.0/avgdl`` is 0.0
     and ``(1 - b) + 0.0`` is exactly ``1 - b``."""
     return idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
-
-
-# ---- worker-local posting-frame decode cache ----------------------------
-#
-# Spark reuses python worker processes across tasks
-# (spark.python.worker.reuse, default true), so a module-level LRU
-# survives between queries on the same executor.  A serving workload's
-# term distribution is Zipf — the head terms' frames decode on almost
-# every query; caching the decoded (doc_id, tf[, positions]) arrays
-# turns that repeat work into a dict hit.  Keyed by (index_dir, snapshot
-# version, term, bucket, want_positions, blob length, blob hash):
-# snapshots are immutable and a refresh bumps the version, so stale
-# entries are never served (they age out of the LRU).  Byte-budgeted per
-# worker (IR_FRAME_CACHE_MB, default 256); arrays are returned
-# read-only.  Opt-in per engine (frame_cache=True) so measurements stay
-# honest by default.
-_FRAME_CACHE: dict = {}
-_FRAME_CACHE_BYTES = [0]
-_FRAME_CACHE_STATS = {"hits": 0, "misses": 0}
-
-
-def _frame_cache_budget() -> int:
-    return int(os.environ.get("IR_FRAME_CACHE_MB", "256")) << 20
-
-
-def _cached_decode(tag, term, bucket, blob: bytes, want_positions: bool = False):
-    """decode_frames through the worker-local LRU.  The key is
-    CONTENT-ADDRESSED — it includes the blob's length and (per-process
-    SipHash) hash — so even a hypothetical second frame under the same
-    (term, bucket), or a snapshot mixup, can never serve wrong arrays:
-    different bytes → different key."""
-    key = (tag, term, int(bucket), want_positions, len(blob), hash(blob))
-    hit = _FRAME_CACHE.pop(key, None)
-    if hit is not None:
-        _FRAME_CACHE[key] = hit  # move to MRU end (dicts keep order)
-        _FRAME_CACHE_STATS["hits"] += 1
-        return hit[0]
-    _FRAME_CACHE_STATS["misses"] += 1
-    out = decode_frames(blob, want_positions=want_positions)
-    nbytes = sum(a.nbytes for a in out if isinstance(a, np.ndarray))
-    for a in out:
-        if isinstance(a, np.ndarray):
-            a.setflags(write=False)  # shared across queries: immutable
-    budget = _frame_cache_budget()
-    if nbytes > budget:
-        # an entry that can never fit must not flush the hot LRU on its
-        # way to being rejected
-        return out
-    while _FRAME_CACHE and _FRAME_CACHE_BYTES[0] + nbytes > budget:
-        oldest = next(iter(_FRAME_CACHE))  # insertion order = LRU end
-        _, old_bytes = _FRAME_CACHE.pop(oldest)
-        _FRAME_CACHE_BYTES[0] -= old_bytes
-    _FRAME_CACHE[key] = (out, nbytes)
-    _FRAME_CACHE_BYTES[0] += nbytes
-    return out
 
 
 class _BucketFrames:
@@ -120,13 +59,7 @@ class _BucketFrames:
     ``n_frames`` / ``n_postings`` count the non-empty frames and the
     postings decoded."""
 
-    def __init__(
-        self,
-        frames,
-        pos_terms: frozenset | None = frozenset(),
-        cache_tag=None,
-        bucket: int = -1,
-    ):
+    def __init__(self, frames, pos_terms: frozenset | None = frozenset()):
         frames = list(frames)
         chunks = []  # (term of each buffer, decode_many's output)
         for want in (False, True):
@@ -134,19 +67,9 @@ class _BucketFrames:
                 fr for fr in frames
                 if (pos_terms is None or fr["term"] in pos_terms) is want
             ]
-            if not sel:
-                continue
-            if cache_tag is None:
-                decoded = decode_many(
-                    *pack_buffers([fr["postings"] for fr in sel]), want
-                )
+            if sel:
+                decoded = decode_many(*pack_buffers([fr["postings"] for fr in sel]), want)
                 chunks.append(([fr["term"] for fr in sel], decoded))
-                continue
-            for fr in sel:  # the LRU is keyed by one (term, bucket) frame
-                d, t, p = _cached_decode(
-                    cache_tag, fr["term"], bucket, bytes(fr["postings"]), want
-                )
-                chunks.append(([fr["term"]], (d, t, p, np.array([d.size]))))
         self._index(chunks)
 
     @classmethod
@@ -319,6 +242,33 @@ def _pos_phrase_bucket_ids(
         if cur.size == 0:
             return _EMPTY_IDS
     return cand[np.unique(cur >> np.int64(32))]
+
+
+def min_cross_distance(
+    bf: _BucketFrames, terms: list[str], cand: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(docs, dist)``: for each of the sorted candidate docs ``cand``
+    holding at least two distinct ``terms``, the minimum token distance
+    between occurrences of two different terms.  Exact: in a doc's
+    merged position-sorted sequence the closest pair of different-term
+    occurrences is always adjacent (any element strictly between a
+    closest cross pair would form a closer cross pair with one
+    endpoint), so one sort of the packed (doc, position) keys and one
+    adjacent-label scan over all candidates suffice."""
+    keys = [bf.doc_pos_keys(t, cand) for t in terms]
+    labels = np.repeat(np.arange(len(keys)), [k.size for k in keys])
+    if labels.size < 2:
+        return _EMPTY_IDS, _EMPTY_IDS
+    allk = np.concatenate(keys)
+    order = np.argsort(allk, kind="stable")
+    sk, sl = allk[order], labels[order]
+    doc = sk >> np.int64(32)
+    cross = (doc[1:] == doc[:-1]) & (sl[1:] != sl[:-1])
+    gaps, at = (sk[1:] - sk[:-1])[cross], doc[1:][cross]
+    best = np.full(cand.size, np.iinfo(np.int64).max, dtype=np.int64)
+    np.minimum.at(best, at, gaps)
+    hit = best < np.iinfo(np.int64).max
+    return cand[hit], best[hit]
 
 
 def _pos_terms(tree: list) -> frozenset:

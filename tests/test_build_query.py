@@ -364,8 +364,8 @@ def test_phrase_verify_routes_identical(spark, index_dir, corpus_pdf):
         r.doc_id for r in corpus_pdf.itertuples() if phrase in r.content.lower()
     }
 
-    # route 1: cached stats, tiny df -> IN-list scan
-    eng = SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False)
+    # route 1: tiny df -> IN-list scan
+    eng = SearchEngine(spark, index_dir, fast_path=False)
     assert {r.doc_id for r in eng.phrase_docids(phrase).collect()} == gold
 
     # route 2: inflate cached dfs past the IN-list bound -> broadcast join
@@ -382,9 +382,9 @@ def test_serving_mode_scores_identical(spark, index_dir):
     any result: same ranked output, bit-identical scores."""
     from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
 
-    base = SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False)
+    base = SearchEngine(spark, index_dir, fast_path=False)
     serving = SearchEngine(
-        spark, index_dir, cache_term_stats=True, fast_path=False,
+        spark, index_dir, fast_path=False,
         persist_doclens=True,
     )
     for q in (
@@ -407,9 +407,9 @@ def test_boolean_bucketed_identical(spark, index_dir, oracle, corpus_pdf):
 
     postings = oracle[0]
     content = {int(r.doc_id): r.content.lower() for r in corpus_pdf.itertuples()}
-    base = SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False)
+    base = SearchEngine(spark, index_dir, fast_path=False)
     serv = SearchEngine(
-        spark, index_dir, cache_term_stats=True, fast_path=False,
+        spark, index_dir, fast_path=False,
         persist_doclens=True,
     )
     for q in (

@@ -7,6 +7,7 @@ import pytest
 
 from informationretrieval_en_people_cn_spark.functions.analyze import analyze_text
 from informationretrieval_en_people_cn_spark.operators.build import build_index
+from informationretrieval_en_people_cn_spark.plans import engine as engine_mod
 from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine, _in_list
 from informationretrieval_en_people_cn_spark.session import local_rows_df
 
@@ -28,13 +29,13 @@ QUERIES = [
 
 @pytest.fixture(scope="module")
 def fast(spark, index_dir):
-    return SearchEngine(spark, index_dir, cache_term_stats=True, cache_doclens=True)
+    return SearchEngine(spark, index_dir, cache_doclens=True)
 
 
 @pytest.fixture(scope="module")
 def fast_cached(spark, index_dir):
     return SearchEngine(
-        spark, index_dir, cache_term_stats=True, cache_doclens=True, cache_content=True
+        spark, index_dir, cache_doclens=True, cache_content=True
     )
 
 
@@ -114,14 +115,13 @@ def test_substring_heavy_needle_stays_in_budget(spark, tmp_path, monkeypatch):
     out = str(tmp_path / "subidx")
     build_index(spark, corpus, out, slices=2, salt=2, block_size=8)
     base = SearchEngine(spark, out)
-    caches = dict(cache_term_stats=True, cache_doclens=True)
-    tight = SearchEngine(spark, out, fast_max_postings=30, **caches)
-    roomy = SearchEngine(spark, out, **caches)
-    assert tight._sum_df(["int"]) == 6
-    parts = tight.content_df.rdd.getNumPartitions()
+    eng = SearchEngine(spark, out, cache_doclens=True)
+    assert eng._sum_df(["int"]) == 6
+    parts = eng.content_df.rdd.getNumPartitions()
+    roomy = engine_mod.FAST_MAX_POSTINGS
 
     collected = []
-    df_cls = type(tight.index)  # the session's DataFrame implementation
+    df_cls = type(eng.index)  # the session's DataFrame implementation
     to_arrow = df_cls.toArrow  # the fast path collects as Arrow
 
     def spy(df):
@@ -136,14 +136,15 @@ def test_substring_heavy_needle_stays_in_budget(spark, tmp_path, monkeypatch):
         if q == "'int'":  # the docs holding the term, scored
             assert sorted(d for d, _ in ref) == list(range(0, 60, 10))
         collected.clear()
-        assert _rows(tight, q) == ref, q
-        assert tight.last_trace["placement"] == "bucket", q
-        assert "'int' hits over fast_max_postings 30" in tight.last_trace["reason"]
+        monkeypatch.setattr(engine_mod, "FAST_MAX_POSTINGS", 30)
+        assert _rows(eng, q) == ref, q
+        assert eng.last_trace["placement"] == "bucket", q
+        assert "'int' hits over FAST_MAX_POSTINGS 30" in eng.last_trace["reason"]
         assert 0 < max(collected) <= 30 + parts, collected
-        assert _rows(roomy, q) == ref, q
-        assert roomy.last_trace["placement"] == "fast", q
-        assert roomy.last_trace["verify"] == "folded", q
-
+        monkeypatch.setattr(engine_mod, "FAST_MAX_POSTINGS", roomy)
+        assert _rows(eng, q) == ref, q
+        assert eng.last_trace["placement"] == "fast", q
+        assert eng.last_trace["verify"] == "folded", q
 
 def test_in_list_matches_isin(spark):
     """The one-call IN-list keeps exactly the rows whose value is listed:

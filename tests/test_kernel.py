@@ -19,6 +19,7 @@ from informationretrieval_en_people_cn_spark.plans.kernel import (
     bm25_idf,
     bm25_tfp,
     bucket_upper_bounds,
+    min_cross_distance,
     score_bucket,
 )
 from .oracle import bm25_scores, topk
@@ -286,3 +287,40 @@ def test_batch_queries_allow_and_boost():
     assert d1.tolist() == [2, 3]
     assert s1.tolist() == [sa[1] + sb[0], (sa[2] + sb[1]) * 2.0]
     assert d2.tolist() == [2, 3] and s2.tolist() == [sb[0], sb[1] * 2.0]
+
+
+@given(
+    st.lists(st.lists(st.sampled_from(TERMS), max_size=30), min_size=1, max_size=12),
+    st.lists(st.sampled_from(TERMS), min_size=1, max_size=4, unique=True),
+    st.randoms(use_true_random=False),
+)
+@settings(max_examples=150, deadline=None)
+def test_min_cross_distance_equals_brute_force(docs, terms, rnd):
+    """Each candidate doc's minimum distance between occurrences of two
+    different query terms equals the all-pairs minimum over its token
+    sequence; docs with fewer than two distinct query terms, and docs
+    that are no candidate, are absent."""
+    ids = [3 * i + 1 for i in range(len(docs))]
+    frames = []
+    for t in TERMS:
+        rows = [(d, [i for i, x in enumerate(toks) if x == t]) for d, toks in zip(ids, docs)]
+        rows = [(d, p) for d, p in rows if p]
+        if rows:
+            frames.append({"term": t, "postings": encode_frame(
+                np.array([d for d, _ in rows]), np.array([len(p) for _, p in rows]),
+                np.array([x for _, p in rows for x in p]),
+            )})
+    rnd.shuffle(frames)
+    cand = np.array(sorted(rnd.sample(ids, rnd.randint(1, len(ids)))), dtype=np.int64)
+    want = {}
+    for d, toks in zip(ids, docs):
+        dists = [
+            abs(i - j)
+            for i, a in enumerate(toks) for j, b in enumerate(toks)
+            if a != b and a in terms and b in terms
+        ]
+        if d in cand and dists:
+            want[d] = min(dists)
+    got_d, got_m = min_cross_distance(_BucketFrames(frames, frozenset(terms)), sorted(terms), cand)
+    assert dict(zip(got_d.tolist(), got_m.tolist())) == want
+    assert got_d.tolist() == sorted(want)

@@ -67,7 +67,7 @@ def test_wand_search_equals_distributed(spark, index_dir, engine, corpus_pdf):
     top-k, bit for bit."""
     from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
 
-    fast = SearchEngine(spark, index_dir, cache_term_stats=True, cache_doclens=True)
+    fast = SearchEngine(spark, index_dir, cache_doclens=True)
     bm = SearchEngine(spark, index_dir, use_blockmax=True)
     for q in ["merge window", "return value index", "compression buffer"]:
         want = _oracle_topk(corpus_pdf, engine._query_terms(q))
@@ -111,21 +111,20 @@ def test_salt_config_invariance(spark, corpus, tmp_path):
         assert pa[term] == pb[term], term
 
 
-def test_wand_search_hot_term_guard(spark, index_dir, engine, corpus_pdf):
+def test_wand_search_hot_term_guard(spark, index_dir, engine, corpus_pdf, monkeypatch):
     """A query whose Σdf exceeds the driver budget must take the bucket
     plan (no posting collect), say so in last_trace, and rank like the
     oracle."""
+    from informationretrieval_en_people_cn_spark.plans import engine as engine_mod
     from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
 
-    fast = SearchEngine(
-        spark, index_dir, cache_term_stats=True, cache_doclens=True,
-        fast_max_postings=1,
-    )
+    monkeypatch.setattr(engine_mod, "FAST_MAX_POSTINGS", 1)
+    fast = SearchEngine(spark, index_dir, cache_doclens=True)
     q = "return value"
     got = [(r.doc_id, r.score) for r in fast.search(q, 10).collect()]
     assert got == _oracle_topk(corpus_pdf, engine._query_terms(q))
     assert fast.last_trace["placement"] == "bucket"
-    assert "over fast_max_postings 1" in fast.last_trace["reason"]
+    assert "over FAST_MAX_POSTINGS 1" in fast.last_trace["reason"]
 
 
 def _postings_map(spark, path):
@@ -271,11 +270,11 @@ FOURTEEN_SHAPES = [
 
 
 def test_fast_path_equals_distributed_all_shapes(spark, index_dir, engine):
-    """The driver-side fast path (cached stats + doclens) must return
+    """The driver-side fast path (driver doclens) must return
     identical results to the distributed plan for every query shape."""
     from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
 
-    fast = SearchEngine(spark, index_dir, cache_term_stats=True, cache_doclens=True)
+    fast = SearchEngine(spark, index_dir, cache_doclens=True)
     assert fast.fast_path
     for q in FOURTEEN_SHAPES:
         got = fast.search(q, k=10).collect()
@@ -288,13 +287,12 @@ def test_fast_path_equals_distributed_all_shapes(spark, index_dir, engine):
             assert {r.doc_id for r in got} == {r.doc_id for r in want}, q
 
 
-def test_fast_path_budget_falls_back_to_distributed(spark, index_dir):
+def test_fast_path_budget_falls_back_to_distributed(spark, index_dir, monkeypatch):
+    from informationretrieval_en_people_cn_spark.plans import engine as engine_mod
     from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
 
-    fast = SearchEngine(
-        spark, index_dir, cache_term_stats=True, cache_doclens=True,
-        fast_max_postings=1,
-    )
+    monkeypatch.setattr(engine_mod, "FAST_MAX_POSTINGS", 1)
+    fast = SearchEngine(spark, index_dir, cache_doclens=True)
     tiny = fast.search("merge window", k=10).collect()  # falls back
     full = SearchEngine(spark, index_dir).search("merge window", k=10).collect()
     assert [r.doc_id for r in tiny] == [r.doc_id for r in full]
@@ -302,13 +300,13 @@ def test_fast_path_budget_falls_back_to_distributed(spark, index_dir):
 
 def test_fast_path_stopterm_parity(spark, index_dir):
     """Q8 stop-term skip must behave identically on the fast path
-    (cached cf stats) and the distributed plan (stats via Spark jobs)."""
+    and the bucket plan (both read cf from the term dictionary)."""
     from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
 
     slow = SearchEngine(spark, index_dir, stop_cf_fraction=0.03)
     fast = SearchEngine(
         spark, index_dir, stop_cf_fraction=0.03,
-        cache_term_stats=True, cache_doclens=True,
+        cache_doclens=True,
     )
     assert fast.fast_path
     for q in ("return value", "merge return index"):
@@ -339,7 +337,7 @@ def test_fast_path_random_corpora_and_queries(spark, tmp_path):
         build_index(spark, corpus, out, slices=2, salt=2, block_size=8)
         slow = SearchEngine(spark, out)
         fast = SearchEngine(
-            spark, out, cache_term_stats=True, cache_doclens=True
+            spark, out, cache_doclens=True
         )
         rng = random.Random(seed)
         queries = []

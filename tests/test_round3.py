@@ -18,17 +18,21 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 
-def test_fast_path_requires_both_caches(spark, index_dir):
+def test_fast_path_requires_doclen_cache(spark, index_dir):
     """ADVICE r2 (medium): fast_path=True without the doclen cache
-    scored every doc with doclen 0; now it refuses to construct."""
+    scored every doc with doclen 0; now it refuses to construct.  The
+    term dictionary is always loaded, so the doclen cache is all the
+    fast path needs."""
     from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
 
     with pytest.raises(ValueError, match="fast_path"):
-        SearchEngine(spark, index_dir, fast_path=True, cache_term_stats=True)
-    with pytest.raises(ValueError, match="fast_path"):
-        SearchEngine(spark, index_dir, fast_path=True, cache_doclens=True)
-    # explicit False with partial caches stays fine
-    SearchEngine(spark, index_dir, fast_path=False, cache_term_stats=True)
+        SearchEngine(spark, index_dir, fast_path=True)
+    eng = SearchEngine(spark, index_dir, fast_path=True, cache_doclens=True)
+    want = [(r.doc_id, r.score) for r in SearchEngine(spark, index_dir).search("merge window").collect()]
+    assert [(r.doc_id, r.score) for r in eng.search("merge window").collect()] == want
+    assert eng.last_trace["placement"] == "fast"
+    # explicit False without the doclen cache stays fine
+    SearchEngine(spark, index_dir, fast_path=False)
 
 
 def test_content_cache_matches_scan_verify(spark, index_dir):
@@ -38,10 +42,10 @@ def test_content_cache_matches_scan_verify(spark, index_dir):
 
     cached = SearchEngine(
         spark, index_dir,
-        cache_term_stats=True, cache_doclens=True, cache_content=True,
+        cache_doclens=True, cache_content=True,
     )
     assert cached._content_cache is not None  # under budget: loaded
-    scan = SearchEngine(spark, index_dir, cache_term_stats=True, cache_doclens=True)
+    scan = SearchEngine(spark, index_dir, cache_doclens=True)
     dist = SearchEngine(spark, index_dir)
     for q in ("'posting merge'", "merge OR 'posting merge'", "'posting mer'*"):
         got = {r.doc_id for r in cached.search(q).collect()}
@@ -49,16 +53,14 @@ def test_content_cache_matches_scan_verify(spark, index_dir):
         assert got == {r.doc_id for r in dist.search(q).collect()}, q
 
 
-def test_content_cache_budget_guard(spark, index_dir):
+def test_content_cache_budget_guard(spark, index_dir, monkeypatch):
     """Over the byte budget the cache stays off (scan path keeps
     serving) instead of collecting the corpus to the driver."""
+    from informationretrieval_en_people_cn_spark.plans import engine as engine_mod
     from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
 
-    eng = SearchEngine(
-        spark, index_dir,
-        cache_term_stats=True, cache_doclens=True,
-        cache_content=True, content_cache_max_bytes=10,
-    )
+    monkeypatch.setattr(engine_mod, "CONTENT_CACHE_MAX_BYTES", 10)
+    eng = SearchEngine(spark, index_dir, cache_doclens=True, cache_content=True)
     assert eng._content_cache is None
     assert {r.doc_id for r in eng.search("'posting merge'").collect()} == {
         r.doc_id for r in SearchEngine(spark, index_dir).search("'posting merge'").collect()
@@ -74,7 +76,7 @@ def test_blockmax_autoselects_on_sumdf(spark, index_dir):
     exh = SearchEngine(spark, index_dir, fast_path=False)
     auto = SearchEngine(
         spark, index_dir,
-        cache_term_stats=True, fast_path=False, blockmax_min_sumdf=1,
+        fast_path=False, blockmax_min_sumdf=1,
     )
     q = "merge window compression"
     want = [(r.doc_id, r.score) for r in exh.search(q).collect()]
@@ -84,7 +86,7 @@ def test_blockmax_autoselects_on_sumdf(spark, index_dir):
 
     small = SearchEngine(
         spark, index_dir,
-        cache_term_stats=True, fast_path=False, blockmax_min_sumdf=10**9,
+        fast_path=False, blockmax_min_sumdf=10**9,
     )
     assert [(r.doc_id, r.score) for r in small.search(q).collect()] == want
     assert small.last_blockmax is None  # stayed exhaustive

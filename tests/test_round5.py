@@ -46,9 +46,9 @@ def test_arithmetic_bucket_assignment_hundreds_of_buckets(
     equal to the oracle's."""
     out = str(tmp_path / "idx384")
     build_index(spark, corpus, out, slices=24, salt=16, block_size=8)
-    base = SearchEngine(spark, out, cache_term_stats=True, fast_path=False)
+    base = SearchEngine(spark, out, fast_path=False)
     serv = SearchEngine(
-        spark, out, cache_term_stats=True, fast_path=False, persist_doclens=True
+        spark, out, fast_path=False, persist_doclens=True
     )
     assert serv._grid is not None and serv._grid[2] == 384
     # every decoded posting doc must land (arithmetically) in the bucket
@@ -65,24 +65,28 @@ def test_arithmetic_bucket_assignment_hundreds_of_buckets(
     serv._bucket_doclens.unpersist()
 
 
+def _vocab_cf(eng) -> dict[str, int]:
+    """term -> collection frequency, summed from the engine's index rows
+    (a hot term spans one row per bucket)."""
+    rows = eng.index.groupBy("term").agg(F.sum("cf").alias("cf")).collect()
+    return {r.term: int(r.cf) for r in rows}
+
+
 def test_expand_prefix_bisect_equals_linear_scan(spark, index_dir):
-    eng = SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False)
-    for p in ("par", "m", "merg", "zzz", "", "return"):
-        linear = sorted(t for t in eng.term_stats if t.startswith(p.lower()))
+    eng = SearchEngine(spark, index_dir)
+    vocab = _vocab_cf(eng)
+    for p in ("par", "m", "merg", "zzz", "", "return", "MERG"):
+        linear = sorted(t for t in vocab if t.startswith(p.lower()))
         assert eng.expand_prefix(p) == linear, p
-    # and equals the no-cache pruned-scan route
-    nostats = SearchEngine(spark, index_dir)
-    for p in ("par", "merg"):
-        assert sorted(nostats.expand_prefix(p)) == eng.expand_prefix(p)
 
 
 @pytest.fixture(scope="module")
 def serving_pair(spark, index_dir):
     """(base, serving) engines over the shared fixture index; serving
-    has the bucket caches + cached stats, base is the distributed plan."""
-    base = SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False)
+    has the cluster-cached bucket doclens, base builds them per query."""
+    base = SearchEngine(spark, index_dir, fast_path=False)
     serv = SearchEngine(
-        spark, index_dir, cache_term_stats=True, fast_path=False,
+        spark, index_dir, fast_path=False,
         persist_doclens=True,
     )
     yield base, serv
@@ -127,11 +131,11 @@ def test_serving_positional_phrase_identical(spark, index_dir, corpus_pdf):
     fully bucket-locally (zero content access) — identical to the
     distributed positional plans on every shape."""
     base = SearchEngine(
-        spark, index_dir, cache_term_stats=True, fast_path=False,
+        spark, index_dir, fast_path=False,
         phrase_via_positions=True,
     )
     serv = SearchEngine(
-        spark, index_dir, cache_term_stats=True, fast_path=False,
+        spark, index_dir, fast_path=False,
         persist_doclens=True, phrase_via_positions=True,
     )
     p = _phrase_from(corpus_pdf)
@@ -176,7 +180,7 @@ def test_serving_phrase_large_verified_set(spark, index_dir, oracle_ix):
     assert len(verified) >= 40
     queries = [f"'{p}' OR merge", f"merge AND '{p}'", f"merge NOT '{p}'"]
     serv = SearchEngine(
-        spark, index_dir, cache_term_stats=True, fast_path=False, persist_doclens=True
+        spark, index_dir, fast_path=False, persist_doclens=True
     )
     for q in [*queries, f"'{p}'", f"merge window '{p}'"]:
         assert _rows(serv, q) == search_rows(q, *oracle_ix), q
@@ -198,7 +202,7 @@ def test_serving_reply_to_leaves(spark, index_dir, oracle_ix):
     where no frame of the query's terms lands — it is visited all the
     same.  Every answer equals the oracle's."""
     postings = oracle_ix[0]
-    serv = SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False)
+    serv = SearchEngine(spark, index_dir, fast_path=False)
     # the rarest term that analyzes to itself, and a doc in a bucket
     # where it has no frame
     rare = min(
@@ -210,9 +214,9 @@ def test_serving_reply_to_leaves(spark, index_dir, oracle_ix):
     edge_rows = [(5, 3), (7, 3), (far, 3), (9, 4)]
     edges = spark.createDataFrame(edge_rows, "src_doc_id long, dst_doc_id long")
     for eng in (
-        SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False, edges=edges),
+        SearchEngine(spark, index_dir, fast_path=False, edges=edges),
         SearchEngine(
-            spark, index_dir, cache_term_stats=True, fast_path=False,
+            spark, index_dir, fast_path=False,
             persist_doclens=True, edges=edges,
         ),
     ):
@@ -228,42 +232,79 @@ def test_serving_reply_to_leaves(spark, index_dir, oracle_ix):
         eng._bucket_doclens.unpersist()
 
 
-# Spark jobs each shape ran on the conftest index when boolean shapes,
-# pages and reply_to-mixed ranked queries without persist_doclens took a
-# decoded-postings join plan (semi/anti joins per leaf): the bound the
-# bucket kernel keeps on an engine with no caches
-JOIN_PLAN_JOBS = {
-    ("search", "merge AND buffer"): 5,
-    ("search", "merg* AND return"): 6,
-    ("search", "merge NOT compress"): 5,
-    ("search", "'characters if' OR merge"): 8,
-    ("search", "merge AND 'characters if'"): 8,
+# Spark jobs each shape runs on the conftest index on an engine without
+# driver doclens, measured once the term dictionary answered prefix
+# expansion and phrase selectivity (the decoded-postings join plan the
+# bucket kernel replaced ran 5, 6, 5, 8, 8, 5, 6, 10, 3, 6)
+BUCKET_PLAN_JOBS = {
+    ("search", "merge AND buffer"): 4,
+    ("search", "merg* AND return"): 4,
+    ("search", "merge NOT compress"): 4,
+    ("search", "'characters if' OR merge"): 6,
+    ("search", "merge AND 'characters if'"): 6,
     ("search", "ReplyTo:3 OR merge"): 5,
-    ("search", "ReplyTo:3 NOT merge"): 6,
-    ("search", "merge window ReplyTo:3"): 10,
-    ("page", "merge AND buffer"): 3,
-    ("page", "merge OR 'characters if'"): 6,
+    ("search", "ReplyTo:3 NOT merge"): 5,
+    ("search", "merge window ReplyTo:3"): 5,
+    ("page", "merge AND buffer"): 2,
+    ("page", "merge OR 'characters if'"): 4,
 }
 
 
-def test_bucket_placement_jobs_per_shape(spark, index_dir):
-    """On an engine with no caches every boolean shape, page and mixed
-    ranked query reports the bucket placement and runs no more Spark
-    jobs (statusTracker job group) than the join plan did."""
+def _group_jobs(spark, gid: str, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by statusTracker job group."""
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_bucket_placement_jobs_per_shape(spark, index_dir):
+    """On an engine without driver doclens every boolean shape, page
+    and mixed ranked query reports the bucket placement and runs no
+    more Spark jobs (statusTracker job group) than its bound."""
     edges = spark.createDataFrame([(5, 3), (7, 3)], "src_doc_id long, dst_doc_id long")
     eng = SearchEngine(spark, index_dir, edges=edges)
-    for i, ((kind, q), bound) in enumerate(JOIN_PLAN_JOBS.items()):
-        gid = f"bucket-jobs-{i}"
-        sc.setJobGroup(gid, gid)
-        try:
-            (eng.search_page if kind == "page" else eng.search)(q, 10).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
+    for i, ((kind, q), bound) in enumerate(BUCKET_PLAN_JOBS.items()):
+        run = eng.search_page if kind == "page" else eng.search
+        jobs = _group_jobs(spark, f"bucket-jobs-{i}", lambda: run(q, 10).collect())
         assert eng.last_trace["placement"] == "bucket", q
-        assert len(tracker.getJobIdsForGroup(gid)) <= bound, (kind, q)
+        assert jobs <= bound, (kind, q)
+
+
+def test_dictionary_work_runs_no_spark_jobs(spark, index_dir):
+    """The term dictionary loads at open, so on a default engine prefix
+    expansion, correcting a query of known terms and choosing a
+    phrase's rare terms run no Spark job."""
+    import time
+
+    eng = SearchEngine(spark, index_dir)
+    # dictionary terms that analyze to themselves (stemming is not
+    # idempotent), so the query is known term by term
+    words = [t for t in sorted(eng.term_stats) if eng._q(t) == [t]][:3]
+    known = " ".join(words)
+    got = {}
+    work = {
+        "prefix": lambda: got.update(prefix=eng.expand_prefix("mer")),
+        "correct": lambda: got.update(correct=eng.correct_query(known)),
+        "rare": lambda: got.update(rare=eng._rare_terms(words)),
+    }
+    for name, fn in work.items():
+        _group_jobs(spark, f"dict-{name}", fn)
+    assert got["prefix"] and len(got["rare"]) == 2
+    assert got["correct"] == known
+    # a control job run afterwards: once the tracker shows it, it has
+    # seen every earlier job (the listener bus delivers in order)
+    tracker = spark.sparkContext.statusTracker()
+    _group_jobs(spark, "dict-control", lambda: spark.range(1).collect())
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("dict-control") and time.time() < deadline:
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup("dict-control")
+    assert {n: len(tracker.getJobIdsForGroup(f"dict-{n}")) for n in work} == dict.fromkeys(work, 0)
 
 
 def test_serving_engine_reload_after_refresh(spark, corpus, tmp_path):
@@ -292,7 +333,7 @@ def test_serving_engine_reload_after_refresh(spark, corpus, tmp_path):
     refresh_index(spark, out, corpus=half1)
 
     eng = SearchEngine(
-        spark, out, cache_term_stats=True, fast_path=False, persist_doclens=True
+        spark, out, fast_path=False, persist_doclens=True
     )
     v1 = eng.version
     old_bucket_cache = eng._bucket_doclens
@@ -309,7 +350,7 @@ def test_serving_engine_reload_after_refresh(spark, corpus, tmp_path):
     assert eng.version == v1 + 1
     assert old_bucket_cache.storageLevel.useMemory is False  # released
     fresh = SearchEngine(
-        spark, out, cache_term_stats=True, fast_path=False, persist_doclens=True
+        spark, out, fast_path=False, persist_doclens=True
     )
     for q in ("merge window", "merge AND buffer", "return NOT merg*"):
         want = [
@@ -359,7 +400,7 @@ def test_doclen_cache_membership_validated(spark, corpus, tmp_path):
     out = str(tmp_path / "idxdrift")
     build_index(spark, corpus, out, slices=2, salt=2, block_size=8)
     eng = SearchEngine(
-        spark, out, cache_term_stats=True, fast_path=False, persist_doclens=True
+        spark, out, fast_path=False, persist_doclens=True
     )
     # simulate docs/postings drift: rebuild the bucket cache with one
     # doc missing from every bucket array
@@ -422,23 +463,24 @@ def test_serving_topk_emission_identical(serving_pair):
 
 
 def test_completions_paths_agree(spark, index_dir):
-    """completions(): the zero-job cached-stats heap and the
-    distributed index-scan plan must return the same (term, cf) top-k,
-    same (cf desc, term asc) order."""
-    fast = SearchEngine(spark, index_dir, cache_term_stats=True)
-    dist = SearchEngine(spark, index_dir)
-    for p, k in (("me", 5), ("pa", 10), ("zzz", 3)):
-        want = [(r.term, r.cf) for r in dist.completions(p, k).collect()]
-        got = [(r.term, r.cf) for r in fast.completions(p, k).collect()]
+    """completions(): the term-dictionary heap returns the (term, cf)
+    top-k of a linear scan over the index rows, in (cf desc, term asc)
+    order."""
+    eng = SearchEngine(spark, index_dir)
+    vocab = _vocab_cf(eng)
+    for p, k in (("me", 5), ("pa", 10), ("zzz", 3), ("", 4)):
+        want = sorted(
+            ((t, cf) for t, cf in vocab.items() if t.startswith(p)),
+            key=lambda r: (-r[1], r[0]),
+        )[:k]
+        got = [(r.term, r.cf) for r in eng.completions(p, k).collect()]
         assert got == want, p
-        # ranking invariant: cf non-increasing, term asc within ties
-        assert want == sorted(want, key=lambda r: (-r[1], r[0]))
 
 
 def test_search_snippets_window(spark, index_dir, corpus_pdf):
     """search_snippets(): window starts 30 chars before the earliest
     term occurrence, 80 chars wide, original-case content."""
-    eng = SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False)
+    eng = SearchEngine(spark, index_dir, fast_path=False)
     w = corpus_pdf.iloc[0].content.split()[2].lower()
     rows = eng.search_snippets(w, k=5).collect()
     assert rows, w
@@ -454,7 +496,7 @@ def test_search_snippets_window(spark, index_dir, corpus_pdf):
 def test_facet_counts_vs_pandas(spark, index_dir, corpus, corpus_pdf):
     """facet_counts(): (value, cnt) over the full boolean result set
     equals a pandas recomputation; ordering (cnt desc, value asc)."""
-    eng = SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False)
+    eng = SearchEngine(spark, index_dir, fast_path=False)
     meta = corpus.withColumn(
         "grp", (F.col("doc_id") % 3).cast("string")
     ).select("doc_id", "grp")
@@ -528,7 +570,7 @@ def test_correct_terms_vs_python_oracle(spark, index_dir):
     """Spell correction == exact python DP over the full vocabulary
     under the (dist asc, cf desc, term asc) rank; known terms correct
     to themselves at distance 0; out-of-budget inputs are absent."""
-    eng = SearchEngine(spark, index_dir, cache_term_stats=True, fast_path=False)
+    eng = SearchEngine(spark, index_dir, fast_path=False)
     vocab = eng.term_stats  # term -> (df, cf)
     # a term whose re-analyzed form is itself (stemming is not
     # idempotent: 'pars' — the stem of 'parse' — re-stems to 'par')
@@ -647,10 +689,10 @@ def test_metadata_scoped_search(spark, corpus, tmp_path):
     build_index(spark, corpus, out, slices=2, salt=2)
     dist = SearchEngine(spark, out)
     serv = SearchEngine(
-        spark, out, cache_term_stats=True, fast_path=False, persist_doclens=True
+        spark, out, fast_path=False, persist_doclens=True
     )
     fast = SearchEngine(
-        spark, out, cache_term_stats=True, cache_doclens=True, fast_path=True
+        spark, out, cache_doclens=True, fast_path=True
     )
     where = "lang = 'py' OR path LIKE '%file_7%'"
     allowed = {
@@ -720,7 +762,7 @@ def test_search_batch_matches_single_queries(spark, corpus, tmp_path):
     out = str(tmp_path / "idx")
     build_index(spark, corpus, out, slices=2, salt=2)
     serv = SearchEngine(
-        spark, out, cache_term_stats=True, fast_path=False, persist_doclens=True
+        spark, out, fast_path=False, persist_doclens=True
     )
     queries = [
         "merge window spark",           # shared kernel
@@ -764,7 +806,7 @@ def test_search_batch_scoped(spark, corpus, tmp_path):
     out = str(tmp_path / "idx")
     build_index(spark, corpus, out, slices=2, salt=2)
     serv = SearchEngine(
-        spark, out, cache_term_stats=True, fast_path=False, persist_doclens=True
+        spark, out, fast_path=False, persist_doclens=True
     )
     where = "lang IN ('py', 'go')"
     queries = ["merge window spark", "return compression", "merge 'value table'"]
@@ -794,7 +836,7 @@ def test_metadata_boost(spark, corpus, tmp_path):
     build_index(spark, corpus, out, slices=2, salt=2)
     dist = SearchEngine(spark, out)
     serv = SearchEngine(
-        spark, out, cache_term_stats=True, fast_path=False, persist_doclens=True
+        spark, out, fast_path=False, persist_doclens=True
     )
     boost = [("lang = 'py'", 2.0), ("repo = 'org/repo1'", 1.5)]
     fac = {
@@ -858,117 +900,6 @@ def test_metadata_boost(spark, corpus, tmp_path):
 
     serv._doclens_cluster.unpersist()
     serv._bucket_doclens.unpersist()
-
-
-def test_frame_cache_parity_and_lru(spark, corpus, tmp_path, monkeypatch):
-    """Executor-local decoded-frame cache (frame_cache=True): results
-    identical to the uncached engine on first AND repeated execution
-    (the repeat exercises the worker-side hit path), a refresh+reload
-    bumps the snapshot version in the key so stale postings are never
-    served, and the in-process LRU respects its byte budget with
-    oldest-first eviction."""
-    from informationretrieval_en_people_cn_spark.plans import kernel as kernel_mod
-    from informationretrieval_en_people_cn_spark.streaming.incremental import (
-        CORPUS_SCHEMA,
-        incremental_index,
-        refresh_index,
-    )
-
-    in_dir = str(tmp_path / "incoming")
-    out = str(tmp_path / "fcidx")
-    half1 = corpus.filter(F.col("doc_id") % 2 == 0)
-    half2 = corpus.filter(F.col("doc_id") % 2 == 1)
-    half1.write.mode("append").parquet(in_dir)
-    assert incremental_index(
-        spark.readStream.schema(CORPUS_SCHEMA).parquet(in_dir),
-        out, lo=0, span=1 << 62, buckets=8,
-    ).awaitTermination(120)
-    refresh_index(spark, out, corpus=half1)
-
-    plain = SearchEngine(
-        spark, out, cache_term_stats=True, fast_path=False, persist_doclens=True
-    )
-    cached = SearchEngine(
-        spark, out, cache_term_stats=True, fast_path=False,
-        persist_doclens=True, frame_cache=True,
-    )
-    qs = ["merge window", "return merge compression", "merge window spark"]
-    for q in qs:
-        want = [(r.doc_id, r.score) for r in plain.search(q, 10).collect()]
-        assert [
-            (r.doc_id, r.score) for r in cached.search(q, 10).collect()
-        ] == want, q        # cold (miss path)
-        assert [
-            (r.doc_id, r.score) for r in cached.search(q, 10).collect()
-        ] == want, q        # warm (hit path)
-    # batch kernel through the cache too
-    got = {}
-    for r in cached.search_batch(qs, k=10).collect():
-        got.setdefault(r.qid, []).append((r.doc_id, r.score))
-    for i, q in enumerate(qs):
-        assert got[i] == [
-            (r.doc_id, r.score) for r in plain.search(q, 10).collect()
-        ], q
-    # boolean / phrase / paged serving kernels through the cache too
-    for q in ("merge AND window", "merge NOT window", "'merge window'",
-              "merge window 'value table'"):
-        want = [
-            (r.doc_id, getattr(r, "score", None))
-            for r in plain.search(q, 10).collect()
-        ]
-        for _ in range(2):  # cold then warm
-            assert [
-                (r.doc_id, getattr(r, "score", None))
-                for r in cached.search(q, 10).collect()
-            ] == want, q
-    assert [
-        r.doc_id for r in cached.search_page("merge OR window", 25).collect()
-    ] == [r.doc_id for r in plain.search_page("merge OR window", 25).collect()]
-
-    # refresh invalidates by VERSION KEY: reload() then equality with a
-    # fresh uncached engine over the bigger corpus
-    half2.write.mode("append").parquet(in_dir)
-    assert incremental_index(
-        spark.readStream.schema(CORPUS_SCHEMA).parquet(in_dir),
-        out, lo=0, span=1 << 62, buckets=8,
-    ).awaitTermination(120)
-    refresh_index(spark, out, corpus=corpus)
-    assert cached.reload() is True
-    fresh = SearchEngine(spark, out)
-    for q in qs:
-        assert [
-            (r.doc_id, r.score) for r in cached.search(q, 10).collect()
-        ] == [(r.doc_id, r.score) for r in fresh.search(q, 10).collect()], q
-
-    # in-process LRU semantics: budget respected, oldest evicted first
-    monkeypatch.setenv("IR_FRAME_CACHE_MB", "0")  # 0 MB -> never stores
-    kernel_mod._FRAME_CACHE.clear()
-    kernel_mod._FRAME_CACHE_BYTES[0] = 0
-    import numpy as np
-    from informationretrieval_en_people_cn_spark.functions.codec import (
-        encode_frame,
-    )
-    blob = encode_frame(np.array([1, 5]), np.array([2, 1]))
-    d, t, _ = kernel_mod._cached_decode(("idx", 1), "merge", 3, blob)
-    assert list(d) == [1, 5] and list(t) == [2, 1]
-    assert len(kernel_mod._FRAME_CACHE) == 0          # over budget: not stored
-    monkeypatch.setenv("IR_FRAME_CACHE_MB", "256")
-    d2, _, _ = kernel_mod._cached_decode(("idx", 1), "merge", 3, blob)
-    assert list(d2) == [1, 5] and len(kernel_mod._FRAME_CACHE) == 1
-    assert not d2.flags.writeable                   # shared -> read-only
-    d3, _, _ = kernel_mod._cached_decode(("idx", 1), "merge", 3, blob)
-    assert d3 is d2                                 # hit returns same arrays
-    assert kernel_mod._FRAME_CACHE_STATS["hits"] >= 1
-    # content-addressed: same (term, bucket), different bytes -> new key
-    blob2 = encode_frame(np.array([2, 9]), np.array([1, 1]))
-    d4, _, _ = kernel_mod._cached_decode(("idx", 1), "merge", 3, blob2)
-    assert list(d4) == [2, 9] and len(kernel_mod._FRAME_CACHE) == 2
-    kernel_mod._FRAME_CACHE.clear()
-    kernel_mod._FRAME_CACHE_BYTES[0] = 0
-
-    for e in (plain, cached):
-        e._doclens_cluster.unpersist()
-        e._bucket_doclens.unpersist()
 
 
 def test_cli_serving_flags(spark, corpus, tmp_path):
@@ -1040,10 +971,10 @@ def test_randomized_cross_plan_parity(spark, corpus, corpus_pdf, tmp_path):
     build_index(spark, corpus, out, slices=2, salt=2)
     dist = SearchEngine(spark, out)
     serv = SearchEngine(
-        spark, out, cache_term_stats=True, fast_path=False, persist_doclens=True
+        spark, out, fast_path=False, persist_doclens=True
     )
     fast = SearchEngine(
-        spark, out, cache_term_stats=True, cache_doclens=True, fast_path=True
+        spark, out, cache_doclens=True, fast_path=True
     )
     bm = SearchEngine(spark, out, use_blockmax=True)
     postings, doclen, stats = build_oracle_index(corpus_pdf)

@@ -68,13 +68,13 @@ def test_sf01_serving_parity_all_shapes(spark, sf01_index):
     """serving == distributed == fast path, per shape, at sf0.1."""
     from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
 
-    dist = SearchEngine(spark, sf01_index, cache_term_stats=True, fast_path=False)
+    dist = SearchEngine(spark, sf01_index, fast_path=False)
     fast = SearchEngine(
-        spark, sf01_index, cache_term_stats=True, cache_doclens=True,
+        spark, sf01_index, cache_doclens=True,
         cache_content=True,
     )
     serv = SearchEngine(
-        spark, sf01_index, cache_term_stats=True, fast_path=False,
+        spark, sf01_index, fast_path=False,
         persist_doclens=True,
     )
     for q in SHAPES:
@@ -90,11 +90,11 @@ def test_sf01_positional_serving_parity(spark, sf01_index):
     from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
 
     base = SearchEngine(
-        spark, sf01_index, cache_term_stats=True, fast_path=False,
+        spark, sf01_index, fast_path=False,
         phrase_via_positions=True,
     )
     serv = SearchEngine(
-        spark, sf01_index, cache_term_stats=True, fast_path=False,
+        spark, sf01_index, fast_path=False,
         persist_doclens=True, phrase_via_positions=True,
     )
     for q in ("'value table'", "merge window 'value table'", "'value ta'*"):
