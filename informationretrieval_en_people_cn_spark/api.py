@@ -793,11 +793,11 @@ def q_search_engine_topk_unstemmed(spark, sf_dir):
 
 
 def q_phrase_bucketed(spark, sf_dir):
-    """Serving-mode phrase plan VALUE-CHECKED (round 5): candidate
-    intersection of the rarest phrase terms runs bucket-locally over
-    compressed frames (plans/engine.py phrase_docids_bucketed), then
-    the df-routed substring verify.  Same oracle as `phrase` — the
-    serving plan must be result-identical to the distributed one."""
+    """Serving-mode phrase plan VALUE-CHECKED (round 5): the bucket
+    kernel's substring leaf (plans/engine.py phrase_docids_bucketed)
+    intersects the rarest phrase terms' compressed frames with the
+    needle's content hits in each bucket.  Same oracle as `phrase` —
+    the serving plan must be result-identical to the distributed one."""
     from .plans.engine import SearchEngine
 
     eng = SearchEngine(

@@ -20,7 +20,7 @@ records which placement served a query and why:
 * **bucket** (every other query, ranked, boolean or paged): only the
   query terms' compressed frames move, grouped by doc-range bucket with
   the (bucket, doc_id) rows of each id leaf (a substring phrase's
-  verified docs, a reply_to's sources); the kernel evaluates the
+  content hits, a reply_to's sources); the kernel evaluates the
   OR-of-ANDs set algebra per bucket; a ranked query's frames meet the
   per-bucket doclen arrays (a broadcast join for keyword queries), so
   the kernel scores each bucket and emits its exact local top-k, which
@@ -31,10 +31,18 @@ records which placement served a query and why:
   (:func:`.kernel.bucket_upper_bounds`) can reach the k-th score of the
   most promising bucket — the one block-max WAND.
 
+A substring phrase is one kernel leaf on every placement, ``("substring",
+rare terms, id leaf)``: the docs holding its ≤ 2 rarest terms whose
+lowercased content holds the needle (the reference's rule,
+SearchEngine.py:169-207).  The id leaf is the needle's content hits,
+grouped by bucket beside the frames or folded into the fast path's
+collect.
+
 Every engine loads the term dictionary (term → df, cf) and its sorted
 vocabulary at open — the reference's in-memory seek list (the DAWG's
 ``keys(prefix)``, SearchEngine.py:210) — so prefix expansion,
-completions, stop terms, phrase selectivity and idf run no Spark job.
+completions, stop terms, phrase selectivity, idf and spell-correction
+candidates run no index scan.
 """
 
 from __future__ import annotations
@@ -54,7 +62,6 @@ from .kernel import (
     _EMPTY_IDS,
     _bind_ids,
     _eval_bucket_tree,
-    _intersect_terms,
     _pos_terms,
     bm25_idf,
     bucket_upper_bounds,
@@ -63,21 +70,10 @@ from .kernel import (
     surviving_buckets,
 )
 
-# the Spark plans' substring-phrase verify (SearchEngine._verify)
-# collects the candidates and scans their content through a pushed-down
-# doc_id IN-list while the rarest phrase term's df (which bounds the
-# candidates) is at most this; above it the candidates meet the whole
-# content table (broadcast or joined)
-_VERIFY_IN_MAX = 1000
-
 # the driver fast path's Σdf budget: a query whose terms hold more
 # postings (or a phrase needle with more content hits) takes the bucket
 # plan
 FAST_MAX_POSTINGS = 5_000_000
-
-# cache_content loads the lowercased content only while its total
-# length is at most this many chars (checked before the collect)
-CONTENT_CACHE_MAX_BYTES = 256 << 20
 
 _SQL_WORD = re.compile(r"[a-z0-9_]+")
 
@@ -139,9 +135,11 @@ class SearchEngine:
         at_version: int | None = None,
         frame_cache: bool = False,
     ):
-        """``cache_term_stats`` and ``frame_cache`` are accepted and
-        ignored: every engine loads the term dictionary, and every frame
-        decodes in one :func:`.codec.decode_many` pass."""
+        """``cache_term_stats``, ``cache_content`` and ``frame_cache`` are
+        accepted and ignored: every engine loads the term dictionary,
+        every substring phrase checks the needle hits of one content
+        scan, and every frame decodes in one :func:`.codec.decode_many`
+        pass."""
         self.spark = spark
         self.index_dir = index_dir
         self.use_stemmer = use_stemmer
@@ -170,7 +168,6 @@ class SearchEngine:
         # caches against a new snapshot
         self._corpus = corpus
         self._cache_doclens = cache_doclens
-        self._cache_content = cache_content
         self._fast_path_req = fast_path
         self._persist_doclens = persist_doclens
         # time travel: pin every query to a historical snapshot
@@ -229,38 +226,27 @@ class SearchEngine:
         # dictionary question (prefix, completion, stop term, phrase
         # selectivity, idf) costs a Spark job.  |vocab| must fit the
         # driver — the reference keeps the same seek list in memory.
-        self.term_stats: dict[str, tuple[int, int]] = {
-            r.term: (r.df, r.cf)
-            for r in self.index.groupBy("term")
+        # Both driver tables arrive as Arrow columns, not Row objects.
+        ts = (
+            self.index.groupBy("term")
             .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-            .collect()
-        }
+            .toArrow()
+        )
+        df_cf = zip(*(ts.column(c).to_numpy().tolist() for c in ("df", "cf")))
+        self.term_stats: dict[str, tuple[int, int]] = dict(
+            zip(ts.column("term").to_pylist(), df_cf)
+        )
         self._term_arr: list[str] = sorted(self.term_stats)
         # optional driver-side doclen arrays (sorted ids + lengths): they
         # enable the driver fast path.  Opt in while n_docs fits.
         self._doclen_ids: np.ndarray | None = None
         self._doclen_vals: np.ndarray | None = None
         if self._cache_doclens:
-            rows = self.docs.select("doc_id", "doclen").collect()
-            ids = np.array([r.doc_id for r in rows], dtype=np.int64)
-            vals = np.array([r.doclen for r in rows], dtype=np.int64)
+            dl = self.docs.select("doc_id", "doclen").toArrow()
+            ids = dl.column("doc_id").to_numpy().astype(np.int64)
             order = np.argsort(ids)
             self._doclen_ids = ids[order]
-            self._doclen_vals = vals[order].astype(np.float64)
-        # optional driver-side document store (lowercased content) for
-        # zero-job phrase verification.  Guarded by a byte budget checked
-        # BEFORE the collect (one tiny agg job at init); over budget the
-        # cache stays off and phrase-verify keeps its pruned-scan job.
-        self._content_cache: dict[int, str] | None = None
-        if self._cache_content and self.content_df is not None:
-            total = self.content_df.agg(
-                F.sum(F.length("content")).alias("b")
-            ).collect()[0].b
-            if total is not None and total <= CONTENT_CACHE_MAX_BYTES:
-                self._content_cache = {
-                    r.doc_id: (r.content or "").lower()
-                    for r in self.content_df.collect()
-                }
+            self._doclen_vals = dl.column("doclen").to_numpy()[order].astype(np.float64)
         # fast path: evaluate small queries driver-side over the decoded
         # (pruned) postings — the reference's own execution model, kept
         # behind a Σdf budget; the bucket plan is always the fallback
@@ -282,7 +268,7 @@ class SearchEngine:
         """Re-resolve the snapshot pointer; when ``refresh_index`` has
         committed a newer version, swap the table handles and rebuild
         the term dictionary and every cache this engine was configured
-        with (driver doclens, content cache, serving bucket arrays),
+        with (driver doclens, serving bucket arrays),
         unpersisting the superseded cluster caches.  Returns True if a
         new snapshot was loaded, False if already current.
 
@@ -384,31 +370,6 @@ class SearchEngine:
             )
         return self.content_df
 
-    def _verify(self, cand: DataFrame, min_df: int, needle: str) -> DataFrame:
-        """doc_ids of the candidate relation ``cand`` whose lowercased
-        content holds ``needle`` — the one substring verify of the
-        Spark plans, its scan routed by the rarest phrase term's df
-        (which bounds |cand|):
-
-        * ≤ ``_VERIFY_IN_MAX``: collect the candidates and scan through
-          a doc_id IN-list that pushes into the doc_id-sorted parquet
-          (file/row-group pruning) — no content shuffle, no join;
-        * ≤ 2 000 000: broadcast the candidates, so the content table
-          is scanned once and never shuffled;
-        * above (Zipf-head phrase terms): a plain join, AQE picks the
-          strategy."""
-        store = self._content_store()
-        if min_df <= _VERIFY_IN_MAX:
-            ids = [int(r.doc_id) for r in cand.collect()]
-            if not ids:
-                return self.docs.limit(0).select("doc_id")
-            store = store.filter(_in_list("doc_id", ids))
-        elif min_df <= 2_000_000:
-            store = store.join(F.broadcast(cand), "doc_id")
-        else:
-            store = cand.join(store, "doc_id")
-        return store.filter(_contains(needle)).select("doc_id")
-
     def phrase_docids_positional(self, phrase: str) -> DataFrame:
         """TRUE positional phrase matching from the stored position
         lists — the capability the reference indexes for but never uses
@@ -462,16 +423,16 @@ class SearchEngine:
         )
 
     def _serving_leaf(self, leaf: qt.Leaf) -> tuple[tuple, set]:
-        """Compile one query leaf for the bucket-local kernels.
+        """Compile one query leaf for the bucket kernel.
 
         Returns ``(spec, frame_terms)`` where spec is one of
         ``("terms", [t...])`` (keyword / prefix / degenerate phrase),
         ``("pos_phrase", seq, sfx_terms|None)`` (positional phrase
-        matching, phrase_via_positions=True), or ``("rel", relation)``:
-        the (bucket, doc_id) rows of a substring-verified phrase
-        (:meth:`_phrase_bucketed`) or of a reply_to's sources, which the
-        bucket plans group by bucket beside the frames
-        (:meth:`_frames_by_bucket`)."""
+        matching, phrase_via_positions=True), ``("substring", rare
+        terms, ("rel", needle))`` (a substring phrase: its ≤ 2 rarest
+        terms and its lowercased needle) or ``("rel", relation)``: the
+        (bucket, doc_id) rows of a reply_to's sources.  A ``rel`` is an
+        id source, lowered to a slot by :meth:`_compile_tree`."""
         if leaf.kind == "keyword":
             t = self._q(leaf.value)
             return ("terms", t), set(t)
@@ -494,54 +455,59 @@ class SearchEngine:
                 return ("terms", []), set()
             ft = set(seq) | set(sfx_terms or ())
             return ("pos_phrase", seq, sfx_terms), ft
-        rare = self._rare_terms(seq)
-        if not rare:  # a phrase term outside the index: no match
+        return self._substring_leaf(leaf)
+
+    def _substring_leaf(self, leaf: qt.Leaf) -> tuple[tuple, set]:
+        """A phrase leaf's substring spec: its ≤ 2 rarest terms and its
+        lowercased needle ``'{value} {suffix}'``; a phrase term outside
+        the index (or no term at all) matches nothing."""
+        rare = sorted(self._rare_terms(self._q(leaf.value)))
+        if not rare:
             return ("terms", []), set()
-        needle = f"{leaf.value} {sfx}".strip().lower()
-        return ("rel", self._phrase_bucketed(rare, needle)), set()
+        needle = f"{leaf.value} {leaf.suffix}".strip().lower()
+        return ("substring", rare, ("rel", needle)), set(rare)
 
     def _driver_leaf(self, leaf: qt.Leaf) -> tuple[tuple, set]:
         """Compile one query leaf for the driver's virtual bucket
-        (bucket 0): reply_to resolves to an id set and a substring
-        phrase to a ``("substring", needle, rare terms)`` spec verified
-        on the driver (:meth:`_phrase_ids_fast`); every other leaf
-        compiles as for the bucket plans."""
+        (bucket 0): reply_to resolves to an id set; every other leaf
+        compiles as for the bucket kernel."""
         if leaf.kind == "reply_to":
             rows = self.reply_to_docids(leaf.value).collect()
             ids = np.array(sorted(r.doc_id for r in rows), dtype=np.int64)
             return ("ids", {0: ids}), set()
-        if leaf.kind in _PHRASES and self._q(leaf.value):
-            # resolved to ("ids", ...) by _search_fast once the rare
-            # terms' frames are collected with the rest of the query's
-            sfx = leaf.suffix if leaf.kind == "phrase_prefix" else ""
-            rare = self._rare_terms(self._q(leaf.value))
-            needle = f"{leaf.value} {sfx}".strip().lower()
-            return ("substring", needle, rare), set(rare)
         return self._serving_leaf(leaf)
 
     def _compile_tree(self, node, compile_leaf) -> tuple[list, set[str], list]:
         """Lower a parse tree to the kernel's OR-of-ANDs leaf specs +
-        the index terms whose frames the kernel needs + the id
-        relations: each ``("rel", relation)`` leaf becomes ``("slot",
-        j)`` over ``relations[j]``, bound per bucket by
-        :func:`_bind_ids`.  A ranked query's leaves become one
-        single-leaf group each (its candidates are the union of the
-        leaves)."""
+        the index terms whose frames the kernel needs + the id sources:
+        each ``("rel", source)`` spec, also a substring leaf's id leaf,
+        becomes ``("slot", j)`` over ``sources[j]`` (one slot per
+        distinct needle), bound per bucket by :func:`_bind_ids`.  A
+        source is a (bucket, doc_id) relation or a needle, whose content
+        hits are one.  A ranked query's leaves become one single-leaf
+        group each (its candidates are the union of the leaves)."""
         if isinstance(node, qt.OrNode):
             groups = [and_node.children for and_node in node.children]
         else:
             groups = [[c] for c in node.children]
         tree: list[list[tuple[tuple, bool]]] = []
         frame_terms: set[str] = set()
-        rels: list[DataFrame] = []
+        rels: list = []
+
+        def lower(spec):
+            if spec[0] == "substring":
+                return (*spec[:2], lower(spec[2]))
+            if spec[0] != "rel":
+                return spec
+            if spec[1] not in rels:
+                rels.append(spec[1])
+            return ("slot", rels.index(spec[1]))
+
         for children in groups:
             leaves = []
             for c in children:
                 spec, ft = compile_leaf(c)
-                if spec[0] == "rel":
-                    rels.append(spec[1])
-                    spec = ("slot", len(rels) - 1)
-                leaves.append((spec, c.negated))
+                leaves.append((lower(spec), c.negated))
                 frame_terms.update(ft)
             # positives first (the parser guarantees at least one)
             leaves.sort(key=lambda x: x[1])
@@ -553,14 +519,15 @@ class SearchEngine:
         terms,
         min_bucket: int | None = None,
         buckets: list[int] | None = None,
-        id_rels: list[DataFrame] = (),
+        id_rels: list = (),
     ) -> DataFrame:
         """(bucket, frames[, id_slot, id_doc]): the terms' compressed
         frames grouped by doc-range bucket — the only index rows a
         bucket-local plan shuffles.  With ``id_rels`` the (bucket,
-        doc_id) rows of each id relation j join the same groups as
-        ``(j, doc_id)`` pairs, sorted and distinct, so a bucket holding
-        ids is visited even when no frame lands there."""
+        doc_id) rows of each id source j (:meth:`_compile_tree`; a
+        needle's rows are the content scan's hits) join the same groups
+        as ``(j, doc_id)`` pairs, sorted and distinct, so a bucket
+        holding ids is visited even when no frame lands there."""
         frame = F.struct("term", "postings")
         rows = self._index_rows(sorted(terms)).select("bucket", "term", "postings")
         aggs = []
@@ -568,6 +535,10 @@ class SearchEngine:
             rows = rows.select("*", F.lit(None).cast("int").alias("slot"),
                                F.lit(None).cast("long").alias("doc_id"))
             for j, rel in enumerate(id_rels):
+                if isinstance(rel, str):
+                    rel = self._content_store().filter(_contains(rel)).select(
+                        self._bexpr().alias("bucket"), "doc_id"
+                    )
                 rows = rows.unionByName(rel.select(
                     F.col("bucket").cast("int"), F.lit(None).cast("string").alias("term"),
                     F.lit(None).cast("binary").alias("postings"),
@@ -590,7 +561,7 @@ class SearchEngine:
         self,
         tree: list,
         frame_terms: set[str],
-        id_rels: list[DataFrame] = (),
+        id_rels: list = (),
         after: int | None = None,
         cap: int | None = None,
         min_bucket: int | None = None,
@@ -647,20 +618,9 @@ class SearchEngine:
         AND = intersect, NOT = setdiff, OR = union, keyword = union of
         its analyzed terms' postings, prefix = union of its dictionary
         expansion, phrase = positional in-bucket match
-        (phrase_via_positions) or substring-verified ids grouped by
-        bucket, reply_to = its sources grouped by bucket.  Only the
-        leaves' compressed frames and id rows shuffle."""
-        # single positive substring-phrase leaf: the standalone bucketed
-        # phrase plan answers in one candidate job + one verify scan
-        if (
-            not self.phrase_via_positions
-            and len(node.children) == 1
-            and len(node.children[0].children) == 1
-        ):
-            c = node.children[0].children[0]
-            if c.kind in _PHRASES and self._q(c.value):
-                sfx = c.suffix if c.kind == "phrase_prefix" else ""
-                return self.phrase_docids_bucketed(c.value, sfx).select("doc_id")
+        (phrase_via_positions) or the rare terms' docs among the
+        needle's content hits, reply_to = its sources grouped by bucket.
+        Only the leaves' compressed frames and id rows shuffle."""
         return self._bucketed_eval(*self._compile_tree(node, self._serving_leaf))
 
     def _bucket_of(self, doc_id: int) -> int:
@@ -672,23 +632,15 @@ class SearchEngine:
 
     def phrase_docids_bucketed(self, phrase: str, suffix: str = "") -> DataFrame:
         """(bucket, doc_id) of the docs whose lowercased content holds
-        ``'{phrase} {suffix}'`` (the reference's substring semantics):
-        candidate generation is bucket-local (compressed frames only),
-        then the df-routed :meth:`_verify`.  A phrase that analyzes to
-        no term, or holds a term outside the index, matches nothing
-        here."""
-        rare = self._rare_terms(self._q(phrase))
-        if not rare:
-            return _local_df(self.spark, [], "bucket int, doc_id long")
-        return self._phrase_bucketed(rare, f"{phrase} {suffix}".strip().lower())
-
-    def _phrase_bucketed(self, rare: dict[str, int], needle: str) -> DataFrame:
-        """(bucket, doc_id) of the docs holding every ``rare`` term and
-        ``needle``: the rare terms' posting sets intersect bucket-locally
-        (only their compressed frames shuffle), then :meth:`_verify`."""
-        cand = self._bucketed_eval([[(("terms", [t]), False) for t in rare]], set(rare))
-        ver = self._verify(cand, min(rare.values()), needle)
-        return ver.select(self._bexpr().alias("bucket"), "doc_id")
+        ``'{phrase} {suffix}'`` (the reference's substring semantics),
+        by the bucket kernel's substring leaf: the rare terms' frames and
+        the needle's content hits meet in their buckets.  A phrase that
+        analyzes to no term, or holds a term outside the index, matches
+        nothing here."""
+        leaf = qt.Leaf("phrase_prefix", phrase, suffix=suffix)
+        node = qt.OrNode([qt.AndNode([leaf])])
+        ids = self._bucketed_eval(*self._compile_tree(node, self._substring_leaf))
+        return ids.select(self._bexpr().alias("bucket"), "doc_id")
 
     def _rare_terms(self, terms: list[str]) -> dict[str, int]:
         """The (≤2) lowest-df distinct ``terms`` → their df, rarest
@@ -745,9 +697,9 @@ class SearchEngine:
         index's own vocabulary, weighted by how often the candidate
         actually occurs in the corpus.
 
-        Plan (100 TB shape): the term dictionary aggregates from the
-        index's (term, cf) rows — metadata-scale, one partial-agg
-        shuffle; the tiny input list broadcasts into a nested-loop join
+        Plan: the vocabulary side is the driver term dictionary
+        (:attr:`term_stats`) as a local relation — no index scan; the
+        tiny input list broadcasts into a nested-loop join
         whose ``|length(term) - length(input)| <= max_dist`` predicate
         prunes candidates before the JVM ``levenshtein`` runs (edit
         distance can never beat a length gap); one row per input
@@ -759,7 +711,10 @@ class SearchEngine:
         inp = _local_df(self.spark, 
             [(t,) for t in sorted(set(inputs))], "input string"
         )
-        vocab = self.index.groupBy("term").agg(F.sum("cf").alias("cf"))
+        vocab = _local_df(
+            self.spark, [(t, cf) for t, (_, cf) in self.term_stats.items()],
+            "term string, cf long",
+        )
         cand = (
             vocab.join(
                 F.broadcast(inp),
@@ -774,7 +729,7 @@ class SearchEngine:
         return (
             cand.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
-            .select("input", "term", "dist", F.col("cf").cast("long").alias("cf"))
+            .select("input", "term", "dist", "cf")
         )
 
     def correct_query(self, query: str, max_dist: int = 2) -> str:
@@ -946,7 +901,7 @@ class SearchEngine:
         where=None,
         boost=None,
         frame_terms: set[str] = frozenset(),
-        id_rels: list[DataFrame] = (),
+        id_rels: list = (),
         buckets: list[int] | None = None,
     ) -> DataFrame:
         """Bucket-local DAAT — the one BM25 plan, for one query or a
@@ -963,7 +918,7 @@ class SearchEngine:
         and runs :func:`.kernel.score_bucket` for every query ``(qid,
         sorted scoring terms, tree | None)``, emitting each query's
         exact local top-k (O(k × buckets) rows cross Arrow, not
-        O(touched docs)).  ``id_rels`` are the trees' id relations
+        O(touched docs)).  ``id_rels`` are the trees' id sources
         (:meth:`_frames_by_bucket`); with them the frames LEFT-join the
         doclen arrays, so an id outside every doc bucket still scores
         0.0.  ``buckets`` restricts the plan to those grid buckets
@@ -1187,18 +1142,18 @@ class SearchEngine:
     # execution model — decode on the driver, run the bucket kernel over
     # one virtual bucket — answers in ONE Spark action: the pruned index
     # scan, plus one content scan per substring-phrase needle in the same
-    # UNION ALL (none with the driver content cache).  Results are
-    # identical (tested per shape); over the budget the bucket plan, the
-    # scale path, answers.
+    # UNION ALL.  Results are identical (tested per shape); over the
+    # budget the bucket plan, the scale path, answers.
 
     def _postings_arrays(
         self, terms, needles=()
-    ) -> tuple[_BucketFrames, dict[str, np.ndarray]]:
+    ) -> tuple[_BucketFrames, np.ndarray | None, np.ndarray | None]:
         """The terms' frames, collected to the driver in ONE pruned scan
         as Arrow and decoded as one virtual bucket from its binary
-        buffers, + the sorted ids of the docs whose lowercased content
-        holds each of ``needles`` — each needle's content scan is UNION
-        ALL'd into the same action (the rows with a ``hit``).
+        buffers, + the ``(slot, doc_id)`` pairs (None without needles)
+        of the docs whose lowercased content holds needle ``slot`` —
+        each needle's content scan is UNION ALL'd into the same action
+        (the rows with a ``hit``).
         Raises :class:`_FastFallback` when the terms' Σdf exceeds
         ``budget`` (:data:`FAST_MAX_POSTINGS`), or a needle's hits may:
         each needle branch keeps at most ``cap = budget // #content
@@ -1212,7 +1167,7 @@ class SearchEngine:
         if sum_df > budget:
             raise _FastFallback(f"Σdf {sum_df} over FAST_MAX_POSTINGS {budget}")
         if not uniq:
-            return _BucketFrames([]), {}
+            return _BucketFrames([]), None, None
         rows = self._index_rows(uniq).select("term", "postings")
         if needles:
             store = self._content_store()
@@ -1229,67 +1184,40 @@ class SearchEngine:
                     )
                 )
         table = rows.toArrow()
-        hits = {}
+        slot = doc = None
         if needles:
             found = table.filter(table.column("hit").is_valid())
             by = found.column("term").to_numpy(zero_copy_only=False)
             ids = found.column("hit").to_numpy()
-            for nd in needles:
-                hits[nd] = np.unique(ids[by == nd])
-                if hits[nd].size >= cap:
+            hits = [np.unique(ids[by == nd]) for nd in needles]
+            for nd, h in zip(needles, hits):
+                if h.size >= cap:
                     raise _FastFallback(f"phrase {nd!r} hits over FAST_MAX_POSTINGS {budget}")
-        return _BucketFrames.from_arrow(table), hits
-
-    def _phrase_ids_fast(
-        self, bf: _BucketFrames, spec: tuple, hits: dict[str, np.ndarray]
-    ) -> np.ndarray:
-        """Driver-verified ids (sorted) of a ``("substring", needle,
-        rare)`` leaf (:meth:`_driver_leaf`): the rare terms' collected
-        postings intersect, then the literal substring check — the
-        needle's content ``hits`` collected with the frames, or the
-        driver content cache (same semantics as
-        ``contains(lower(content), needle)``)."""
-        _, needle, rare = spec
-        cand = _intersect_terms(bf, rare)
-        if cand.size == 0:
-            return _EMPTY_IDS
-        if needle in hits:
-            return np.intersect1d(cand, hits[needle])
-        return cand[[needle in self._content_cache.get(int(d), "") for d in cand]]
+            slot = np.repeat(np.arange(len(hits)), [h.size for h in hits])
+            doc = np.concatenate(hits)
+        return _BucketFrames.from_arrow(table), slot, doc
 
     def _search_fast(self, node, query: str, k: int) -> DataFrame | None:
         """The kernel over one virtual bucket (bucket 0): its frames are
         the postings :meth:`_postings_arrays` collected for every term
-        the query reads, its doclen arrays the driver doclen cache.
+        the query reads, its doclen arrays the driver doclen cache, and
+        its id sources the needles' hits folded into the same collect.
         None over the Σdf budget (recorded in :attr:`last_trace`)."""
         ranked = isinstance(node, qt.RankedNode)
         terms = self._query_terms(query) if ranked else []
-        tree, frame_terms = None, set()
+        tree, frame_terms, needles = None, set(), []
         if not ranked or any(leaf.kind != "keyword" for leaf in node.children):
-            tree, frame_terms, _ = self._compile_tree(node, self._driver_leaf)
-        subs = [sp for leaves in tree or () for sp, _ in leaves if sp[0] == "substring"]
-        cached = self._content_cache is not None
-        # a leaf with no rare terms matches nothing: no content scan
-        needles = [] if cached else sorted({sp[1] for sp in subs if sp[2]})
+            tree, frame_terms, needles = self._compile_tree(node, self._driver_leaf)
         try:
-            bf, hits = self._postings_arrays(set(terms) | frame_terms, needles)
+            bf, slot, doc = self._postings_arrays(set(terms) | frame_terms, needles)
         except _FastFallback as e:
             self._trace("bucket", str(e))
             return None
         self._trace("fast", f"Σdf within FAST_MAX_POSTINGS {FAST_MAX_POSTINGS}")
         self.last_trace.update(frames=bf.n_frames, postings=bf.n_postings)
-        if subs:
-            self.last_trace["verify"] = "content-cache" if cached else "folded"
-        if tree is not None:
-            tree = [
-                [
-                    (("ids", {0: self._phrase_ids_fast(bf, spec, hits)}), neg)
-                    if spec[0] == "substring"
-                    else (spec, neg)
-                    for spec, neg in leaves
-                ]
-                for leaves in tree
-            ]
+        if needles:
+            self.last_trace["verify"] = "folded"
+        tree = _bind_ids(tree, 0, slot, doc)
         if not ranked:
             ids = _eval_bucket_tree(bf, tree, 0)
             return _local_df(self.spark, [(x,) for x in ids.tolist()], "doc_id long")

@@ -288,34 +288,42 @@ def _leaf_bucket_ids(bf: _BucketFrames, spec: tuple, bucket: int) -> np.ndarray:
         return bf.union_ids(spec[1])
     if kind == "ids":  # ids resolved before the kernel runs, per bucket
         return spec[1].get(bucket, _EMPTY_IDS)
+    if kind == "substring":  # the rare terms' docs among the needle hits
+        cand = _intersect_terms(bf, spec[1])
+        return cand[_sorted_member(cand, _leaf_bucket_ids(bf, spec[2], bucket))]
     if kind == "pos_phrase":
         return _pos_phrase_bucket_ids(bf, spec[1], spec[2])
     raise ValueError(kind)
 
 
 def _bind_ids(tree: list | None, bucket: int, slot, doc) -> list | None:
-    """``tree`` with each ``("slot", j)`` leaf bound to this bucket's
-    ids of id relation j, as ``("ids", {bucket: ids})``: ``slot`` /
-    ``doc`` are the bucket's ``(j, doc_id)`` pairs, sorted (None: the
-    plan has no id relation)."""
+    """``tree`` with each ``("slot", j)`` leaf, also a substring leaf's
+    id leaf, bound to this bucket's ids of id relation j, as ``("ids",
+    {bucket: ids})``: ``slot`` / ``doc`` are the bucket's ``(j,
+    doc_id)`` pairs, sorted (None: the plan has no id relation)."""
     if tree is None or slot is None:
         return tree
     slot = np.asarray(slot, dtype=np.int64)
     doc = np.asarray(doc, dtype=np.int64)
-    return [
-        [
-            (("ids", {bucket: doc[slot == spec[1]]}) if spec[0] == "slot" else spec, neg)
-            for spec, neg in leaves
-        ]
-        for leaves in tree
-    ]
+
+    def bind(spec):
+        if spec[0] == "slot":
+            return ("ids", {bucket: doc[slot == spec[1]]})
+        if spec[0] == "substring":
+            return (*spec[:2], bind(spec[2]))
+        return spec
+
+    return [[(bind(spec), neg) for spec, neg in leaves] for leaves in tree]
 
 
 def _eval_bucket_tree(bf: _BucketFrames, tree: list, bucket: int) -> np.ndarray:
     """OR-of-ANDs over bucket-local leaf id sets.  ``tree`` is a list of
     AND groups, each a list of ``(spec, negated)`` with the positive
     leaves first; a spec is ``("terms", [t...])``, ``("ids", {bucket:
-    sorted ids})`` or ``("pos_phrase", seq, sfx_terms | None)``."""
+    sorted ids})``, ``("substring", rare terms, id spec)`` (a substring
+    phrase: the docs holding every rare term whose content holds the
+    needle, the id spec's docs) or ``("pos_phrase", seq, sfx_terms |
+    None)``."""
     res = None
     for leaves in tree:
         acc = None

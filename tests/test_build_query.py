@@ -353,28 +353,21 @@ def test_blockmax_prunes_buckets_on_skew(spark, tmp_path):
 
 
 def test_phrase_verify_routes_identical(spark, index_dir, corpus_pdf):
-    """The three df-guarded phrase-verify routes (IN-list pushdown /
-    broadcast-join / plain distributed join) must return the same doc
-    set.  Routes are forced by swapping the cached df values, which the
-    router reads but the semantics must not depend on."""
+    """Every entry to the one substring route (the bucket kernel's
+    substring leaf) returns the gold doc set: ``phrase_docids``,
+    ``phrase_docids_bucketed`` and a boolean phrase query."""
     from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
 
     phrase = "posting merge"
     gold = {
         r.doc_id for r in corpus_pdf.itertuples() if phrase in r.content.lower()
     }
-
-    # route 1: tiny df -> IN-list scan
+    assert gold
     eng = SearchEngine(spark, index_dir, fast_path=False)
     assert {r.doc_id for r in eng.phrase_docids(phrase).collect()} == gold
-
-    # route 2: inflate cached dfs past the IN-list bound -> broadcast join
-    eng.term_stats = {t: (1_500_000, cf) for t, (df, cf) in eng.term_stats.items()}
-    assert {r.doc_id for r in eng.phrase_docids(phrase).collect()} == gold
-
-    # route 3: past the broadcast bound -> plain distributed join
-    eng.term_stats = {t: (5_000_000, cf) for t, (df, cf) in eng.term_stats.items()}
-    assert {r.doc_id for r in eng.phrase_docids(phrase).collect()} == gold
+    assert {r.doc_id for r in eng.phrase_docids_bucketed(phrase).collect()} == gold
+    got = {r.doc_id for r in eng.search(f"'{phrase}' OR zzznotaterm").collect()}
+    assert got == gold
 
 
 def test_serving_mode_scores_identical(spark, index_dir):

@@ -1,6 +1,6 @@
-"""The fast path's substring-phrase verify: folded into the frame collect
-(one Spark action per query) or answered by the driver content cache,
-the answers equal the distributed engine and the pure-pandas oracle."""
+"""The fast path's substring-phrase verify: each needle's content hits
+fold into the frame collect (one Spark action per query), and the
+answers equal the distributed engine and the pure-pandas oracle."""
 
 import numpy as np
 import pytest
@@ -33,13 +33,6 @@ def fast(spark, index_dir):
 
 
 @pytest.fixture(scope="module")
-def fast_cached(spark, index_dir):
-    return SearchEngine(
-        spark, index_dir, cache_doclens=True, cache_content=True
-    )
-
-
-@pytest.fixture(scope="module")
 def answer(corpus_pdf):
     """query -> the oracle's answer: BM25 top-10 rows for ranked
     queries, the sorted doc_id rows for boolean ones."""
@@ -52,14 +45,12 @@ def _rows(eng, q):
     return [(r.doc_id, getattr(r, "score", None)) for r in eng.search(q, 10).collect()]
 
 
-@pytest.mark.parametrize("route", ["folded", "content-cache"])
-def test_fast_verify_routes_equal_distributed_and_oracle(
-    engine, fast, fast_cached, answer, route
-):
+@pytest.mark.parametrize("route", ["folded"])
+def test_fast_verify_routes_equal_distributed_and_oracle(engine, fast, answer, route):
     """Every phrase shape through the fast path, its needles folded into
-    the frame collect or checked against the driver content cache:
-    bit-identical to the distributed engine and the oracle."""
-    eng = fast if route == "folded" else fast_cached
+    the frame collect: bit-identical to the distributed engine and the
+    oracle."""
+    eng = fast
     nonempty = 0
     for q in QUERIES:
         want = answer(q)

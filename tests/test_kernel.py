@@ -15,6 +15,7 @@ from hypothesis import strategies as st
 from informationretrieval_en_people_cn_spark.functions.codec import encode_frame
 from informationretrieval_en_people_cn_spark.plans.kernel import (
     _BucketFrames,
+    _bind_ids,
     _eval_bucket_tree,
     bm25_idf,
     bm25_tfp,
@@ -242,6 +243,77 @@ def test_eval_bucket_tree_equals_set_algebra(case):
         want |= acc
     got = _eval_bucket_tree(bf, tree, 0)
     assert got.tolist() == sorted(want)
+
+
+@st.composite
+def substring_trees(draw):
+    """Term postings over docs 0..39, 1-4 contiguous doc-range buckets
+    and an OR-of-ANDs tree mixing keyword leaves with substring leaves
+    ``("substring", rare terms, ("slot", j))`` over needle hit sets:
+    rare terms may be empty, hits may be empty or hold docs outside
+    the rare terms' postings."""
+    universe = list(range(40))
+    posting_sets = {
+        t: sorted(draw(st.sets(st.sampled_from(universe), max_size=25)))
+        for t in TERMS
+    }
+    cuts = sorted(draw(st.sets(st.integers(1, 39), max_size=3)))
+    hits: list[list[int]] = []
+
+    def leaf():
+        if draw(st.booleans()):
+            return ("terms", draw(st.lists(st.sampled_from(TERMS), max_size=2)))
+        hits.append(sorted(draw(st.sets(st.sampled_from(universe), max_size=30))))
+        rare = draw(st.lists(st.sampled_from(TERMS), max_size=2, unique=True))
+        return ("substring", rare, ("slot", len(hits) - 1))
+
+    tree = []
+    for _ in range(draw(st.integers(1, 3))):
+        group = [(leaf(), False)]
+        for _ in range(draw(st.integers(0, 3))):
+            group.append((leaf(), draw(st.booleans())))
+        group.sort(key=lambda x: x[1])
+        tree.append(group)
+    return posting_sets, cuts, hits, tree
+
+
+@given(substring_trees())
+@settings(max_examples=200, deadline=None)
+def test_substring_leaf_equals_set_algebra_on_any_bucketing(case):
+    """A substring leaf is the rare terms' common docs among its needle
+    hits (none without rare terms), negated whole under NOT; bound per
+    bucket by ``_bind_ids`` it gives the same ids on 1-4 doc-range
+    buckets as on one virtual bucket, equal to Python sets."""
+    posting_sets, cuts, hits, tree = case
+
+    def leaf_set(spec):
+        if spec[0] == "terms":
+            return set().union(*(posting_sets[t] for t in spec[1]))
+        rare = [set(posting_sets[t]) for t in spec[1]]
+        return set.intersection(*rare) & set(hits[spec[2][1]]) if rare else set()
+
+    want = set()
+    for group in tree:
+        acc = leaf_set(group[0][0])
+        for spec, negated in group[1:]:
+            acc = acc - leaf_set(spec) if negated else acc & leaf_set(spec)
+        want |= acc
+
+    def run(lo, hi, bucket):
+        frames = [
+            _frame(t, sel, [1] * len(sel))
+            for t, docs in posting_sets.items()
+            if (sel := [d for d in docs if lo <= d < hi])
+        ]
+        pairs = [(j, d) for j, hs in enumerate(hits) for d in hs if lo <= d < hi]
+        slot = np.array([j for j, _ in pairs], dtype=np.int64)
+        doc = np.array([d for _, d in pairs], dtype=np.int64)
+        bound = _bind_ids(tree, bucket, slot, doc)
+        return _eval_bucket_tree(_BucketFrames(frames), bound, bucket).tolist()
+
+    edges = [0, *cuts, 40]
+    multi = [d for b, (lo, hi) in enumerate(zip(edges, edges[1:])) for d in run(lo, hi, b)]
+    assert run(0, 40, 0) == multi == sorted(want)
 
 
 def test_posting_doc_missing_from_doclens_raises():

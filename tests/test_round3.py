@@ -1,9 +1,9 @@
 """Round-3 regressions: ADVICE r2 bug fixes + VERDICT r2 items.
 
-Covers: the fast-path cache guard, the driver content cache, auto
-block-max selection, the WAND tie-break conservatism, dedup_clusters
-pointer jumping + convergence guard, microsecond sessionize state,
-manifest-derived refresh inputs, and snapshot-pointer commits.
+Covers: the fast-path cache guard, auto block-max selection, the WAND
+tie-break conservatism, dedup_clusters pointer jumping + convergence
+guard, microsecond sessionize state, manifest-derived refresh inputs,
+and snapshot-pointer commits.
 """
 
 import datetime as dt
@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# engine: cache guards, content cache, auto block-max
+# engine: cache guards, auto block-max
 # ---------------------------------------------------------------------------
 
 
@@ -33,38 +33,6 @@ def test_fast_path_requires_doclen_cache(spark, index_dir):
     assert eng.last_trace["placement"] == "fast"
     # explicit False without the doclen cache stays fine
     SearchEngine(spark, index_dir, fast_path=False)
-
-
-def test_content_cache_matches_scan_verify(spark, index_dir):
-    """cache_content answers phrase verification driver-side with
-    results identical to the pruned-scan path and the distributed plan."""
-    from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
-
-    cached = SearchEngine(
-        spark, index_dir,
-        cache_doclens=True, cache_content=True,
-    )
-    assert cached._content_cache is not None  # under budget: loaded
-    scan = SearchEngine(spark, index_dir, cache_doclens=True)
-    dist = SearchEngine(spark, index_dir)
-    for q in ("'posting merge'", "merge OR 'posting merge'", "'posting mer'*"):
-        got = {r.doc_id for r in cached.search(q).collect()}
-        assert got == {r.doc_id for r in scan.search(q).collect()}, q
-        assert got == {r.doc_id for r in dist.search(q).collect()}, q
-
-
-def test_content_cache_budget_guard(spark, index_dir, monkeypatch):
-    """Over the byte budget the cache stays off (scan path keeps
-    serving) instead of collecting the corpus to the driver."""
-    from informationretrieval_en_people_cn_spark.plans import engine as engine_mod
-    from informationretrieval_en_people_cn_spark.plans.engine import SearchEngine
-
-    monkeypatch.setattr(engine_mod, "CONTENT_CACHE_MAX_BYTES", 10)
-    eng = SearchEngine(spark, index_dir, cache_doclens=True, cache_content=True)
-    assert eng._content_cache is None
-    assert {r.doc_id for r in eng.search("'posting merge'").collect()} == {
-        r.doc_id for r in SearchEngine(spark, index_dir).search("'posting merge'").collect()
-    }
 
 
 def test_blockmax_autoselects_on_sumdf(spark, index_dir):
